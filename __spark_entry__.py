@@ -67,12 +67,12 @@ def _read(
     downstream projection (regex checks, shingling, hashing) was
     single-digit-threaded on a 32-core host. When the scan cannot split
     to the session's parallelism AND the table is small enough that one
-    round-robin exchange is trivial, repartition right after the read
-    (guide §2.5: "one huge unsplittable file … repartition immediately
-    after the read"). Deterministic: round-robin repartition sorts before
-    redistributing (SPARK-23207), and every declared query is
-    row-order-insensitive. At cluster scale inputs arrive as many files
-    (rg ≫ parallelism) and this is a no-op."""
+    exchange is trivial, hash-repartition on the leading column right
+    after the read (guide §2.5: "one huge unsplittable file … repartition
+    immediately after the read"). Deterministic: the hash partitioning is
+    a per-row function, so retried tasks reproduce it, and every declared
+    query is row-order-insensitive. At cluster scale inputs arrive as many
+    files (rg ≫ parallelism) and this is a no-op."""
     path = f"{sf_dir}/{table}.parquet"
     df = spark.read.parquet(path)
     par = spark.sparkContext.defaultParallelism

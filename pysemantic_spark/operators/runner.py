@@ -19,11 +19,12 @@ Everything row-wise is a single whole-stage-codegen projection: the table is
 scanned ONCE per full-width pass, not once per check. Referential checks ride
 the same pass as broadcast hash joins (no shuffle of the fact side).
 
-`execute()` is the production orchestration: ONE full-width action (writing
-violations, with stats/check-counts attached via `observe` so they cost
-nothing extra) plus skinny pruned-scan aggregations for the per-bucket row
-counts and the duplicate-key groups (one per declared key, grouped by the
-key alone; written to a sink, never collected). At 100 TB that is the
+`execute()` is the production orchestration: it plans only the flagged
+frame, then runs ONE full-width action (writing violations, with
+stats/check-counts attached via `observe` so they cost nothing extra) plus
+skinny pruned-scan aggregations for the per-bucket row counts and the
+duplicate-key groups (one per declared key, grouped by the key alone;
+written to a sink, never collected, their count observed on the write). At 100 TB that is the
 minimum I/O shape: full data crosses the scanner once; shuffles touch only
 (conv_id, turn_idx) pairs and bucket ids, and nothing unbounded lands on
 the driver.
@@ -73,9 +74,6 @@ class ValidationResult:
     partition_report: DataFrame # bucket, n_rows, n_violating_rows, passed
     dupes: DataFrame | None     # composite-key duplicate groups (or None)
     check_names: list[str] = field(default_factory=list)
-    # internals for execute()
-    _plan: CheckPlan | None = None
-    _bucket_expr: Column | None = None
 
 
 def _bucket_expr_default(key_col: str | None, n_buckets: int) -> Column:
@@ -101,8 +99,10 @@ def _contains_map(dt: T.DataType) -> bool:
     return False
 
 
-def _stat_agg_exprs(df: DataFrame) -> list[Column]:
-    """Wide per-column stats in one partial+final agg.
+def _summary_exprs(df: DataFrame, plan: CheckPlan) -> list[Column]:
+    """Wide per-column stats plus per-check violation counts over the
+    flagged frame, in one partial+final agg: validate()'s lazy ``stats`` /
+    ``check_counts`` aggregate them, execute() observes them on pass 1.
 
     Scale choices: min/max only for orderable non-string types (min/max over
     long text bodies is meaningless and drags the whole agg); distinct
@@ -127,37 +127,26 @@ def _stat_agg_exprs(df: DataFrame) -> list[Column]:
             exprs.append(F.min(c).cast("string").alias(f"{c}__min"))
             exprs.append(F.max(c).cast("string").alias(f"{c}__max"))
             exprs.append(F.approx_count_distinct(c).alias(f"{c}__approx_distinct"))
+    exprs += [
+        F.sum(F.array_contains(VIOLATIONS_COL, n).cast("long")).alias(f"__chk__{n}")
+        for n in _counted_checks(plan)
+    ]
     return exprs
 
 
-def validate(
-    spark: SparkSession,
-    df: DataFrame,
-    spec: DatasetSpec | CheckPlan,
-    dims: dict[str, DataFrame] | None = None,
-    bucket_by: str | None = None,
-    n_buckets: int = 32,
-    bucket_expr: Column | None = None,
-) -> ValidationResult:
-    """Build the full lazy check-suite DAG over ``df``.
+def _counted_checks(plan: CheckPlan) -> list[str]:
+    """Per-row checks; unique keys are counted as dup groups instead."""
+    return [n for n in plan.check_names if not n.startswith("unique_key:")]
 
-    dims: logical dim-table name → DataFrame, for referential checks.
-    bucket_by: column whose hash defines the per-partition report buckets
-        (e.g. "conv_id"); defaults to physical partition ids.
-    bucket_expr: explicit bucket Column, overriding bucket_by (used when
-        the bucket scheme must be reproducible outside Spark).
-    """
-    plan = spec if isinstance(spec, CheckPlan) else compile_spec(spec)
-    dims = dims or {}
+
+def _flag(
+    df: DataFrame, plan: CheckPlan, dims: dict[str, DataFrame], bucket_expr: Column
+) -> DataFrame:
+    """``df`` + the violation bitmap + the bucket id: the referential
+    marks as broadcast left-outer joins (fact side unshuffled), then ONE
+    fused projection of every row check. df-level pre-rules are the
+    caller's, applied before."""
     input_cols = df.columns
-
-    # --- optional df-level pre-rules (reference DataFrameValidator order) --
-    if plan.drop_duplicates:
-        df = df.dropDuplicates()
-    if plan.drop_na:
-        df = df.na.drop("any")
-
-    # --- referential marks: broadcast left-outer joins, fact side unshuffled
     work = df
     ref_flag_cols: list[tuple[str, Column]] = []
     for ref in plan.referential:
@@ -178,7 +167,6 @@ def validate(
             (ref.name, F.col(ref.column).isNotNull() & F.col(mark).isNull())
         )
 
-    # --- THE fused projection: all row checks → one array column ----------
     flag_exprs: list[Column] = [
         F.when(chk.violation_expr(), F.lit(chk.name)) for chk in plan.row_checks
     ]
@@ -190,14 +178,42 @@ def validate(
         viol_arr = F.array_compact(F.array(*flag_exprs))
     else:
         viol_arr = F.array().cast("array<string>")
-
-    if bucket_expr is None:
-        bucket_expr = _bucket_expr_default(bucket_by, n_buckets)
-    flagged = (
+    return (
         work.withColumn(VIOLATIONS_COL, viol_arr)
         .withColumn(BUCKET_COL, bucket_expr)
         .select(*input_cols, VIOLATIONS_COL, BUCKET_COL)
     )
+
+
+def validate(
+    spark: SparkSession,
+    df: DataFrame,
+    spec: DatasetSpec | CheckPlan,
+    dims: dict[str, DataFrame] | None = None,
+    bucket_by: str | None = None,
+    n_buckets: int = 32,
+    bucket_expr: Column | None = None,
+) -> ValidationResult:
+    """Build the full lazy check-suite DAG over ``df``.
+
+    dims: logical dim-table name → DataFrame, for referential checks.
+    bucket_by: column whose hash defines the per-partition report buckets
+        (e.g. "conv_id"); defaults to physical partition ids.
+    bucket_expr: explicit bucket Column, overriding bucket_by (used when
+        the bucket scheme must be reproducible outside Spark).
+    """
+    plan = spec if isinstance(spec, CheckPlan) else compile_spec(spec)
+    input_cols = df.columns
+
+    # --- optional df-level pre-rules (reference DataFrameValidator order) --
+    if plan.drop_duplicates:
+        df = df.dropDuplicates()
+    if plan.drop_na:
+        df = df.na.drop("any")
+
+    if bucket_expr is None:
+        bucket_expr = _bucket_expr_default(bucket_by, n_buckets)
+    flagged = _flag(df, plan, dims or {}, bucket_expr)
 
     # --- violations row stream --------------------------------------------
     key_cols = plan.unique_keys[0] if plan.unique_keys else input_cols[:1]
@@ -252,13 +268,7 @@ def validate(
     clean = _apply_postprocessors(clean, plan.spec)
 
     # --- wide stats agg: one partial+final pass ----------------------------
-    agg_exprs = _stat_agg_exprs(df)
-    check_count_exprs = [
-        F.sum(F.array_contains(VIOLATIONS_COL, n).cast("long")).alias(f"__chk__{n}")
-        for n in plan.check_names
-        if not n.startswith("unique_key:")
-    ]
-    wide = flagged.agg(*agg_exprs, *check_count_exprs)
+    wide = flagged.agg(*_summary_exprs(df, plan))
     stats = _unpivot_stats(wide, input_cols)
     check_counts = _unpivot_checks(wide, plan)
 
@@ -281,8 +291,6 @@ def validate(
         partition_report=partition_report,
         dupes=dupes,
         check_names=plan.check_names,
-        _plan=plan,
-        _bucket_expr=bucket_expr,
     )
 
 
@@ -320,6 +328,7 @@ def execute(
 ) -> dict[str, Any]:
     """Production run: one full-width pass + skinny pruned-scan aggs.
 
+    Plans only the flagged frame; validate()'s other artifacts are not built.
     Pass 1 (full width): write/materialize the violations row stream, with
       per-column stats and per-check counts riding the same action via
       ``observe`` — zero extra scans for stats.
@@ -328,7 +337,9 @@ def execute(
       the key alone (never by (key, bucket): a bucket column not determined
       by the key would split dup groups and undercount). Dup groups are
       written to ``dupes_sink`` (defaults to ``<violations_sink>_dupes``),
-      never collected: only their count reaches the driver.
+      never collected: their count is observed on that sink write (a
+      ``count()`` of the persisted groups without a sink). Sinks are read
+      back with the schema just written, so a read-back runs no job.
 
     Returns dict(stats=pandas, check_counts=pandas, partition_report=pandas,
     dupes=lazy DataFrame handle or None, n_dup_keys=int, dupes_path=...,
@@ -336,7 +347,6 @@ def execute(
     anything that can grow with the data (violations, dupes) stays a path +
     lazy handle.
     """
-    import dataclasses
     import time as _time
 
     import pandas as pd
@@ -362,26 +372,23 @@ def execute(
         )
 
     # df-level pre-rules applied ONCE here so pass 1 and pass 2 see the
-    # same rows (validate() gets a plan copy with the flags cleared)
+    # same rows
     if plan.drop_duplicates:
         df = df.dropDuplicates()
     if plan.drop_na:
         df = df.na.drop("any")
-    inner_plan = dataclasses.replace(plan, drop_duplicates=False, drop_na=False)
+    bucket_expr = _bucket_expr_default(bucket_by, n_buckets)
 
-    res = validate(
-        spark, df, inner_plan, dims=dims, bucket_by=bucket_by, n_buckets=n_buckets
-    )
+    def _sink(frame: DataFrame, path: str) -> DataFrame:
+        frame.write.format(sink_format).mode("overwrite").save(path)
+        # read back with the schema just written: inference would cost a job
+        return spark.read.format(sink_format).schema(frame.schema).load(path)
 
     # ---- pass 1: violations + observe(stats, check counts) ---------------
     obs = Observation("validation_stats")
-    agg_exprs = _stat_agg_exprs(df)
-    check_count_exprs = [
-        F.sum(F.array_contains(VIOLATIONS_COL, n).cast("long")).alias(f"__chk__{n}")
-        for n in plan.check_names
-        if not n.startswith("unique_key:")
-    ]
-    observed = res.flagged.observe(obs, *(agg_exprs + check_count_exprs))
+    observed = _flag(df, plan, dims or {}, bucket_expr).observe(
+        obs, *_summary_exprs(df, plan)
+    )
     key_cols = plan.unique_keys[0] if plan.unique_keys else df.columns[:1]
     # deterministic per-row discriminator so two different rows sharing the
     # unique key (the very thing the engine detects) each count as a
@@ -401,8 +408,7 @@ def execute(
     )
     _mark("compile_and_plan")
     if violations_sink:
-        viol.write.format(sink_format).mode("overwrite").save(violations_sink)
-        viol_small = spark.read.format(sink_format).load(violations_sink)
+        viol_small = _sink(viol, violations_sink)
     else:
         viol_small = viol.persist()
         viol_small.count()  # force the pass
@@ -413,14 +419,15 @@ def execute(
     # Three independent jobs run here: (a) per-bucket violating-row counts
     # from the small violations output, (b) bucket totals (one pruned scan
     # of the bucket_by column), (c) the duplicate-key groups written to the
-    # dupes sink. (a) and (b) are tiny (seconds of mostly fixed job cost)
-    # but were serialized after (c) — pure driver round-trip latency. They
-    # are submitted from helper threads while the main thread runs the big
-    # dupes job: independent DAGs, so Spark schedules their tasks into the
-    # idle slots of (c)'s waves (standard concurrent-jobs practice on real
-    # clusters; PySpark actions are thread-safe). Saves ~2 s/run at every
-    # cluster size — material to the N-vs-4N efficiency ratio, where the
-    # serial floor is divided by nothing.
+    # dupes sink, their count observed on that write. (a) and (b) are tiny
+    # (seconds of mostly fixed job cost) but were serialized after (c) —
+    # pure driver round-trip latency. They are submitted from helper
+    # threads while the main thread runs the big dupes job: independent
+    # DAGs, so Spark schedules their tasks into the idle slots of (c)'s
+    # waves (standard concurrent-jobs practice on real clusters; PySpark
+    # actions are thread-safe). Saves ~2 s/run at every cluster size —
+    # material to the N-vs-4N efficiency ratio, where the serial floor is
+    # divided by nothing.
     #
     # Bucket totals stay a SEPARATE aggregation from the dup-key aggs on
     # purpose: grouping dupes by (key, bucket) would split a duplicated key
@@ -434,7 +441,7 @@ def execute(
 
     def _totals_job():
         return (
-            df.select(res._bucket_expr.alias("bucket"))
+            df.select(bucket_expr.alias("bucket"))
             .groupBy("bucket")
             .agg(F.count(F.lit(1)).alias("n_rows"))
             .toPandas()
@@ -462,12 +469,15 @@ def execute(
             if dupes_sink is None and violations_sink is not None:
                 dupes_sink = violations_sink.rstrip("/") + "_dupes"
             if dupes_sink:
-                dupes.write.format(sink_format).mode("overwrite").save(dupes_sink)
-                dupes = spark.read.format(sink_format).load(dupes_sink)
+                dup_obs = Observation("dup_keys")  # the count rides the write
+                dupes = _sink(
+                    dupes.observe(dup_obs, F.count(F.lit(1)).alias("n")), dupes_sink
+                )
+                n_dup_keys = int(dup_obs.get["n"])
                 dupes_path = dupes_sink
             else:
                 dupes = dupes.persist()
-            n_dup_keys = dupes.count()
+                n_dup_keys = dupes.count()
         viol_rows_per_bucket = _viol_fut.result()
         bucket_totals = _totals_fut.result()
     _mark("pass2_overlapped")
@@ -519,8 +529,7 @@ def execute(
         )
     counts_rows = [
         {"check_name": n, "n_violations": int(metrics[f"__chk__{n}"] or 0)}
-        for n in plan.check_names
-        if not n.startswith("unique_key:")
+        for n in _counted_checks(plan)
     ]
     if not violations_sink:
         viol_small.unpersist(blocking=True)
@@ -597,7 +606,7 @@ def _unpivot_stats(wide: DataFrame, stat_cols: list[str]) -> DataFrame:
 
 
 def _unpivot_checks(wide: DataFrame, plan: CheckPlan) -> DataFrame:
-    names = [n for n in plan.check_names if not n.startswith("unique_key:")]
+    names = _counted_checks(plan)
     if not names:
         return wide.sparkSession.createDataFrame(
             [], "check_name string, n_violations long"

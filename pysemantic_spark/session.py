@@ -1,8 +1,10 @@
 """SparkSession factory tuned for the validation workload.
 
-Local-mode settings follow the sandbox (32 cores / 125 GB); on a real
-cluster the same builder is used minus the master/memory overrides — all
-scale-relevant behavior (AQE, shuffle partitions, Arrow) is set here.
+Local mode takes its core count from ``SPARK_GRAFT_CPUS`` and its driver
+heap from ``SPARK_DRIVER_MEMORY``; on a real cluster the same builder is
+used minus the master/memory overrides. AQE, shuffle partitions and Arrow
+are set here; scan splits are left to Spark's own sizing (small files
+pack into shared splits, and ``spark-submit --conf`` governs).
 """
 
 from __future__ import annotations
@@ -51,17 +53,6 @@ def get_spark(
         # join stays a shuffle join. (guide §3.1; round-7 measured: the
         # ngram verify joins shuffled ~19 GB of shingle arrays without it)
         .config("spark.sql.adaptive.autoBroadcastJoinThreshold", "128m")
-        # Scan split size. The fixtures are single files with 2-21 MB row
-        # groups, and the 128m default packed each whole table into ONE
-        # scan task — every scan-heavy stage ran at parallelism ≤6 on a
-        # 32-core host (round-7; guide §6). 4m splits parallelize down to
-        # row-group granularity locally; on a real cluster with properly
-        # sized inputs raise this to 512m-1g (guide §6 recommends large
-        # sequential splits there — hence the env override).
-        .config(
-            "spark.sql.files.maxPartitionBytes",
-            os.environ.get("SPARK_GRAFT_MAX_PARTITION_BYTES", "4m"),
-        )
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "48g"))

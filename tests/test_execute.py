@@ -112,6 +112,50 @@ def test_execute_counts_dup_key_violating_rows_individually(spark, tmp_path):
     assert out["partition_report"]["n_rows"].sum() == 3
 
 
+@pytest.mark.parametrize("with_sink", [True, False], ids=["sink", "persist"])
+def test_execute_on_empty_input(spark, tmp_path, with_sink):
+    """A 0-row input with a uniqueness key returns zero counts and an empty
+    report, both when the dup-key count is observed on the sink write and
+    when it is counted on the persisted groups. An observation that never
+    reports would block Observation.get, so the call runs on a daemon
+    thread and a hang fails the test instead of stalling the suite."""
+    import threading
+
+    from pysemantic_spark.spec import DatasetSpec
+
+    spec = DatasetSpec.from_dict(
+        "t",
+        {
+            "column_rules": {"role": {"unique_values": ["user", "assistant"]}},
+            "uniqueness": [["conv_id", "turn_idx"]],
+        },
+    )
+    df = spark.createDataFrame([], "conv_id string, turn_idx long, role string")
+    sink = str(tmp_path / "violations") if with_sink else None
+    box = {}
+
+    def _run():
+        try:
+            box["out"] = execute(
+                spark, df, spec, bucket_by="conv_id", n_buckets=4,
+                violations_sink=sink,
+            )
+        except BaseException as e:  # re-raised on the test thread
+            box["err"] = e
+
+    t = threading.Thread(target=_run, daemon=True)
+    t.start()
+    t.join(timeout=300)
+    assert not t.is_alive(), "execute() hung on a 0-row input"
+    if "err" in box:
+        raise box["err"]
+    out = box["out"]
+    assert out["n_rows"] == 0
+    assert out["n_dup_keys"] == 0
+    assert out["partition_report"].empty
+    assert (out["dupes_path"] is not None) == with_sink
+
+
 def test_execute_pass2_respects_df_level_rules(spark):
     """drop_duplicates must apply to the bucket totals and dup counts too
     (regression: pass 2 used to group the pre-drop input)."""

@@ -33,6 +33,29 @@ def test_partition_pruning_in_plan(spark, table):
     assert got_buckets <= {1, 3}
 
 
+def test_read_buckets_packs_small_files_into_shared_splits(spark, table):
+    """Spark's own split sizing packs the small per-bucket files into shared
+    scan splits; a session cap on maxPartitionBytes at the 4 MB file open
+    cost would plan one split per file. The parallelism the sizing divides
+    the bytes by is pinned so the check does not depend on the core count."""
+    import glob
+    import os
+
+    io, _, _ = table
+    chunk = [0, 1, 2, 3]
+    n_files = sum(
+        len(glob.glob(os.path.join(io.data_dir, f"bucket={b}", "*.parquet")))
+        for b in chunk
+    )
+    spark.conf.set("spark.sql.files.minPartitionNum", "2")
+    try:
+        n_splits = io.read_buckets(spark, chunk).rdd.getNumPartitions()
+    finally:
+        spark.conf.unset("spark.sql.files.minPartitionNum")
+    assert n_files > 2
+    assert n_splits < n_files
+
+
 def test_kill_and_resume(spark, table):
     io, dims, n_total = table
     spec = transcripts_spec()

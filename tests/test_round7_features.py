@@ -138,11 +138,13 @@ def test_corpus_clean_conditional_agg_matches_filtered_groupby(spark):
     assert new.exceptAll(old).count() == 0
 
 
-def test_simhash_expansion_equals_banding(spark):
+@pytest.mark.parametrize("portable", [True, False], ids=["portable", "xxhash64"])
+def test_simhash_expansion_equals_banding(spark, portable):
     """The pigeonhole query-expansion candidate scheme (fires when
-    exhaustive banding would need sub-12-bit bands: 60-bit portable word,
-    r=8) must produce EXACTLY the band-join pair set — both are exact, so
-    the outputs must be row-identical including the hamming values."""
+    exhaustive banding would need sub-12-bit bands: one 60-bit portable or
+    64-bit xxhash64 word, r=8) must produce EXACTLY the band-join pair set
+    — both are exact, so the outputs must be row-identical including the
+    hamming values."""
     rng = random.Random(7)
     vocab = [f"w{i}" for i in range(30)]
     rows = []
@@ -158,11 +160,16 @@ def test_simhash_expansion_equals_banding(spark):
     tokf = dedup._materialize(
         df.select(F.col("doc_id").alias("_id"), dedup.tokens("text").alias("_tok"))
     )
-    r, n_bands, n_words, portable = 8, 9, 1, True
-    layout = dedup._chunk_layout(60, n_words, r)
+    r, n_bands, n_words = 8, 9, 1
+    layout = dedup._chunk_layout(60 if portable else 64, n_words, r)
     assert layout is not None and layout[0] == 3 and layout[1] == 2
     word_names = ["simhash"]
-    fps_words = dedup._materialize(dedup._simhash_words_arrow(tokf, n_words))
+    tok = tokf.select("_id", F.explode("_tok").alias("t"))
+    if portable:
+        words = dedup._simhash_words_arrow(tokf, n_words)
+    else:
+        words = dedup._simhash_words_on_tok(tok, False, n_words)
+    fps_words = dedup._materialize(words)
     via_expansion = {
         (x["id_a"], x["id_b"], x["hamming"])
         for x in dedup._simhash_pairs_expansion(
@@ -171,7 +178,11 @@ def test_simhash_expansion_equals_banding(spark):
     }
     with warnings.catch_warnings():
         warnings.simplefilter("ignore")  # narrow-band warning expected
-        fps = dedup._materialize(dedup._simhash_fps_arrow(tokf, n_bands, n_words))
+        if portable:
+            fps = dedup._simhash_fps_arrow(tokf, n_bands, n_words)
+        else:
+            fps = dedup._simhash_fps_on_tok(tok, n_bands, False, n_words)
+        fps = dedup._materialize(fps)
     bucketed = fps.select(
         "_id",
         *word_names,
