@@ -892,29 +892,6 @@ def _expand_pairs_multi(
     return cross.unionByName(intra)
 
 
-def minhash_signatures(
-    df: DataFrame, id_col: str, text_col: str, n: int = 3, num_hashes: int = 64
-) -> DataFrame:
-    """K-minhash signature per doc: min over shingles of xxhash64(seed‖shingle).
-
-    Pure JVM exprs — one explode + one groupBy(id) with K min-aggs (all
-    map-side combinable). Returns (_id, sig: array<bigint>)."""
-    inv = _materialize(
-        df.select(
-            F.col(id_col).alias("_id"),
-            F.explode(_shingles_arrow(text_col, n)).alias("shingle"),
-        )
-    )
-    mins = [
-        F.min(F.xxhash64(F.lit(i), F.col("shingle"))).alias(f"h{i}")
-        for i in range(num_hashes)
-    ]
-    sig = inv.groupBy("_id").agg(*mins)
-    return sig.select(
-        "_id", F.array(*[F.col(f"h{i}") for i in range(num_hashes)]).alias("sig")
-    )
-
-
 def minhash_lsh_pairs(
     df: DataFrame,
     id_col: str,
@@ -974,36 +951,26 @@ def _minhash_pairs_on_shingles(
     (materialized) ``(_id, _sh[, _size])`` shingle frame — one shingle
     computation feeds the signatures AND the verify arrays (the pre-fusion
     plan scanned text twice: once for signatures, once for verify)."""
-    rows_per_band = num_hashes // bands
+    # The generated expression lists are SQL text, one F.expr per element:
+    # one JVM call each, where building the same Column tree costs one call
+    # per node. The text holds only integers and internal column names.
+    r = num_hashes // bands
     inv = sh.select("_id", F.explode("_sh").alias("shingle"))
     mins = [
-        F.min(F.xxhash64(F.lit(i), F.col("shingle"))).alias(f"h{i}")
-        for i in range(num_hashes)
+        F.expr(f"min(xxhash64({i}, shingle)) AS h{i}") for i in range(num_hashes)
     ]
+    hs = ", ".join(f"h{i}" for i in range(num_hashes))
     sig = _materialize(
-        inv.groupBy("_id")
-        .agg(*mins)
-        .select(
-            "_id",
-            F.array(*[F.col(f"h{i}") for i in range(num_hashes)]).alias("sig"),
-        )
+        inv.groupBy("_id").agg(*mins).select("_id", F.expr(f"array({hs}) AS sig"))
     )
-    band_cols = [
-        F.xxhash64(
-            F.lit(b), *[F.col("sig")[b * rows_per_band + r] for r in range(rows_per_band)]
-        ).alias(f"band{b}")
+    # one (band, bucket) row per band: bucket = xxhash64(band, its r minhashes)
+    band_structs = ", ".join(
+        f"named_struct('band', {b}, 'bucket', xxhash64({b}, "
+        + ", ".join(f"sig[{b * r + j}]" for j in range(r))
+        + "))"
         for b in range(bands)
-    ]
-    banded = sig.select("_id", *band_cols)
-    bucketed = banded.select(
-        "_id",
-        F.explode(
-            F.array(*[
-                F.struct(F.lit(b).alias("band"), F.col(f"band{b}").alias("bucket"))
-                for b in range(bands)
-            ])
-        ).alias("bb"),
-    ).select("_id", "bb.band", "bb.bucket")
+    )
+    bucketed = sig.select("_id", F.expr(f"inline(array({band_structs}))"))
     a, b_ = bucketed.alias("a"), bucketed.alias("b")
     cand = (
         a.join(b_, on=["band", "bucket"])

@@ -389,8 +389,10 @@ def train_ivf_centroids(
     """Coarse quantizer for IVF: k-means on a driver-side sample.
 
     At 10^9+ vectors you train on a bounded sample anyway — the centroids
-    are a tiny (n_centroids × dim) model broadcast into the plan as
-    literals; only the sample ever reaches the driver.
+    are a tiny (n_centroids × dim) model shipped inside the one assignment
+    kernel (:func:`nearest_centroids_arrow`); only the sample ever reaches
+    the driver. NULL and ragged vectors (length ≠ ``dim``) are left out of
+    the sample.
 
     ONE scan, no count() pre-pass (round-2 finding: sizing the sample
     fraction from corpus.count() paid a full extra pass before training).
@@ -421,7 +423,13 @@ def train_ivf_centroids(
         )
     else:
         sample = sel.limit(sample_size * 4).toPandas()[vec_col]
-    x = np.array([np.asarray(v, dtype=np.float64) for v in sample])
+    # NULL and ragged vectors cannot be clustered; they are left out of the
+    # sample (and get no cluster in nearest_centroids_arrow)
+    x = np.array([
+        np.asarray(v, dtype=np.float64)
+        for v in sample
+        if v is not None and len(v) == dim
+    ])
     # canonicalize the sample ORDER driver-side (lexicographic on vector
     # values): limit()/toPandas() row order follows partition layout and
     # scheduling, so without this the k-means seeding — and therefore the
@@ -448,73 +456,42 @@ def train_ivf_centroids(
     return cents
 
 
-def _centroid_dist_exprs(vec_col: Column, centroids: np.ndarray) -> list[Column]:
-    out = []
-    for cent in centroids:
-        lit_vec = F.array(*[F.lit(float(v)) for v in cent])
-        out.append(
-            F.aggregate(
-                F.zip_with(vec_col, lit_vec, lambda x, y: (x - y) * (x - y)),
-                F.lit(0.0),
-                lambda acc, v: acc + v,
-            )
-        )
-    return out
+def nearest_centroids_arrow(
+    vec_col: Column, centroids: np.ndarray, n: int = 1
+) -> Column:
+    """The ``n`` nearest centroid ids of each vector, nearest first, as an
+    array<int> Column: the one IVF assignment kernel. :func:`ivf_topk` uses
+    it with ``n=1`` to place each corpus row in its cluster and with
+    ``n=n_probe`` for the query side's multi-probe list.
 
+    Every (row, centroid) distance comes from one BLAS matmul per Arrow
+    batch: argmin_c ||x−c||² = argmin_c (||c||² − 2·x·c), since ||x||² is
+    constant per row. The ranking is a stable argsort, so ties go to the
+    lower centroid id; a vector equidistant to two centroids up to float
+    error may rank either first.
 
-def ivf_assign_expr(vec_col: Column, centroids: np.ndarray) -> Column:
-    """Nearest-centroid id as a Column expr (argmin of squared L2),
-    evaluated JVM-side against centroid literals."""
-    best_id = F.lit(0)
-    best_d = None
-    for cid, d in enumerate(_centroid_dist_exprs(vec_col, centroids)):
-        if best_d is None:
-            best_d = d
-        else:
-            best_id = F.when(d < best_d, F.lit(cid)).otherwise(best_id)
-            best_d = F.least(best_d, d)
-    return best_id
-
-
-def ivf_assign_arrow(vec_col: Column, centroids: np.ndarray) -> Column:
-    """Arrow-batched twin of :func:`ivf_assign_expr`: every (row, centroid)
-    squared-L2 distance via one BLAS matmul per batch instead of
-    n_centroids interpreted higher-order folds per row (the fold exprs do
-    not whole-stage-codegen — same ~10× gap as the LSH bucket kernel,
-    :func:`hyperplane_buckets_arrow`). Ties break to the LOWEST centroid
-    id in both paths (strict `<` there, first-occurrence argmin here); the
-    accumulation orders differ, so a vector exactly equidistant to two
-    centroids up to float error could flip — the same measure-zero caveat
-    as the bucket kernel, irrelevant off the tie set."""
+    NULL and ragged input: a NULL vector, or one whose length is not the
+    centroid dim, gets a NULL result instead of failing the batch. In
+    :func:`ivf_topk` such a corpus row has no cluster and never matches,
+    and such a query probes nothing and returns no rows."""
     C = np.ascontiguousarray(np.asarray(centroids, dtype=np.float64))
     c_sq = (C * C).sum(axis=1)
+    dim = C.shape[1]
 
-    @F.pandas_udf("int")
-    def _assign(vecs: pd.Series) -> pd.Series:
-        X = np.stack(vecs.to_numpy()).astype(np.float64, copy=False)
-        # argmin_c ||x-c||² = argmin_c (||c||² − 2·x·c); ||x||² is constant
-        d = c_sq[None, :] - 2.0 * (X @ C.T)
-        return pd.Series(d.argmin(axis=1).astype("int32"))
+    @F.pandas_udf("array<int>")
+    def _nearest(vecs: pd.Series) -> pd.Series:
+        vs = vecs.to_numpy()
+        ok = np.fromiter((v is not None and len(v) == dim for v in vs), bool, len(vs))
+        out = [None] * len(vs)
+        if ok.any():
+            X = np.stack(vs[ok]).astype(np.float64, copy=False)
+            d = c_sq[None, :] - 2.0 * (X @ C.T)
+            ids = np.argsort(d, axis=1, kind="stable")[:, :n].astype(np.int32)
+            for i, row in zip(np.flatnonzero(ok), ids):
+                out[i] = row
+        return pd.Series(out, dtype=object)
 
-    return _assign(vec_col)
-
-
-def ivf_probe_expr(
-    vec_col: Column, centroids: np.ndarray, n_probe: int
-) -> Column:
-    """The ``n_probe`` nearest centroid ids as an array<int> Column —
-    standard IVF multi-probe: a query whose true neighbors straddle a
-    cluster boundary scores the runner-up clusters too. array_sort on
-    (dist, cid) structs is deterministic (ties break by cid)."""
-    dists = F.array(
-        *[
-            F.struct(d.alias("d"), F.lit(cid).alias("c"))
-            for cid, d in enumerate(_centroid_dist_exprs(vec_col, centroids))
-        ]
-    )
-    return F.transform(
-        F.slice(F.array_sort(dists), 1, n_probe), lambda s: s["c"]
-    )
+    return _nearest(vec_col)
 
 
 def ivf_topk(
@@ -535,7 +512,11 @@ def ivf_topk(
     variant; both reduce the candidate set before the exact cosine scoring.
     Probing expands ONLY the broadcast query side (n_probe rows per query);
     each corpus row lives in exactly one cluster, so a (query, corpus) pair
-    matches at most once — no candidate dedup needed.
+    matches at most once — no candidate dedup needed. Both sides are
+    assigned by the one kernel :func:`nearest_centroids_arrow` (corpus
+    n=1, queries n=n_probe), so both rank centroids by the same formula. A
+    NULL or ragged corpus vector (length ≠ ``dim``) is in no cluster and
+    never matches; such a query returns no rows.
 
     ``sample_fraction`` flows to :func:`train_ivf_centroids`: set it when
     the training sample SET must be partition-layout-independent at ANY
@@ -558,17 +539,14 @@ def ivf_topk(
         corpus.select(
             F.col(id_col).alias("vec_id"),
             F.col(vec_col).alias("_cvec"),
-            # Arrow kernel, not the interpreted fold exprs: the CORPUS side
-            # pays n_centroids × dim interpreted ops per row otherwise
-            # (round 7; the tiny query side keeps the JVM exprs)
-            ivf_assign_arrow(F.col(vec_col), cents).alias("_cluster"),
+            nearest_centroids_arrow(F.col(vec_col), cents)[0].alias("_cluster"),
         )
     )
     qb = queries.select(
         F.col(query_id_col).alias("query_id"),
         F.col(vec_col).alias("_qvec"),
         F.explode(
-            ivf_probe_expr(F.col(vec_col), cents, n_probe)
+            nearest_centroids_arrow(F.col(vec_col), cents, n_probe)
         ).alias("_cluster"),
     )
     scored = cb.join(F.broadcast(qb), on="_cluster").select(
@@ -649,9 +627,14 @@ def embedding_near_dup_pairs(
             F.col(vec_col), dim, n_planes, n_tables, seed
         ).alias("_buckets"),
     )
+    # posexplode_outer plus an explicit filter, not posexplode: the inner
+    # generator makes the optimizer infer `size(_buckets) > 0` below the
+    # projection, which runs the bucket UDF a second time, and the filter
+    # gives both `packed` branches the join's `bk IS NOT NULL`, so the
+    # bucket-pair join reuses one exchange instead of planning it twice
     exploded = base.select(
-        "_id", "_vec", F.posexplode("_buckets").alias("tbl", "bk")
-    )
+        "_id", "_vec", F.posexplode_outer("_buckets").alias("tbl", "bk")
+    ).filter(F.col("bk").isNotNull())
     packed = exploded.groupBy("tbl", "bk").agg(
         F.collect_list("_id").alias("ids"), F.collect_list("_vec").alias("vecs")
     )

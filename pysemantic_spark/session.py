@@ -5,6 +5,16 @@ heap from ``SPARK_DRIVER_MEMORY``; on a real cluster the same builder is
 used minus the master/memory overrides. AQE, shuffle partitions and Arrow
 are set here; scan splits are left to Spark's own sizing (small files
 pack into shared splits, and ``spark-submit --conf`` governs).
+
+PySpark's DataFrame debugging (``spark.python.sql.dataFrameDebugging.enabled``)
+is turned off. With it on, every DataFrame and Column call records its
+Python call site in the JVM: a session lookup, a conf read and a
+set/clear of the JVM-side origin around the call (``F.col`` costs 13 Py4J
+round trips instead of 3 on PySpark 4.1), a Python stack walk, and an
+``import IPython`` on the first call. The operators here build plans from
+hundreds of generated expressions, so that tax dominated the driver's fixed
+cost per call. What is lost is the Python file:line "DataFrame context" in
+Spark error messages; errors still raise with their error class.
 """
 
 from __future__ import annotations
@@ -26,6 +36,14 @@ def get_spark(
     cores). ``shuffle_partitions`` defaults to the core count — at cluster
     scale this should instead be ~2-3x total executor cores; AQE coalesces
     the excess either way.
+
+    Sets ``spark.python.sql.dataFrameDebugging.enabled=false`` (see the
+    module docstring for the cost it removes). To get the Python call site
+    back in error messages, pass
+    ``extra_conf={"spark.python.sql.dataFrameDebugging.enabled": "true"}``.
+    PySpark reads the flag once per process, at the first Column call made
+    with an active session, and caches it: set it on the first session the
+    process builds, since changing it on a later session has no effect.
     """
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 8))
     if master is None:
@@ -62,6 +80,7 @@ def get_spark(
         .config("spark.ui.enabled", "false")
         .config("spark.driver.host", "127.0.0.1")
         .config("spark.driver.bindAddress", "127.0.0.1")
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)

@@ -464,3 +464,43 @@ def test_simhash_portable_hash_matches_duckdb(spark):
         ).fetchall()
     )
     assert spark_fps == duck_fps
+
+
+def test_ivf_topk_null_and_ragged_vectors(spark, emb_df):
+    """A NULL and a short corpus vector get no cluster instead of failing
+    the job: they never match, and every valid query still gets k rows."""
+    _, vecs = emb_df
+    rows = [(i, list(map(float, v))) for i, v in enumerate(vecs)]
+    rows += [(50, None), (51, [1.0, 2.0])]
+    df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
+    queries = df.filter(F.col("vec_id").isin(0, 5, 50, 51)).select(
+        F.col("vec_id").alias("query_id"), "embedding"
+    )
+    got = similarity.ivf_topk(df, queries, dim=8, k=3, n_centroids=4, n_probe=4).collect()
+    by_q = {}
+    for r in got:
+        by_q.setdefault(r["query_id"], []).append(r["vec_id"])
+    assert sorted(by_q) == [0, 5]
+    assert all(len(v) == 3 and not {50, 51} & set(v) for v in by_q.values())
+    assert by_q[0][0] == 0 and by_q[5][0] == 5
+
+
+def test_nearest_centroids_matches_numpy(spark):
+    """The IVF kernel ranks centroids like a full squared-L2 argsort (ties
+    to the lower id), and gives NULL for NULL and ragged vectors."""
+    rng = np.random.default_rng(5)
+    cents = rng.standard_normal((6, 4))
+    vecs = rng.standard_normal((40, 4))
+    rows = [(i, list(map(float, v))) for i, v in enumerate(vecs)]
+    rows += [(40, None), (41, [1.0, 2.0, 3.0])]
+    df = spark.createDataFrame(rows, "i long, v array<double>")
+    got = {
+        r["i"]: r["ids"]
+        for r in df.select(
+            "i", similarity.nearest_centroids_arrow(F.col("v"), cents, 3).alias("ids")
+        ).collect()
+    }
+    d = ((vecs[:, None, :] - cents[None, :, :]) ** 2).sum(-1)
+    want = np.argsort(d, axis=1, kind="stable")[:, :3]
+    assert [got[i] for i in range(40)] == want.tolist()
+    assert got[40] is None and got[41] is None

@@ -236,3 +236,29 @@ def test_cosine_pairs_exact_block_join_is_equi(spark):
     plan = _plan(out)
     assert "CartesianProduct" not in plan
     assert "MapInPandas" in plan
+
+
+def test_near_dup_buckets_evaluate_once_and_share_exchange(spark, tmp_path):
+    """The LSH bucket UDF of embedding_near_dup_pairs runs once per row:
+    the executed plan has one ArrowEvalPython, one input scan, and the
+    bucket-pair join reuses the packed buckets' exchange (an inferred
+    `size(_buckets) > 0` filter used to re-run the UDF, and an inferred
+    `isnotnull(bk)` on one side kept the two branches from sharing)."""
+    import numpy as np
+    import pandas as pd
+
+    rng = np.random.default_rng(0)
+    path = str(tmp_path / "emb.parquet")
+    spark.createDataFrame(pd.DataFrame(
+        {"vec_id": range(200),
+         "embedding": [list(map(float, rng.standard_normal(8))) for _ in range(200)]}
+    )).write.parquet(path)
+    out = similarity.embedding_near_dup_pairs(
+        spark.read.parquet(path), dim=8, threshold=0.5, n_planes=4, n_tables=3,
+        n_probe_bits=1,
+    )
+    out.collect()
+    final = _plan(out).split("== Initial Plan ==")[0]
+    assert final.count("ArrowEvalPython") == 1, final
+    assert final.count("FileScan") == 1, final
+    assert "ReusedExchange" in final, final

@@ -1,0 +1,39 @@
+"""The session factory's driver-cost settings, and that errors stay loud."""
+
+from __future__ import annotations
+
+import py4j.clientserver
+import pytest
+from pyspark.errors import NumberFormatException
+from pyspark.sql import functions as F
+
+
+def test_dataframe_debugging_is_off(spark):
+    # the fixture's session comes from session.get_spark
+    assert spark.conf.get("spark.python.sql.dataFrameDebugging.enabled") == "false"
+
+
+def test_col_costs_three_py4j_commands(spark, monkeypatch):
+    """With call-site capture off, building a Column is one JVM call (3 Py4J
+    commands) instead of ~20: no session lookup, conf read or
+    PySparkCurrentOrigin set/clear around it."""
+    F.col("warm")  # first call resolves the JVM functions class
+    conn = py4j.clientserver.ClientServerConnection
+    sent = []
+    send = conn.send_command
+
+    def counting(self, command, *args, **kwargs):
+        sent.append(command)
+        return send(self, command, *args, **kwargs)
+
+    monkeypatch.setattr(conn, "send_command", counting)
+    F.col("x")
+    monkeypatch.undo()
+    assert len(sent) <= 3, sent
+
+
+def test_ansi_cast_error_keeps_its_error_class(spark):
+    df = spark.createDataFrame([("12",), ("not a number",)], "s string")
+    with pytest.raises(NumberFormatException) as e:
+        df.select(F.col("s").cast("int")).collect()
+    assert e.value.getCondition() == "CAST_INVALID_INPUT"
