@@ -432,14 +432,10 @@ def load_drift_baseline(path: str) -> dict:
         return json.load(f)
 
 
-def spec_drift_report(df: DataFrame, drift_spec) -> pd.DataFrame:
-    """Run a DriftSpec (YAML ``drift:`` block) against its baseline file.
-
-    Current-side sketches for every declared column come from ONE fused
-    scan (:func:`multi_sketch_counts`); metrics are computed driver-side
-    from the two tiny count vectors. Returns pandas
-    (column, metric, value, threshold, drifted) — the rows execute()
-    attaches to its output."""
+def spec_drift_baseline(drift_spec) -> dict:
+    """Load the baseline sketch a DriftSpec names and check that it covers
+    every declared column; raises SpecValidationError otherwise. File I/O
+    only, no Spark job, so execute() runs it before starting any."""
     from pysemantic_spark.errors import SpecValidationError
 
     if not drift_spec.baseline:
@@ -454,6 +450,22 @@ def spec_drift_report(df: DataFrame, drift_spec) -> pd.DataFrame:
             f"drift baseline {drift_spec.baseline} lacks sketches for "
             f"columns {missing} — rebuild it with the full column list"
         )
+    return base
+
+
+def spec_drift_report(
+    df: DataFrame, drift_spec, baseline: dict | None = None
+) -> pd.DataFrame:
+    """Run a DriftSpec (YAML ``drift:`` block) against its baseline file,
+    or against ``baseline`` when the caller already loaded and checked it
+    with :func:`spec_drift_baseline`.
+
+    Current-side sketches for every declared column come from ONE fused
+    scan (:func:`multi_sketch_counts`); metrics are computed driver-side
+    from the two tiny count vectors. Returns pandas
+    (column, metric, value, threshold, drifted) — the rows execute()
+    attaches to its output."""
+    base = spec_drift_baseline(drift_spec) if baseline is None else baseline
     numeric_specs = {
         c: (e["lo"], e["hi"], e["n_bins"])
         for c, e in base["columns"].items()

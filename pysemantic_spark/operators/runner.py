@@ -20,14 +20,17 @@ scanned ONCE per full-width pass, not once per check. Referential checks ride
 the same pass as broadcast hash joins (no shuffle of the fact side).
 
 `execute()` is the production orchestration: it plans only the flagged
-frame, then runs ONE full-width action (writing violations, with
-stats/check-counts attached via `observe` so they cost nothing extra) plus
-skinny pruned-scan aggregations for the per-bucket row counts and the
+frame and runs every job in one concurrent wave. The jobs that read only
+the input start first on helper threads: the per-bucket row counts and the
 duplicate-key groups (one per declared key, grouped by the key alone;
-written to a sink, never collected, their count observed on the write). At 100 TB that is the
-minimum I/O shape: full data crosses the scanner once; shuffles touch only
-(conv_id, turn_idx) pairs and bucket ids, and nothing unbounded lands on
-the driver.
+written to a sink, never collected, their count observed on the write),
+both skinny pruned-scan aggregations, and the drift scan. Alongside them
+the main thread runs ONE full-width action (writing violations, with
+stats/check-counts attached via `observe` so they cost nothing extra). Only
+the per-bucket violating-row count waits, because it reads that action's
+sink. At 100 TB that is the minimum I/O shape: full data crosses the
+scanner once; shuffles touch only (conv_id, turn_idx) pairs and bucket
+ids, and nothing unbounded lands on the driver.
 
 Semantics vs the reference (pysemantic/validator.py ::
 DataFrameValidator.clean → SeriesValidator.clean loop): the reference drops
@@ -223,13 +226,10 @@ def validate(
     )
 
     # --- unique-key duplicate detection: sort-merge agg on a PRUNED scan --
-    dupes = None
     row_ok = F.size(VIOLATIONS_COL) == 0
     clean = flagged.filter(row_ok)
-    for key in plan.unique_keys:
-        grp = df.groupBy(*key).agg(F.count(F.lit(1)).alias("dup_count"))
-        d = grp.filter(F.col("dup_count") > 1)
-        dupes = d if dupes is None else dupes.unionByName(d, allowMissingColumns=True)
+    dupes, key_groups = _dup_groups(df, plan)
+    for key, d in zip(plan.unique_keys, key_groups):
         # keep-first dedup, but ONLY dup-key rows enter the window shuffle:
         # unique keys (the overwhelming majority) pass through untouched.
         # NULL-safe split: NULL keys group together (window semantics),
@@ -294,6 +294,27 @@ def validate(
     )
 
 
+def _dup_groups(
+    df: DataFrame, plan: CheckPlan
+) -> tuple[DataFrame | None, list[DataFrame]]:
+    """Duplicate-key groups (key columns + ``dup_count`` > 1) for EVERY
+    declared unique key — composite ``uniqueness`` entries and per-column
+    is_drop_duplicates alike: their union (None without keys) and the
+    per-key frames. Each key is grouped by the key ALONE, never by (key,
+    bucket): a bucket column not determined by the key would split a dup
+    group across buckets and miss the duplicates."""
+    groups = [
+        df.groupBy(*key)
+        .agg(F.count(F.lit(1)).alias("dup_count"))
+        .filter(F.col("dup_count") > 1)
+        for key in plan.unique_keys
+    ]
+    dupes = None
+    for d in groups:
+        dupes = d if dupes is None else dupes.unionByName(d, allowMissingColumns=True)
+    return dupes, groups
+
+
 def _violating_rows_per_bucket(viol: DataFrame, key_cols: list[str]) -> DataFrame:
     """Per-bucket count of DISTINCT violating rows from the violations
     stream (one stream row per (row, failed check): a row violating 3
@@ -326,30 +347,49 @@ def execute(
     dupes_sink: str | None = None,
     sink_format: str = "parquet",
 ) -> dict[str, Any]:
-    """Production run: one full-width pass + skinny pruned-scan aggs.
+    """Production run: one concurrent wave of jobs with one dependency.
 
     Plans only the flagged frame; validate()'s other artifacts are not built.
-    Pass 1 (full width): write/materialize the violations row stream, with
-      per-column stats and per-check counts riding the same action via
-      ``observe`` — zero extra scans for stats.
-    Pass 2 (skinny): pruned-scan aggs producing the per-bucket totals and,
-      for EVERY declared unique key, the duplicate-key groups — grouped by
-      the key alone (never by (key, bucket): a bucket column not determined
-      by the key would split dup groups and undercount). Dup groups are
-      written to ``dupes_sink`` (defaults to ``<violations_sink>_dupes``),
-      never collected: their count is observed on that sink write (a
-      ``count()`` of the persisted groups without a sink). Sinks are read
-      back with the schema just written, so a read-back runs no job.
+    Before pass 1 is planned, the jobs that read only the input start on
+    helper threads:
+      - bucket totals: one pruned scan of the ``bucket_by`` column;
+      - for EVERY declared unique key, the duplicate-key groups (see
+        :func:`_dup_groups`), written to ``dupes_sink`` (defaults to
+        ``<violations_sink>_dupes``), never collected: their count is
+        observed on that sink write (a ``count()`` of the persisted groups
+        without a sink);
+      - drift, when the spec has a ``drift:`` block: one fused scan of the
+        drift columns against the baseline, which is loaded and checked
+        before any job starts, so a bad block fails with no sink written.
+    Pass 1 (main thread, full width): write/materialize the violations row
+      stream, with per-column stats and per-check counts riding the same
+      action via ``observe`` — zero extra scans for stats.
+    The one dependent job then runs: the per-bucket violating-row counts,
+      read from pass 1's sink. ``on_drift: fail`` raises only after every
+      job has finished. Sinks are read back with the schema just written,
+      so a read-back runs no job.
+
+    Helper threads inherit the caller's local properties (job group,
+    description, scheduler pool) and session tags, so ``setJobGroup`` /
+    ``cancelJobGroup`` cover every job of the call. An error in any job
+    propagates after the other jobs finish; nothing stays persisted.
 
     Returns dict(stats=pandas, check_counts=pandas, partition_report=pandas,
     dupes=lazy DataFrame handle or None, n_dup_keys=int, dupes_path=...,
-    n_rows=int, violations_path=...). Tiny frames come back as pandas;
-    anything that can grow with the data (violations, dupes) stays a path +
-    lazy handle.
+    n_rows=int, violations_path=..., drift=pandas or None, timings=dict).
+    Tiny frames come back as pandas; anything that can grow with the data
+    (violations, dupes) stays a path + lazy handle. ``timings`` holds
+    driver wall-clock seconds: ``compile_and_plan`` (compile, baseline
+    load, helper submission, pass-1 planning), ``pass1_violations_write``
+    (pass 1's action, sharing the cores with the helpers) and
+    ``pass2_overlapped`` (the tail after pass 1: the violating-row count
+    plus waiting for the helpers).
     """
     import time as _time
+    from concurrent.futures import ThreadPoolExecutor
 
     import pandas as pd
+    from pyspark.util import inheritable_thread_target
 
     _t0 = _time.time()
     _timings: dict[str, float] = {}
@@ -362,17 +402,21 @@ def execute(
 
     plan = spec if isinstance(spec, CheckPlan) else compile_spec(spec)
     if bucket_by is None:
-        # spark_partition_id() is NOT stable across the two passes (they
-        # scan different column subsets → different splits); production
+        # spark_partition_id() is NOT stable across jobs (they scan
+        # different column subsets → different splits); production
         # reports need a content-derived bucket
         raise ValueError(
             "execute() requires bucket_by (a column whose hash defines the "
             "partition buckets); physical partition ids are not comparable "
             "across passes"
         )
+    baseline = None
+    if plan.drift is not None:
+        from pysemantic_spark.operators.drift import spec_drift_baseline
 
-    # df-level pre-rules applied ONCE here so pass 1 and pass 2 see the
-    # same rows
+        baseline = spec_drift_baseline(plan.drift)
+
+    # df-level pre-rules applied ONCE here so every job sees the same rows
     if plan.drop_duplicates:
         df = df.dropDuplicates()
     if plan.drop_na:
@@ -384,62 +428,7 @@ def execute(
         # read back with the schema just written: inference would cost a job
         return spark.read.format(sink_format).schema(frame.schema).load(path)
 
-    # ---- pass 1: violations + observe(stats, check counts) ---------------
-    obs = Observation("validation_stats")
-    observed = _flag(df, plan, dims or {}, bucket_expr).observe(
-        obs, *_summary_exprs(df, plan)
-    )
-    key_cols = plan.unique_keys[0] if plan.unique_keys else df.columns[:1]
-    # deterministic per-row discriminator so two different rows sharing the
-    # unique key (the very thing the engine detects) each count as a
-    # violating row; byte-identical full rows still collapse — those are
-    # exactly what drop_duplicates removes when declared
-    from pysemantic_spark.operators.skew import hashable_cols
-
-    row_hash = F.xxhash64(*[F.col(c) for c in hashable_cols(df)]).alias("_row_hash")
-    viol = (
-        observed.filter(F.size(VIOLATIONS_COL) > 0)
-        .select(
-            *key_cols,
-            F.explode(VIOLATIONS_COL).alias("check_name"),
-            BUCKET_COL,
-            row_hash,
-        )
-    )
-    _mark("compile_and_plan")
-    if violations_sink:
-        viol_small = _sink(viol, violations_sink)
-    else:
-        viol_small = viol.persist()
-        viol_small.count()  # force the pass
-    metrics = obs.get
-    _mark("pass1_violations_write")
-
-    # ---- pass 2: skinny aggs, CONCURRENT actions --------------------------
-    # Three independent jobs run here: (a) per-bucket violating-row counts
-    # from the small violations output, (b) bucket totals (one pruned scan
-    # of the bucket_by column), (c) the duplicate-key groups written to the
-    # dupes sink, their count observed on that write. (a) and (b) are tiny
-    # (seconds of mostly fixed job cost) but were serialized after (c) —
-    # pure driver round-trip latency. They are submitted from helper
-    # threads while the main thread runs the big dupes job: independent
-    # DAGs, so Spark schedules their tasks into the idle slots of (c)'s
-    # waves (standard concurrent-jobs practice on real clusters; PySpark
-    # actions are thread-safe). Saves ~2 s/run at every cluster size —
-    # material to the N-vs-4N efficiency ratio, where the serial floor is
-    # divided by nothing.
-    #
-    # Bucket totals stay a SEPARATE aggregation from the dup-key aggs on
-    # purpose: grouping dupes by (key, bucket) would split a duplicated key
-    # across buckets whenever bucket_by is not functionally dependent on
-    # the key (each (key,bucket) group counts 1 → duplicates silently
-    # missed). Dupes group by the key ALONE, exactly like validate().
-    from concurrent.futures import ThreadPoolExecutor
-
-    def _viol_rows_job():
-        return _violating_rows_per_bucket(viol_small, key_cols).toPandas()
-
-    def _totals_job():
+    def _totals_job() -> pd.DataFrame:
         return (
             df.select(bucket_expr.alias("bucket"))
             .groupBy("bucket")
@@ -447,62 +436,101 @@ def execute(
             .toPandas()
         )
 
-    # Duplicate-key groups for ALL declared keys (composite `uniqueness`
-    # entries and per-column is_drop_duplicates alike), unioned. The result
-    # is written to a sink, NEVER toPandas()'d: on a 10^12-row table with
-    # pervasive duplication the dup-group frame is unbounded — only the
-    # group COUNT belongs on the driver.
-    dupes = None
-    for key in plan.unique_keys:
-        d = (
-            df.groupBy(*key)
-            .agg(F.count(F.lit(1)).alias("dup_count"))
-            .filter(F.col("dup_count") > 1)
-        )
-        dupes = d if dupes is None else dupes.unionByName(d, allowMissingColumns=True)
-    dupes_path = None
-    n_dup_keys = 0
-    with ThreadPoolExecutor(max_workers=2) as _pool:
-        _viol_fut = _pool.submit(_viol_rows_job)
-        _totals_fut = _pool.submit(_totals_job)
-        if dupes is not None:
-            if dupes_sink is None and violations_sink is not None:
-                dupes_sink = violations_sink.rstrip("/") + "_dupes"
-            if dupes_sink:
-                dup_obs = Observation("dup_keys")  # the count rides the write
-                dupes = _sink(
-                    dupes.observe(dup_obs, F.count(F.lit(1)).alias("n")), dupes_sink
-                )
-                n_dup_keys = int(dup_obs.get["n"])
-                dupes_path = dupes_sink
-            else:
-                dupes = dupes.persist()
-                n_dup_keys = dupes.count()
-        viol_rows_per_bucket = _viol_fut.result()
-        bucket_totals = _totals_fut.result()
-    _mark("pass2_overlapped")
+    dupes, _ = _dup_groups(df, plan)
+    if dupes is not None and dupes_sink is None and violations_sink is not None:
+        dupes_sink = violations_sink.rstrip("/") + "_dupes"
+    dupes_path = dupes_sink if dupes is not None else None
 
-    # ---- drift: spec-declared distribution checks vs the baseline sketch --
-    # One extra fused scan over ONLY the drift columns (all columns' bins
-    # ride a single posexplode+agg); metrics computed driver-side from the
-    # two tiny count vectors.
-    drift_pdf = None
-    if plan.drift is not None:
+    def _dupes_job() -> tuple[DataFrame, int]:
+        if dupes_sink:
+            dup_obs = Observation("dup_keys")  # the count rides the write
+            handle = _sink(
+                dupes.observe(dup_obs, F.count(F.lit(1)).alias("n")), dupes_sink
+            )
+            return handle, int(dup_obs.get["n"])
+        return dupes, dupes.persist().count()
+
+    def _drift_job() -> pd.DataFrame:
         from pysemantic_spark.operators.drift import spec_drift_report
 
-        drift_pdf = spec_drift_report(df, plan.drift)
-        if plan.drift.on_drift == "fail" and bool(drift_pdf["drifted"].any()):
-            from pysemantic_spark.errors import DriftDetectedError
+        return spec_drift_report(df, plan.drift, baseline)
 
-            bad = drift_pdf[drift_pdf["drifted"]]
-            raise DriftDetectedError(
-                "distribution drift over threshold (on_drift: fail): "
-                + "; ".join(
-                    f"{r.column}/{r.metric}={r.value} > {r.threshold}"
-                    for r in bad.itertuples()
-                ),
-                report=drift_pdf,
+    n_dup_keys = 0
+    viol = drift_pdf = None
+    try:
+        with ThreadPoolExecutor(max_workers=3) as pool:
+
+            def _submit(job):
+                # one wrapper per job: each gets its own copy of the caller's
+                # local properties (a thread holds them by reference, and
+                # every SQL job sets its execution id in them)
+                return pool.submit(inheritable_thread_target(spark)(job))
+
+            totals_fut = _submit(_totals_job)
+            dupes_fut = None if dupes is None else _submit(_dupes_job)
+            drift_fut = None if plan.drift is None else _submit(_drift_job)
+
+            # ---- pass 1: violations + observe(stats, check counts) -------
+            obs = Observation("validation_stats")
+            observed = _flag(df, plan, dims or {}, bucket_expr).observe(
+                obs, *_summary_exprs(df, plan)
             )
+            key_cols = plan.unique_keys[0] if plan.unique_keys else df.columns[:1]
+            # deterministic per-row discriminator so two different rows
+            # sharing the unique key (the very thing the engine detects)
+            # each count as a violating row; byte-identical full rows still
+            # collapse — those are exactly what drop_duplicates removes when
+            # declared
+            from pysemantic_spark.operators.skew import hashable_cols
+
+            row_hash = F.xxhash64(*[F.col(c) for c in hashable_cols(df)]).alias(
+                "_row_hash"
+            )
+            viol = observed.filter(F.size(VIOLATIONS_COL) > 0).select(
+                *key_cols,
+                F.explode(VIOLATIONS_COL).alias("check_name"),
+                BUCKET_COL,
+                row_hash,
+            )
+            _mark("compile_and_plan")
+            if violations_sink:
+                viol_small = _sink(viol, violations_sink)
+            else:
+                viol_small = viol.persist()
+                viol_small.count()  # force the pass
+            metrics = obs.get
+            _mark("pass1_violations_write")
+            # the one job that depends on pass 1: it reads pass 1's sink
+            viol_rows_per_bucket = _violating_rows_per_bucket(
+                viol_small, key_cols
+            ).toPandas()
+            bucket_totals = totals_fut.result()
+            if dupes_fut is not None:
+                dupes, n_dup_keys = dupes_fut.result()
+            if drift_fut is not None:
+                drift_pdf = drift_fut.result()
+        _mark("pass2_overlapped")
+
+        if plan.drift is not None and plan.drift.on_drift == "fail":
+            bad = drift_pdf[drift_pdf["drifted"]]
+            if len(bad):
+                from pysemantic_spark.errors import DriftDetectedError
+
+                raise DriftDetectedError(
+                    "distribution drift over threshold (on_drift: fail): "
+                    + "; ".join(
+                        f"{r.column}/{r.metric}={r.value} > {r.threshold}"
+                        for r in bad.itertuples()
+                    ),
+                    report=drift_pdf,
+                )
+    except BaseException:
+        if dupes is not None and not dupes_sink:
+            dupes.unpersist(blocking=True)
+        raise
+    finally:
+        if viol is not None and not violations_sink:
+            viol.unpersist(blocking=True)
 
     report = bucket_totals.merge(viol_rows_per_bucket, on="bucket", how="left")
     report["n_violating_rows"] = (
@@ -531,8 +559,6 @@ def execute(
         {"check_name": n, "n_violations": int(metrics[f"__chk__{n}"] or 0)}
         for n in _counted_checks(plan)
     ]
-    if not violations_sink:
-        viol_small.unpersist(blocking=True)
 
     return {
         "n_rows": n_rows,

@@ -284,3 +284,69 @@ def test_execute_report_agrees_with_lazy_validate(spark, run):
     assert (
         lazy_rep["n_violating_rows"].tolist() == exec_rep["n_violating_rows"].tolist()
     )
+
+
+def test_execute_jobs_inherit_the_callers_job_group(spark, tmp_path):
+    """Every job of one call (pass 1, the helper-thread jobs and the
+    dependent count) runs in the caller's job group, so cancelJobGroup
+    reaches all of them."""
+    import numpy as np
+    import pandas as pd
+
+    from pysemantic_spark.operators.drift import save_drift_baseline
+    from pysemantic_spark.spec import DatasetSpec
+
+    pdf = pd.DataFrame(
+        {"v": np.random.default_rng(3).normal(0, 1, 500), "k": range(500)}
+    )
+    df = spark.createDataFrame(pdf)
+    bl = str(tmp_path / "bl.json")
+    save_drift_baseline(df, ["v"], bl)
+    spec = DatasetSpec.from_dict(
+        "t",
+        {
+            "column_rules": {"v": {"max": 1.0}},
+            "uniqueness": [["k"]],
+            "drift": {"columns": ["v"], "baseline": bl},
+        },
+    )
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    ungrouped = set(tracker.getJobIdsForGroup(None))
+    sc.setJobGroup("execute-group", "one execute call")
+    try:
+        execute(
+            spark, df, spec, bucket_by="k", n_buckets=4,
+            violations_sink=str(tmp_path / "violations"),
+        )
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+        sc.setLocalProperty("spark.job.interruptOnCancel", None)
+    grouped = sorted(tracker.getJobIdsForGroup("execute-group"))
+    assert set(tracker.getJobIdsForGroup(None)) - ungrouped == set()
+    # pass 1, bucket totals, dup-key groups, drift and the violating-row count
+    assert len(grouped) >= 5
+    assert grouped == list(range(grouped[0], grouped[-1] + 1))
+
+
+def test_execute_helper_job_error_propagates_and_joins_threads(spark, tmp_path):
+    """A failing helper-thread job (the dup-key sink sits under a regular
+    file) raises out of execute, and no pool thread outlives the call."""
+    import threading
+
+    from pysemantic_spark.spec import DatasetSpec
+
+    blocker = tmp_path / "file"
+    blocker.write_text("not a directory")
+    spec = DatasetSpec.from_dict("t", {"uniqueness": [["k"]]})
+    df = spark.range(100).withColumnRenamed("id", "k")
+    with pytest.raises(Exception, match="ParentNotDirectoryException"):
+        execute(
+            spark, df, spec, bucket_by="k", n_buckets=4,
+            violations_sink=str(tmp_path / "violations"),
+            dupes_sink=str(blocker / "dupes"),
+        )
+    assert not [
+        t for t in threading.enumerate() if t.name.startswith("ThreadPoolExecutor")
+    ]

@@ -212,6 +212,69 @@ def test_execute_on_drift_fail_raises(spark, tmp_path):
     assert bool(out["drift"]["drifted"].any())
 
 
+def _drift_frames(spark, tmp_path, columns):
+    """A baseline sketch of ``v`` ~ N(100, 10) and a current frame shifted
+    to N(160, 10), both with a unique ``k``; returns (current, baseline
+    path)."""
+    import numpy as np
+    import pandas as pd
+
+    from pysemantic_spark.operators.drift import save_drift_baseline
+
+    rng = np.random.default_rng(5)
+    base = spark.createDataFrame(
+        pd.DataFrame({"v": rng.normal(100, 10, 2000), "k": range(2000)})
+    )
+    shifted = spark.createDataFrame(
+        pd.DataFrame({"v": rng.normal(160, 10, 2000), "k": range(2000)})
+    )
+    bl = str(tmp_path / "bl.json")
+    save_drift_baseline(base, columns, bl)
+    return shifted, bl
+
+
+def test_execute_drift_fail_leaves_nothing_persisted(spark, tmp_path):
+    """A DriftDetectedError raised after the jobs ran releases what execute
+    persisted without sinks: the violations frame and the dup-key groups."""
+    from pysemantic_spark.errors import DriftDetectedError
+    from pysemantic_spark.operators.runner import execute
+    from pysemantic_spark.spec import DatasetSpec
+
+    shifted, bl = _drift_frames(spark, tmp_path, ["v"])
+    spec = DatasetSpec.from_dict(
+        "t",
+        {
+            "uniqueness": [["k"]],
+            "drift": {"columns": ["v"], "baseline": bl, "on_drift": "fail"},
+        },
+    )
+    jsc = spark.sparkContext._jsc
+    before = jsc.getPersistentRDDs().size()
+    with pytest.raises(DriftDetectedError):
+        execute(spark, shifted, spec, bucket_by="k", n_buckets=4)
+    assert jsc.getPersistentRDDs().size() == before
+
+
+def test_execute_bad_drift_block_fails_before_any_sink(spark, tmp_path):
+    """A baseline that lacks a declared drift column is a spec error, raised
+    before any job runs: the violations sink is never written."""
+    from pysemantic_spark.errors import SpecValidationError
+    from pysemantic_spark.operators.runner import execute
+    from pysemantic_spark.spec import DatasetSpec
+
+    shifted, bl = _drift_frames(spark, tmp_path, ["v"])
+    spec = DatasetSpec.from_dict(
+        "t", {"drift": {"columns": ["v", "k"], "baseline": bl}}
+    )
+    sink = tmp_path / "violations"
+    with pytest.raises(SpecValidationError, match="lacks sketches"):
+        execute(
+            spark, shifted, spec, bucket_by="k", n_buckets=4,
+            violations_sink=str(sink),
+        )
+    assert not sink.exists()
+
+
 def test_run_resumable_quarantines_drifted_chunk(spark, tmp_path):
     """VERDICT r2 #9: on_drift: quarantine parks the drifted chunk's
     buckets (status=quarantined, recorded drift rows) and a rerun SKIPS
