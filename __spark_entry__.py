@@ -482,10 +482,10 @@ def q_simhash_wide_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_dedup_clusters_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Duplicate-CLUSTER assignment — the step after pair mining that a
     real training-data dedup needs: near-dup pairs (exact prefix-path
-    jaccard ≥ 0.5) → connected components via min-label propagation →
+    jaccard ≥ 0.5) → connected components via star contraction →
     (doc_id, cluster_rep) with one canonical representative per cluster.
     Oracle: DuckDB recursive-CTE transitive closure over the SAME pair
-    set — the exact fixpoint the iterative propagation converges to."""
+    set — the exact fixpoint the iterative contraction converges to."""
     docs = _read(spark, sf_dir, "documents")
     pairs = dedup.ngram_jaccard_pairs(
         docs, "doc_id", "text", n=3, threshold=0.5, prefix_filter=True
@@ -502,12 +502,11 @@ def q_dedup_clusters_star_documents(spark: SparkSession, sf_dir: str) -> DataFra
     token streams collapse to representatives, ngram pairs are mined
     among reps only, connected components run on the rep graph with the
     ALTERNATING LARGE-STAR/SMALL-STAR contraction (Kiveris et al. 2014 —
-    O(log n) rounds on any diameter, where one-hop label propagation
-    needs O(diameter) and, since round 5, raises), and members inherit
-    their rep's cluster by join — so a million-clone boilerplate group
-    costs O(m) rows end-to-end instead of an m²/2-edge pair list. The
-    result must be row-identical to the pair-list + label-propagation
-    path, so this query shares the recursive-CTE transitive-closure
+    O(log n) rounds on any diameter), and members inherit their rep's
+    cluster by join — so a million-clone boilerplate group costs O(m)
+    rows end-to-end instead of an m²/2-edge pair list. The result must
+    be row-identical to the pair-list path (`dedup_clusters_documents`),
+    so this query shares the recursive-CTE transitive-closure
     oracle — the agreement of the two pipelines is itself
     oracle-checked."""
     docs = _read(spark, sf_dir, "documents")
@@ -1735,7 +1734,7 @@ def oracle_sql() -> dict[str, str]:
         "ngram_prefix_pairs_documents": _NGRAM_BRUTE_05_SQL,
         # duplicate clusters: transitive closure (recursive CTE) over the
         # SAME brute-force pair set; cluster_rep = min reachable id, the
-        # exact fixpoint the min-label propagation must converge to
+        # exact fixpoint the star contraction must converge to
         "dedup_clusters_documents": f"""
             WITH RECURSIVE p AS (
                 SELECT id_a, id_b FROM ({_NGRAM_BRUTE_05_SQL})
@@ -1760,8 +1759,9 @@ def oracle_sql() -> dict[str, str]:
         "lsh_topk_embeddings": _topk_gate_sql("recall@5 >= 0.6 per query"),
         "ivf_topk_embeddings": _topk_gate_sql("recall@5 >= 0.4 per query"),
     }
-    # label propagation and star contraction must reach the SAME fixpoint,
-    # so the star query shares the transitive-closure oracle verbatim
+    # the pair-list and rep-graph compositions must reach the SAME
+    # fixpoint, so the star query shares the transitive-closure oracle
+    # verbatim
     d["dedup_clusters_star_documents"] = d["dedup_clusters_documents"]
     # the append-mode twin must emit EXACTLY the complete-mode window set
     # (the sentinel closes every real window; its own never closes), so it

@@ -44,7 +44,7 @@ def truncate_lineage(df: DataFrame) -> DataFrame:
 
     persist() caches the DATA but Catalyst still re-analyzes the full
     compounding lineage of every later plan built on top — in iterative
-    algorithms (label propagation, star contraction) per-round compile
+    algorithms (star contraction) per-round compile
     cost therefore grows superlinearly with round number (measured in the
     star loop: 2.7 s → 12.6 s by round 3 on a 40-edge graph, pure
     driver-side analysis). localCheckpoint replaces the plan with a scan

@@ -1567,8 +1567,9 @@ def duplicate_clusters(
     starts. This operator never builds them: identical token streams
     collapse to one representative (:func:`collapse_identical_docs`),
     ngram-Jaccard pairs are mined among REPRESENTATIVES only, connected
-    components run on that rep graph, and members inherit their rep's
-    cluster with one join. Since each rep is the MINIMUM id of its
+    components (star contraction; ``algorithm`` and ``max_iters`` pass
+    through to :func:`connected_components`) run on that rep graph, and
+    members inherit their rep's cluster with one join. Since each rep is the MINIMUM id of its
     group, the rep-graph cluster minimum equals the full-graph cluster
     minimum, so the output is row-identical to
     ``connected_components(ngram_jaccard_pairs(df, ...))`` — including
@@ -1792,7 +1793,7 @@ def connected_components(
     id_a: str = "id_a",
     id_b: str = "id_b",
     max_iters: int = 25,
-    algorithm: str = "label",
+    algorithm: str = "star",
 ) -> DataFrame:
     """Duplicate-cluster assignment from a near-dup pair list: connected
     components. Returns (node, cluster_rep) for every node appearing in
@@ -1801,99 +1802,42 @@ def connected_components(
     training-data dedup contract: keep the representative, drop the
     rest).
 
-    ``algorithm="label"`` — min-label propagation: one edge⋈labels join
-    + a min-agg per node per round (~|E| shuffled rows keyed by node, no
-    driver-side graph). Labels advance ONE hop per round, so rounds ≈
-    component diameter: 3-5 on near-cliquish dup clusters, but O(n) on
-    adversarial chains. If ``max_iters`` is exhausted before the
-    fixpoint this RAISES (labels would be silently wrong otherwise) and
-    names the fix: the star algorithm.
-
-    ``algorithm="star"`` — alternating large-star/small-star contraction
-    (Kiveris et al. 2014): O(log n) rounds regardless of diameter, same
-    per-round join shape. The scale-safe choice when cluster shapes are
-    unknown (crawl shingle chains, boilerplate drift).
-
-    Both truncate lineage per round (LAZY localCheckpoint, materialized
-    by the round's own convergence action — one job per round) so each
-    round's plan — and Catalyst's per-round analysis cost — stays ONE
-    round deep instead of compounding."""
-    if algorithm not in ("label", "star"):
+    Alternating large-star/small-star contraction (Kiveris et al. 2014,
+    :func:`_star_contraction`): O(log n) rounds regardless of component
+    diameter, so chain-shaped dup graphs (crawl shingle chains,
+    boilerplate drift) converge as fast as near-cliques. Each round
+    truncates lineage (LAZY localCheckpoint, materialized by the round's
+    own convergence action — one job per round), so each round's plan —
+    and Catalyst's per-round analysis cost — stays ONE round deep instead
+    of compounding. ``algorithm`` has one legal value, ``"star"``; any
+    other raises ValueError."""
+    if algorithm != "star":
         raise ValueError(f"unknown connected-components algorithm {algorithm!r}")
-    if algorithm == "star":
-        # persist the two-column pair projection ONCE (symmetric with the
-        # label path's edge materialization below): edges0, the node set,
-        # and every caller-side branch over the result would otherwise
-        # each re-run the full upstream mining DAG — measured 3× mining
-        # evaluations per duplicate_clusters call at sf0.1
-        pairs_uv = _materialize(
-            pairs.select(F.col(id_a).alias("_pa"), F.col(id_b).alias("_pb"))
-        )
-        edges0 = (
-            pairs_uv.select(
-                F.greatest(F.col("_pa"), F.col("_pb")).alias("u"),
-                F.least(F.col("_pa"), F.col("_pb")).alias("v"),
-            )
-            .filter(F.col("u") != F.col("v"))
-            .distinct()
-        )
-        stars = _star_contraction(edges0, max_iters)
-        nodes = (
-            pairs_uv.select(F.col("_pa").alias("node"))
-            .unionByName(pairs_uv.select(F.col("_pb").alias("node")))
-            .distinct()
-        )
-        return nodes.join(
-            stars.select(F.col("u").alias("node"), F.col("v").alias("_rep")),
-            "node",
-            "left",
-        ).select(
-            "node", F.coalesce(F.col("_rep"), F.col("node")).alias("cluster_rep")
-        )
-    edges = _materialize(
-        pairs.select(F.col(id_a).alias("u"), F.col(id_b).alias("v")).unionByName(
-            pairs.select(F.col(id_b).alias("u"), F.col(id_a).alias("v"))
-        )
+    # persist the two-column pair projection ONCE: edges0, the node set,
+    # and every caller-side branch over the result would otherwise each
+    # re-run the full upstream mining DAG — measured 3× mining evaluations
+    # per duplicate_clusters call at sf0.1
+    pairs_uv = _materialize(
+        pairs.select(F.col(id_a).alias("_pa"), F.col(id_b).alias("_pb"))
     )
-    labels = (
-        edges.select("u").distinct().withColumn("label", F.col("u"))
-        .localCheckpoint(eager=False)
+    edges0 = (
+        pairs_uv.select(
+            F.greatest(F.col("_pa"), F.col("_pb")).alias("u"),
+            F.least(F.col("_pa"), F.col("_pb")).alias("v"),
+        )
+        .filter(F.col("u") != F.col("v"))
+        .distinct()
     )
-    changed = 0
-    for _ in range(max_iters):
-        neighbor_min = (
-            edges.join(
-                labels.select(
-                    F.col("u").alias("v"), F.col("label").alias("vlabel")
-                ),
-                "v",
-            )
-            .groupBy("u")
-            .agg(F.min("vlabel").alias("nmin"))
-        )
-        # LAZY checkpoint (plan truncated immediately); the changed-count
-        # below is the materializing action — one job per round, not two
-        # (same fusion as _star_contraction, round 6)
-        new_labels = labels.join(neighbor_min, "u", "left").select(
-            "u",
-            F.least(
-                F.col("label"), F.coalesce(F.col("nmin"), F.col("label"))
-            ).alias("label"),
-        ).localCheckpoint(eager=False)
-        changed = (
-            new_labels.alias("n")
-            .join(labels.alias("o"), "u")
-            .filter(F.col("n.label") != F.col("o.label"))
-            .count()
-        )
-        labels = new_labels
-        if changed == 0:
-            break
-    if changed != 0:
-        raise RuntimeError(
-            f"connected_components(algorithm='label') did not converge in "
-            f"{max_iters} rounds ({changed} labels still changing) — the "
-            f"component diameter exceeds max_iters; use algorithm='star' "
-            f"(O(log n) rounds) or raise max_iters"
-        )
-    return labels.select(F.col("u").alias("node"), F.col("label").alias("cluster_rep"))
+    stars = _star_contraction(edges0, max_iters)
+    nodes = (
+        pairs_uv.select(F.col("_pa").alias("node"))
+        .unionByName(pairs_uv.select(F.col("_pb").alias("node")))
+        .distinct()
+    )
+    return nodes.join(
+        stars.select(F.col("u").alias("node"), F.col("v").alias("_rep")),
+        "node",
+        "left",
+    ).select(
+        "node", F.coalesce(F.col("_rep"), F.col("node")).alias("cluster_rep")
+    )

@@ -15,9 +15,16 @@
                           multi-probe) so each query only scores its
                           buckets' candidates; recall traded via
                           n_planes/n_tables/probe count.
+- `ivf_topk`            — sub-linear path: k-means coarse clusters, each
+                          query scores only its n_probe nearest clusters.
 - `embedding_near_dup_pairs` — near-duplicate detection: cosine ≥ threshold
                           pairs via multi-table (optionally multi-probe)
                           LSH bucket self-join + exact verify.
+
+One kernel per job: the top-k operators score with :func:`cosine` and
+rank in :func:`_top_k`, the all-pairs operators verify in
+:func:`_gemm_pairs`, and the LSH operators bucket in
+:func:`hyperplane_buckets_arrow`.
 
 At 100 TB the corpus side stays partition-local in the top-k/near-dup
 paths: the only shuffles are on bucket ids (bounded cardinality) and the
@@ -32,6 +39,8 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
+
+from pysemantic_spark.operators.cache import materialize
 
 
 def _dot(a: Column, b: Column) -> Column:
@@ -52,26 +61,13 @@ def cosine(a: Column, b: Column) -> Column:
     return _dot(a, b) / (_norm(a) * _norm(b))
 
 
-def cosine_topk(
-    corpus: DataFrame,
-    queries: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    query_id_col: str = "query_id",
-    k: int = 10,
-) -> DataFrame:
-    """Exact top-k by cosine: (query_id, vec_id, cos_sim), k rows/query.
-
-    Queries broadcast (small side); per-query top-k via window row_number —
-    Catalyst turns the per-group sort into partial top-k with AQE.
-    Ties broken by vec_id for determinism."""
-    q = queries.select(
-        F.col(query_id_col).alias("query_id"), F.col(vec_col).alias("_qvec")
-    )
-    scored = corpus.select(
-        F.col(id_col).alias("vec_id"), F.col(vec_col).alias("_cvec")
-    ).crossJoin(F.broadcast(q))
-    scored = scored.select(
+def _top_k(cand: DataFrame, k: int) -> DataFrame:
+    """Score (query_id, vec_id, _cvec, _qvec) candidate rows with
+    :func:`cosine` and keep each query's k best: (query_id, vec_id,
+    cos_sim), cos_sim rounded to 6 places, ties broken by vec_id for
+    determinism. Catalyst turns the per-query window sort into a partial
+    top-k with AQE."""
+    scored = cand.select(
         "query_id",
         "vec_id",
         F.round(cosine(F.col("_cvec"), F.col("_qvec")), 6).alias("cos_sim"),
@@ -86,27 +82,75 @@ def cosine_topk(
     )
 
 
-def cosine_arrow(a: Column, b: Column) -> Column:
-    """Vectorized cosine via one Arrow-batched pandas_udf.
+def cosine_topk(
+    corpus: DataFrame,
+    queries: DataFrame,
+    id_col: str = "vec_id",
+    vec_col: str = "embedding",
+    query_id_col: str = "query_id",
+    k: int = 10,
+) -> DataFrame:
+    """Exact top-k by cosine: (query_id, vec_id, cos_sim), k rows/query.
 
-    The zip_with/aggregate expression path (:func:`cosine`) is interpreted
-    (higher-order functions do not codegen) — fine for n_queries × k rows,
-    ~10× too slow for the 10^6-candidate verify stages. Float caveat: numpy
-    accumulates the dot product in a different order than the sequential
-    JVM fold, so results can differ in the last ulp; do any rounding with
-    F.round on the output (Spark HALF_UP), never inside numpy (HALF_EVEN).
-    Zero-norm vectors score 0.0 (never NaN)."""
+    Queries broadcast (small side) against every corpus row, then the
+    per-query top-k of :func:`_top_k`."""
+    q = queries.select(
+        F.col(query_id_col).alias("query_id"), F.col(vec_col).alias("_qvec")
+    )
+    cand = corpus.select(
+        F.col(id_col).alias("vec_id"), F.col(vec_col).alias("_cvec")
+    ).crossJoin(F.broadcast(q))
+    return _top_k(cand, k)
 
-    @F.pandas_udf("double")
-    def _cos(xs: pd.Series, ys: pd.Series) -> pd.Series:
-        xa = np.stack(xs.to_numpy())
-        ya = np.stack(ys.to_numpy())
-        num = np.einsum("ij,ij->i", xa, ya)
-        den = np.linalg.norm(xa, axis=1) * np.linalg.norm(ya, axis=1)
-        out = np.divide(num, den, out=np.zeros_like(num), where=den != 0)
-        return pd.Series(out)
 
-    return _cos(a, b)
+def _gemm_pairs(threshold: float):
+    """The one all-pairs verify kernel: a ``mapInPandas`` body mapping
+    block-pair rows (ids_a, vecs_a, ids_b, vecs_b, same) to (id_a, id_b,
+    cos_sim) with id_a < id_b and cos_sim ≥ ``threshold``. A ``same`` row
+    scores one block's upper triangle against itself, any other row every
+    (a, b) cell, as one float64 GEMM of unit vectors (a zero vector scores
+    0.0). Helpers stay nested in here: cloudpickle ships a closure by
+    value but a module-level function by reference, which would make
+    every cold Python worker import this package."""
+    thr = float(threshold)
+
+    def unit(vecs):
+        M = np.stack([np.asarray(v, dtype=np.float64) for v in vecs])
+        norms = np.linalg.norm(M, axis=1)
+        norms[norms == 0] = 1.0
+        return M / norms[:, None]
+
+    def score(batches):
+        for pdf in batches:
+            for row in pdf.itertuples(index=False):
+                ids_a = np.asarray(row.ids_a)
+                An = unit(row.vecs_a)
+                if row.same:
+                    G = An @ An.T
+                    ii, jj = np.triu_indices(len(An), k=1)
+                    ids_b = ids_a
+                else:
+                    ids_b = np.asarray(row.ids_b)
+                    G = An @ unit(row.vecs_b).T
+                    ii, jj = np.unravel_index(np.arange(G.size), G.shape)
+                # threshold on the ROUND-6 value (emitted as-is): the
+                # membership decision is then insensitive to sub-5e-7
+                # accumulation-order differences vs any verifying engine
+                # (DuckDB sums in a different order; raw-value thresholds
+                # are 1-ulp-fragile at the boundary) — the SQL oracle
+                # applies round(...,6) >= threshold identically
+                cos = np.round(G[ii, jj], 6)
+                keep = cos >= thr
+                if not keep.any():
+                    continue
+                ia, ib = ids_a[ii[keep]], ids_b[jj[keep]]
+                lo, hi = np.minimum(ia, ib), np.maximum(ia, ib)
+                ok = lo != hi  # a repeated id never pairs with itself
+                yield pd.DataFrame(
+                    {"id_a": lo[ok], "id_b": hi[ok], "cos_sim": cos[keep][ok]}
+                )
+
+    return score
 
 
 def cosine_pairs_exact(
@@ -123,7 +167,8 @@ def cosine_pairs_exact(
     Plan: hash-assign each vector to one of ``n_blocks`` blocks, pack each
     block into ONE row (groupBy + collect_list), explode block b against
     partner blocks b..n_blocks-1 (an equi-join on the partner id — no
-    cartesian), then one numpy matmul per block pair inside mapInPandas.
+    cartesian), then one numpy matmul per block pair inside mapInPandas
+    (:func:`_gemm_pairs`).
     O(n²) work is inherent to exact all-pairs — the point is that every
     task is a bounded (|block| × |block|) GEMM at BLAS speed instead of
     interpreted per-pair folds, and no task or driver ever holds more than
@@ -133,7 +178,7 @@ def cosine_pairs_exact(
     when the threshold is selective enough for them to prune).
     """
     # vectors shuffle in their SOURCE element type (round 7): the kernel
-    # below upcasts to float64 before any arithmetic, and float32→float64
+    # upcasts to float64 before any arithmetic, and float32→float64
     # is exact, so results are bit-identical while a float32 corpus moves
     # half the bytes through the n_blocks/2-fold all-pairs shuffle
     base = df.select(
@@ -152,70 +197,37 @@ def cosine_pairs_exact(
         F.col("ids").alias("ids_b"),
         F.col("vecs").alias("vecs_b"),
     )
-    joined = left.join(right, "partner")
-    thr = float(threshold)
-
-    def score(batches):
-        for pdf in batches:
-            for row in pdf.itertuples(index=False):
-                ids_a = np.asarray(row.ids)
-                A = np.stack([np.asarray(v, dtype=np.float64) for v in row.vecs])
-                na = np.linalg.norm(A, axis=1)
-                na[na == 0] = 1.0
-                An = A / na[:, None]
-                same = row.blk == row.partner
-                if same:
-                    G = An @ An.T
-                    ii, jj = np.triu_indices(len(A), k=1)
-                    ids_b = ids_a
-                else:
-                    ids_b = np.asarray(row.ids_b)
-                    B = np.stack(
-                        [np.asarray(v, dtype=np.float64) for v in row.vecs_b]
-                    )
-                    nb = np.linalg.norm(B, axis=1)
-                    nb[nb == 0] = 1.0
-                    G = An @ (B / nb[:, None]).T
-                    ii, jj = np.unravel_index(np.arange(G.size), G.shape)
-                # threshold on the ROUND-6 value (emitted as-is): the
-                # membership decision is then insensitive to sub-5e-7
-                # accumulation-order differences vs any verifying engine
-                # (DuckDB sums in a different order; raw-value thresholds
-                # are 1-ulp-fragile at the boundary) — the SQL oracle
-                # applies round(...,6) >= threshold identically
-                cos = np.round(G[ii, jj], 6)
-                keep = cos >= thr
-                if not keep.any():
-                    continue
-                ia, ib = ids_a[ii[keep]], ids_b[jj[keep]]
-                lo, hi = np.minimum(ia, ib), np.maximum(ia, ib)
-                ok = lo != hi  # hash collisions of the same id never pair
-                yield pd.DataFrame(
-                    {"id_a": lo[ok], "id_b": hi[ok], "cos_sim": cos[keep][ok]}
-                )
-
+    joined = left.join(right, "partner").select(
+        F.col("ids").alias("ids_a"),
+        F.col("vecs").alias("vecs_a"),
+        "ids_b",
+        "vecs_b",
+        (F.col("blk") == F.col("partner")).alias("same"),
+    )
     return joined.mapInPandas(
-        score, schema=f"id_a {id_type}, id_b {id_type}, cos_sim double"
+        _gemm_pairs(threshold),
+        schema=f"id_a {id_type}, id_b {id_type}, cos_sim double",
     )
 
 
 def hyperplane_buckets_arrow(
     vec_col: Column, dim: int, n_planes: int, n_tables: int, seed: int = 42
 ) -> Column:
-    """All tables' LSH bucket ids in ONE Arrow-batched matmul:
-    array<long> of length n_tables.
+    """All tables' sign-LSH bucket ids in ONE Arrow-batched matmul:
+    array<long> of length n_tables — the one bucket kernel of
+    :func:`lsh_bucketed_topk` and :func:`embedding_near_dup_pairs`.
 
-    Matches ``hyperplane_bucket`` with seed ``seed + 7919*t`` for table t
-    (same seeded planes, same sign rule) up to float summation order: the
-    sequential fold and the BLAS matmul accumulate the dot product in
-    different orders, so a dot within ~1e-12 of zero can flip sign and land
-    the vector in a different bucket — harmless for LSH recall (such
-    vectors sit ON the hyperplane; either bucket is equally valid), but the
-    two paths are not guaranteed bit-identical on those measure-zero cases.
-    Computes every (table, plane) dot product as one (batch × dim) @
-    (dim × T·P) numpy matmul instead of T·P interpreted higher-order folds
-    per row — the expression path is not codegen'd and measured ~10× slower
-    at T·P ≳ 100."""
+    Table t's ``n_planes`` hyperplanes are drawn from
+    ``np.random.default_rng(seed + 7919*t)`` on the driver (table 0 uses
+    ``seed`` itself), so buckets are deterministic across runs and
+    workers. A vector's bucket in table t packs the signs of its dot
+    products with that table's planes into an int: bit p is set when the
+    dot with plane p is ≥ 0. Every (table, plane) dot product comes from
+    one (batch × dim) @ (dim × T·P) numpy matmul instead of T·P
+    interpreted higher-order folds per row — the expression path is not
+    codegen'd and measured ~10× slower at T·P ≳ 100. A dot within float
+    error of zero may take either sign (such a vector sits ON the
+    hyperplane; either bucket is equally valid for LSH recall)."""
     planes = np.concatenate(
         [
             np.random.default_rng(seed + 7919 * t).standard_normal((n_planes, dim))
@@ -235,29 +247,6 @@ def hyperplane_buckets_arrow(
         return pd.Series(list(buckets))
 
     return _buckets(vec_col)
-
-
-def hyperplane_bucket(vec_col: Column, dim: int, n_planes: int = 12, seed: int = 42) -> Column:
-    """LSH bucket id: sign pattern of dot products with seeded random
-    hyperplanes, packed into an int. Deterministic across runs/workers
-    (planes generated driver-side from the seed and folded into the plan
-    as literals)."""
-    rng = np.random.default_rng(seed)
-    planes = rng.standard_normal((n_planes, dim))
-    bucket = F.lit(0)
-    for p in range(n_planes):
-        row = planes[p]
-        dot = F.aggregate(
-            F.zip_with(
-                vec_col,
-                F.array(*[F.lit(float(v)) for v in row]),
-                lambda x, y: x * y,
-            ),
-            F.lit(0.0),
-            lambda acc, v: acc + v,
-        )
-        bucket = bucket + F.when(dot >= 0, F.lit(1 << p)).otherwise(F.lit(0))
-    return bucket
 
 
 def lsh_bucketed_topk(
@@ -281,52 +270,18 @@ def lsh_bucketed_topk(
     bucket one plane-flip away: a neighbor at per-plane agreement prob q
     is found with P(≥n_planes−1 planes agree) instead of P(all agree) —
     e.g. q=0.75, 8 planes: 0.10 → 0.37. ``n_tables=L`` repeats that over L
-    independent plane sets (one Arrow matmul computes all L corpus buckets,
-    see :func:`hyperplane_buckets_arrow`): per-neighbor miss drops to
-    (1−p)^L. Probes expand ONLY the broadcast query side (L·(n_planes+1)
+    independent plane sets (one Arrow matmul computes all L buckets of a
+    vector, see :func:`hyperplane_buckets_arrow`): per-neighbor miss drops
+    to (1−p)^L. Probes expand ONLY the broadcast query side (L·(n_planes+1)
     rows per query); the corpus is hashed once and its vectors are never
-    shuffled — candidates are (query_id, vec_id) pairs, vectors join back
-    by id for the exact scoring of candidates only.
-
-    Single-table keeps the direct bucket equi-join (a pair matches at most
-    one probe, no dedup needed); multi-table distinct()s the candidate id
-    pairs so each pair pays the exact cosine once."""
+    shuffled — candidates are (query_id, vec_id) pairs, distinct()ed so a
+    pair found in several tables pays the exact cosine once, and vectors
+    join back by id for the exact scoring of candidates only."""
     if n_probe_bits not in (0, 1):
         raise ValueError("n_probe_bits supports 0 (single) or 1 (multi-probe)")
     if n_tables < 1:
         raise ValueError("n_tables must be >= 1")
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cos_sim").desc(), F.col("vec_id").asc()
-    )
-    if n_tables == 1:
-        cb = corpus.select(
-            F.col(id_col).alias("vec_id"),
-            F.col(vec_col).alias("_cvec"),
-            hyperplane_bucket(F.col(vec_col), dim, n_planes, seed).alias("_bucket"),
-        )
-        qbase = hyperplane_bucket(F.col(vec_col), dim, n_planes, seed)
-        probe_exprs = [qbase]
-        if n_probe_bits == 1:
-            probe_exprs += [qbase.bitwiseXOR(F.lit(1 << p)) for p in range(n_planes)]
-        qb = queries.select(
-            F.col(query_id_col).alias("query_id"),
-            F.col(vec_col).alias("_qvec"),
-            F.explode(F.array(*probe_exprs)).alias("_bucket"),
-        )
-        scored = cb.join(F.broadcast(qb), on="_bucket").select(
-            "query_id",
-            "vec_id",
-            F.round(cosine(F.col("_cvec"), F.col("_qvec")), 6).alias("cos_sim"),
-        )
-        return (
-            scored.withColumn("__rn", F.row_number().over(w))
-            .filter(F.col("__rn") <= k)
-            .drop("__rn")
-        )
-
-    from pysemantic_spark.operators.dedup import _materialize
-
-    cb = _materialize(
+    cb = materialize(
         corpus.select(
             F.col(id_col).alias("vec_id"),
             F.col(vec_col).alias("_cvec"),
@@ -360,19 +315,11 @@ def lsh_bucketed_topk(
         .select("query_id", "vec_id")
         .distinct()
     )
-    scored = (
-        cand.join(cb.select("vec_id", "_cvec"), "vec_id")
-        .join(F.broadcast(q_aliased), "query_id")
-        .select(
-            "query_id",
-            "vec_id",
-            F.round(cosine(F.col("_cvec"), F.col("_qvec")), 6).alias("cos_sim"),
-        )
-    )
-    return (
-        scored.withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") <= k)
-        .drop("__rn")
+    return _top_k(
+        cand.join(cb.select("vec_id", "_cvec"), "vec_id").join(
+            F.broadcast(q_aliased), "query_id"
+        ),
+        k,
     )
 
 
@@ -533,9 +480,7 @@ def ivf_topk(
         seed=seed,
         sample_fraction=sample_fraction,
     )
-    from pysemantic_spark.operators.dedup import _materialize
-
-    cb = _materialize(
+    cb = materialize(
         corpus.select(
             F.col(id_col).alias("vec_id"),
             F.col(vec_col).alias("_cvec"),
@@ -549,19 +494,7 @@ def ivf_topk(
             nearest_centroids_arrow(F.col(vec_col), cents, n_probe)
         ).alias("_cluster"),
     )
-    scored = cb.join(F.broadcast(qb), on="_cluster").select(
-        "query_id",
-        "vec_id",
-        F.round(cosine(F.col("_cvec"), F.col("_qvec")), 6).alias("cos_sim"),
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cos_sim").desc(), F.col("vec_id").asc()
-    )
-    return (
-        scored.withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") <= k)
-        .drop("__rn")
-    )
+    return _top_k(cb.join(F.broadcast(qb), on="_cluster"), k)
 
 
 def embedding_near_dup_pairs(
@@ -595,10 +528,10 @@ def embedding_near_dup_pairs(
     Physical plan (round 7): verification is BUCKET-LOCAL. Vectors are
     grouped once per (table, bucket); each bucket is verified against
     itself and (with probing) its one-bit-flip partner buckets by ONE
-    normalized float64 GEMM per bucket pair inside mapInPandas — the same
-    arithmetic as :func:`cosine_pairs_exact` — and only SURVIVING pairs
-    (cos ≥ threshold) leave the task, deduplicated across tables by a tiny
-    groupBy. The previous plan materialized every colliding id pair before
+    normalized float64 GEMM per bucket pair inside mapInPandas (the
+    :func:`cosine_pairs_exact` kernel, :func:`_gemm_pairs`) — and only
+    SURVIVING pairs (cos ≥ threshold) leave the task, deduplicated across
+    tables by a tiny groupBy. The previous plan materialized every colliding id pair before
     verification (distinct over the candidate stream, then two joins
     attaching vectors, then a per-pair Arrow cosine); at a non-selective
     operating point the candidate stream is O(n²/buckets) rows and the
@@ -663,48 +596,16 @@ def embedding_near_dup_pairs(
         F.col("ids").alias("ids_b"),
         F.col("vecs").alias("vecs_b"),
     )
-    joined = left.join(right, on=["tbl", "bk_b"])
-    thr = float(threshold)
-
-    def score(batches):
-        for pdf in batches:
-            for row in pdf.itertuples(index=False):
-                ids_a = np.asarray(row.ids_a)
-                A = np.stack([np.asarray(v, dtype=np.float64) for v in row.vecs_a])
-                na = np.linalg.norm(A, axis=1)
-                na[na == 0] = 1.0
-                An = A / na[:, None]
-                if row.bk_a == row.bk_b:
-                    G = An @ An.T
-                    ii, jj = np.triu_indices(len(A), k=1)
-                    ids_b = ids_a
-                else:
-                    ids_b = np.asarray(row.ids_b)
-                    B = np.stack(
-                        [np.asarray(v, dtype=np.float64) for v in row.vecs_b]
-                    )
-                    nb = np.linalg.norm(B, axis=1)
-                    nb[nb == 0] = 1.0
-                    G = An @ (B / nb[:, None]).T
-                    ii, jj = np.unravel_index(np.arange(G.size), G.shape)
-                # threshold on the ROUND-6 cosine (identical arithmetic to
-                # cosine_pairs_exact — normalized float64 GEMM, numpy round
-                # half-even at 1e-6 — and the SQL oracle thresholds
-                # round(...,6) too), so boundary membership is insensitive
-                # to sub-5e-7 accumulation-order differences between engines
-                cos = np.round(G[ii, jj], 6)
-                keep = cos >= thr
-                if not keep.any():
-                    continue
-                ia, ib = ids_a[ii[keep]], ids_b[jj[keep]]
-                lo, hi = np.minimum(ia, ib), np.maximum(ia, ib)
-                ok = lo != hi  # duplicate input ids never pair with themselves
-                yield pd.DataFrame(
-                    {"id_a": lo[ok], "id_b": hi[ok], "cos_sim": cos[keep][ok]}
-                )
-
+    joined = left.join(right, on=["tbl", "bk_b"]).select(
+        "ids_a",
+        "vecs_a",
+        "ids_b",
+        "vecs_b",
+        (F.col("bk_a") == F.col("bk_b")).alias("same"),
+    )
     survivors = joined.mapInPandas(
-        score, schema=f"id_a {id_type}, id_b {id_type}, cos_sim double"
+        _gemm_pairs(threshold),
+        schema=f"id_a {id_type}, id_b {id_type}, cos_sim double",
     )
     # a pair surviving in several (table, bucket-pair) cells is emitted once
     # per cell with the same cosine (identical float64 inputs); max() makes

@@ -3,6 +3,10 @@
 from __future__ import annotations
 
 import itertools
+import os
+import pickle
+import subprocess
+import sys
 
 import numpy as np
 import pandas as pd
@@ -298,18 +302,68 @@ def test_cosine_pairs_exact_matches_numpy(spark, emb_df):
                 assert v == pytest.approx(exact[k_], abs=2e-6)
 
 
-def test_cosine_arrow_matches_interpreted(spark, emb_df):
-    df, vecs = emb_df
-    pairs = df.alias("a").crossJoin(df.alias("b")).filter(
-        F.col("a.vec_id") < F.col("b.vec_id")
-    ).limit(200)
-    got = pairs.select(
-        similarity.cosine_arrow(F.col("a.embedding"), F.col("b.embedding")).alias("ca"),
-        similarity.cosine(F.col("a.embedding"), F.col("b.embedding")).alias("ci"),
-    ).collect()
-    assert len(got) == 200
-    for r in got:
-        assert r["ca"] == pytest.approx(r["ci"], abs=1e-9)
+_UNPICKLE_AND_RUN = """
+import pickle, sys
+fn, pdf = pickle.loads(sys.stdin.buffer.read())
+out = [r for df in fn(iter([pdf])) for r in df.itertuples(index=False, name=None)]
+loaded = sorted(m for m in sys.modules if m.startswith("pysemantic_spark"))
+sys.stdout.buffer.write(pickle.dumps((out, loaded)))
+"""
+
+
+def test_gemm_kernel_pickles_by_value(tmp_path):
+    """The all-pairs GEMM kernel must unpickle in a Python worker that
+    cannot import this package: a helper moved to module level would be
+    pickled by reference and make every cold worker import the package."""
+    from pyspark import cloudpickle
+
+    # a zero vector (id 2) and a repeated id (3) in one block
+    same = (
+        [1, 2, 3, 3],
+        [[1, 0, 0, 0], [0, 0, 0, 0], [0.8, 0.2, 0, 0], [0.9, 0.1, 0, 0]],
+    )
+    # across blocks: id 5 on both sides, a zero vector (id 7)
+    cross_a = ([1, 5], [[1, 0, 0, 0], [0, 1, 0, 0]])
+    cross_b = ([5, 7, 9], [[0, 1, 0, 0], [0, 0, 0, 0], [0.5, 0.5, 0, 0]])
+    pdf = pd.DataFrame({
+        "ids_a": [same[0], cross_a[0]],
+        "vecs_a": [same[1], cross_a[1]],
+        "ids_b": [same[0], cross_b[0]],
+        "vecs_b": [same[1], cross_b[1]],
+        "same": [True, False],
+    })
+    payload = cloudpickle.dumps((similarity._gemm_pairs(0.4), pdf))
+    env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
+    proc = subprocess.run(
+        [sys.executable, "-c", _UNPICKLE_AND_RUN], input=payload,
+        capture_output=True, cwd=tmp_path, env=env, check=False,
+    )
+    assert proc.returncode == 0, proc.stderr.decode()
+    out, loaded = pickle.loads(proc.stdout)
+    assert loaded == []
+
+    def cos(x, y):
+        x, y = np.asarray(x, float), np.asarray(y, float)
+        den = np.linalg.norm(x) * np.linalg.norm(y)
+        return round(float(x @ y / den), 6) if den else 0.0
+
+    cells = [
+        (same[0][i], same[1][i], same[0][j], same[1][j])
+        for i, j in itertools.combinations(range(len(same[0])), 2)
+    ] + [
+        (ia, va, ib, vb)
+        for ia, va in zip(*cross_a)
+        for ib, vb in zip(*cross_b)
+    ]
+    exp = sorted(
+        (min(ia, ib), max(ia, ib), cos(va, vb))
+        for ia, va, ib, vb in cells
+        if ia != ib and cos(va, vb) >= 0.4
+    )
+    got = sorted((int(a), int(b), c) for a, b, c in out)
+    assert [g[:2] for g in got] == [e[:2] for e in exp]
+    assert [g[2] for g in got] == pytest.approx([e[2] for e in exp], abs=1e-6)
+    assert len(exp) == 4  # (1,3) ×2, (1,9), (5,9); (3,3) and (5,5) never pair
 
 
 def test_near_dup_multiprobe_recall_dominates(spark):

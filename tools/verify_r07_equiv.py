@@ -15,14 +15,26 @@ import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from pyspark.sql import DataFrame, functions as F
+import numpy as np
+import pandas as pd
+from pyspark.sql import Column, DataFrame, functions as F
 
 from pysemantic_spark.operators import similarity
-from pysemantic_spark.operators.similarity import (
-    cosine_arrow,
-    hyperplane_buckets_arrow,
-)
+from pysemantic_spark.operators.similarity import hyperplane_buckets_arrow
 from pysemantic_spark.session import get_spark
+
+
+def cosine_arrow(a: Column, b: Column) -> Column:
+    """Round-6 per-pair Arrow cosine (einsum); zero-norm pairs score 0.0."""
+
+    @F.pandas_udf("double")
+    def _cos(xs: pd.Series, ys: pd.Series) -> pd.Series:
+        xa, ya = np.stack(xs.to_numpy()), np.stack(ys.to_numpy())
+        num = np.einsum("ij,ij->i", xa, ya)
+        den = np.linalg.norm(xa, axis=1) * np.linalg.norm(ya, axis=1)
+        return pd.Series(np.divide(num, den, out=np.zeros_like(num), where=den != 0))
+
+    return _cos(a, b)
 
 
 def old_embedding_near_dup_pairs(
