@@ -1089,8 +1089,8 @@ _RAW_QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
 def _simhash_wide_sql(n_words: int = 2, max_hamming: int = 16) -> str:
     """Brute-force oracle for the MULTI-WORD simhash query: each word w is
     the 60-bit integer from md5 hex digits [1+15w, 15+15w) — byte-identical
-    to the Spark `_word_hash(w, portable_hash=True)` expr — bit-voted
-    independently; hamming = sum of per-word popcounts. Quadratic over all
+    to word w of the Spark words kernel (`dedup._simhash_words_udf`) —
+    bit-voted independently; hamming = sum of per-word popcounts. Quadratic over all
     doc pairs (no banding needed oracle-side); the 17-band
     pigeonhole-exhaustive Spark output must equal this set."""
     words = range(n_words)
@@ -1128,7 +1128,7 @@ def _simhash_wide_sql(n_words: int = 2, max_hamming: int = 16) -> str:
 
 def _simhash_sql() -> str:
     """Brute-force oracle for the simhash query, built from the SAME
-    portable hash the Spark expr uses (md5 top-15-hex-digits → 60-bit
+    portable hash the Spark words kernel uses (md5 top-15-hex-digits → 60-bit
     token hash, bit-vote fingerprint) so the two cannot drift apart.
     The oracle needs no banding: it computes the exact hamming-≤8 pair
     set quadratically, which the exhaustively-banded Spark output must

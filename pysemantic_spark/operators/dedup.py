@@ -8,8 +8,9 @@ Four families, all shuffle-conscious:
                 Jaccard on the candidates.
 - MinHash+LSH:  shingle → K minhashes (xxhash64 with per-hash seed mix) →
                 band buckets → pairs within buckets → exact-Jaccard verify.
-- SimHash:      64-bit token-hash bit-vote fingerprint; near-dup = small
-                Hamming distance, candidates via 16-bit band join.
+- SimHash:      bit-vote fingerprint of one or two 60-bit md5 token-hash
+                words; near-dup = small Hamming distance, candidates via a
+                band join or pigeonhole query expansion.
 
 Scale notes (100 TB / 10^9 docs):
 - The shingle self-join shuffles on the shingle; ultra-common shingles are
@@ -38,114 +39,81 @@ from pysemantic_spark.operators.cache import release_intermediates  # noqa: F401
 _LOG = logging.getLogger(__name__)
 
 # ---------------------------------------------------------------------------
-# Arrow-vectorized tokenize/shingle/fingerprint projections (round 7).
+# Arrow text kernel: tokens / shingles + token-stream fingerprint.
 #
-# The JVM expression path for shingling (`_shingles`: split + sequence +
-# transform(concat_ws(slice)) + array_distinct) is built from higher-order
-# functions, which do NOT whole-stage-codegen — every element is produced
-# through the interpreted expression evaluator. Measured at sf1.0 (50k docs,
-# 2.6M shingles, 32 cores): 3.1 s for the fused shingle+fingerprint
-# projection vs 0.7 s for the same computation done per Arrow batch in
-# Python (guide §4.2: hand whole batches to native/vectorized code instead
-# of interpreted per-element evaluation). Output is BYTE-IDENTICAL — the
-# Python functions below replicate Spark's exact semantics:
-#   - F.trim strips SPACES (0x20) only (not Java String.trim's ≤0x20 set)
+# One Arrow-batched Python pass per batch instead of JVM higher-order
+# functions, which do NOT whole-stage-codegen (every element goes through
+# the interpreted evaluator). Measured at sf1.0 (50k docs, 2.6M shingles,
+# 32 cores): 3.1 s for a split + sequence + transform(concat_ws(slice)) +
+# array_distinct shingle projection vs 0.7 s per Arrow batch (guide §4.2).
+# The kernel's contract is Spark's own string semantics, so its token
+# arrays equal :func:`pysemantic_spark.functions.text.tokens` and its
+# fingerprint equals :func:`token_stream_key`, byte for byte:
+#   - trim strips SPACES (0x20) only (not Java String.trim's ≤0x20 set)
 #   - Java regex \s == Python re.ASCII \s ([ \t\n\x0B\f\r])
-#   - split keeps leading/trailing empty tokens (Pattern.split, limit -1);
-#     the empty-after-trim string maps to [] via the tokens() when-branch
+#   - split keeps leading/trailing empty tokens (Pattern.split, limit -1),
+#     so " \t " is ["", ""]; text that trims to "" is []
 #   - md5 of the UTF-8 bytes == Spark md5(cast(string as binary))
-#   - array_distinct keeps first-occurrence order == dict.fromkeys
-# (equivalence: test_arrow_text_kernels_match_jvm + the miners' oracles).
+#   - n-grams are distinct in first-occurrence order (array_distinct)
+#   - NULL text: tokens NULL, 1-grams NULL, n ≥ 2-grams [], and the
+#     fingerprint is md5("") (concat_ws skips a NULL array)
+# (tests: test_arrow_shingle_tfp_matches_jvm + the miners' oracles).
 # ---------------------------------------------------------------------------
 
-_JAVA_WS = re.compile(r"\s+", re.ASCII)
+_TEXT_KERNELS: dict[int, object] = {}
 
 
-def _py_tokens(s: str | None) -> list[str] | None:
-    """Exact Python mirror of :func:`pysemantic_spark.functions.text.tokens`."""
-    if s is None:
-        return None
-    st = s.strip(" ")
-    if st == "":
-        return []
-    return _JAVA_WS.split(st)
+def _text_kernel(n: int):
+    """pandas_udf: text → struct(arr: array<string>, tfp: string) in ONE
+    Arrow-batched pass. ``arr`` is the token array for ``n = 0`` and the
+    distinct word n-grams for ``n ≥ 1``; ``tfp`` is the token-stream md5.
+    The helpers stay nested: cloudpickle ships a closure by value but a
+    module-level function by reference, which would make every cold
+    Python worker import this package. (Created lazily — pandas_udf DDL
+    return types need an active session.)"""
+    if n not in _TEXT_KERNELS:
+        ws = re.compile(r"\s+", re.ASCII)
 
+        def grams(toks: list[str], joined: str) -> list[str]:
+            # n-grams as substrings of the space-joined stream (one slice
+            # per gram, no per-gram join)
+            if n == 0:
+                return toks
+            if n == 1:
+                return list(dict.fromkeys(toks))
+            offs, pos = [], 0
+            for tk in toks:
+                offs.append(pos)
+                pos += len(tk) + 1
+            return list(
+                dict.fromkeys(
+                    joined[offs[i] : offs[i + n - 1] + len(toks[i + n - 1])]
+                    for i in range(len(toks) - n + 1)
+                )
+            )
 
-def _py_shingles(toks: list[str], n: int, joined: str) -> list[str]:
-    """Distinct word n-grams as substrings of the space-joined token stream
-    (one slice per gram — no per-gram join). ``joined`` must be
-    ``" ".join(toks)``."""
-    if n == 1:
-        return list(dict.fromkeys(toks))
-    if len(toks) < n:
-        return []
-    offs, pos = [], 0
-    for tk in toks:
-        offs.append(pos)
-        pos += len(tk) + 1
-    return list(
-        dict.fromkeys(
-            joined[offs[i] : offs[i + n - 1] + len(toks[i + n - 1])]
-            for i in range(len(toks) - n + 1)
-        )
-    )
-
-
-_SH_TFP_UDFS: dict[int, object] = {}
-
-
-def _sh_tfp_arrow(n: int):
-    """pandas_udf: text → struct(sh: array<string>, tfp: string) — the
-    shingle array and the token-stream md5 in ONE Arrow-batched pass."""
-    if n not in _SH_TFP_UDFS:
-
-        @F.pandas_udf("sh array<string>, tfp string")
+        @F.pandas_udf("arr array<string>, tfp string")
         def _udf(texts: pd.Series) -> pd.DataFrame:
-            shs, fps = [], []
+            arrs, fps = [], []
             for s in texts:
-                toks = _py_tokens(s)
-                if toks is None:
-                    # tokens(NULL) is NULL; concat_ws skips the NULL array
-                    # (tfp = md5("")). The n≥2 when-chain in _shingles
-                    # yields [] on NULL, but the n==1 path is a bare
-                    # array_distinct(tok) — NULL in, NULL out.
-                    shs.append(None if n == 1 else [])
+                if s is None:
+                    arrs.append(None if n <= 1 else [])
                     fps.append(hashlib.md5(b"").hexdigest())
                     continue
+                st = s.strip(" ")
+                toks = ws.split(st) if st else []
                 joined = " ".join(toks)
+                arrs.append(grams(toks, joined))
                 fps.append(hashlib.md5(joined.encode("utf-8")).hexdigest())
-                shs.append(_py_shingles(toks, n, joined))
-            return pd.DataFrame({"sh": shs, "tfp": fps})
+            return pd.DataFrame({"arr": arrs, "tfp": fps})
 
-        _SH_TFP_UDFS[n] = _udf
-    return _SH_TFP_UDFS[n]
-
-
-_TOK_TFP_UDF: list = []
-
-
-def _tok_tfp_arrow(col):
-    """pandas_udf: text → struct(tok: array<string>, tfp: string).
-    (Created lazily — pandas_udf DDL return types need an active session.)"""
-    if not _TOK_TFP_UDF:
-
-        @F.pandas_udf("tok array<string>, tfp string")
-        def _udf(texts: pd.Series) -> pd.DataFrame:
-            toks_out, fps = [], []
-            for s in texts:
-                toks = _py_tokens(s)
-                toks_out.append(toks)
-                joined = " ".join(toks) if toks is not None else ""
-                fps.append(hashlib.md5(joined.encode("utf-8")).hexdigest())
-            return pd.DataFrame({"tok": toks_out, "tfp": fps})
-
-        _TOK_TFP_UDF.append(_udf)
-    return _TOK_TFP_UDF[0](col)
+        _TEXT_KERNELS[n] = _udf
+    return _TEXT_KERNELS[n]
 
 
 def _shingles_arrow(text_col: str, n: int) -> "F.Column":
-    """Arrow-vectorized drop-in for :func:`_shingles` (same arrays)."""
-    return _sh_tfp_arrow(n)(F.col(text_col))["sh"]
+    """Distinct word n-gram shingles (n ≥ 1) of the whitespace-token stream."""
+    return _text_kernel(n)(F.col(text_col))["arr"]
 
 
 def exact_duplicates(df: DataFrame, cols: list[str]) -> DataFrame:
@@ -315,20 +283,6 @@ def text_fingerprint_duplicates(df: DataFrame, id_col: str, text_col: str) -> Da
     )
 
 
-def _shingles(text_col: str, n: int) -> "F.Column":
-    """Distinct word n-gram shingles of the whitespace-token stream."""
-    tok = tokens(text_col)
-    if n == 1:
-        return F.array_distinct(tok)
-    idx = F.sequence(F.lit(0), F.size(tok) - n)
-    grams = F.transform(
-        idx, lambda i: F.concat_ws(" ", F.slice(tok, i + 1, n))
-    )
-    return F.when(F.size(tok) >= n, F.array_distinct(grams)).otherwise(
-        F.array().cast("array<string>")
-    )
-
-
 def ngram_prefix_index(
     inv: DataFrame, sizes: DataFrame, threshold: float
 ) -> DataFrame:
@@ -426,8 +380,8 @@ def ngram_jaccard_pairs(
 
     No crossJoin in either plan."""
     if collapse_identical:
-        sh_full, groups, clones, small = _fused_shingle_collapse(
-            df, id_col, text_col, n
+        sh_full, groups, clones, small = _fused_collapse(
+            df, id_col, _text_kernel(n)(F.col(text_col)), "_sh"
         )
         if not clones:  # no clones anywhere: mine everything, no expansion
             return _ngram_pairs_on_shingles(
@@ -729,37 +683,33 @@ def expand_collapsed_pairs(
 _BROADCAST_MEMBERS = 1_000_000
 
 
-def _fused_shingle_collapse(
-    df: DataFrame, id_col: str, text_col: str, n: int
+def _fused_collapse(
+    df: DataFrame, id_col: str, kernel: "F.Column", arr_col: str
 ) -> tuple[DataFrame, DataFrame, bool, bool]:
-    """Collapse-guard bookkeeping FUSED into the miner's shingle scan
-    (round-6, second pass at the round-5 VERDICT's guard-overhead item):
-    one projection computes the shingle array AND the token-stream
-    fingerprint — text is scanned once, and the guard's sizing action
-    doubles as the warm-up of the (expensive, interpreted higher-order)
-    shingle cache the mining plan reads anyway, so the guard no longer
-    pays a separate text pass. The clone-eligibility predicate
-    (``size(shingles) > 0``) later reads the cached ``_size`` instead of
-    recomputing shingles over the representatives.
+    """Collapse-guard bookkeeping FUSED into the miner's own text scan:
+    ``kernel`` is a :func:`_text_kernel` struct column over the text, so
+    one projection yields the miner's array (shingles or tokens, landed
+    in ``arr_col``) AND the token-stream fingerprint. Text is scanned
+    once, and the guard's sizing action doubles as the warm-up of the
+    array cache the mining plan reads anyway. The clone-eligibility
+    predicate (``size(arr) > 0``) later reads the cached ``_size``.
 
-    Returns (sh_full, groups, clones?, broadcastable?): ``sh_full`` =
-    cached (_id, _sh, _size, _tfp) for every doc; ``groups`` = cached
+    Returns (frame, groups, clones?, broadcastable?): ``frame`` = cached
+    (_id, arr_col, _tfp, _size) for every doc; ``groups`` = cached
     (_tfp, _rep, _gs); the flags come from the single sizing action
     (broadcastable? = measured clone-member count under the cap)."""
-    # ONE Arrow-batched pass computes shingles + the collapse key (struct
-    # selected once so the UDF runs once; see the Arrow-kernel note above)
-    sh_full = _materialize(
-        df.select(
-            F.col(id_col).alias("_id"),
-            _sh_tfp_arrow(n)(F.col(text_col)).alias("_st"),
-        ).select(
+    # the struct is selected once so the UDF runs once per row
+    full = _materialize(
+        df.select(F.col(id_col).alias("_id"), kernel.alias("_st"))
+        .select(
             "_id",
-            F.col("_st.sh").alias("_sh"),
+            F.col("_st.arr").alias(arr_col),
             F.col("_st.tfp").alias("_tfp"),
-        ).withColumn("_size", F.size("_sh"))
+        )
+        .withColumn("_size", F.size(arr_col))
     )
     groups = _materialize(
-        sh_full.groupBy("_tfp").agg(
+        full.groupBy("_tfp").agg(
             F.min("_id").alias("_rep"), F.count(F.lit(1)).alias("_gs")
         )
     )
@@ -771,43 +721,7 @@ def _fused_shingle_collapse(
         )
         .first()
     )
-    return sh_full, groups, row["g"] > 0, row["m"] <= _BROADCAST_MEMBERS
-
-
-def _fused_token_collapse(
-    df: DataFrame, id_col: str, text_col: str
-) -> tuple[DataFrame, DataFrame, bool, bool]:
-    """Token-stream twin of :func:`_fused_shingle_collapse` for miners
-    that consume TOKENS rather than shingles (SimHash): one projection
-    tokenizes once and derives both the token array and its stream
-    fingerprint (md5 of the space-joined stream — identical key to
-    :func:`token_stream_key`, computed from the array so the text is
-    never re-tokenized). Returns (tokf, groups, clones?, broadcastable?)
-    with ``tokf`` = cached (_id, _tok, _size, _tfp)."""
-    tokf = _materialize(
-        df.select(
-            F.col(id_col).alias("_id"),
-            _tok_tfp_arrow(F.col(text_col)).alias("_st"),
-        ).select(
-            "_id",
-            F.col("_st.tok").alias("_tok"),
-            F.col("_st.tfp").alias("_tfp"),
-        ).withColumn("_size", F.size("_tok"))
-    )
-    groups = _materialize(
-        tokf.groupBy("_tfp").agg(
-            F.min("_id").alias("_rep"), F.count(F.lit(1)).alias("_gs")
-        )
-    )
-    row = (
-        groups.filter(F.col("_gs") > 1)
-        .agg(
-            F.count(F.lit(1)).alias("g"),
-            F.coalesce(F.sum("_gs"), F.lit(0)).alias("m"),
-        )
-        .first()
-    )
-    return tokf, groups, row["g"] > 0, row["m"] <= _BROADCAST_MEMBERS
+    return full, groups, row["g"] > 0, row["m"] <= _BROADCAST_MEMBERS
 
 
 def _rep_rows(sh_full: DataFrame, groups: DataFrame) -> DataFrame:
@@ -914,13 +828,13 @@ def minhash_lsh_pairs(
     back afterwards — the lossless band-bucket skew guard
     (:func:`collapse_identical_docs`): m byte-identical docs cost O(m)
     candidate rows instead of O(m²)-per-band. Round 6: the collapse key
-    rides the miner's own shingle scan (:func:`_fused_shingle_collapse`)
+    rides the miner's own shingle scan (:func:`_fused_collapse`)
     so the guard costs no extra text pass; the fused frame also serves
     the exact-Jaccard verify arrays, removing the OFF path's separate
     verify scan."""
     if collapse_identical:
-        sh_full, groups, clones, small = _fused_shingle_collapse(
-            df, id_col, text_col, n
+        sh_full, groups, clones, small = _fused_collapse(
+            df, id_col, _text_kernel(n)(F.col(text_col)), "_sh"
         )
         if not clones:
             return _minhash_pairs_on_shingles(
@@ -1017,18 +931,23 @@ def _band_widths(n_bits: int, n_bands: int) -> list[int]:
     return [base + (1 if b < extra else 0) for b in range(n_bands)]
 
 
-def _word_hash(w: int, portable_hash: bool) -> "F.Column":
-    """Per-token hash for fingerprint word ``w``.
+# SimHash word width: one md5 hex digest (32 digits) holds two disjoint
+# 15-digit words, so fingerprints are one or two 60-bit words
+_WORD_BITS = 60
+# bands narrower than this make band self-joins near-quadratic at scale
+_MIN_BAND_BITS = 12
 
-    Portable mode carves disjoint 60-bit words out of the md5 hex digest
-    (32 hex digits → at most 2 words), reproducible bit-for-bit in any
-    engine with md5 (DuckDB: ``('0x'||substr(md5(t),1+15*w,15))::BIGINT``).
-    Scale mode uses seeded xxhash64 — unlimited words, faster per token."""
-    if portable_hash:
-        if w > 1:
-            raise ValueError("portable_hash supports at most 2 words (md5 is 128 bits)")
-        return F.conv(F.substring(F.md5("t"), 1 + 15 * w, 15), 16, 10).cast("long")
-    return F.xxhash64(F.lit(f"simhash-word-{w}"), F.col("t"))
+
+def _check_simhash_args(portable_hash: bool, n_words: int) -> None:
+    """``portable_hash`` has one legal value, True (md5 token words); md5's
+    128 bits hold at most 2 words."""
+    if portable_hash is not True:
+        raise ValueError(
+            f"portable_hash={portable_hash!r}: only the portable md5 token "
+            f"hash (True) is supported"
+        )
+    if n_words > 2:
+        raise ValueError("portable_hash supports at most 2 words (md5 is 128 bits)")
 
 
 def simhash_fingerprints(
@@ -1036,116 +955,78 @@ def simhash_fingerprints(
     id_col: str,
     text_col: str,
     n_bands: int = 4,
-    portable_hash: bool = False,
+    portable_hash: bool = True,
     n_words: int = 1,
 ) -> DataFrame:
-    """SimHash per doc: per-token hash, bit-vote, sign → bits.
+    """SimHash per doc: per-token hash words, bit-vote, sign → bits.
 
-    Explode tokens → for each bit position sum(±1) → assemble the long.
-    n_bits conditional-sum aggs, all map-side combinable. Returns
-    (_id, simhash, band0..band{n_bands-1}: near-equal contiguous bit
-    chunks for Hamming-candidate joins).
+    Word w's token hash is the 60-bit integer of md5 hex digits
+    [15w, 15w+15) — byte-identical in any engine with md5 (DuckDB:
+    ``('0x' || substr(md5(t), 1+15*w, 15))::BIGINT``), so fingerprints,
+    hamming distances, and the near-dup pair set are externally
+    verifiable bit-for-bit. Bit i of a word is set iff strictly more of
+    the doc's tokens have it set than clear. ``portable_hash`` has one
+    legal value, True; any other raises ValueError.
 
-    ``portable_hash=False`` (scale default): 64-bit xxhash64 per token,
-    seeded per word.
-    ``portable_hash=True``: 60-bit token-hash words carved from md5 hex —
-    byte-identical in any engine with md5 (DuckDB:
-    ``('0x' || substr(md5(t),1,15))::BIGINT``), so fingerprints, hamming
-    distances, and the near-dup pair set are externally verifiable
-    bit-for-bit. md5 costs more per token than xxhash64; use it when
-    cross-engine verification matters more than raw hash throughput.
-
-    ``n_words`` widens the fingerprint to ``n_words`` independent words
-    (n_words × 64 bits, or × 60 portable) so EXHAUSTIVE banding at a
-    large Hamming radius keeps wide bands: at radius 8, a single 64-bit
-    word forces 9 bands of ~7 bits (~100 buckets/band → the band
-    self-joins degenerate toward all-pairs at 10⁹ docs — the round-3
-    scale-killer); two words give 9 bands of ~14 bits (~16k buckets).
-    The radius scales with width (same bit-flip rate per edited token),
-    so compare radii as a FRACTION of n_bits across widths. Bands are
+    ``n_words`` (1 or 2) widens the fingerprint to ``n_words`` × 60 bits
+    so EXHAUSTIVE banding at a large Hamming radius keeps wide bands: at
+    radius 8, a single word forces 9 bands of ~7 bits (~100 buckets/band
+    → the band self-joins degenerate toward all-pairs at 10⁹ docs — the
+    round-3 scale-killer); two words give 9 bands of 12-15 bits. The
+    radius scales with width (same bit-flip rate per edited token), so
+    compare radii as a FRACTION of n_bits across widths. Bands are
     assigned to words round-robin and split within each word, remaining
     disjoint and covering all bits — the pigeonhole exhaustiveness
     argument in :func:`simhash_near_dup_pairs` is width-independent.
     Emits a computed-width warning when any band is narrower than 12
     bits (candidate-explosion risk at corpus scale).
 
-    Output: (_id, simhash[, simhash1..simhash{W-1}], band0..band{B-1}).
-    Word 0 keeps the name ``simhash`` so single-word callers (and the
-    portable DuckDB oracle) are unchanged."""
-    tok = df.select(
-        F.col(id_col).alias("_id"), F.explode(tokens(text_col)).alias("t")
-    )
-    return _simhash_fps_on_tok(tok, n_bands, portable_hash, n_words)
+    Only docs with ≥1 token get a row: NULL text and text that trims to
+    "" (``""``, ``"   "``) have none. Trim strips spaces only, so
+    ``" \\t "`` is the two empty tokens ``["", ""]`` and does get one.
+
+    Output: (_id, simhash[, simhash1], band0..band{B-1}). Word 0 keeps
+    the name ``simhash`` so single-word callers (and the DuckDB oracle)
+    are unchanged."""
+    _check_simhash_args(portable_hash, n_words)
+    tokf = df.select(F.col(id_col).alias("_id"), tokens(text_col).alias("_tok"))
+    return _simhash_fps(tokf, *_band_layout(n_bands, n_words))
 
 
-def _band_layout(
-    n_bands: int, portable_hash: bool, n_words: int
-) -> tuple[int, list[str], list[int]]:
-    """(word_bits, word_names, bands_per_word) of a fingerprint layout,
-    emitting the narrow-band warning — shared by the JVM agg path and the
-    Arrow fingerprint path so both warn identically."""
-    word_bits = 60 if portable_hash else 64
+def _band_layout(n_bands: int, n_words: int) -> tuple[list[str], list[int], int]:
+    """(word_names, bands_per_word, narrowest band width) of a fingerprint
+    layout: bands spread over words in near-equal counts, and each word's
+    bands split its 60 bits into near-equal contiguous widths."""
     word_names = ["simhash"] + [f"simhash{w}" for w in range(1, n_words)]
-    # distribute bands over words (near-equal counts), widths within word
     bands_per_word = _band_widths(n_bands, n_words) if n_words > 1 else [n_bands]
     min_width = min(
         w
         for nb in bands_per_word
         if nb > 0
-        for w in _band_widths(word_bits, nb)
+        for w in _band_widths(_WORD_BITS, nb)
     )
-    if min_width < 12:
-        warnings.warn(
-            f"simhash banding: narrowest band is {min_width} bits "
-            f"(<12) — ~{1 << min_width} buckets/band makes band self-joins "
-            f"near-quadratic at large corpus sizes; widen the fingerprint "
-            f"(n_words) or lower the radius/bands",
-            stacklevel=3,
-        )
-    return word_bits, word_names, bands_per_word
-
-
-def _attach_band_cols(
-    out: DataFrame,
-    word_names: list[str],
-    bands_per_word: list[int],
-    word_bits: int,
-) -> DataFrame:
-    """Append band0..band{B-1} columns (contiguous bit chunks per word)."""
-    band_id = 0
-    for w, nb in enumerate(bands_per_word):
-        offset = 0
-        for width in _band_widths(word_bits, nb) if nb > 0 else []:
-            out = out.withColumn(
-                f"band{band_id}",
-                F.shiftrightunsigned(F.col(word_names[w]), offset).bitwiseAND(
-                    F.lit((1 << width) - 1)
-                ),
-            )
-            offset += width
-            band_id += 1
-    return out
+    return word_names, bands_per_word, min_width
 
 
 _SIMHASH_WORD_UDFS: dict[int, object] = {}
 
 
 def _simhash_words_udf(n_words: int):
-    """pandas_udf: token array → array<long> of PORTABLE simhash words.
+    """pandas_udf: token array → array<long> of ``n_words`` simhash words.
 
-    Exact mirror of the JVM bit-vote aggregation for ``portable_hash=True``
-    (word w's token hash = int of md5 hex digits [15w, 15w+15) — identical
-    to ``conv(substring(md5(t), 1+15w, 15), 16, 10)``; bit i set iff
-    strictly more tokens have bit i set than clear), but computed per Arrow
-    batch: md5 via hashlib (bit-identical), the 60-bit vote tally as one
-    (n_tokens × 60) numpy popcount per word. Replaces the exploded-token
-    shuffle + 60·W conditional-sum aggregation with a scan-riding
-    projection — the token stream never leaves its scan task (guide §4.2;
-    measured ~4× on the sf1.0 portable miners)."""
+    Word w's token hash is the int of md5 hex digits [15w, 15w+15)
+    (hashlib md5 of the UTF-8 bytes, identical to Spark's and DuckDB's);
+    bit i is set iff strictly more tokens have bit i set than clear,
+    tallied per Arrow batch as one (n_tokens × 60) numpy popcount per
+    word. The token stream never leaves its scan task — no exploded-token
+    shuffle aggregation (guide §4.2; measured ~4× on the sf1.0 miners).
+    Callers pass non-empty arrays only (``size(tokens) > 0``), so NULL
+    and empty docs get no row. Everything the kernel uses is nested or a
+    library module, so cloudpickle ships it by value."""
     if n_words not in _SIMHASH_WORD_UDFS:
         import numpy as np
 
-        shifts = np.arange(60, dtype=np.uint64)
+        shifts = np.arange(_WORD_BITS, dtype=np.uint64)
 
         @F.pandas_udf("array<long>")
         def _udf(tok_lists: pd.Series) -> pd.Series:
@@ -1175,78 +1056,45 @@ def _simhash_words_udf(n_words: int):
     return _SIMHASH_WORD_UDFS[n_words]
 
 
-def _simhash_words_arrow(tokf: DataFrame, n_words: int) -> DataFrame:
-    """Portable-hash fingerprint WORDS (no band columns) from a
-    ``(_id, _tok)`` token-array frame via the Arrow kernel."""
-    word_names = ["simhash"] + [f"simhash{w}" for w in range(1, n_words)]
+def _simhash_words(tokf: DataFrame, word_names: list[str]) -> DataFrame:
+    """Fingerprint WORDS (no band columns) from a ``(_id, _tok)``
+    token-array frame; docs with no tokens (NULL or []) get no row."""
     words = tokf.filter(F.size("_tok") > 0).select(
-        "_id", _simhash_words_udf(n_words)(F.col("_tok")).alias("_w")
+        "_id", _simhash_words_udf(len(word_names))(F.col("_tok")).alias("_w")
     )
     return words.select(
-        "_id",
-        *[F.col("_w")[w].alias(word_names[w]) for w in range(n_words)],
+        "_id", *[F.col("_w")[w].alias(wn) for w, wn in enumerate(word_names)]
     )
 
 
-def _simhash_fps_arrow(
-    tokf: DataFrame, n_bands: int, n_words: int
+def _simhash_fps(
+    tokf: DataFrame, word_names: list[str], bands_per_word: list[int], min_width: int
 ) -> DataFrame:
-    """Portable-hash fingerprint frame from a ``(_id, _tok)`` token-array
-    frame via the Arrow kernel — same schema and values as
-    :func:`_simhash_fps_on_tok` over the exploded tokens (docs with no
-    tokens produce no row there — the explode drops them — so they are
-    filtered here)."""
-    word_bits, word_names, bands_per_word = _band_layout(n_bands, True, n_words)
-    out = _simhash_words_arrow(tokf, n_words)
-    return _attach_band_cols(out, word_names, bands_per_word, word_bits)
-
-
-def _simhash_fps_on_tok(
-    tok: DataFrame, n_bands: int, portable_hash: bool, n_words: int
-) -> DataFrame:
-    """Bit-vote + band assembly of :func:`simhash_fingerprints`, over an
-    already-exploded ``(_id, t)`` token frame — shared by the fused
-    collapse path (tokens come from the cached token array, text is not
-    re-tokenized) and the direct text path."""
-    word_bits, word_names, bands_per_word = _band_layout(
-        n_bands, portable_hash, n_words
-    )
-    out = _simhash_words_on_tok(tok, portable_hash, n_words)
-    return _attach_band_cols(out, word_names, bands_per_word, word_bits)
-
-
-def _simhash_words_on_tok(
-    tok: DataFrame, portable_hash: bool, n_words: int
-) -> DataFrame:
-    """Bit-vote fingerprint WORDS (no band columns, no layout warning) over
-    an exploded ``(_id, t)`` token frame."""
-    word_bits = 60 if portable_hash else 64
-    word_names = ["simhash"] + [f"simhash{w}" for w in range(1, n_words)]
-    for w in range(n_words):
-        tok = tok.withColumn(f"h{w}", _word_hash(w, portable_hash))
-    one = F.lit(1).cast("long")
-    votes = [
-        F.sum(
-            F.when(
-                F.col(f"h{w}").bitwiseAND(F.shiftleft(one, i)) != 0, 1
-            ).otherwise(-1)
-        ).alias(f"v{w}_{i}")
-        for w in range(n_words)
-        for i in range(word_bits)
-    ]
-    agg = tok.groupBy("_id").agg(*votes)
-    fps = []
-    for w in range(n_words):
-        fp = F.lit(0).cast("long")
-        for i in range(word_bits):
-            # bits are disjoint → OR assembles the word without overflow
-            fp = fp.bitwiseOR(
-                F.when(F.col(f"v{w}_{i}") > 0, F.shiftleft(one, i)).otherwise(
-                    F.lit(0).cast("long")
-                )
+    """Fingerprint words plus band0..band{B-1} (contiguous bit chunks per
+    word) for a :func:`_band_layout`, warning when the narrowest band is
+    under 12 bits."""
+    if min_width < _MIN_BAND_BITS:
+        warnings.warn(
+            f"simhash banding: narrowest band is {min_width} bits "
+            f"(<{_MIN_BAND_BITS}) — ~{1 << min_width} buckets/band makes band "
+            f"self-joins near-quadratic at large corpus sizes; widen the "
+            f"fingerprint (n_words) or lower the radius/bands",
+            stacklevel=3,
+        )
+    out = _simhash_words(tokf, word_names)
+    band_id = 0
+    for w, nb in enumerate(bands_per_word):
+        offset = 0
+        for width in _band_widths(_WORD_BITS, nb) if nb > 0 else []:
+            out = out.withColumn(
+                f"band{band_id}",
+                F.shiftrightunsigned(F.col(word_names[w]), offset).bitwiseAND(
+                    F.lit((1 << width) - 1)
+                ),
             )
-        fps.append(fp.alias(word_names[w]))
-    return agg.select("_id", *fps)
+            offset += width
+            band_id += 1
+    return out
 
 
 def simhash_near_dup_pairs(
@@ -1255,18 +1103,20 @@ def simhash_near_dup_pairs(
     text_col: str,
     max_hamming: int = 3,
     n_bands: int | None = None,
-    portable_hash: bool = False,
+    portable_hash: bool = True,
     n_words: int = 1,
     collapse_identical: bool = True,
 ) -> DataFrame:
     """Near-dup pairs with Hamming(fingerprint) ≤ max_hamming.
 
     Candidates via band equality, then exact popcount filter. Returns
-    (id_a, id_b, hamming). Multi-word fingerprints (``n_words``) compute
-    hamming as the sum of per-word popcounts; see
-    :func:`simhash_fingerprints` for why wide fingerprints are the
-    scale-safe way to run large radii (band width ≥ 12 bits keeps band
-    self-joins sub-quadratic; a warning fires otherwise).
+    (id_a, id_b, hamming). Fingerprints, ``portable_hash`` and
+    ``n_words`` are those of :func:`simhash_fingerprints`; multi-word
+    fingerprints compute hamming as the sum of per-word popcounts (wide
+    fingerprints are the scale-safe way to run large radii: band width
+    ≥ 12 bits keeps band self-joins sub-quadratic; a warning fires when
+    the band join runs narrower). Docs without a fingerprint (NULL, or
+    text that trims to "") never pair.
 
     ``n_bands`` defaults to ``max_hamming + 1``, which makes the banding
     EXHAUSTIVE by pigeonhole: a pair within Hamming ≤ r differs in at most
@@ -1274,28 +1124,31 @@ def simhash_near_dup_pairs(
     the output then EQUALS the exact hamming-≤r pair set of the
     fingerprints (not a recall-lossy approximation). Fewer bands trade
     completeness for fewer candidate collisions; the round-1 default
-    (4 × 16-bit bands) is exhaustive only up to r=3.
+    (4 × 15-bit bands) is exhaustive only up to r=3.
 
     ``collapse_identical`` (default on): identical token streams mine as
     one representative, pairs expanded back exactly afterwards (hamming 0
     within a group; a member inherits its rep's hamming to everything
     else) — see :func:`collapse_identical_docs` for the band-bucket skew
-    rationale. Round 6: the collapse key rides the miner's own
-    tokenization (:func:`_fused_token_collapse`), so the guard costs no
-    extra text pass and the ≥1-token eligibility predicate reads the
-    cached token count."""
+    rationale. The collapse key rides the miner's own tokenization
+    (:func:`_fused_collapse` over the ``n = 0`` text kernel), so the
+    guard costs no extra text pass and the ≥1-token eligibility
+    predicate reads the cached token count."""
+    _check_simhash_args(portable_hash, n_words)
     if n_bands is None:
         n_bands = max_hamming + 1
     if collapse_identical:
-        tokf, groups, clones, small = _fused_token_collapse(df, id_col, text_col)
+        tokf, groups, clones, small = _fused_collapse(
+            df, id_col, _text_kernel(0)(F.col(text_col)), "_tok"
+        )
         mk = lambda frame: _simhash_pairs_on_tokens(  # noqa: E731
-            frame, max_hamming, n_bands, portable_hash, n_words
+            frame, max_hamming, n_bands, n_words
         )
         if not clones:
             return mk(tokf.drop("_tfp"))
         rep_pairs = mk(_rep_rows(tokf, groups))
         # clone-group reps that produce a fingerprint: ≥1 token (empty
-        # docs never enter the bit-vote agg and must not pair)
+        # docs never reach the words kernel and must not pair)
         members_multi, mined = _multi_members_and_mined(tokf, groups)
         return _expand_pairs_multi(
             rep_pairs, members_multi, mined, "hamming", 0, small
@@ -1303,9 +1156,7 @@ def simhash_near_dup_pairs(
     tokf = _materialize(
         df.select(F.col(id_col).alias("_id"), tokens(text_col).alias("_tok"))
     )
-    return _simhash_pairs_on_tokens(
-        tokf, max_hamming, n_bands, portable_hash, n_words
-    )
+    return _simhash_pairs_on_tokens(tokf, max_hamming, n_bands, n_words)
 
 
 def _chunk_layout(
@@ -1339,21 +1190,12 @@ def _chunk_layout(
 
 
 def _simhash_pairs_on_tokens(
-    tokf: DataFrame,
-    max_hamming: int,
-    n_bands: int,
-    portable_hash: bool,
-    n_words: int,
+    tokf: DataFrame, max_hamming: int, n_bands: int, n_words: int
 ) -> DataFrame:
     """Candidate generation + exact popcount filter of
     :func:`simhash_near_dup_pairs`, over a prepared (materialized)
-    ``(_id, _tok, ...)`` token-array frame.
-
-    Portable mode fingerprints via the Arrow kernel
-    (:func:`_simhash_words_arrow`): same words bit-for-bit, but the token
-    stream never explodes into a 60·W-column shuffle agg. The xxhash64
-    mode keeps the JVM agg (no Python md5 twin exists for Spark's
-    xxhash64 protocol).
+    ``(_id, _tok, ...)`` token-array frame, fingerprinted by the Arrow
+    words kernel (:func:`_simhash_words`).
 
     Two exact candidate schemes (round 7):
 
@@ -1381,30 +1223,12 @@ def _simhash_pairs_on_tokens(
     so they are interchangeable only in the exhaustive case — a caller
     forcing a recall-lossy n_bands keeps the band join, whose output the
     banding itself defines."""
-    word_bits = 60 if portable_hash else 64
+    word_names, bands_per_word, min_width = _band_layout(n_bands, n_words)
     layout = None
-    if n_bands == max_hamming + 1:
-        per_word = _band_widths(n_bands, n_words) if n_words > 1 else [n_bands]
-        min_band_w = min(
-            bw
-            for nb in per_word
-            if nb > 0
-            for bw in _band_widths(word_bits, nb)
-        )
-        if min_band_w < 12:
-            layout = _chunk_layout(word_bits, n_words, max_hamming)
-    word_names = ["simhash"] + [f"simhash{w}" for w in range(1, n_words)]
+    if n_bands == max_hamming + 1 and min_width < _MIN_BAND_BITS:
+        layout = _chunk_layout(_WORD_BITS, n_words, max_hamming)
     if layout is not None:
-        if portable_hash:
-            fps = _materialize(_simhash_words_arrow(tokf, n_words))
-        else:
-            fps = _materialize(
-                _simhash_words_on_tok(
-                    tokf.select("_id", F.explode("_tok").alias("t")),
-                    portable_hash,
-                    n_words,
-                )
-            )
+        fps = _materialize(_simhash_words(tokf, word_names))
         # MEASURED broadcast decision (same discipline as
         # _BROADCAST_MEMBERS): the count() rides the just-persisted frame
         # — the first action would materialize it anyway. The exact side
@@ -1418,17 +1242,7 @@ def _simhash_pairs_on_tokens(
         return _simhash_pairs_expansion(
             fps, word_names, max_hamming, layout, small
         )
-    if portable_hash:
-        fps = _materialize(_simhash_fps_arrow(tokf, n_bands, n_words))
-    else:
-        fps = _materialize(
-            _simhash_fps_on_tok(
-                tokf.select("_id", F.explode("_tok").alias("t")),
-                n_bands=n_bands,
-                portable_hash=portable_hash,
-                n_words=n_words,
-            )
-        )
+    fps = _materialize(_simhash_fps(tokf, word_names, bands_per_word, min_width))
     # ONE self-join on exploded (band index, band value) keys — not
     # n_bands separate self-joins unioned (round-7: the unioned plan paid
     # 2×n_bands exchanges + a union before the distinct; the exploded join
@@ -1583,8 +1397,8 @@ def duplicate_clusters(
     unknown = set(ngram_kw) - {"max_shingle_freq", "prefix_filter"}
     if unknown:
         raise TypeError(f"duplicate_clusters: unknown ngram kwargs {unknown}")
-    sh_full, groups, clones, small = _fused_shingle_collapse(
-        df, id_col, text_col, n
+    sh_full, groups, clones, small = _fused_collapse(
+        df, id_col, _text_kernel(n)(F.col(text_col)), "_sh"
     )
     mine = lambda sh: _ngram_pairs_on_shingles(  # noqa: E731
         sh,

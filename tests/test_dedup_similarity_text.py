@@ -5,6 +5,7 @@ from __future__ import annotations
 import itertools
 import os
 import pickle
+import random
 import subprocess
 import sys
 
@@ -304,19 +305,35 @@ def test_cosine_pairs_exact_matches_numpy(spark, emb_df):
 
 _UNPICKLE_AND_RUN = """
 import pickle, sys
-fn, pdf = pickle.loads(sys.stdin.buffer.read())
-out = [r for df in fn(iter([pdf])) for r in df.itertuples(index=False, name=None)]
+fn, arg = pickle.loads(sys.stdin.buffer.read())
+out = fn(arg)
+if not hasattr(out, "shape"):  # a mapInPandas body yields frames
+    out = list(out)
 loaded = sorted(m for m in sys.modules if m.startswith("pysemantic_spark"))
 sys.stdout.buffer.write(pickle.dumps((out, loaded)))
 """
+
+
+def _run_unpickled(fn, arg, cwd):
+    """cloudpickle ``fn`` and ``arg``, call ``fn(arg)`` in a fresh Python
+    that cannot import this package, and return (result, the package
+    modules that call loaded)."""
+    from pyspark import cloudpickle
+
+    env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
+    proc = subprocess.run(
+        [sys.executable, "-c", _UNPICKLE_AND_RUN],
+        input=cloudpickle.dumps((fn, arg)),
+        capture_output=True, cwd=cwd, env=env, check=False,
+    )
+    assert proc.returncode == 0, proc.stderr.decode()
+    return pickle.loads(proc.stdout)
 
 
 def test_gemm_kernel_pickles_by_value(tmp_path):
     """The all-pairs GEMM kernel must unpickle in a Python worker that
     cannot import this package: a helper moved to module level would be
     pickled by reference and make every cold worker import the package."""
-    from pyspark import cloudpickle
-
     # a zero vector (id 2) and a repeated id (3) in one block
     same = (
         [1, 2, 3, 3],
@@ -332,15 +349,11 @@ def test_gemm_kernel_pickles_by_value(tmp_path):
         "vecs_b": [same[1], cross_b[1]],
         "same": [True, False],
     })
-    payload = cloudpickle.dumps((similarity._gemm_pairs(0.4), pdf))
-    env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
-    proc = subprocess.run(
-        [sys.executable, "-c", _UNPICKLE_AND_RUN], input=payload,
-        capture_output=True, cwd=tmp_path, env=env, check=False,
+    frames, loaded = _run_unpickled(
+        similarity._gemm_pairs(0.4), iter([pdf]), tmp_path
     )
-    assert proc.returncode == 0, proc.stderr.decode()
-    out, loaded = pickle.loads(proc.stdout)
     assert loaded == []
+    out = [r for df in frames for r in df.itertuples(index=False, name=None)]
 
     def cos(x, y):
         x, y = np.asarray(x, float), np.asarray(y, float)
@@ -484,40 +497,180 @@ def test_simhash_banding_exhaustive_at_radius(spark):
     assert got == exact and len(exact) > 0
 
 
-def test_simhash_portable_hash_matches_duckdb(spark):
-    """The portable 60-bit md5 token hash must be byte-identical in DuckDB
-    (the cross-engine verification contract of portable_hash=True)."""
+# ---------------------------------------------------------------------------
+# Arrow text kernels (tokens / shingles + fingerprint, SimHash words)
+# ---------------------------------------------------------------------------
+
+def _duckdb_simhash_words(tok_pdf, n_words):
+    """Bit-vote words in DuckDB over (doc_id, t) token rows: the portable
+    hash + vote, independent of the Spark kernel."""
     import duckdb
 
-    texts = ["hello world", "wörld ünïcode", "a b c d e"]
-    pdf = pd.DataFrame({"doc_id": range(3), "text": texts})
-    spark_fps = {
-        r["_id"]: r["simhash"]
-        for r in dedup.simhash_fingerprints(
-            spark.createDataFrame(pdf), "doc_id", "text", portable_hash=True
-        ).collect()
-    }
+    words = range(n_words)
+    hashes = ", ".join(
+        f"('0x' || substr(md5(t), {1 + 15 * w}, 15))::BIGINT AS h{w}"
+        for w in words
+    )
     votes = ", ".join(
-        f"sum(case when (hv >> {i}) & 1 = 1 then 1 else -1 end) as v{i}"
+        f"sum(case when (h{w} >> {i}) & 1 = 1 then 1 else -1 end) AS v{w}_{i}"
+        for w in words
         for i in range(60)
     )
-    fp = " + ".join(
-        f"(case when v{i} > 0 then (1::BIGINT << {i}) else 0 end)"
-        for i in range(60)
+    fps = ", ".join(
+        " + ".join(
+            f"(case when v{w}_{i} > 0 then (1::BIGINT << {i}) else 0 end)"
+            for i in range(60)
+        )
+        for w in words
     )
     con = duckdb.connect()
-    con.register("docs", pdf)
-    duck_fps = dict(
-        con.execute(
-            f"""WITH tok AS (SELECT doc_id,
-                    unnest(string_split_regex(trim(text), '\\s+')) AS t
-                FROM docs WHERE trim(text) <> ''),
-            h AS (SELECT doc_id, ('0x' || substr(md5(t),1,15))::BIGINT hv FROM tok),
-            v AS (SELECT doc_id, {votes} FROM h GROUP BY doc_id)
-            SELECT doc_id, {fp} FROM v"""
-        ).fetchall()
+    con.register("tok", tok_pdf)
+    rows = con.execute(
+        f"""WITH h AS (SELECT doc_id, {hashes} FROM tok),
+        v AS (SELECT doc_id, {votes} FROM h GROUP BY doc_id)
+        SELECT doc_id, {fps} FROM v"""
+    ).fetchall()
+    return {r[0]: tuple(r[1:]) for r in rows}
+
+
+def test_simhash_portable_hash_matches_duckdb(spark, edge_df):
+    """The 60-bit md5 token words must be byte-identical in DuckDB (the
+    cross-engine verification contract), for 1 and 2 words. DuckDB gets
+    Spark's exploded tokens(), so the check covers hash + vote, not
+    DuckDB's splitter."""
+    df = edge_df
+    tokf = df.select(F.col("doc_id").alias("_id"), tx.tokens("text").alias("_tok"))
+    tok_pdf = tokf.select(
+        F.col("_id").alias("doc_id"), F.explode("_tok").alias("t")
+    ).toPandas()
+    for n_words in (1, 2):
+        duck = _duckdb_simhash_words(tok_pdf, n_words)
+        names = ["simhash", "simhash1"][:n_words]
+        fps = dedup.simhash_fingerprints(
+            df, "doc_id", "text", portable_hash=True, n_words=n_words
+        )
+        for frame in (fps, dedup._simhash_words(tokf, names)):
+            got = {r["_id"]: tuple(r[c] for c in names) for r in frame.collect()}
+            assert got == duck, n_words
+
+
+def test_simhash_rejects_non_portable_hash(spark, docs_df):
+    for fn in (dedup.simhash_fingerprints, dedup.simhash_near_dup_pairs):
+        with pytest.raises(ValueError, match="portable_hash"):
+            fn(docs_df, "doc_id", "text", portable_hash=False)
+        with pytest.raises(ValueError, match="at most 2 words"):
+            fn(docs_df, "doc_id", "text", n_words=3)
+
+
+def test_simhash_null_and_empty_docs(spark):
+    """NULL text and text that trims to "" get no fingerprint row and never
+    pair, with or without the collapse guard. Trim strips spaces only, so
+    " \t " is two empty tokens: it gets a fingerprint and pairs with its
+    clone at hamming 0."""
+    texts = [None, None, "", "", "   ", "   ", " \t ", " \t ",
+             "the quick brown fox", "the quick brown fox"]
+    df = spark.createDataFrame(
+        pd.DataFrame({"doc_id": range(len(texts)), "text": texts})
     )
-    assert spark_fps == duck_fps
+    ids = {r["_id"] for r in dedup.simhash_fingerprints(df, "doc_id", "text").collect()}
+    assert ids == {6, 7, 8, 9}
+    for collapse in (True, False):
+        got = {
+            tuple(r)
+            for r in dedup.simhash_near_dup_pairs(
+                df, "doc_id", "text", collapse_identical=collapse
+            ).collect()
+        }
+        assert got == {(6, 7, 0), (8, 9, 0)}, collapse
+
+
+def test_simhash_expansion_equals_banding(spark):
+    """The pigeonhole query-expansion candidate scheme (fires when
+    exhaustive banding would need sub-12-bit bands: one 60-bit word, r=8)
+    must produce EXACTLY the band-join pair set — both are exact, so the
+    outputs must be row-identical including the hamming values."""
+    rng = random.Random(7)
+    vocab = [f"w{i}" for i in range(30)]
+    rows = []
+    for i in range(250):
+        toks = [rng.choice(vocab) for _ in range(rng.randint(8, 40))]
+        rows.append((i, " ".join(toks)))
+    # planted near-dups: light mutations of earlier docs
+    for i in range(250, 300):
+        base = list(rows[rng.randrange(0, 250)][1].split())
+        base[rng.randrange(0, len(base))] = rng.choice(vocab)
+        rows.append((i, " ".join(base)))
+    df = spark.createDataFrame(pd.DataFrame(rows, columns=["doc_id", "text"]))
+    tokf = dedup._materialize(
+        df.select(F.col("doc_id").alias("_id"), tx.tokens("text").alias("_tok"))
+    )
+    r, n_bands = 8, 9
+    layout = dedup._chunk_layout(60, 1, r)
+    assert layout is not None and layout[0] == 3 and layout[1] == 2
+    word_names = ["simhash"]
+    fps_words = dedup._materialize(dedup._simhash_words(tokf, word_names))
+    via_expansion = {
+        (x["id_a"], x["id_b"], x["hamming"])
+        for x in dedup._simhash_pairs_expansion(
+            fps_words, word_names, r, layout, small=True
+        ).collect()
+    }
+    with pytest.warns(UserWarning, match="narrowest band"):
+        fps = dedup._materialize(
+            dedup._simhash_fps(tokf, *dedup._band_layout(n_bands, 1))
+        )
+    bucketed = fps.select(
+        "_id",
+        *word_names,
+        F.posexplode(
+            F.array(*[F.col(f"band{b}") for b in range(n_bands)])
+        ).alias("bidx", "bval"),
+    )
+    a, c = bucketed.alias("a"), bucketed.alias("b")
+    via_banding = {
+        (x["id_a"], x["id_b"], x["hamming"])
+        for x in (
+            a.join(c, on=["bidx", "bval"])
+            .filter(F.col("a._id") < F.col("b._id"))
+            .select(
+                F.col("a._id").alias("id_a"),
+                F.col("b._id").alias("id_b"),
+                F.bit_count(
+                    F.col("a.simhash").bitwiseXOR(F.col("b.simhash"))
+                ).alias("hamming"),
+            )
+            .filter(F.col("hamming") <= r)
+            .distinct()
+        ).collect()
+    }
+    dedup.release_intermediates()
+    assert via_expansion == via_banding
+    assert via_banding, "fixture produced no near-dup pairs - vacuous test"
+
+
+@pytest.mark.parametrize(
+    "kernel", ["shingles1", "shingles3", "tokens", "simhash_words"]
+)
+def test_text_kernels_pickle_by_value(spark, tmp_path, edge_texts, kernel):
+    """Each Arrow text kernel unpickles and runs in a Python worker that
+    cannot import this package, returning the in-process rows."""
+    udf, arg = {
+        "shingles1": (dedup._text_kernel(1), edge_texts),
+        "shingles3": (dedup._text_kernel(3), edge_texts),
+        "tokens": (dedup._text_kernel(0), edge_texts),
+        "simhash_words": (
+            dedup._simhash_words_udf(2),
+            [["a", "b"], ["", ""], ["ŵöřd", "x", "x"], ["tok"] * 7],
+        ),
+    }[kernel]
+    series = pd.Series(arg, dtype=object)
+    out, loaded = _run_unpickled(udf.func, series, tmp_path)
+    assert loaded == []
+    local = udf.func(series)
+    if isinstance(local, pd.DataFrame):
+        assert out.to_dict("list") == local.to_dict("list")
+    else:
+        assert out.tolist() == local.tolist()
 
 
 def test_ivf_topk_null_and_ragged_vectors(spark, emb_df):

@@ -171,7 +171,7 @@ def test_ngram_prefix_index_shrinks(spark):
     df = spark.createDataFrame(pd.DataFrame(docs, columns=["doc_id", "text"]))
     with tracked_intermediates():
         sh = dedup._materialize(
-            df.select(F.col("doc_id").alias("_id"), dedup._shingles("text", 2).alias("_sh"))
+            df.select(F.col("doc_id").alias("_id"), dedup._shingles_arrow("text", 2).alias("_sh"))
             .withColumn("_size", F.size("_sh"))
         )
         inv = sh.select("_id", F.explode("_sh").alias("shingle"))

@@ -107,8 +107,8 @@ def test_collapse_fast_path_no_clones(spark):
     docs = [(i, f"unique document number {i} about topic {i % 7} words "
                 f"padding alpha beta gamma {i}") for i in range(40)]
     df = spark.createDataFrame(docs, "doc_id long, text string")
-    sh_full, _groups, clones, _small = dedup._fused_shingle_collapse(
-        df, "doc_id", "text", 3
+    sh_full, _groups, clones, _small = dedup._fused_collapse(
+        df, "doc_id", dedup._text_kernel(3)(F.col("text")), "_sh"
     )
     assert clones is False
     assert sh_full.count() == 40
@@ -154,7 +154,7 @@ def test_collapse_multi_expansion_matches_reference(spark):
         rep_df, "doc_id", "text", threshold=0.5, collapse_identical=False
     )
     mined = rep_df.filter(
-        F.size(dedup._shingles("text", 3)) > 0
+        F.size(dedup._shingles_arrow("text", 3)) > 0
     ).select(F.col("doc_id"))
     ref = sorted(
         tuple(r)
@@ -203,21 +203,16 @@ def test_collapse_for_mining_reports_broadcastable_clone_map(spark):
         (10, "another unrelated document body entirely different")
     ]
     df = spark.createDataFrame(docs, "doc_id long, text string")
-    sh_full, groups, clones, small = dedup._fused_shingle_collapse(
-        df, "doc_id", "text", 3
-    )
-    assert clones is True
-    assert small is True  # 4 clone members, far under the broadcast cap
-    mm, mined = dedup._multi_members_and_mined(sh_full, groups)
-    assert mm.count() == 4
-    assert mined.count() == 1  # one clone-group rep, and it mines
-    # token-frame twin used by the SimHash miner: same group structure
-    tokf, tgroups, tclones, tsmall = dedup._fused_token_collapse(
-        df, "doc_id", "text"
-    )
-    assert (tclones, tsmall) == (True, True)
-    tmm, _ = dedup._multi_members_and_mined(tokf, tgroups)
-    assert tmm.count() == 4
+    # the shingle frame (n-gram miners) and the token frame (SimHash)
+    for n, arr_col in ((3, "_sh"), (0, "_tok")):
+        full, groups, clones, small = dedup._fused_collapse(
+            df, "doc_id", dedup._text_kernel(n)(F.col("text")), arr_col
+        )
+        assert clones is True
+        assert small is True  # 4 clone members, far under the broadcast cap
+        mm, mined = dedup._multi_members_and_mined(full, groups)
+        assert mm.count() == 4
+        assert mined.count() == 1  # one clone-group rep, and it mines
 
 
 # ---------------------------------------------------------------------------

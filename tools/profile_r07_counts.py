@@ -47,9 +47,9 @@ bs.agg(F.max("count"), F.avg("count"), F.count(F.lit(1))).show()
 
 # ngram prefix path at t=0.5
 docs = spark.read.parquet(f"{SF_DIR}/documents.parquet")
-from pysemantic_spark.operators.dedup import _shingles, ngram_prefix_index
+from pysemantic_spark.operators.dedup import _shingles_arrow, ngram_prefix_index
 
-sh = docs.select(F.col("doc_id").alias("_id"), _shingles("text", 3).alias("_sh")).withColumn("_size", F.size("_sh"))
+sh = docs.select(F.col("doc_id").alias("_id"), _shingles_arrow("text", 3).alias("_sh")).withColumn("_size", F.size("_sh"))
 sh.persist()
 sizes = sh.select("_id", "_size")
 inv = sh.select("_id", F.explode("_sh").alias("shingle"))
