@@ -606,8 +606,8 @@ def q_streaming_drift_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     even-event_id half (batch), then the odd half replayed as a parquet
     STREAM through `windowed_drift_sketch` (watermark + 1-hour tumbling
     windows, availableNow) into a memory sink; the completed windows are
-    scored with `drift_rows_report` against the same baseline (exercised,
-    must be non-empty). Returns the per-window sketch rows — the exact
+    scored together (as their union) with `drift_rows_report` against the
+    same baseline (exercised, must be non-empty). Returns the per-window sketch rows — the exact
     count vectors the streaming path emits — which a SQL oracle reproduces
     independently (date_trunc windows + the baseline's min/max binning),
     so the streaming twin carries a FULL value oracle like its batch
@@ -678,7 +678,7 @@ def q_streaming_drift_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", _old_sp)
     rows = spark.table(qname)
-    # wire the scorer: every window must produce a full metric report
+    # wire the scorer: the union of the windows gets a full metric report
     report = vs.drift_rows_report(rows.collect(), baseline)
     assert len(report) >= 3, "drift_rows_report produced no metrics"
     os.unlink(bl_path)

@@ -40,11 +40,6 @@ def distinct_token_count(col: Column | str) -> Column:
     return F.size(F.array_distinct(tokens(col)))
 
 
-def char_count(col: Column | str) -> Column:
-    c = F.col(col) if isinstance(col, str) else col
-    return F.length(c)
-
-
 def punct_ratio(col: Column | str) -> Column:
     """Fraction of characters that are not alnum/space."""
     c = F.col(col) if isinstance(col, str) else col

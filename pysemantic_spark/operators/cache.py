@@ -39,23 +39,6 @@ def materialize(
     return df
 
 
-def truncate_lineage(df: DataFrame) -> DataFrame:
-    """Eager localCheckpoint: materializes AND truncates the logical plan.
-
-    persist() caches the DATA but Catalyst still re-analyzes the full
-    compounding lineage of every later plan built on top — in iterative
-    algorithms (star contraction) per-round compile
-    cost therefore grows superlinearly with round number (measured in the
-    star loop: 2.7 s → 12.6 s by round 3 on a 40-edge graph, pure
-    driver-side analysis). localCheckpoint replaces the plan with a scan
-    of the checkpointed RDD, so the next round compiles against a flat
-    one-node plan. Blocks are freed by the ContextCleaner once the
-    DataFrame is unreferenced. At cluster scale with executor churn
-    prefer reliable ``checkpoint()`` to a scratch dir — local checkpoint
-    blocks die with their executor (documented Spark semantics)."""
-    return df.localCheckpoint(eager=True)
-
-
 def tracked_count() -> int:
     """Number of currently-tracked (persisted, unreleased) frames."""
     return len(_TRACKED)

@@ -1,51 +1,40 @@
-"""Distribution-drift checks: PSI and KS vs a baseline sketch.
+"""Distribution-drift checks: PSI and KS of current data vs a baseline.
 
-Two sketch paths:
+One sketch: fixed-bin counts. ``bin_expr`` maps a numeric value to a bin id
+in [0, n_bins+1] (0 = underflow, n_bins+1 = overflow); a categorical value
+is its own bin. Counts are n_bins+2 numbers per column whatever the input
+size, and sketches of two parts of the data merge by summing their counts.
 
-- `histogram_sketch` — fixed-bin counts via ONE groupBy agg (pure JVM;
-  bin = clamp(floor((x-lo)/width))). This is the scale path: the sketch is
-  n_bins rows regardless of input size, mergeable across partitions/runs by
-  summing counts.
-- `ecdf_sketch_arrow` — per-bucket exact quantile grid via Arrow
-  `applyInPandas` (the pandas/Arrow-UDAF path the north_star names): each
-  bucket's pandas group computes a q-grid, driver merges. Arrow-batched,
-  never per-row Python.
+- :func:`multi_sketch_counts` counts every drift column's bins in ONE scan,
+  for the baseline file (:func:`save_drift_baseline`) and for the current
+  side of :func:`spec_drift_report` (the YAML ``drift:`` block execute()
+  runs). The streaming sketch (``streaming.validate_stream``) counts the
+  same bins per window. Batch and streaming rows come from one scorer,
+  :func:`_drift_rows`.
+- :func:`psi_between` / :func:`ks_between` are the same metrics as 1-row
+  declarative DataFrames (two pruned scans, a tiny bin spine), so external
+  engines can replicate them from SQL.
+- :func:`ecdf_sketch_arrow` — per-bucket quantile grid via Arrow
+  `applyInPandas` (the pandas/Arrow-UDAF path): each bucket's pandas group
+  computes a q-grid. Arrow-batched, never per-row Python.
 
-Drift metrics (computed driver-side on two tiny sketches):
-- PSI = Σ (p_i − q_i) · ln(p_i / q_i)      over shared bins (ε-smoothed)
-- KS  = max_i |CDF_p(i) − CDF_q(i)|        over the binned ECDF
+Metrics, from the baseline counts cb and current counts cc (totals tb, tc),
+rounded to 6 decimals:
 
-Categorical drift reuses the same machinery with value = category.
+- PSI = Σ (p_i − q_i) · ln(p_i / q_i), Laplace-smoothed:
+  p_i = (cb_i + 1) / (tb + NB), q_i = (cc_i + 1) / (tc + NB), NB = n_bins+2
+- KS  = max_i |cumsum(cb)_i / tb − cumsum(cc)_i / tc|  (totals floored at 1)
+- categorical PSI = the same Laplace PSI over the union K of both sides'
+  categories: p = (cb + 1) / (tb + |K|)
 """
 
 from __future__ import annotations
 
 import math
-from dataclasses import dataclass
 
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-
-@dataclass
-class HistogramSketch:
-    lo: float
-    hi: float
-    n_bins: int
-    counts: list[int]          # len n_bins + 2 (underflow bin 0, overflow -1)
-    total: int
-
-    def probs(self, eps: float = 1e-6) -> list[float]:
-        t = max(self.total, 1)
-        return [(c + eps * t) / (t * (1 + eps * len(self.counts))) for c in self.counts]
-
-    def to_dict(self) -> dict:
-        return self.__dict__.copy()
-
-    @classmethod
-    def from_dict(cls, d: dict) -> "HistogramSketch":
-        return cls(**d)
 
 
 def bin_expr(col: str, lo: float, hi: float, n_bins: int) -> "F.Column":
@@ -61,55 +50,40 @@ def bin_expr(col: str, lo: float, hi: float, n_bins: int) -> "F.Column":
     )
 
 
-def histogram_sketch(
-    df: DataFrame, col: str, lo: float, hi: float, n_bins: int = 64
-) -> HistogramSketch:
-    """One partial+final agg pass → n_bins+2 counts."""
-    rows = (
-        df.select(bin_expr(col, lo, hi, n_bins).alias("bin"))
-        .filter(F.col("bin").isNotNull())
-        .groupBy("bin")
-        .agg(F.count(F.lit(1)).alias("cnt"))
-        .collect()
+def _bin_spine(
+    baseline: DataFrame, current: DataFrame, col: str, lo: float, hi: float,
+    n_bins: int,
+) -> tuple[DataFrame, DataFrame]:
+    """(bin, cb, cc) for every bin id 0..n_bins+1 (0 where a side has no
+    rows in the bin), and the 1-row totals (tb, tc) as doubles.
+
+    Each side is one pruned scan of ``col`` and a partial+final agg of
+    ≤ n_bins+2 groups, left-joined onto a ``range`` spine of the bin ids;
+    nothing after the aggs grows with input size."""
+    def binned(df: DataFrame, name: str) -> DataFrame:
+        return (
+            df.select(bin_expr(col, lo, hi, n_bins).alias("bin"))
+            .filter(F.col("bin").isNotNull())
+            .groupBy("bin")
+            .agg(F.count(F.lit(1)).alias(name))
+        )
+
+    bins = baseline.sparkSession.range(0, n_bins + 2).select(
+        F.col("id").cast("int").alias("bin")
     )
-    counts = [0] * (n_bins + 2)
-    for r in rows:
-        counts[r["bin"]] = r["cnt"]
-    return HistogramSketch(lo=lo, hi=hi, n_bins=n_bins, counts=counts, total=sum(counts))
-
-
-def categorical_sketch(df: DataFrame, col: str) -> dict[str, int]:
-    rows = df.groupBy(col).agg(F.count(F.lit(1)).alias("cnt")).collect()
-    return {str(r[col]): r["cnt"] for r in rows if r[col] is not None}
-
-
-def psi(baseline: HistogramSketch, current: HistogramSketch) -> float:
-    p, q = baseline.probs(), current.probs()
-    return sum((pi - qi) * math.log(pi / qi) for pi, qi in zip(p, q))
-
-
-def ks(baseline: HistogramSketch, current: HistogramSketch) -> float:
-    p, q = baseline.probs(), current.probs()
-    cp = cq = 0.0
-    worst = 0.0
-    for pi, qi in zip(p, q):
-        cp += pi
-        cq += qi
-        worst = max(worst, abs(cp - cq))
-    return worst
-
-
-def categorical_psi(baseline: dict[str, int], current: dict[str, int]) -> float:
-    keys = sorted(set(baseline) | set(current))
-    bt = max(sum(baseline.values()), 1)
-    ct = max(sum(current.values()), 1)
-    eps = 1e-6
-    out = 0.0
-    for k in keys:
-        p = baseline.get(k, 0) / bt + eps
-        q = current.get(k, 0) / ct + eps
-        out += (p - q) * math.log(p / q)
-    return out
+    joined = (
+        bins.join(binned(baseline, "cb"), "bin", "left")
+        .join(binned(current, "cc"), "bin", "left")
+        .select(
+            "bin",
+            F.coalesce("cb", F.lit(0)).alias("cb"),
+            F.coalesce("cc", F.lit(0)).alias("cc"),
+        )
+    )
+    totals = joined.agg(
+        F.sum("cb").cast("double").alias("tb"), F.sum("cc").cast("double").alias("tc")
+    )
+    return joined, totals
 
 
 def psi_between(
@@ -126,30 +100,10 @@ def psi_between(
 
     Two pruned scans (only ``col``), two partial+final aggs of ≤ n_bins+2
     groups, one tiny join — nothing here grows with input size."""
-    def binned(df: DataFrame, name: str) -> DataFrame:
-        return (
-            df.select(bin_expr(col, lo, hi, n_bins).alias("bin"))
-            .filter(F.col("bin").isNotNull())
-            .groupBy("bin")
-            .agg(F.count(F.lit(1)).alias(name))
-        )
-
     nb = n_bins + 2
-    b = binned(baseline, "cb")
-    c = binned(current, "cc")
-    bins = baseline.sparkSession.range(0, nb).select(F.col("id").cast("int").alias("bin"))
-    joined = (
-        bins.join(b, "bin", "left")
-        .join(c, "bin", "left")
-        .select(
-            F.coalesce("cb", F.lit(0)).alias("cb"),
-            F.coalesce("cc", F.lit(0)).alias("cc"),
-        )
-    )
-    tb = F.sum("cb").cast("double")
-    tc = F.sum("cc").cast("double")
-    # evaluate via a two-step agg: totals first (scalar subquery-free)
-    totals = joined.agg(tb.alias("tb"), tc.alias("tc"))
+    joined, totals = _bin_spine(baseline, current, col, lo, hi, n_bins)
+    # totals come from their own agg and a broadcast cross join, so no
+    # scalar subquery is needed
     with_tot = joined.crossJoin(F.broadcast(totals))
     p = (F.col("cb") + 1) / (F.col("tb") + nb)
     q = (F.col("cc") + 1) / (F.col("tc") + nb)
@@ -176,32 +130,7 @@ def ks_between(
     window). Fully SQL-replicable for external verification."""
     from pyspark.sql import Window
 
-    def binned(df: DataFrame, name: str) -> DataFrame:
-        return (
-            df.select(bin_expr(col, lo, hi, n_bins).alias("bin"))
-            .filter(F.col("bin").isNotNull())
-            .groupBy("bin")
-            .agg(F.count(F.lit(1)).alias(name))
-        )
-
-    nb = n_bins + 2
-    b = binned(baseline, "cb")
-    c = binned(current, "cc")
-    bins = baseline.sparkSession.range(0, nb).select(
-        F.col("id").cast("int").alias("bin")
-    )
-    joined = (
-        bins.join(b, "bin", "left")
-        .join(c, "bin", "left")
-        .select(
-            "bin",
-            F.coalesce("cb", F.lit(0)).alias("cb"),
-            F.coalesce("cc", F.lit(0)).alias("cc"),
-        )
-    )
-    totals = joined.agg(
-        F.sum("cb").cast("double").alias("tb"), F.sum("cc").cast("double").alias("tc")
-    )
+    joined, totals = _bin_spine(baseline, current, col, lo, hi, n_bins)
     # literal partition key: the cumsum runs over exactly n_bins+2
     # aggregated rows, but an unpartitioned window makes Spark log a
     # "WindowExec: No Partition Defined" scale warning that real-cluster
@@ -233,17 +162,9 @@ def ks_between(
 
 
 # ---------------------------------------------------------------------------
-# Spec-driven drift: DriftSpec (YAML `drift:` block) → baseline file →
-# drifted/not-drifted report rows in execute()
+# Driver-side metrics over bin counts (formulas in the module docstring;
+# psi_between/ks_between compute the same numbers in SQL)
 # ---------------------------------------------------------------------------
-#
-# All metric formulas here are EXACT and SQL-replicable (so external engines
-# can verify them bit-for-bit from the same integer bin counts):
-#   hist PSI  = Σ (p−q)·ln(p/q),  p_i=(cb_i+1)/(tb+NB), q_i=(cc_i+1)/(tc+NB)
-#               (Laplace smoothing, NB = n_bins+2 — same as psi_between)
-#   hist KS   = max_i |cumsum(cb)_i/tb − cumsum(cc)_i/tc|
-#   cat  PSI  = Laplace over the union key set K: p=(cb+1)/(tb+|K|)
-# Values rounded to 6 decimals.
 
 
 def _psi_laplace_counts(cb: list[int], cc: list[int]) -> float:
@@ -478,26 +399,42 @@ def spec_drift_report(
         df, numeric_specs, cat_cols,
         max_categories=getattr(drift_spec, "max_categories", 10_000),
     )
+    return _drift_rows(
+        base, drift_spec.columns, hist, cat,
+        psi_threshold=drift_spec.psi_threshold,
+        ks_threshold=drift_spec.ks_threshold,
+    )
+
+
+def _drift_rows(
+    base: dict,
+    columns: list[str],
+    hist: dict[str, list[int]],
+    cat: dict[str, dict[str, int]],
+    psi_threshold: float,
+    ks_threshold: float,
+) -> pd.DataFrame:
+    """Score current counts against a loaded baseline sketch: pandas
+    (column, metric, value, threshold, drifted), one psi and one ks row per
+    histogram column and one psi row per categorical column, in
+    ``columns`` order. ``hist``/``cat`` hold the current side's counts as
+    :func:`multi_sketch_counts` returns them."""
     rows = []
-    for c in drift_spec.columns:
+    for c in columns:
         entry = base["columns"][c]
         if entry["kind"] == "hist":
-            for metric, value, thr in (
-                ("psi", _psi_laplace_counts(entry["counts"], hist[c]),
-                 drift_spec.psi_threshold),
-                ("ks", _ks_counts(entry["counts"], hist[c]),
-                 drift_spec.ks_threshold),
-            ):
-                rows.append(
-                    {"column": c, "metric": metric, "value": value,
-                     "threshold": thr, "drifted": value > thr}
-                )
+            metrics = (
+                ("psi", _psi_laplace_counts(entry["counts"], hist[c]), psi_threshold),
+                ("ks", _ks_counts(entry["counts"], hist[c]), ks_threshold),
+            )
         else:
-            v = _cat_psi_laplace(entry["counts"], cat[c])
+            metrics = (
+                ("psi", _cat_psi_laplace(entry["counts"], cat[c]), psi_threshold),
+            )
+        for metric, value, thr in metrics:
             rows.append(
-                {"column": c, "metric": "psi", "value": v,
-                 "threshold": drift_spec.psi_threshold,
-                 "drifted": v > drift_spec.psi_threshold}
+                {"column": c, "metric": metric, "value": value,
+                 "threshold": thr, "drifted": value > thr}
             )
     return pd.DataFrame(rows)
 
@@ -527,39 +464,3 @@ def ecdf_sketch_arrow(
     )
     return out.toPandas()
 
-
-def drift_report(
-    current: DataFrame,
-    baseline_sketches: dict[str, HistogramSketch | dict],
-    numeric_ranges: dict[str, tuple[float, float]],
-    categorical_cols: list[str] | None = None,
-    n_bins: int = 64,
-    ks_threshold: float = 0.1,
-    psi_threshold: float = 0.2,
-) -> pd.DataFrame:
-    """Compare ``current`` against stored baseline sketches.
-
-    Returns pandas DF (column, metric, value, threshold, drifted)."""
-    rows = []
-    for col, (lo, hi) in numeric_ranges.items():
-        base = baseline_sketches[col]
-        if isinstance(base, dict):
-            base = HistogramSketch.from_dict(base)
-        cur = histogram_sketch(current, col, base.lo, base.hi, base.n_bins)
-        for metric, value, thr in (
-            ("ks", ks(base, cur), ks_threshold),
-            ("psi", psi(base, cur), psi_threshold),
-        ):
-            rows.append(
-                {"column": col, "metric": metric, "value": value,
-                 "threshold": thr, "drifted": value > thr}
-            )
-    for col in categorical_cols or []:
-        base = baseline_sketches[col]
-        cur = categorical_sketch(current, col)
-        v = categorical_psi(base, cur)
-        rows.append(
-            {"column": col, "metric": "psi", "value": v,
-             "threshold": psi_threshold, "drifted": v > psi_threshold}
-        )
-    return pd.DataFrame(rows)

@@ -1,15 +1,20 @@
-"""Skew handling: salted repartitioning for pathological conversations.
+"""Skew handling: deterministic salts for pathological conversations.
 
 A 10^12-turn table partitioned by hashed conv_id can contain conversations
-with 10^8 turns (FIXTURES.md skew fixture). A plain
-``repartition(xxhash64(conv_id))`` sends such a conversation to ONE task.
-The salted variant spreads each conversation over ``salt_factor`` partitions
-while keeping determinism; aggregations over conv-level keys then run
-two-stage (partial per salt → final per key), which is exactly how Spark's
-own partial aggregation composes, so results are invariant to salt_factor
-(property-tested in tests/test_skew.py).
+with 10^8 turns (FIXTURES.md skew fixture). Keyed on conv_id alone, such a
+conversation lands in ONE task. A salt in [0, salt_factor) taken from a
+hash of within-key columns spreads it over ``salt_factor`` tasks while
+staying deterministic:
 
-AQE skew-join splitting handles *join* skew at runtime; this module handles
+- :func:`salt_expr` — the salt column. ``ParquetManifestIO.write_bucketed``
+  repartitions its write on (bucket, salt).
+- :func:`salted_group_count` — two-stage ``groupBy(key).count()``: partial
+  count per (key, salt), then a sum per key. Its result does not depend on
+  salt_factor (tests/test_drift_and_skew.py).
+- :func:`hashable_cols` — the default entropy columns (every column
+  xxhash64 can take).
+
+AQE skew-join splitting handles *join* skew at runtime; the salt handles
 *partitioning/agg* skew, which AQE does not re-balance for custom layouts.
 """
 
@@ -53,22 +58,6 @@ def salt_expr(salt_factor: int, *entropy_cols: str) -> Column:
         )
     cols = [F.col(c) for c in entropy_cols]
     return F.pmod(F.xxhash64(*cols), F.lit(salt_factor)).cast("int")
-
-
-def salted_repartition(
-    df: DataFrame,
-    key: str,
-    num_partitions: int,
-    salt_factor: int = 8,
-    entropy_cols: tuple[str, ...] | None = None,
-) -> DataFrame:
-    """Repartition on (hash(key), salt) so heavy keys spread over
-    ``salt_factor`` partitions. Drop-in for ``df.repartition(n, key)``.
-    entropy_cols defaults to ALL columns (deterministic full-row hash)."""
-    cols = tuple(entropy_cols) if entropy_cols else hashable_cols(df)
-    salted = df.withColumn(SALT_COL, salt_expr(salt_factor, *cols))
-    out = salted.repartition(num_partitions, F.xxhash64(F.col(key)), F.col(SALT_COL))
-    return out.drop(SALT_COL)
 
 
 def salted_group_count(

@@ -167,42 +167,37 @@ def drift_rows_report(
     ks_threshold: float = 0.1,
     psi_threshold: float = 0.2,
 ):
-    """Score one window's sketch rows (from :func:`windowed_drift_sketch`)
-    against the baseline: pandas (column, metric, value, threshold,
-    drifted) — identical formulas to the batch spec-drift path."""
+    """Score sketch rows (from :func:`windowed_drift_sketch`) against the
+    baseline: pandas (column, metric, value, threshold, drifted) for every
+    baseline column — the batch spec-drift rows and formulas
+    (``drift._drift_rows``).
+
+    Counts of the same (column, bin) are summed, so rows of several
+    windows are scored as the union of those windows; pass one window's
+    rows to score that window."""
     import pandas as pd
 
-    from pysemantic_spark.operators.drift import (
-        _cat_psi_laplace,
-        _ks_counts,
-        _psi_laplace_counts,
-    )
+    from pysemantic_spark.operators.drift import _drift_rows
 
     pdf = (
         sketch_rows
         if isinstance(sketch_rows, pd.DataFrame)
         else pd.DataFrame([r.asDict() for r in sketch_rows])
     )
-    rows = []
-    for c, entry in baseline["columns"].items():
-        mine = pdf[pdf["column"] == c] if len(pdf) else pdf
-        if entry["kind"] == "hist":
-            counts = [0] * (entry["n_bins"] + 2)
-            for _, r in mine.iterrows():
-                counts[int(r["bin"])] = int(r["cnt"])
-            for metric, value, thr in (
-                ("psi", _psi_laplace_counts(entry["counts"], counts), psi_threshold),
-                ("ks", _ks_counts(entry["counts"], counts), ks_threshold),
-            ):
-                rows.append(
-                    {"column": c, "metric": metric, "value": value,
-                     "threshold": thr, "drifted": value > thr}
-                )
-        else:
-            cur = {str(r["bin"]): int(r["cnt"]) for _, r in mine.iterrows()}
-            v = _cat_psi_laplace(entry["counts"], cur)
-            rows.append(
-                {"column": c, "metric": "psi", "value": v,
-                 "threshold": psi_threshold, "drifted": v > psi_threshold}
-            )
-    return pd.DataFrame(rows)
+    entries = baseline["columns"]
+    hist = {
+        c: [0] * (e["n_bins"] + 2) for c, e in entries.items() if e["kind"] == "hist"
+    }
+    cat: dict[str, dict[str, int]] = {
+        c: {} for c, e in entries.items() if e["kind"] != "hist"
+    }
+    if len(pdf):
+        for c, b, n in pdf[["column", "bin", "cnt"]].itertuples(index=False):
+            if c in hist:
+                hist[c][int(b)] += int(n)
+            elif c in cat:
+                cat[c][str(b)] = cat[c].get(str(b), 0) + int(n)
+    return _drift_rows(
+        baseline, list(entries), hist, cat,
+        psi_threshold=psi_threshold, ks_threshold=ks_threshold,
+    )

@@ -131,21 +131,27 @@ def test_drift_sketch_scan_is_pruned_and_single(spark, parts):
 
 
 def test_ks_between_scans_are_pruned(spark, parts):
-    """ks_between reads only the drift column on both sides; the window
-    cumsum runs over the aggregated n_bins-row spine, never input rows."""
-    from pysemantic_spark.operators.drift import ks_between
+    """ks_between and psi_between (one shared bin spine) read only the
+    drift column on both sides; ks's window cumsum runs over the
+    aggregated n_bins-row spine, never input rows."""
+    from pysemantic_spark.operators.drift import ks_between, psi_between
 
     df, _, _ = parts
     base = df.filter(F.col("turn_idx") % 2 == 0)
     cur = df.filter(F.col("turn_idx") % 2 == 1)
-    out = ks_between(base, cur, "turn_idx", 0.0, 50.0, n_bins=16)
-    plan = _plan(out)
-    for m in re.finditer(r"ReadSchema: struct<([^>]*)>", plan):
-        cols = {c.split(":")[0] for c in m.group(1).split(",") if c}
-        assert cols <= {"turn_idx"}, cols
+    plans = {
+        fn.__name__: _plan(fn(base, cur, "turn_idx", 0.0, 50.0, n_bins=16))
+        for fn in (ks_between, psi_between)
+    }
+    for name, plan in plans.items():
+        scans = re.findall(r"ReadSchema: struct<([^>]*)>", plan)
+        assert scans, name
+        for m in scans:
+            cols = {c.split(":")[0] for c in m.split(",") if c}
+            assert cols <= {"turn_idx"}, (name, cols)
     # the window operates post-aggregation: it must appear above an agg of
     # the 18-row bin spine, so no Exchange of input-sized data feeds it
-    assert "Window" in plan
+    assert "Window" in plans["ks_between"]
 
 
 def test_violating_rows_per_bucket_is_agg_shaped(spark):

@@ -1,4 +1,4 @@
-"""Structured Streaming validation + multimodal plumbing tests."""
+"""Structured Streaming validation and streaming drift tests."""
 
 from __future__ import annotations
 
@@ -8,7 +8,6 @@ import pytest
 from pyspark.sql import functions as F
 
 from pysemantic_spark.fixtures import dim_tools_pdf, transcripts_pdf, transcripts_spec
-from pysemantic_spark.multimodal import binary_ops as mm
 from pysemantic_spark.streaming import validate_stream as vs
 
 
@@ -68,62 +67,6 @@ def test_windowed_counts_stream(spark, tmp_path):
     assert all(r["n_violations"] > 0 for r in rows)
 
 
-@pytest.fixture(scope="module")
-def media_df(spark):
-    rng = np.random.default_rng(5)
-    rows = []
-    for i in range(20):
-        kind = ["image", "audio", "video"][i % 3]
-        rows.append(
-            {
-                "media_id": i,
-                "kind": kind,
-                "payload": bytes(rng.integers(0, 256, 64, dtype=np.uint8))
-                if i != 4 else None,
-                "mime": f"{kind}/x-test" if i != 7 else "application/pdf",
-                "width": 64 if kind == "image" and i != 6 else None,
-                "height": 64 if kind == "image" and i != 6 else None,
-                "duration_ms": 3500 if kind != "image" else None,
-            }
-        )
-    return spark.createDataFrame(pd.DataFrame(rows), schema=mm.MEDIA_SCHEMA)
-
-
-def test_validate_media_checks(spark, media_df):
-    out = mm.validate_media(media_df).select("media_id", "_violations").collect()
-    flags = {r["media_id"]: list(r["_violations"]) for r in out}
-    assert "not_null:payload" in flags[4]
-    assert "bad_mime" in flags[7]
-    assert "image_dims_missing" in flags[6]
-    assert flags[0] == []
-
-
-def test_extract_features_plumbing(spark, media_df):
-    feats = mm.extract_features(media_df).collect()
-    assert len(feats) == 20
-    assert all(len(r["features"]) == mm.FEATURE_DIM for r in feats)
-    # deterministic: same payload → same features
-    again = mm.extract_features(media_df).collect()
-    assert [r["features"] for r in feats] == [r["features"] for r in again]
-    # null payload → zero vector (decoder contract)
-    null_row = [r for r in feats if r["media_id"] == 4][0]
-    assert all(v == 0.0 for v in null_row["features"])
-
-
-def test_frame_sample_plan(spark, media_df):
-    frames = mm.frame_sample_plan(media_df, every_ms=1000)
-    got = frames.groupBy("media_id").count().collect()
-    # videos are media_id % 3 == 2, duration 3500ms → 4 frames each
-    assert all(r["count"] == 4 for r in got)
-    ts = {r["frame_ts_ms"] for r in frames.filter(F.col("media_id") == 2).collect()}
-    assert ts == {0, 1000, 2000, 3000}
-
-
-def test_real_decoder_seam():
-    with pytest.raises(NotImplementedError):
-        mm.real_decode_unavailable(b"...")
-
-
 def test_windowed_drift_sketch_stream_matches_batch(spark, tmp_path):
     """Streaming drift: the per-window sketch stream scored by
     drift_rows_report must reproduce the BATCH spec-drift metrics exactly
@@ -181,3 +124,44 @@ def test_windowed_drift_sketch_stream_matches_batch(spark, tmp_path):
         assert got.loc[idx, "drifted"] == exp.loc[idx, "drifted"], idx
     assert bool(got.loc[("v", "psi"), "drifted"])
     assert not bool(got.loc[("cat", "psi"), "drifted"])
+
+
+def test_drift_rows_report_scores_several_windows_as_their_union():
+    """Rows of two windows are scored as the union of the windows: counts
+    of the same bin are summed, never overwritten by the later window."""
+    from pysemantic_spark.operators.drift import (
+        _cat_psi_laplace,
+        _ks_counts,
+        _psi_laplace_counts,
+    )
+
+    baseline = {
+        "n_bins": 2,
+        "columns": {
+            "v": {"kind": "hist", "lo": 0.0, "hi": 2.0, "n_bins": 2,
+                  "counts": [0, 50, 50, 0]},
+            "cat": {"kind": "cat", "counts": {"a": 50, "b": 50}},
+        },
+    }
+    w1, w2 = "2024-01-01 00:00", "2024-01-01 00:01"
+    rows = pd.DataFrame(
+        [
+            (w1, "v", "1", 40), (w1, "v", "2", 10),
+            (w2, "v", "1", 10), (w2, "v", "2", 40),
+            (w1, "cat", "a", 45), (w1, "cat", "b", 5),
+            (w2, "cat", "a", 5), (w2, "cat", "b", 45),
+        ],
+        columns=["window_start", "column", "bin", "cnt"],
+    )
+    got = vs.drift_rows_report(rows, baseline).set_index(["column", "metric"])
+    union_v, union_cat = [0, 50, 50, 0], {"a": 50, "b": 50}
+    assert got.loc[("v", "psi"), "value"] == _psi_laplace_counts(
+        baseline["columns"]["v"]["counts"], union_v) == 0.0
+    assert got.loc[("v", "ks"), "value"] == _ks_counts(
+        baseline["columns"]["v"]["counts"], union_v) == 0.0
+    assert got.loc[("cat", "psi"), "value"] == _cat_psi_laplace(
+        baseline["columns"]["cat"]["counts"], union_cat) == 0.0
+    assert not got["drifted"].any()
+    # one window alone still drifts
+    one = vs.drift_rows_report(rows[rows.window_start == w1], baseline)
+    assert one.set_index(["column", "metric"]).loc[("v", "psi"), "drifted"]
