@@ -80,8 +80,9 @@ def _read(
     # widen=False: callers whose FIRST operator is itself an exchange (a
     # groupBy/bucketing shuffle) or whose per-row scan work is trivial opt
     # out — the widening repartition would be a pure extra exchange there
-    # (measured: lsh_topk 2.2 → 1.5 s at sf1.0 without it, while the
-    # interpreted brute-force scorer of cosine_topk NEEDS it: 0.4 vs 1.7 s)
+    # (measured: lsh_topk 2.2 → 1.5 s at sf1.0 without it, while
+    # cosine_topk, then an interpreted per-row scorer, needed it: 0.4 vs
+    # 1.7 s; not re-measured since it scores in the GEMM top-k kernel)
     if widen and rg < par and nbytes < 256 * 1024 * 1024:
         # HASH repartition on the leading column (the fixture tables all
         # lead with a well-distributed id), not round-robin: round-robin
@@ -853,11 +854,11 @@ def q_lsh_topk_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
     fixture's ~cos 0.3-0.45 neighbor band (q≈0.63), miss (1−p)^16 ≈ 0.08 —
     measured recall@5 = 1.0 for all 5 queries at sf0.01 and ≥ 0.6 at
     sf0.1; gate at 0.6."""
-    # widen=False (round 7): every heavy phase of this plan re-partitions
-    # anyway (bucket groupBy, candidate distinct), so the scan-widening
-    # exchange was pure overhead — 2.2 → 1.5 s at sf1.0. Result-identical:
-    # buckets are per-row functions and the top-k window breaks ties by
-    # vec_id, so the output never depends on partition layout.
+    # widen=False: when this plan re-partitioned anyway (bucket groupBy,
+    # candidate distinct; both gone, scoring now runs where the scan reads)
+    # the widening exchange was pure overhead — 2.2 → 1.5 s at sf1.0.
+    # Result-identical: buckets are per-row functions and the top-k window
+    # breaks ties by vec_id, so the output never depends on partition layout.
     emb = _read(spark, sf_dir, "embeddings", widen=False).withColumn(
         "embedding", F.col("embedding").cast("array<double>")
     )

@@ -26,6 +26,12 @@ rounded to 6 decimals:
 - KS  = max_i |cumsum(cb)_i / tb − cumsum(cc)_i / tc|  (totals floored at 1)
 - categorical PSI = the same Laplace PSI over the union K of both sides'
   categories: p = (cb + 1) / (tb + |K|)
+
+A column whose current side has no values (all NULL, or absent from every
+scored window) while its baseline has some is reported drifted on every
+row. Its value stays what the formula gives, which can read as no drift:
+Laplace smoothing makes an empty side uniform, so categorical PSI against
+a uniform baseline is exactly 0.0.
 """
 
 from __future__ import annotations
@@ -131,16 +137,9 @@ def ks_between(
     from pyspark.sql import Window
 
     joined, totals = _bin_spine(baseline, current, col, lo, hi, n_bins)
-    # literal partition key: the cumsum runs over exactly n_bins+2
-    # aggregated rows, but an unpartitioned window makes Spark log a
-    # "WindowExec: No Partition Defined" scale warning that real-cluster
-    # operators would (rightly) chase — the literal documents single-
-    # partition as intended while keeping the identical result
-    w = (
-        Window.partitionBy(F.lit(0))
-        .orderBy("bin")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
+    # one partition is fine: the window only sees the n_bins+2 aggregated
+    # rows (Spark still logs "No Partition Defined" for it)
+    w = Window.orderBy("bin").rowsBetween(Window.unboundedPreceding, Window.currentRow)
     cum = joined.select(
         F.sum("cb").over(w).cast("double").alias("ccb"),
         F.sum("cc").over(w).cast("double").alias("ccc"),
@@ -418,23 +417,27 @@ def _drift_rows(
     (column, metric, value, threshold, drifted), one psi and one ks row per
     histogram column and one psi row per categorical column, in
     ``columns`` order. ``hist``/``cat`` hold the current side's counts as
-    :func:`multi_sketch_counts` returns them."""
+    :func:`multi_sketch_counts` returns them. A column with no current
+    values and a non-empty baseline is drifted on every row, whatever its
+    value (see the module docstring)."""
     rows = []
     for c in columns:
         entry = base["columns"][c]
         if entry["kind"] == "hist":
+            empty = not sum(hist[c]) and sum(entry["counts"]) > 0
             metrics = (
                 ("psi", _psi_laplace_counts(entry["counts"], hist[c]), psi_threshold),
                 ("ks", _ks_counts(entry["counts"], hist[c]), ks_threshold),
             )
         else:
+            empty = not sum(cat[c].values()) and sum(entry["counts"].values()) > 0
             metrics = (
                 ("psi", _cat_psi_laplace(entry["counts"], cat[c]), psi_threshold),
             )
         for metric, value, thr in metrics:
             rows.append(
                 {"column": c, "metric": metric, "value": value,
-                 "threshold": thr, "drifted": value > thr}
+                 "threshold": thr, "drifted": empty or value > thr}
             )
     return pd.DataFrame(rows)
 

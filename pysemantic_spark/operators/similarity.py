@@ -1,36 +1,44 @@
 """Similarity search over embedding columns (array<float>).
 
-- `cosine_topk`         — exact brute force: broadcast the (small) query
-                          set, fused JVM dot products via zip_with/aggregate,
-                          per-query top-k. The corpus is scanned once, never
-                          shuffled; only (n_queries × k) rows survive.
+- `cosine_topk`         — exact brute-force top-k: every corpus row scores
+                          against every query where it is read.
 - `cosine_pairs_exact`  — exact all-pairs cosine ≥ threshold via BLOCKED
                           GEMM (`mapInPandas` over block pairs): the honest
                           brute-force baseline, and the RIGHT scale path when
                           the threshold sits near the bulk of the cosine
                           distribution (weak selectivity), where any LSH
                           operating point degenerates to all-pairs anyway.
-- `lsh_bucketed_topk`   — sub-linear path: random-hyperplane LSH buckets
-                          (deterministic seeded planes, multi-table +
-                          multi-probe) so each query only scores its
-                          buckets' candidates; recall traded via
-                          n_planes/n_tables/probe count.
-- `ivf_topk`            — sub-linear path: k-means coarse clusters, each
+- `lsh_bucketed_topk`   — sub-linear top-k: random-hyperplane LSH buckets
+                          (seeded planes, multi-table + multi-probe); each
+                          query scores only its buckets' candidates.
+- `ivf_topk`            — sub-linear top-k: k-means coarse clusters, each
                           query scores only its n_probe nearest clusters.
-- `embedding_near_dup_pairs` — near-duplicate detection: cosine ≥ threshold
-                          pairs via multi-table (optionally multi-probe)
-                          LSH bucket self-join + exact verify.
+- `embedding_near_dup_pairs` — cosine ≥ threshold pairs via multi-table
+                          (optionally multi-probe) LSH bucket self-join +
+                          exact verify.
 
-One kernel per job: the top-k operators score with :func:`cosine` and
-rank in :func:`_top_k`, the all-pairs operators verify in
-:func:`_gemm_pairs`, and the LSH operators bucket in
-:func:`hyperplane_buckets_arrow`.
+One kernel per job, each a float64 GEMM of unit vectors with cosines
+rounded to 6 places: the top-k operators score in :func:`_gemm_topk` and
+rank in :func:`_top_k`; the all-pairs operators verify in
+:func:`_gemm_pairs`. The top-k operators evaluate the small query side
+once on the driver and ship it inside the kernel, so the corpus is scanned
+once and never joined or shuffled; LSH and IVF mask each query's scoring
+to the corpus rows whose keys hit its probe set. The keys come from the
+functions behind :func:`hyperplane_buckets_arrow` (buckets) and
+:func:`nearest_centroids_arrow` (clusters), run inside the kernel on the
+corpus side and on the driver for the queries. Only n_queries × k rows per
+task reach the final rank.
 
-At 100 TB the corpus side stays partition-local in the top-k/near-dup
-paths: the only shuffles are on bucket ids (bounded cardinality) and the
-final top-k agg (n_queries groups). The blocked-GEMM path shuffles each
-vector n_blocks/2 times by construction (that IS all-pairs work); its knob
-is block size = one bounded GEMM per task.
+Bad vectors, one rule for all five: a NULL vector, or one whose length is
+not ``dim``, never scores, never appears in the output and never moves
+another row's id; an all-zero vector scores 0.0; a NULL or ragged query
+returns no rows. ``cosine_topk`` takes ``dim`` from its queries and
+``cosine_pairs_exact`` has none; their docstrings say how a length
+mismatch fails.
+
+The blocked-GEMM path shuffles each vector n_blocks/2 times by
+construction (that IS all-pairs work); its knob is block size = one
+bounded GEMM per task.
 """
 
 from __future__ import annotations
@@ -40,37 +48,88 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from pysemantic_spark.operators.cache import materialize
+
+def _gemm_topk(k: int, query_ids, queries: np.ndarray, keys=None, probes=None):
+    """The one top-k scoring kernel: a ``mapInPandas`` body mapping corpus
+    rows (vec_id, _cvec) to the task's k best (query_id, vec_id, cos_sim)
+    rows per query. Each batch is one float64 matmul of unit vectors
+    against the (n_queries × dim) ``queries`` matrix (a zero vector scores
+    0.0), rounded to 6 places; each query keeps a running top-k, ties to
+    the lower vec_id. A NULL or not-``dim``-long vector never scores. With
+    ``keys`` (a (rows × dim) → (rows × tables) key function) and
+    ``probes`` (n_queries × tables × keys), query j scores only rows whose
+    key hits ``probes[j]`` in some table. Helpers stay nested, as in
+    :func:`_gemm_pairs`."""
+    qids = np.asarray(query_ids)
+    dim = queries.shape[1]
+    qn = np.linalg.norm(queries, axis=1)
+    qn[qn == 0] = 1.0
+    Qt = (queries / qn[:, None]).T  # (dim, n_queries)
+
+    def best_k(ids, cos):
+        if len(cos) > k:  # keep the k-th value's ties, then order exactly
+            kth = np.partition(cos, len(cos) - k)[len(cos) - k]
+            keep = cos >= kth
+            ids, cos = ids[keep], cos[keep]
+        o = np.lexsort((ids, -cos))[:k]
+        return ids[o], cos[o]
+
+    def score(batches):
+        best = [None] * len(qids)
+        for pdf in batches:
+            vs = pdf["_cvec"].to_numpy()
+            ok = np.fromiter((v is not None and len(v) == dim for v in vs), bool, len(vs))
+            if not ok.any():
+                continue
+            C = np.stack(vs[ok]).astype(np.float64, copy=False)
+            K = None if keys is None else keys(C)  # (rows, tables)
+            cn = np.linalg.norm(C, axis=1)
+            cn[cn == 0] = 1.0
+            # + 0.0 turns a rounded -0.0 into 0.0
+            G = np.round((C / cn[:, None]) @ Qt, 6) + 0.0  # (rows, n_queries)
+            ids = pdf["vec_id"].to_numpy()[ok]
+            for j in range(len(qids)):
+                hit = slice(None) if K is None else (
+                    K[:, :, None] == probes[j][None]).any(axis=(1, 2))
+                cand = (ids[hit], G[hit, j])
+                if best[j] is not None:
+                    cand = tuple(map(np.concatenate, zip(best[j], cand)))
+                best[j] = best_k(*cand)
+        kept = [j for j, b in enumerate(best) if b is not None and len(b[0])]
+        if kept:
+            yield pd.DataFrame({
+                "query_id": np.repeat(qids[kept], [len(best[j][0]) for j in kept]),
+                "vec_id": np.concatenate([best[j][0] for j in kept]),
+                "cos_sim": np.concatenate([best[j][1] for j in kept]),
+            })
+
+    return score
 
 
-def _dot(a: Column, b: Column) -> Column:
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: x * y),
-        F.lit(0.0),
-        lambda acc, v: acc + v,
-    )
-
-
-def _norm(a: Column) -> Column:
-    return F.sqrt(
-        F.aggregate(a, F.lit(0.0), lambda acc, v: acc + v * v)
-    )
-
-
-def cosine(a: Column, b: Column) -> Column:
-    return _dot(a, b) / (_norm(a) * _norm(b))
-
-
-def _top_k(cand: DataFrame, k: int) -> DataFrame:
-    """Score (query_id, vec_id, _cvec, _qvec) candidate rows with
-    :func:`cosine` and keep each query's k best: (query_id, vec_id,
-    cos_sim), cos_sim rounded to 6 places, ties broken by vec_id for
-    determinism. Catalyst turns the per-query window sort into a partial
-    top-k with AQE."""
-    scored = cand.select(
-        "query_id",
-        "vec_id",
-        F.round(cosine(F.col("_cvec"), F.col("_qvec")), 6).alias("cos_sim"),
+def _top_k(
+    corpus: DataFrame, queries: DataFrame, k: int, dim: int | None = None,
+    keys=None, probes=None,
+) -> DataFrame:
+    """Each query's k best (query_id, vec_id, cos_sim) rows from corpus
+    rows (vec_id, _cvec) and query rows (query_id, _qvec). The queries are
+    collected once; one whose vector is NULL or not ``dim`` long is dropped
+    (``dim`` None: the queries' one length, a ValueError if they differ),
+    and ``probes`` maps the query matrix to its probe keys on the driver.
+    Each task emits ≤ k rows per query from :func:`_gemm_topk`; a
+    ``row_number`` window picks the final k."""
+    rows = queries.collect()
+    if dim is None:
+        lens = sorted({len(r._qvec) for r in rows if r._qvec is not None})
+        if len(lens) > 1:
+            raise ValueError(f"query vectors have lengths {lens}; they need one length")
+        dim = lens[0] if lens else 0
+    rows = [r for r in rows if r._qvec is not None and len(r._qvec) == dim]
+    Q = np.array([r._qvec for r in rows], dtype=np.float64).reshape(len(rows), dim)
+    scored = corpus.mapInPandas(
+        _gemm_topk(k, [r.query_id for r in rows], Q, keys,
+                   None if probes is None else probes(Q)),
+        schema=f"query_id {queries.schema['query_id'].dataType.simpleString()}, "
+        f"vec_id {corpus.schema['vec_id'].dataType.simpleString()}, cos_sim double",
     )
     w = Window.partitionBy("query_id").orderBy(
         F.col("cos_sim").desc(), F.col("vec_id").asc()
@@ -92,15 +151,19 @@ def cosine_topk(
 ) -> DataFrame:
     """Exact top-k by cosine: (query_id, vec_id, cos_sim), k rows/query.
 
-    Queries broadcast (small side) against every corpus row, then the
-    per-query top-k of :func:`_top_k`."""
-    q = queries.select(
-        F.col(query_id_col).alias("query_id"), F.col(vec_col).alias("_qvec")
+    The query side is evaluated once on the driver (this call runs a job)
+    and every corpus row scores against all queries in :func:`_gemm_topk`;
+    :func:`_top_k` ranks. There is no ``dim`` argument: the query vectors
+    set it and must all have one length (ValueError otherwise). A NULL
+    query returns no rows; a NULL corpus vector, or one of another length,
+    never scores; an all-zero vector scores 0.0."""
+    return _top_k(
+        corpus.select(F.col(id_col).alias("vec_id"), F.col(vec_col).alias("_cvec")),
+        queries.select(
+            F.col(query_id_col).alias("query_id"), F.col(vec_col).alias("_qvec")
+        ),
+        k,
     )
-    cand = corpus.select(
-        F.col(id_col).alias("vec_id"), F.col(vec_col).alias("_cvec")
-    ).crossJoin(F.broadcast(q))
-    return _top_k(cand, k)
 
 
 def _gemm_pairs(threshold: float):
@@ -109,12 +172,17 @@ def _gemm_pairs(threshold: float):
     cos_sim) with id_a < id_b and cos_sim ≥ ``threshold``. A ``same`` row
     scores one block's upper triangle against itself, any other row every
     (a, b) cell, as one float64 GEMM of unit vectors (a zero vector scores
-    0.0). Helpers stay nested in here: cloudpickle ships a closure by
-    value but a module-level function by reference, which would make
-    every cold Python worker import this package."""
+    0.0); vectors of different lengths raise a ValueError naming them.
+    Helpers stay nested in here: cloudpickle ships a closure by value but
+    a module-level function by reference, which would make every cold
+    Python worker import this package."""
     thr = float(threshold)
 
-    def unit(vecs):
+    def unit(vecs, dim=None):
+        lens = sorted({len(v) for v in vecs} | ({dim} if dim is not None else set()))
+        if len(lens) > 1:
+            raise ValueError(f"vectors of lengths {lens} in one block pair; "
+                             "all-pairs cosine needs one length")
         M = np.stack([np.asarray(v, dtype=np.float64) for v in vecs])
         norms = np.linalg.norm(M, axis=1)
         norms[norms == 0] = 1.0
@@ -131,14 +199,11 @@ def _gemm_pairs(threshold: float):
                     ids_b = ids_a
                 else:
                     ids_b = np.asarray(row.ids_b)
-                    G = An @ unit(row.vecs_b).T
+                    G = An @ unit(row.vecs_b, An.shape[1]).T
                     ii, jj = np.unravel_index(np.arange(G.size), G.shape)
-                # threshold on the ROUND-6 value (emitted as-is): the
-                # membership decision is then insensitive to sub-5e-7
-                # accumulation-order differences vs any verifying engine
-                # (DuckDB sums in a different order; raw-value thresholds
-                # are 1-ulp-fragile at the boundary) — the SQL oracle
-                # applies round(...,6) >= threshold identically
+                # threshold the rounded value, as the SQL oracle does: a
+                # raw-value threshold is 1-ulp-fragile under another
+                # engine's summation order
                 cos = np.round(G[ii, jj], 6)
                 keep = cos >= thr
                 if not keep.any():
@@ -168,20 +233,19 @@ def cosine_pairs_exact(
     block into ONE row (groupBy + collect_list), explode block b against
     partner blocks b..n_blocks-1 (an equi-join on the partner id — no
     cartesian), then one numpy matmul per block pair inside mapInPandas
-    (:func:`_gemm_pairs`).
-    O(n²) work is inherent to exact all-pairs — the point is that every
-    task is a bounded (|block| × |block|) GEMM at BLAS speed instead of
-    interpreted per-pair folds, and no task or driver ever holds more than
-    two blocks. At 10^12 rows you size n_blocks so a block is ~tens of MB;
-    the shuffle moves each vector n_blocks/2 times (that IS the all-pairs
-    data movement, irreducible without approximation — use the LSH paths
-    when the threshold is selective enough for them to prune).
+    (:func:`_gemm_pairs`). Every task is a bounded (|block| × |block|)
+    GEMM and holds at most two blocks; size n_blocks so a block is ~tens
+    of MB. The shuffle moves each vector n_blocks/2 times (the all-pairs
+    data movement — use the LSH paths when the threshold prunes).
+
+    A NULL vector never pairs and never moves another row's id; an
+    all-zero vector scores 0.0. There is no ``dim`` argument: vectors of
+    different lengths fail the job with a ValueError naming the lengths.
     """
-    # vectors shuffle in their SOURCE element type (round 7): the kernel
-    # upcasts to float64 before any arithmetic, and float32→float64
-    # is exact, so results are bit-identical while a float32 corpus moves
-    # half the bytes through the n_blocks/2-fold all-pairs shuffle
-    base = df.select(
+    # vectors shuffle in their source element type (the kernel upcasts to
+    # float64 exactly), and a NULL vector is dropped before packing:
+    # collect_list would skip it but keep its id
+    base = df.filter(F.col(vec_col).isNotNull()).select(
         F.col(id_col).alias("vid"),
         F.col(vec_col).alias("vec"),
         F.pmod(F.xxhash64(F.col(id_col)), F.lit(n_blocks)).cast("int").alias("blk"),
@@ -193,21 +257,52 @@ def cosine_pairs_exact(
         "partner", F.explode(F.sequence(F.col("blk"), F.lit(n_blocks - 1)))
     )
     right = packed.select(
-        F.col("blk").alias("partner"),
-        F.col("ids").alias("ids_b"),
-        F.col("vecs").alias("vecs_b"),
+        F.col("blk").alias("partner"), F.col("ids").alias("ids_b"), F.col("vecs").alias("vecs_b")
     )
     joined = left.join(right, "partner").select(
-        F.col("ids").alias("ids_a"),
-        F.col("vecs").alias("vecs_a"),
-        "ids_b",
-        "vecs_b",
+        F.col("ids").alias("ids_a"), F.col("vecs").alias("vecs_a"), "ids_b", "vecs_b",
         (F.col("blk") == F.col("partner")).alias("same"),
     )
     return joined.mapInPandas(
-        _gemm_pairs(threshold),
-        schema=f"id_a {id_type}, id_b {id_type}, cos_sim double",
+        _gemm_pairs(threshold), schema=f"id_a {id_type}, id_b {id_type}, cos_sim double"
     )
+
+
+def _arrow_keys(keys, dim: int, return_type: str):
+    """An Arrow pandas UDF applying the numpy key function ``keys``
+    ((rows × dim) float64 → (rows × n)) to each batch's valid vectors. A
+    NULL vector, or one whose length is not ``dim``, gets a NULL result
+    instead of failing the batch."""
+
+    @F.pandas_udf(return_type)
+    def _keys(vecs: pd.Series) -> pd.Series:
+        vs = vecs.to_numpy()
+        ok = np.fromiter((v is not None and len(v) == dim for v in vs), bool, len(vs))
+        out = [None] * len(vs)
+        if ok.any():
+            X = np.stack(vs[ok]).astype(np.float64, copy=False)
+            for i, row in zip(np.flatnonzero(ok), keys(X)):
+                out[i] = row
+        return pd.Series(out, dtype=object)
+
+    return _keys
+
+
+def _hyperplane_keys(dim: int, n_planes: int, n_tables: int, seed: int):
+    """(rows × dim) → (rows × n_tables) sign-LSH bucket ids; see
+    :func:`hyperplane_buckets_arrow`."""
+    planes = np.concatenate([
+        np.random.default_rng(seed + 7919 * t).standard_normal((n_planes, dim))
+        for t in range(n_tables)
+    ])  # (T*P, dim)
+    weights = np.ascontiguousarray(planes.T)  # (dim, T*P)
+    bit_vals = (1 << np.arange(n_planes, dtype=np.int64))  # per-table bit weights
+
+    def buckets(X):
+        bits = ((X @ weights) >= 0).reshape(len(X), n_tables, n_planes)
+        return (bits * bit_vals).sum(axis=2)
+
+    return buckets
 
 
 def hyperplane_buckets_arrow(
@@ -215,7 +310,8 @@ def hyperplane_buckets_arrow(
 ) -> Column:
     """All tables' sign-LSH bucket ids in ONE Arrow-batched matmul:
     array<long> of length n_tables — the one bucket kernel of
-    :func:`lsh_bucketed_topk` and :func:`embedding_near_dup_pairs`.
+    :func:`lsh_bucketed_topk` (which runs it inside :func:`_gemm_topk`)
+    and :func:`embedding_near_dup_pairs`.
 
     Table t's ``n_planes`` hyperplanes are drawn from
     ``np.random.default_rng(seed + 7919*t)`` on the driver (table 0 uses
@@ -223,30 +319,12 @@ def hyperplane_buckets_arrow(
     workers. A vector's bucket in table t packs the signs of its dot
     products with that table's planes into an int: bit p is set when the
     dot with plane p is ≥ 0. Every (table, plane) dot product comes from
-    one (batch × dim) @ (dim × T·P) numpy matmul instead of T·P
-    interpreted higher-order folds per row — the expression path is not
-    codegen'd and measured ~10× slower at T·P ≳ 100. A dot within float
-    error of zero may take either sign (such a vector sits ON the
-    hyperplane; either bucket is equally valid for LSH recall)."""
-    planes = np.concatenate(
-        [
-            np.random.default_rng(seed + 7919 * t).standard_normal((n_planes, dim))
-            for t in range(n_tables)
-        ],
-        axis=0,
-    )  # (T*P, dim)
-    weights = np.ascontiguousarray(planes.T)  # (dim, T*P)
-    bit_vals = (1 << np.arange(n_planes, dtype=np.int64))  # per-table bit weights
-
-    @F.pandas_udf("array<long>")
-    def _buckets(vecs: pd.Series) -> pd.Series:
-        mat = np.stack(vecs.to_numpy())  # (batch, dim)
-        signs = (mat @ weights) >= 0  # (batch, T*P)
-        bits = signs.reshape(len(mat), n_tables, n_planes)
-        buckets = (bits * bit_vals).sum(axis=2)  # (batch, T)
-        return pd.Series(list(buckets))
-
-    return _buckets(vec_col)
+    one (batch × dim) @ (dim × T·P) numpy matmul. A dot within float error
+    of zero may take either sign (either bucket is equally valid for LSH
+    recall). A NULL vector, or one whose length is not ``dim``, gets a
+    NULL result instead of failing the batch: it is in no bucket."""
+    keys = _hyperplane_keys(dim, n_planes, n_tables, seed)
+    return _arrow_keys(keys, dim, "array<long>")(vec_col)
 
 
 def lsh_bucketed_topk(
@@ -265,61 +343,34 @@ def lsh_bucketed_topk(
     """Approximate top-k: score only corpus rows sharing one of the
     query's LSH buckets — multi-probe, optionally multi-table.
 
-    Join on bucket id instead of crossJoin — candidate set shrinks ~2^-p
-    per plane. ``n_probe_bits=1`` (standard multi-probe) also probes every
-    bucket one plane-flip away: a neighbor at per-plane agreement prob q
-    is found with P(≥n_planes−1 planes agree) instead of P(all agree) —
-    e.g. q=0.75, 8 planes: 0.10 → 0.37. ``n_tables=L`` repeats that over L
-    independent plane sets (one Arrow matmul computes all L buckets of a
-    vector, see :func:`hyperplane_buckets_arrow`): per-neighbor miss drops
-    to (1−p)^L. Probes expand ONLY the broadcast query side (L·(n_planes+1)
-    rows per query); the corpus is hashed once and its vectors are never
-    shuffled — candidates are (query_id, vec_id) pairs, distinct()ed so a
-    pair found in several tables pays the exact cosine once, and vectors
-    join back by id for the exact scoring of candidates only."""
+    The candidate set shrinks ~2^-p per plane. ``n_probe_bits=1`` (standard
+    multi-probe) also probes every bucket one plane-flip away: a neighbor
+    at per-plane agreement prob q is found with P(≥n_planes−1 planes agree)
+    instead of P(all agree) — e.g. q=0.75, 8 planes: 0.10 → 0.37.
+    ``n_tables=L`` repeats that over L independent plane sets: per-neighbor
+    miss drops to (1−p)^L.
+
+    The query side (vectors and L·(1 + n_planes·n_probe_bits) probe
+    buckets) is evaluated once on the driver. Each corpus row is bucketed
+    where it is read and scored in :func:`_gemm_topk` for the queries whose
+    probe set it hits in some table (once, however many tables hit); the
+    corpus is never joined or shuffled. A NULL or ragged vector (length ≠
+    ``dim``) is in no bucket and never scores; such a query returns no
+    rows; an all-zero vector scores 0.0."""
     if n_probe_bits not in (0, 1):
         raise ValueError("n_probe_bits supports 0 (single) or 1 (multi-probe)")
     if n_tables < 1:
         raise ValueError("n_tables must be >= 1")
-    cb = materialize(
-        corpus.select(
-            F.col(id_col).alias("vec_id"),
-            F.col(vec_col).alias("_cvec"),
-            hyperplane_buckets_arrow(
-                F.col(vec_col), dim, n_planes, n_tables, seed
-            ).alias("_bks"),
-        )
-    )
-    corp_buckets = cb.select(
-        "vec_id", F.posexplode("_bks").alias("_table", "_bucket")
-    )
-    q_aliased = queries.select(
-        F.col(query_id_col).alias("query_id"), F.col(vec_col).alias("_qvec")
-    )
-    qprobes = q_aliased.select(
-        "query_id",
-        F.posexplode(
-            hyperplane_buckets_arrow(F.col("_qvec"), dim, n_planes, n_tables, seed)
-        ).alias("_table", "_b0"),
-    )
-    probe_exprs = [F.col("_b0")]
-    if n_probe_bits == 1:
-        probe_exprs += [
-            F.col("_b0").bitwiseXOR(F.lit(1 << p)) for p in range(n_planes)
-        ]
-    qprobes = qprobes.select(
-        "query_id", "_table", F.explode(F.array(*probe_exprs)).alias("_bucket")
-    )
-    cand = (
-        corp_buckets.join(F.broadcast(qprobes), on=["_table", "_bucket"])
-        .select("query_id", "vec_id")
-        .distinct()
-    )
+
+    buckets = _hyperplane_keys(dim, n_planes, n_tables, seed)
+    # per table: the query's bucket and its one-bit flips
+    flips = np.array([0] + [1 << p for p in range(n_planes)] * n_probe_bits)
     return _top_k(
-        cand.join(cb.select("vec_id", "_cvec"), "vec_id").join(
-            F.broadcast(q_aliased), "query_id"
+        corpus.select(F.col(id_col).alias("vec_id"), F.col(vec_col).alias("_cvec")),
+        queries.select(
+            F.col(query_id_col).alias("query_id"), F.col(vec_col).alias("_qvec")
         ),
-        k,
+        k, dim, keys=buckets, probes=lambda Q: buckets(Q)[:, :, None] ^ flips,
     )
 
 
@@ -333,30 +384,20 @@ def train_ivf_centroids(
     seed: int = 42,
     sample_fraction: float | None = None,
 ) -> np.ndarray:
-    """Coarse quantizer for IVF: k-means on a driver-side sample.
+    """Coarse quantizer for IVF: k-means on a driver-side sample, in ONE
+    scan with no count() pre-pass. The centroids are a tiny (n_centroids
+    × dim) model shipped inside :func:`nearest_centroids_arrow`; only the
+    sample reaches the driver. NULL and ragged vectors (length ≠ ``dim``)
+    are left out of the sample.
 
-    At 10^9+ vectors you train on a bounded sample anyway — the centroids
-    are a tiny (n_centroids × dim) model shipped inside the one assignment
-    kernel (:func:`nearest_centroids_arrow`); only the sample ever reaches
-    the driver. NULL and ragged vectors (length ≠ ``dim``) are left out of
-    the sample.
-
-    ONE scan, no count() pre-pass (round-2 finding: sizing the sample
-    fraction from corpus.count() paid a full extra pass before training).
-    With ``sample_fraction`` set, the sample is fully LAYOUT-INDEPENDENT
-    (round-5 ADVICE closed round 6): membership is a hash shard on
-    ``xxhash64(seed, vec)`` (a pure function of the vector VALUES — a
-    seeded ``sample()`` reseeds per partition, so its set changes under
-    repartitioning) and the 4×sample_size cap keeps the rows with the
-    SMALLEST hash via TakeOrderedAndProject (per-partition top-N + driver
-    merge, no full sort shuffle — a bare ``limit()`` takes a scan-order
-    prefix once the corpus outgrows the cap). Ties between DISTINCT
-    vectors need a 64-bit hash collision (~2⁻⁶⁴); identical vectors tie
-    but contribute the same point either way. Without ``sample_fraction``
-    a plain limit() prefix is taken — limit early-terminates the scan,
-    adequate for k-means seeding unless the table is pathologically
-    ordered by the embedding itself or determinism across layouts matters
-    (pass sample_fraction in those cases)."""
+    With ``sample_fraction`` set the sample is LAYOUT-INDEPENDENT:
+    membership is a hash shard on ``xxhash64(seed, vec)`` (a pure function
+    of the vector values; a seeded ``sample()`` reseeds per partition) and
+    the 4×sample_size cap keeps the rows with the SMALLEST hash via
+    TakeOrderedAndProject (per-partition top-N + driver merge, no sort
+    shuffle). Without it a plain limit() prefix is taken: it stops the
+    scan early and suits k-means seeding unless determinism across layouts
+    matters."""
     sel = corpus.select(vec_col)
     if sample_fraction is not None:
         h = F.xxhash64(F.lit(int(seed)), F.col(vec_col))
@@ -377,13 +418,9 @@ def train_ivf_centroids(
         for v in sample
         if v is not None and len(v) == dim
     ])
-    # canonicalize the sample ORDER driver-side (lexicographic on vector
-    # values): limit()/toPandas() row order follows partition layout and
-    # scheduling, so without this the k-means seeding — and therefore the
-    # centroids and any recall gate downstream — could flap on a repartition
-    # even with identical sample CONTENTS. After the sort, centroids are a
-    # pure function of the sampled set. O(sample·log·dim) on ≤4·sample_size
-    # driver rows — negligible next to the k-means iterations themselves.
+    # canonical sample ORDER (lexicographic on values): collected row order
+    # follows partition layout, and k-means seeding depends on it, so the
+    # sort makes the centroids a pure function of the sampled set
     if len(x):
         x = x[np.lexsort(x.T[::-1])]
     if len(x) > sample_size:
@@ -403,13 +440,26 @@ def train_ivf_centroids(
     return cents
 
 
+def _centroid_ranks(centroids: np.ndarray):
+    """ranks(X, n): (rows × dim) → (rows × n) int32 nearest centroid ids,
+    nearest first; see :func:`nearest_centroids_arrow`."""
+    C = np.ascontiguousarray(np.asarray(centroids, dtype=np.float64))
+    c_sq = (C * C).sum(axis=1)
+
+    def ranks(X, n):
+        d = c_sq[None, :] - 2.0 * (X @ C.T)
+        return np.argsort(d, axis=1, kind="stable")[:, :n].astype(np.int32)
+
+    return ranks
+
+
 def nearest_centroids_arrow(
     vec_col: Column, centroids: np.ndarray, n: int = 1
 ) -> Column:
     """The ``n`` nearest centroid ids of each vector, nearest first, as an
     array<int> Column: the one IVF assignment kernel. :func:`ivf_topk` uses
-    it with ``n=1`` to place each corpus row in its cluster and with
-    ``n=n_probe`` for the query side's multi-probe list.
+    its ranking with ``n=1`` to place each corpus row in its cluster and
+    with ``n=n_probe`` for the query side's multi-probe list.
 
     Every (row, centroid) distance comes from one BLAS matmul per Arrow
     batch: argmin_c ||x−c||² = argmin_c (||c||² − 2·x·c), since ||x||² is
@@ -417,28 +467,11 @@ def nearest_centroids_arrow(
     lower centroid id; a vector equidistant to two centroids up to float
     error may rank either first.
 
-    NULL and ragged input: a NULL vector, or one whose length is not the
-    centroid dim, gets a NULL result instead of failing the batch. In
-    :func:`ivf_topk` such a corpus row has no cluster and never matches,
-    and such a query probes nothing and returns no rows."""
-    C = np.ascontiguousarray(np.asarray(centroids, dtype=np.float64))
-    c_sq = (C * C).sum(axis=1)
-    dim = C.shape[1]
-
-    @F.pandas_udf("array<int>")
-    def _nearest(vecs: pd.Series) -> pd.Series:
-        vs = vecs.to_numpy()
-        ok = np.fromiter((v is not None and len(v) == dim for v in vs), bool, len(vs))
-        out = [None] * len(vs)
-        if ok.any():
-            X = np.stack(vs[ok]).astype(np.float64, copy=False)
-            d = c_sq[None, :] - 2.0 * (X @ C.T)
-            ids = np.argsort(d, axis=1, kind="stable")[:, :n].astype(np.int32)
-            for i, row in zip(np.flatnonzero(ok), ids):
-                out[i] = row
-        return pd.Series(out, dtype=object)
-
-    return _nearest(vec_col)
+    A NULL vector, or one whose length is not the centroid dim, gets a
+    NULL result instead of failing the batch: it is in no cluster."""
+    ranks = _centroid_ranks(centroids)
+    dim = np.asarray(centroids).shape[1]
+    return _arrow_keys(lambda X: ranks(X, n), dim, "array<int>")(vec_col)
 
 
 def ivf_topk(
@@ -455,46 +488,32 @@ def ivf_topk(
     sample_fraction: float | None = None,
 ) -> DataFrame:
     """IVF approximate top-k: score only corpus rows in the query's
-    ``n_probe`` nearest coarse clusters. Complements the hyperplane-LSH
-    variant; both reduce the candidate set before the exact cosine scoring.
-    Probing expands ONLY the broadcast query side (n_probe rows per query);
-    each corpus row lives in exactly one cluster, so a (query, corpus) pair
-    matches at most once — no candidate dedup needed. Both sides are
-    assigned by the one kernel :func:`nearest_centroids_arrow` (corpus
-    n=1, queries n=n_probe), so both rank centroids by the same formula. A
-    NULL or ragged corpus vector (length ≠ ``dim``) is in no cluster and
-    never matches; such a query returns no rows.
+    ``n_probe`` nearest coarse clusters. Both sides are assigned by
+    :func:`nearest_centroids_arrow` (corpus n=1, queries n=n_probe). The
+    query side (vectors and probe lists) is evaluated once on the driver;
+    each corpus row is assigned where it is read and scored in
+    :func:`_gemm_topk` only for the queries that probe its cluster, so the
+    corpus is never joined or shuffled. A NULL or ragged vector (length ≠
+    ``dim``) is in no cluster and never scores; such a query returns no
+    rows; an all-zero vector scores 0.0.
 
-    ``sample_fraction`` flows to :func:`train_ivf_centroids`: set it when
-    the training sample SET must be partition-layout-independent at ANY
-    corpus size — membership and the cap are then both pure functions of
-    the vector values (hash shard + smallest-hash top-N; see
-    train_ivf_centroids), so the centroids, and any recall gate built on
-    them, cannot flap on a repartition. Use it for every oracle-gated or
-    reproducibility-sensitive run."""
+    ``sample_fraction`` flows to :func:`train_ivf_centroids`; set it for
+    every oracle-gated or reproducibility-sensitive run, so the centroids
+    cannot change on a repartition."""
     cents = train_ivf_centroids(
-        corpus,
-        dim,
-        n_centroids=n_centroids,
-        vec_col=vec_col,
-        seed=seed,
+        corpus, dim, n_centroids=n_centroids, vec_col=vec_col, seed=seed,
         sample_fraction=sample_fraction,
     )
-    cb = materialize(
-        corpus.select(
-            F.col(id_col).alias("vec_id"),
-            F.col(vec_col).alias("_cvec"),
-            nearest_centroids_arrow(F.col(vec_col), cents)[0].alias("_cluster"),
-        )
+    ranks = _centroid_ranks(cents)
+    return _top_k(
+        corpus.select(F.col(id_col).alias("vec_id"), F.col(vec_col).alias("_cvec")),
+        queries.select(
+            F.col(query_id_col).alias("query_id"), F.col(vec_col).alias("_qvec")
+        ),
+        # one "table": a row's cluster against the query's n_probe nearest
+        k, dim, keys=lambda X: ranks(X, 1),
+        probes=lambda Q: ranks(Q, n_probe)[:, None, :],
     )
-    qb = queries.select(
-        F.col(query_id_col).alias("query_id"),
-        F.col(vec_col).alias("_qvec"),
-        F.explode(
-            nearest_centroids_arrow(F.col(vec_col), cents, n_probe)
-        ).alias("_cluster"),
-    )
-    return _top_k(cb.join(F.broadcast(qb), on="_cluster"), k)
 
 
 def embedding_near_dup_pairs(
@@ -522,43 +541,31 @@ def embedding_near_dup_pairs(
       cos ≥ 0.95 (θ≤18°): k=8 → p≈0.43; L=8 → recall ≈ 0.99
       cos ≥ 0.5  (θ≤60°): k=6 → p≈0.088; L=24 → recall ≈ 0.89
       cos ≥ 0.4 (θ≤66.4°): k=8+probe → p≈0.14; L=24 → recall ≈ 0.975
-    A single table (round-1 default) has recall = p — 9% at cos 0.5, which
-    silently dropped most qualifying pairs.
+    A single table has recall = p — 9% at cos 0.5.
 
-    Physical plan (round 7): verification is BUCKET-LOCAL. Vectors are
-    grouped once per (table, bucket); each bucket is verified against
-    itself and (with probing) its one-bit-flip partner buckets by ONE
-    normalized float64 GEMM per bucket pair inside mapInPandas (the
-    :func:`cosine_pairs_exact` kernel, :func:`_gemm_pairs`) — and only
-    SURVIVING pairs (cos ≥ threshold) leave the task, deduplicated across
-    tables by a tiny groupBy. The previous plan materialized every colliding id pair before
-    verification (distinct over the candidate stream, then two joins
-    attaching vectors, then a per-pair Arrow cosine); at a non-selective
-    operating point the candidate stream is O(n²/buckets) rows and the
-    join-back shuffles candidates × vector payload — measured 114M
-    candidate pairs / ~120 GB of attached vectors at 20k docs, 157 s,
-    vs ~7 s bucket-local. Shuffle volume here is each vector × n_tables
-    (+ the ≤(k+1)-fold bucket-pair replication of packed buckets), and the
-    only per-pair rows that exist are true near-dups. Skew note: one
-    pathological bucket (a near-constant direction) packs into one task —
-    the cap is the same as the old plan's hot bucket, now without the
-    candidate-row blowup; identical-vector floods should be collapsed
+    Verification is BUCKET-LOCAL: vectors are grouped once per (table,
+    bucket); each bucket is verified against itself and (with probing) its
+    one-bit-flip partner buckets by ONE float64 GEMM per bucket pair
+    (:func:`_gemm_pairs`), and only pairs with cos ≥ threshold leave the
+    task, deduplicated across tables by a tiny groupBy. No candidate-pair
+    rows exist (building them measured 114M pairs / ~120 GB of
+    attached vectors at 20k docs, 157 s, vs ~7 s bucket-local). Shuffle
+    volume is each vector × n_tables (+ the ≤(k+1)-fold bucket-pair
+    replication of packed buckets). A NULL or ragged vector (length ≠
+    ``dim``) is in no bucket and never pairs; an all-zero vector scores
+    0.0. Skew note: one pathological bucket (a near-constant direction)
+    packs into one task; identical-vector floods should be collapsed
     upstream like the text miners do."""
     if n_probe_bits not in (0, 1):
         raise ValueError("n_probe_bits supports 0 (single) or 1 (multi-probe)")
     id_type = df.schema[id_col].dataType.simpleString()
-    # _vec keeps the SOURCE element type (round 7): the GEMM kernel
-    # upcasts to float64 (exact from float32), so a float32 corpus
-    # shuffles half the bytes through the bucket groupBy and the
-    # bucket-pair join with bit-identical cosines
+    # _vec keeps the source element type: the GEMM kernel upcasts to
+    # float64 exactly, so a float32 corpus shuffles half the bytes
     base = df.select(
         F.col(id_col).alias("_id"),
         F.col(vec_col).alias("_vec"),
-        # one Arrow matmul for all tables' buckets — NOT n_tables
-        # interpreted fold expressions (10× at n_tables·n_planes ≳ 100)
-        hyperplane_buckets_arrow(
-            F.col(vec_col), dim, n_planes, n_tables, seed
-        ).alias("_buckets"),
+        hyperplane_buckets_arrow(F.col(vec_col), dim, n_planes, n_tables, seed)
+        .alias("_buckets"),
     )
     # posexplode_outer plus an explicit filter, not posexplode: the inner
     # generator makes the optimizer infer `size(_buckets) > 0` below the
@@ -597,20 +604,11 @@ def embedding_near_dup_pairs(
         F.col("vecs").alias("vecs_b"),
     )
     joined = left.join(right, on=["tbl", "bk_b"]).select(
-        "ids_a",
-        "vecs_a",
-        "ids_b",
-        "vecs_b",
-        (F.col("bk_a") == F.col("bk_b")).alias("same"),
+        "ids_a", "vecs_a", "ids_b", "vecs_b", (F.col("bk_a") == F.col("bk_b")).alias("same")
     )
     survivors = joined.mapInPandas(
-        _gemm_pairs(threshold),
-        schema=f"id_a {id_type}, id_b {id_type}, cos_sim double",
+        _gemm_pairs(threshold), schema=f"id_a {id_type}, id_b {id_type}, cos_sim double"
     )
     # a pair surviving in several (table, bucket-pair) cells is emitted once
-    # per cell with the same cosine (identical float64 inputs); max() makes
-    # the kept value deterministic even if a BLAS blocking difference ever
-    # produced a last-ulp disagreement between cells
-    return survivors.groupBy("id_a", "id_b").agg(
-        F.max("cos_sim").alias("cos_sim")
-    )
+    # per cell; max() keeps one value even if BLAS blocking ever differed
+    return survivors.groupBy("id_a", "id_b").agg(F.max("cos_sim").alias("cos_sim"))

@@ -331,9 +331,10 @@ def _run_unpickled(fn, arg, cwd):
 
 
 def test_gemm_kernel_pickles_by_value(tmp_path):
-    """The all-pairs GEMM kernel must unpickle in a Python worker that
-    cannot import this package: a helper moved to module level would be
-    pickled by reference and make every cold worker import the package."""
+    """The all-pairs and top-k GEMM kernels must unpickle in a Python
+    worker that cannot import this package: a helper moved to module level
+    would be pickled by reference and make every cold worker import the
+    package."""
     # a zero vector (id 2) and a repeated id (3) in one block
     same = (
         [1, 2, 3, 3],
@@ -377,6 +378,28 @@ def test_gemm_kernel_pickles_by_value(tmp_path):
     assert [g[:2] for g in got] == [e[:2] for e in exp]
     assert [g[2] for g in got] == pytest.approx([e[2] for e in exp], abs=1e-6)
     assert len(exp) == 4  # (1,3) ×2, (1,9), (5,9); (3,3) and (5,5) never pair
+
+    # the top-k kernel, with a candidate mask, over two batches: a NULL, a
+    # ragged and a zero vector, and a tie at 1.0 broken to the lower id
+    vecs = [[1, 0], [0.6, 0.8], None, [1, 0, 0], [0, 0], [2, 0], [0, 1]]
+    batches = [
+        pd.DataFrame({"vec_id": ids, "_cvec": [vecs[i] for i in ids]})
+        for ids in ([0, 1, 2, 3], [4, 5, 6])
+    ]
+    Q = np.array([[1.0, 0.0], [0.0, 0.0]])
+
+    def keys(X):  # one table: key 1 when the first component is 0
+        return (X[:, :1] == 0).astype(np.int64)
+
+    probes = np.array([[[0, 1]], [[1, 1]]])  # query 11 hits key 1 only
+    frames, loaded = _run_unpickled(
+        similarity._gemm_topk(2, [10, 11], Q, keys, probes), iter(batches), tmp_path
+    )
+    assert loaded == []
+    got = [r for df in frames for r in df.itertuples(index=False, name=None)]
+    assert [(int(q), int(v), c) for q, v, c in got] == [
+        (10, 0, 1.0), (10, 5, 1.0), (11, 4, 0.0), (11, 6, 0.0)
+    ]
 
 
 def test_near_dup_multiprobe_recall_dominates(spark):
@@ -673,23 +696,68 @@ def test_text_kernels_pickle_by_value(spark, tmp_path, edge_texts, kernel):
         assert out.tolist() == local.tolist()
 
 
-def test_ivf_topk_null_and_ragged_vectors(spark, emb_df):
-    """A NULL and a short corpus vector get no cluster instead of failing
-    the job: they never match, and every valid query still gets k rows."""
-    _, vecs = emb_df
-    rows = [(i, list(map(float, v))) for i, v in enumerate(vecs)]
-    rows += [(50, None), (51, [1.0, 2.0])]
-    df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
-    queries = df.filter(F.col("vec_id").isin(0, 5, 50, 51)).select(
+# id 1 NULL, 4 repeats 2 (cos 1.0), 5 all-zero, 7 ragged, 8 opposite of 2
+BAD_VECS = {
+    1: None, 2: [0.6, 0.8, 0.0, 0.0], 3: [1.0, 1.0, 1.0, 0.0],
+    4: [0.6, 0.8, 0.0, 0.0], 5: [0.0, 0.0, 0.0, 0.0], 6: [0.0, 0.1, 1.0, 0.5],
+    7: [1.0, 0.0], 8: [-0.6, -0.8, 0.0, 0.0],
+}
+
+
+def _cos6(x, y):
+    x, y = np.asarray(x, float), np.asarray(y, float)
+    den = np.linalg.norm(x) * np.linalg.norm(y)
+    return round(float(x @ y / den), 6) if den else 0.0
+
+
+# every operator is set up so all valid vectors are candidates (1 plane +
+# 1-bit probe = every bucket; n_probe = n_centroids), so the exact oracle holds
+BAD_VEC_OPS = {
+    "cosine_topk": lambda df, q: similarity.cosine_topk(df, q, k=3),
+    "lsh_bucketed_topk": lambda df, q: similarity.lsh_bucketed_topk(
+        df, q, dim=4, k=3, n_planes=1, n_probe_bits=1, n_tables=2),
+    "ivf_topk": lambda df, q: similarity.ivf_topk(
+        df, q, dim=4, k=3, n_centroids=2, n_probe=2, sample_fraction=1.0),
+    "cosine_pairs_exact": lambda df, q: similarity.cosine_pairs_exact(
+        df, threshold=-1.0, n_blocks=1),
+    "embedding_near_dup_pairs": lambda df, q: similarity.embedding_near_dup_pairs(
+        df, dim=4, threshold=-1.0, n_planes=1, n_tables=2, n_probe_bits=1),
+}
+
+
+@pytest.mark.parametrize("op", list(BAD_VEC_OPS))
+def test_vector_operators_bad_vectors(spark, op):
+    """One rule for all five vector operators: a NULL vector, or one whose
+    length is not dim, never scores, never appears and never moves another
+    row's id; an all-zero vector scores 0.0; a NULL or ragged query returns
+    no rows. The two operators with no dim argument (cosine_topk takes it
+    from its queries, cosine_pairs_exact has none) raise a ValueError that
+    names a length mismatch instead of skipping."""
+    schema = "vec_id long, embedding array<double>"
+    df = spark.createDataFrame(list(BAD_VECS.items()), schema)
+    queries = df.filter(F.col("vec_id").isin(1, 2, 5, 7)).select(
         F.col("vec_id").alias("query_id"), "embedding"
     )
-    got = similarity.ivf_topk(df, queries, dim=8, k=3, n_centroids=4, n_probe=4).collect()
-    by_q = {}
-    for r in got:
-        by_q.setdefault(r["query_id"], []).append(r["vec_id"])
-    assert sorted(by_q) == [0, 5]
-    assert all(len(v) == 3 and not {50, 51} & set(v) for v in by_q.values())
-    assert by_q[0][0] == 0 and by_q[5][0] == 5
+    no_dim = op in ("cosine_topk", "cosine_pairs_exact")
+    got = sorted(tuple(r) for r in BAD_VEC_OPS[op](
+        df.filter(F.col("vec_id") != 7) if op == "cosine_pairs_exact" else df,
+        queries.filter(F.col("query_id") != 7) if no_dim else queries,
+    ).collect())
+    valid = {i: v for i, v in BAD_VECS.items() if v is not None and len(v) == 4}
+    if "pairs" in op:
+        want = sorted((a, b, _cos6(valid[a], valid[b]))
+                      for a, b in itertools.combinations(sorted(valid), 2))
+    else:  # queries 2 and 5 (zero: every cosine 0.0, so the lowest ids)
+        want = sorted(
+            (q, i, _cos6(valid[q], valid[i]))
+            for q in (2, 5)
+            for _, i in sorted((-_cos6(valid[q], valid[i]), i) for i in valid)[:3]
+        )
+    assert [g[:2] for g in got] == [w[:2] for w in want]
+    assert [g[2] for g in got] == pytest.approx([w[2] for w in want], abs=1e-6)
+    if no_dim:
+        with pytest.raises(Exception, match=r"lengths \[2, 4\]"):
+            BAD_VEC_OPS[op](df, queries).collect()
 
 
 def test_nearest_centroids_matches_numpy(spark):

@@ -274,3 +274,27 @@ def test_ks_between_empty_side_is_not_null(spark, frames):
     row = drift.ks_between(empty, dfb, "v", lo=0.0, hi=200.0, n_bins=16).first()
     assert row["ks"] is not None
     assert row["ks"] == pytest.approx(1.0, abs=1e-6)
+
+
+def test_spec_drift_empty_current_column_is_drifted(spark, tmp_path):
+    """A column whose current side is all NULL is drifted on every row,
+    though Laplace smoothing makes its categorical PSI against a uniform
+    baseline exactly 0.0."""
+    from pysemantic_spark.operators.drift import save_drift_baseline, spec_drift_report
+    from pysemantic_spark.spec import DatasetSpec
+
+    schema = "c string, v double"
+    base = spark.createDataFrame(
+        [("a", float(i % 10)) for i in range(50)] + [("b", float(i % 10)) for i in range(50)],
+        schema,
+    )
+    cur = spark.createDataFrame([(None, 1.0), (None, None)] * 10, schema)
+    bl = str(tmp_path / "bl.json")
+    save_drift_baseline(base, ["c", "v"], bl)
+    spec = DatasetSpec.from_dict("t", {"drift": {"columns": ["c", "v"], "baseline": bl}})
+    rep = spec_drift_report(cur, spec.drift).set_index(["column", "metric"])
+    assert rep.loc[("c", "psi"), "value"] == 0.0
+    assert bool(rep.loc[("c", "psi"), "drifted"])
+    # columns with current values drift by their formulas only
+    same = spec_drift_report(base, spec.drift).set_index(["column", "metric"])
+    assert not same["drifted"].any()

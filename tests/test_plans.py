@@ -76,6 +76,10 @@ def test_filter_pushdown_reaches_scan(spark, parts):
 
 
 def test_cosine_topk_broadcasts_queries(spark):
+    """The three top-k operators ship the (driver-evaluated) queries inside
+    one scoring kernel: no cartesian product, no join, and nothing below
+    the kernel shuffles the corpus. Only the final per-query rank above it
+    may exchange."""
     import pandas as pd
     import numpy as np
 
@@ -86,10 +90,16 @@ def test_cosine_topk_broadcasts_queries(spark):
     )
     corpus = spark.createDataFrame(pdf)
     queries = corpus.limit(2).select(F.col("vec_id").alias("query_id"), "embedding")
-    plan = _plan(similarity.cosine_topk(corpus, queries, k=3))
-    assert "BroadcastNestedLoopJoin" in plan or "BroadcastExchange" in plan
-    # corpus side must not shuffle for the join itself
-    assert "CartesianProduct" not in plan
+    for out in (
+        similarity.cosine_topk(corpus, queries, k=3),
+        similarity.lsh_bucketed_topk(
+            corpus, queries, dim=8, k=3, n_planes=4, n_tables=4, n_probe_bits=1),
+        similarity.ivf_topk(corpus, queries, dim=8, k=3, n_centroids=4, n_probe=2),
+    ):
+        plan = _plan(out)
+        assert "CartesianProduct" not in plan and "Join" not in plan, plan
+        below = plan[plan.index("MapInPandas"):]
+        assert "Exchange" not in below, plan
 
 
 def test_ngram_inverted_index_no_cartesian(spark):

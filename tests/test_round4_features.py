@@ -313,18 +313,20 @@ def test_similarity_operators_release_intermediates(spark):
     ).count()
     release_intermediates(blocking=True)
     assert _persistent_rdd_count(spark) <= base
-    # the multi-table top-k still persists its bucketed corpus via the
-    # tracked cache — the original intent of this test: similarity
-    # operators that persist do so through the RELEASABLE tracker
+    # the top-k operators score corpus batches in one kernel: they persist
+    # nothing, tracked or not
     qdf = df.filter(F.col("vec_id") < 2).select(
         F.col("vec_id").alias("query_id"), "embedding"
     )
-    similarity.lsh_bucketed_topk(
-        df, qdf, dim=8, k=3, n_planes=4, n_tables=4, n_probe_bits=1
-    ).count()
-    assert tracked_count() > 0
-    release_intermediates(blocking=True)
-    assert _persistent_rdd_count(spark) <= base
+    for out in (
+        similarity.cosine_topk(df, qdf, k=3),
+        similarity.lsh_bucketed_topk(
+            df, qdf, dim=8, k=3, n_planes=4, n_tables=4, n_probe_bits=1),
+        similarity.ivf_topk(df, qdf, dim=8, k=3, n_centroids=4),
+    ):
+        out.count()
+        assert tracked_count() == 0
+        assert _persistent_rdd_count(spark) <= base
 
 
 def test_queries_wrapper_releases_previous_intermediates(spark):

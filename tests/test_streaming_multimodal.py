@@ -165,3 +165,26 @@ def test_drift_rows_report_scores_several_windows_as_their_union():
     # one window alone still drifts
     one = vs.drift_rows_report(rows[rows.window_start == w1], baseline)
     assert one.set_index(["column", "metric"]).loc[("v", "psi"), "drifted"]
+
+
+def test_drift_rows_report_empty_column_is_drifted():
+    """A baseline column with no rows in the scored windows is drifted on
+    every row; its values stay as the formulas give them."""
+    baseline = {
+        "n_bins": 2,
+        "columns": {
+            "v": {"kind": "hist", "lo": 0.0, "hi": 2.0, "n_bins": 2,
+                  "counts": [0, 50, 50, 0]},
+            "cat": {"kind": "cat", "counts": {"a": 50, "b": 50}},
+        },
+    }
+    rows = pd.DataFrame(
+        [("2024-01-01 00:00", "v", "1", 50), ("2024-01-01 00:00", "v", "2", 50)],
+        columns=["window_start", "column", "bin", "cnt"],
+    )
+    got = vs.drift_rows_report(rows, baseline).set_index(["column", "metric"])
+    assert got.loc[("cat", "psi"), "value"] == 0.0
+    assert bool(got.loc[("cat", "psi"), "drifted"])
+    assert not got.loc["v", "drifted"].any()
+    empty = vs.drift_rows_report(rows.iloc[:0], baseline)
+    assert empty["drifted"].all()
