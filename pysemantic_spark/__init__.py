@@ -9,14 +9,16 @@ at 10^12-turn scale:
   referential integrity, categorical levels) compile to **vectorized
   DataFrame constraint predicates** — one fused projection pass, all JVM-side
   whole-stage-codegen, no per-row Python.
-- Per-column stats via one wide aggregation (count / null-rate / min / max /
-  approx_count_distinct).
+- One per-bucket summary aggregation (row and violating-row counts,
+  per-check counts, per-column nulls / min / max / theta distinct sketch);
+  table-level stats are its merge, so chunked and resumed runs report the
+  same numbers as one run.
 - Uniqueness on (conv_id, turn_idx) via sort-merge dedup counts; referential
   checks via broadcast anti-joins; KS/PSI drift via Arrow `applyInPandas`
   sketches.
 - Per-partition pass/fail rows + violation-row DataFrames written back to the
   table store; resumable from a checkpoint manifest with per-partition
-  lineage + metrics.
+  lineage, metrics and summary rows (``tableio.table_report`` merges them).
 
 Reference semantics: pysemantic/validator.py (SchemaValidator /
 SeriesValidator / DataFrameValidator), pysemantic/project.py (registry +

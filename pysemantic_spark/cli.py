@@ -179,7 +179,7 @@ def _bucketize(args) -> int:
 
 def _validate(args) -> int:
     from pysemantic_spark.session import get_spark
-    from pysemantic_spark.sources.tableio import ParquetManifestIO, run_resumable
+    from pysemantic_spark.sources.tableio import ParquetManifestIO, run_resumable, table_report
     from pysemantic_spark.spec import load_spec_file
 
     spark = get_spark(app_name="pysemantic_spark:validate")
@@ -210,16 +210,16 @@ def _validate(args) -> int:
             e.status = "pending"
         io.save_manifest(m)
     out = run_resumable(spark, io, spec, dims=dims, chunk_size=args.chunk_size)
-    m = io.load_manifest()
-    summary = {
+    report = {
+        k: v.to_dict(orient="records") if hasattr(v, "to_dict") else v
+        for k, v in table_report(io).items()
+    }
+    print(json.dumps({
         "processed_buckets": len(out["processed"]),
         "skipped_buckets": len(out["skipped"]),
-        "quarantined_buckets": len(out.get("quarantined", [])),
-        "n_rows": sum(e.n_rows for e in m.entries.values()),
-        "n_violating_rows": sum(e.n_violating_rows for e in m.entries.values()),
-        "all_passed": all(e.passed for e in m.entries.values() if e.status == "done"),
-    }
-    print(json.dumps(summary))
+        "quarantined_buckets": len(out["quarantined"]),
+        **report,
+    }))
     return 0
 
 

@@ -10,27 +10,39 @@ Execution shape (SURVEY.md §3.4 — designed for 10^12 rows, tested small):
              clean        bitmap-empty rows; keep-first dedup runs ONLY on
                           rows whose key is actually duplicated (semi-join
                           vs the dup-key set) — unique keys never shuffle
-             stats        wide agg / observe()d on the main pass
+             summary      ONE groupBy(bucket): per bucket the row and
+                          violating-row counts, per-check counts, and per
+                          column nulls, typed min/max and a theta sketch
+             report       per-bucket pass/fail and the table-level stats /
+                          check counts, all merged from the summary rows
              dupes        sort-merge dedup counts on the composite key,
                           computed on a two-column pruned scan
-             report       per-bucket pass/fail, derived from tiny frames
 
 Everything row-wise is a single whole-stage-codegen projection: the table is
 scanned ONCE per full-width pass, not once per check. Referential checks ride
 the same pass as broadcast hash joins (no shuffle of the fact side).
 
+The per-bucket summary (:func:`_bucket_summary`) is the one definition of
+every count the runner reports. A row with any violation counts once in
+``n_violating_rows``, and byte-identical rows count separately, as in
+``n_rows``. Table-level numbers come from merging summary rows
+(:func:`_report`): sums, min of mins, max of maxes, and the estimate of
+the union of the per-bucket theta sketches (mergeable sketches, as in
+"Approximate Distinct Counts for Billions of Datasets", SIGMOD 2019).
+``validate()`` merges them lazily, ``execute()`` in the same job as the
+summary, and ``tableio.table_report`` from the rows a resumable run stored
+per bucket, so all three report the same numbers.
+
 `execute()` is the production orchestration: it plans only the flagged
-frame and runs every job in one concurrent wave. The jobs that read only
-the input start first on helper threads: the per-bucket row counts and the
-duplicate-key groups (one per declared key, grouped by the key alone;
-written to a sink, never collected, their count observed on the write),
-both skinny pruned-scan aggregations, and the drift scan. Alongside them
-the main thread runs ONE full-width action (writing violations, with
-stats/check-counts attached via `observe` so they cost nothing extra). Only
-the per-bucket violating-row count waits, because it reads that action's
-sink. At 100 TB that is the minimum I/O shape: full data crosses the
-scanner once; shuffles touch only (conv_id, turn_idx) pairs and bucket
-ids, and nothing unbounded lands on the driver.
+frame and runs every job in one concurrent wave, with no job depending on
+another. Helper threads run the summary (one collect: per-bucket rows and
+their table-level merge), the duplicate-key groups (one per declared key,
+grouped by the key alone; written to a sink, never collected, their count
+observed on the write) and the drift scan. Alongside them the main thread
+writes the violations row stream. At 100 TB that is the minimum I/O shape:
+full data crosses the scanner for the violations and the summary;
+shuffles touch only ≤ n_buckets partial summaries per task and (conv_id,
+turn_idx) pairs, and nothing unbounded lands on the driver.
 
 Semantics vs the reference (pysemantic/validator.py ::
 DataFrameValidator.clean → SeriesValidator.clean loop): the reference drops
@@ -54,6 +66,19 @@ from pysemantic_spark.spec import DatasetSpec
 
 VIOLATIONS_COL = "_violations"
 BUCKET_COL = "_bucket"
+# lgNomEntries of every per-bucket theta sketch: relative error
+# ~1/sqrt(2^9) = 4.4%, no worse than approx_count_distinct's default rsd of
+# 5%. Theta, not HLL: a union of theta sketches keeps the k smallest hashes
+# whatever the merge order, while an HLL union's estimate depends on the
+# order the sketches arrive in (its HIP accumulator), so a resumed table
+# would not report what one execute() reports.
+_SKETCH_LG_K = 9
+# to_json/from_json options for stored summary rows: microsecond
+# timestamps, so a stored min/max reads back exactly
+_JSON_OPTS = {
+    "timestampFormat": "yyyy-MM-dd'T'HH:mm:ss.SSSSSSXXX",
+    "timestampNTZFormat": "yyyy-MM-dd'T'HH:mm:ss.SSSSSS",
+}
 
 
 @dataclass
@@ -68,12 +93,13 @@ class ValidationResult:
     flagged: DataFrame          # input + _violations array + _bucket
     violations: DataFrame       # key cols + check_name  (one row per failure)
     clean: DataFrame            # surviving rows, original schema
-    # per-column count/nulls/min/max/approx_distinct. NOTE: collecting
-    # `stats` separately re-runs the fused pass (lazy plan, PLANS.md §7);
-    # the production path is execute(), where stats ride the violations
-    # write via observe() for free.
+    # per-column n_rows/n_nulls/null_rate/min/max/approx_distinct, merged
+    # from the per-bucket summary (0, not NULL, on an empty input). NOTE:
+    # stats, check_counts and partition_report each re-run the fused pass
+    # when collected (lazy plans, PLANS.md §7); execute() computes the
+    # summary once for all three.
     stats: DataFrame
-    check_counts: DataFrame     # check_name, n_violations
+    check_counts: DataFrame     # check_name, n_violations (merged summary)
     partition_report: DataFrame # bucket, n_rows, n_violating_rows, passed
     dupes: DataFrame | None     # composite-key duplicate groups (or None)
     check_names: list[str] = field(default_factory=list)
@@ -88,10 +114,6 @@ def _bucket_expr_default(key_col: str | None, n_buckets: int) -> Column:
     return F.pmod(F.xxhash64(F.col(key_col)), F.lit(n_buckets)).cast("int")
 
 
-def _is_string_type(dt: T.DataType) -> bool:
-    return isinstance(dt, T.StringType)
-
-
 def _contains_map(dt: T.DataType) -> bool:
     if isinstance(dt, T.MapType):
         return True
@@ -102,39 +124,129 @@ def _contains_map(dt: T.DataType) -> bool:
     return False
 
 
-def _summary_exprs(df: DataFrame, plan: CheckPlan) -> list[Column]:
-    """Wide per-column stats plus per-check violation counts over the
-    flagged frame, in one partial+final agg: validate()'s lazy ``stats`` /
-    ``check_counts`` aggregate them, execute() observes them on pass 1.
+def _summary_schema(schema: T.StructType, plan: CheckPlan) -> T.StructType:
+    """Layout of the per-bucket summary of an input with ``schema``.
 
-    Scale choices: min/max only for orderable non-string types (min/max over
-    long text bodies is meaningless and drags the whole agg); distinct
-    estimation runs HLL over xxhash64(col) for strings so the sketch hashes
-    8 bytes/row instead of the full body. Map-bearing columns get null-count
-    only (maps are neither orderable nor hashable in Spark)."""
-    exprs: list[Column] = [F.count(F.lit(1)).alias("n_rows")]
-    for f_ in df.schema.fields:
+    One row per bucket: ``bucket``, ``n_rows``, ``n_violating_rows``, one
+    ``__chk__<check>`` count per counted check, and per column
+    ``<col>__nulls``, the typed ``<col>__min``/``__max`` and
+    ``<col>__sketch``, a theta sketch of xxhash64 over the non-NULL values.
+    Scale choices: min/max only for orderable non-string types (min/max
+    over long text bodies is meaningless and drags the agg); the sketch
+    hashes 8 bytes per row instead of the full body. Map-bearing columns get the null count
+    only (maps are neither orderable nor hashable in Spark). The field
+    names carry the kind, which is all :func:`_summary_agg` and
+    :func:`_report` dispatch on."""
+    long = T.LongType()
+    fields = [T.StructField("bucket", T.IntegerType())]
+    fields += [T.StructField(n, long) for n in ("n_rows", "n_violating_rows")]
+    fields += [T.StructField(f"__chk__{n}", long) for n in _counted_checks(plan)]
+    for f_ in schema.fields:
         c = f_.name
-        exprs.append(F.sum(F.col(c).isNull().cast("long")).alias(f"{c}__nulls"))
+        fields.append(T.StructField(f"{c}__nulls", long))
         if _contains_map(f_.dataType):
-            exprs.append(F.lit(None).cast("string").alias(f"{c}__min"))
-            exprs.append(F.lit(None).cast("string").alias(f"{c}__max"))
-            exprs.append(F.lit(None).cast("long").alias(f"{c}__approx_distinct"))
-        elif _is_string_type(f_.dataType):
-            exprs.append(F.lit(None).cast("string").alias(f"{c}__min"))
-            exprs.append(F.lit(None).cast("string").alias(f"{c}__max"))
-            exprs.append(
-                F.approx_count_distinct(F.xxhash64(c)).alias(f"{c}__approx_distinct")
-            )
+            continue
+        if not isinstance(f_.dataType, T.StringType):
+            fields += [T.StructField(f"{c}__{k}", f_.dataType) for k in ("min", "max")]
+        fields.append(T.StructField(f"{c}__sketch", T.BinaryType()))
+    return T.StructType(fields)
+
+
+# The summary and its merge are SQL text, one F.expr per expression: built
+# as Column trees they cost ~1,500 Py4J round trips per execute() call.
+
+
+def _q(name: str) -> str:
+    """``name`` as a SQL identifier."""
+    return "`" + name.replace("`", "``") + "`"
+
+
+def _lit(text: str) -> str:
+    """``text`` as a SQL string literal."""
+    return "'" + text.replace("\\", "\\\\").replace("'", "\\'") + "'"
+
+
+def _summary_agg(name: str) -> str:
+    """The aggregate over flagged rows that fills summary field ``name``."""
+    if name == "n_rows":
+        return "count(1)"
+    if name == "n_violating_rows":
+        return f"count_if(size({VIOLATIONS_COL}) > 0)"
+    if name.startswith("__chk__"):
+        return f"count_if(array_contains({VIOLATIONS_COL}, {_lit(name[len('__chk__'):])}))"
+    c, kind = name.rsplit("__", 1)
+    if kind == "nulls":
+        return f"count_if({_q(c)} IS NULL)"
+    if kind in ("min", "max"):
+        return f"{kind}({_q(c)})"
+    # xxhash64(NULL) is 42, not NULL: hash the non-NULL values only
+    return (
+        f"theta_sketch_agg(CASE WHEN {_q(c)} IS NOT NULL THEN xxhash64({_q(c)}) END,"
+        f" {_SKETCH_LG_K})"
+    )
+
+
+def _bucket_summary(flagged: DataFrame, schema: T.StructType) -> DataFrame:
+    """The per-bucket summary (layout: :func:`_summary_schema`): ONE
+    groupBy over the flagged frame, partial+final, its only input-sized
+    exchange keyed by the bucket."""
+    return flagged.groupBy(F.col(BUCKET_COL).alias("bucket")).agg(
+        *[F.expr(f"{_summary_agg(n)} AS {_q(n)}") for n in schema.fieldNames()[1:]]
+    )
+
+
+def _report(summary: DataFrame, layout: T.StructType, *extra: Column) -> DataFrame:
+    """The merge of any set of rows of the summary ``layout``, as ONE row:
+    the ``extra`` aggregates; every summary field (bar the bucket) merged
+    under its own name — the sum of the counts, the min of the mins and the
+    max of the maxes (as strings), the estimate of the union of the theta
+    sketches; and ``stats`` (per input column: n_rows, n_nulls, null_rate,
+    min, max, approx_distinct) and ``check_counts`` (check_name,
+    n_violations) as arrays of structs. Counts are 0, not NULL, over no
+    rows, and min/max NULL."""
+    names = layout.fieldNames()
+    merges = []
+    for n in names[1:]:
+        kind = n.rsplit("__", 1)[-1]
+        if n.startswith("__chk__") or kind not in ("min", "max", "sketch"):
+            agg = f"coalesce(sum({_q(n)}), 0)"
+        elif kind in ("min", "max"):
+            agg = f"CAST({kind}({_q(n)}) AS STRING)"
         else:
-            exprs.append(F.min(c).cast("string").alias(f"{c}__min"))
-            exprs.append(F.max(c).cast("string").alias(f"{c}__max"))
-            exprs.append(F.approx_count_distinct(c).alias(f"{c}__approx_distinct"))
-    exprs += [
-        F.sum(F.array_contains(VIOLATIONS_COL, n).cast("long")).alias(f"__chk__{n}")
-        for n in _counted_checks(plan)
-    ]
-    return exprs
+            agg = f"theta_sketch_estimate(theta_union_agg({_q(n)}, {_SKETCH_LG_K}))"
+        merges.append(F.expr(f"{agg} AS {_q(n)}"))
+
+    def field(name: str, dtype: str) -> str:
+        return _q(name) if name in names else f"CAST(NULL AS {dtype})"
+
+    stats = ", ".join(
+        f"named_struct('column', {_lit(c)}, 'n_rows', n_rows, 'n_nulls', {_q(n)},"
+        f" 'null_rate', CASE WHEN n_rows > 0 THEN {_q(n)} / n_rows ELSE 0D END,"
+        f" 'min', {field(c + '__min', 'STRING')}, 'max', {field(c + '__max', 'STRING')},"
+        f" 'approx_distinct', {field(c + '__sketch', 'BIGINT')})"
+        for n in names
+        if n.endswith("__nulls") and not n.startswith("__chk__")
+        for c in [n[: -len("__nulls")]]
+    )
+    checks = ", ".join(
+        f"named_struct('check_name', {_lit(n[len('__chk__'):])}, 'n_violations', {_q(n)})"
+        for n in names
+        if n.startswith("__chk__")
+    )
+    return summary.agg(*extra, *merges).selectExpr(
+        "*",
+        f"array({stats}) AS stats",
+        f"CAST(array({checks}) AS array<struct<check_name:string,n_violations:bigint>>)"
+        " AS check_counts",
+    )
+
+
+def _report_frames(row) -> tuple:
+    """``stats`` and ``check_counts`` of a collected :func:`_report` row,
+    as pandas."""
+    import pandas as pd
+
+    return tuple(pd.DataFrame([r.asDict() for r in row[k]]) for k in ("stats", "check_counts"))
 
 
 def _counted_checks(plan: CheckPlan) -> list[str]:
@@ -267,27 +379,21 @@ def validate(
     # SeriesValidator.postprocessors on cleaned series, then df-level) -----
     clean = _apply_postprocessors(clean, plan.spec)
 
-    # --- wide stats agg: one partial+final pass ----------------------------
-    wide = flagged.agg(*_summary_exprs(df, plan))
-    stats = _unpivot_stats(wide, input_cols)
-    check_counts = _unpivot_checks(wide, plan)
-
-    # --- per-bucket pass/fail ----------------------------------------------
-    partition_report = (
-        flagged.groupBy(F.col(BUCKET_COL).alias("bucket"))
-        .agg(
-            F.count(F.lit(1)).alias("n_rows"),
-            F.sum((F.size(VIOLATIONS_COL) > 0).cast("long")).alias("n_violating_rows"),
-        )
-        .withColumn("passed", F.col("n_violating_rows") == 0)
+    # --- per-bucket summary; stats and check counts are its merge ---------
+    layout = _summary_schema(df.schema, plan)
+    summary = _bucket_summary(flagged, layout)
+    report = _report(summary, layout)
+    partition_report = summary.select(
+        "bucket", "n_rows", "n_violating_rows",
+        (F.col("n_violating_rows") == 0).alias("passed"),
     )
 
     return ValidationResult(
         flagged=flagged,
         violations=violations,
         clean=clean,
-        stats=stats,
-        check_counts=check_counts,
+        stats=report.select(F.explode("stats").alias("s")).select("s.*"),
+        check_counts=report.select(F.explode("check_counts").alias("s")).select("s.*"),
         partition_report=partition_report,
         dupes=dupes,
         check_names=plan.check_names,
@@ -315,27 +421,6 @@ def _dup_groups(
     return dupes, groups
 
 
-def _violating_rows_per_bucket(viol: DataFrame, key_cols: list[str]) -> DataFrame:
-    """Per-bucket count of DISTINCT violating rows from the violations
-    stream (one stream row per (row, failed check): a row violating 3
-    checks is still ONE violating row).
-
-    countDistinct(struct(...)) — NOT .distinct() then count — so the
-    whole computation is aggregate-shaped: partial HashAggregates map-side
-    combine before both exchanges, and every shuffle is keyed BY BUCKET
-    (plus the dedup tuple), never a bucket-less global Distinct over the
-    full violation output — at a pathological 100% violation rate that
-    distinct re-shuffled the entire dataset after the sink write. The
-    struct wrapper keeps rows with NULL key columns countable
-    (count(DISTINCT a, b) drops any-null argument tuples; a never-null
-    struct does not), matching the old distinct() set semantics exactly."""
-    return viol.groupBy(F.col(BUCKET_COL).alias("bucket")).agg(
-        F.countDistinct(F.struct(*key_cols, F.col("_row_hash"))).alias(
-            "n_violating_rows"
-        )
-    )
-
-
 def execute(
     spark: SparkSession,
     df: DataFrame,
@@ -347,12 +432,15 @@ def execute(
     dupes_sink: str | None = None,
     sink_format: str = "parquet",
 ) -> dict[str, Any]:
-    """Production run: one concurrent wave of jobs with one dependency.
+    """Production run: one concurrent wave of independent jobs.
 
     Plans only the flagged frame; validate()'s other artifacts are not built.
-    Before pass 1 is planned, the jobs that read only the input start on
-    helper threads:
-      - bucket totals: one pruned scan of the ``bucket_by`` column;
+    Before pass 1 runs, helper threads start:
+      - the per-bucket summary (:func:`_bucket_summary`), collected as ONE
+        row together with its table-level merge (:func:`_report` over
+        the ≤ n_buckets summary rows): the partition report, per-column
+        stats and per-check counts. It is a second full-width scan, and
+        the call's tail waits for it;
       - for EVERY declared unique key, the duplicate-key groups (see
         :func:`_dup_groups`), written to ``dupes_sink`` (defaults to
         ``<violations_sink>_dupes``), never collected: their count is
@@ -361,13 +449,9 @@ def execute(
       - drift, when the spec has a ``drift:`` block: one fused scan of the
         drift columns against the baseline, which is loaded and checked
         before any job starts, so a bad block fails with no sink written.
-    Pass 1 (main thread, full width): write/materialize the violations row
-      stream, with per-column stats and per-check counts riding the same
-      action via ``observe`` — zero extra scans for stats.
-    The one dependent job then runs: the per-bucket violating-row counts,
-      read from pass 1's sink. ``on_drift: fail`` raises only after every
-      job has finished. Sinks are read back with the schema just written,
-      so a read-back runs no job.
+    Pass 1 (main thread, full width) writes the violations row stream to
+      ``violations_sink``; without a sink nothing reads it, so it is skipped.
+    ``on_drift: fail`` raises only after every job has finished.
 
     Helper threads inherit the caller's local properties (job group,
     description, scheduler pool) and session tags, so ``setJobGroup`` /
@@ -378,17 +462,19 @@ def execute(
     dupes=lazy DataFrame handle or None, n_dup_keys=int, dupes_path=...,
     n_rows=int, violations_path=..., drift=pandas or None, timings=dict).
     Tiny frames come back as pandas; anything that can grow with the data
-    (violations, dupes) stays a path + lazy handle. ``timings`` holds
-    driver wall-clock seconds: ``compile_and_plan`` (compile, baseline
-    load, helper submission, pass-1 planning), ``pass1_violations_write``
-    (pass 1's action, sharing the cores with the helpers) and
-    ``pass2_overlapped`` (the tail after pass 1: the violating-row count
-    plus waiting for the helpers).
+    (violations, dupes) stays a path + lazy handle. ``partition_report``
+    holds bucket, n_rows, n_violating_rows, passed and ``summary``: the
+    bucket's whole summary row as JSON (``_JSON_OPTS``), which
+    ``run_resumable`` keeps per bucket. ``timings`` holds driver wall-clock
+    seconds: ``compile_and_plan`` (compile, baseline load, building the
+    summary, helper submission, pass-1 planning), ``pass1_violations_write`` (pass 1's
+    write, sharing the cores with the helpers) and ``pass2_overlapped``
+    (the tail after pass 1: waiting for the summary, the dup-key groups
+    and drift).
     """
     import time as _time
     from concurrent.futures import ThreadPoolExecutor
 
-    import pandas as pd
     from pyspark.util import inheritable_thread_target
 
     _t0 = _time.time()
@@ -421,20 +507,18 @@ def execute(
         df = df.dropDuplicates()
     if plan.drop_na:
         df = df.na.drop("any")
-    bucket_expr = _bucket_expr_default(bucket_by, n_buckets)
+    flagged = _flag(df, plan, dims or {}, _bucket_expr_default(bucket_by, n_buckets))
+    layout = _summary_schema(df.schema, plan)
 
-    def _sink(frame: DataFrame, path: str) -> DataFrame:
-        frame.write.format(sink_format).mode("overwrite").save(path)
-        # read back with the schema just written: inference would cost a job
-        return spark.read.format(sink_format).schema(frame.schema).load(path)
-
-    def _totals_job() -> pd.DataFrame:
-        return (
-            df.select(bucket_expr.alias("bucket"))
-            .groupBy("bucket")
-            .agg(F.count(F.lit(1)).alias("n_rows"))
-            .toPandas()
-        )
+    # one row: the per-bucket rows as a sorted list, and their merge. Built
+    # here, so the helper thread only runs it.
+    opts = ", ".join(f"{_lit(k)}, {_lit(v)}" for k, v in _JSON_OPTS.items())
+    buckets = F.expr(
+        "array_sort(collect_list(named_struct('bucket', bucket, 'n_rows', n_rows,"
+        " 'n_violating_rows', n_violating_rows, 'passed', n_violating_rows = 0,"
+        f" 'summary', to_json(struct(*), map({opts}))))) AS _buckets"
+    )
+    summary = _report(_bucket_summary(flagged, layout), layout, buckets)
 
     dupes, _ = _dup_groups(df, plan)
     if dupes is not None and dupes_sink is None and violations_sink is not None:
@@ -444,19 +528,20 @@ def execute(
     def _dupes_job() -> tuple[DataFrame, int]:
         if dupes_sink:
             dup_obs = Observation("dup_keys")  # the count rides the write
-            handle = _sink(
-                dupes.observe(dup_obs, F.count(F.lit(1)).alias("n")), dupes_sink
-            )
+            observed = dupes.observe(dup_obs, F.count(F.lit(1)).alias("n"))
+            observed.write.format(sink_format).mode("overwrite").save(dupes_sink)
+            # read back with the schema just written: inference would cost a job
+            handle = spark.read.format(sink_format).schema(dupes.schema).load(dupes_sink)
             return handle, int(dup_obs.get["n"])
         return dupes, dupes.persist().count()
 
-    def _drift_job() -> pd.DataFrame:
+    def _drift_job():
         from pysemantic_spark.operators.drift import spec_drift_report
 
         return spec_drift_report(df, plan.drift, baseline)
 
     n_dup_keys = 0
-    viol = drift_pdf = None
+    drift_pdf = None
     try:
         with ThreadPoolExecutor(max_workers=3) as pool:
 
@@ -466,45 +551,20 @@ def execute(
                 # every SQL job sets its execution id in them)
                 return pool.submit(inheritable_thread_target(spark)(job))
 
-            totals_fut = _submit(_totals_job)
+            summary_fut = _submit(summary.first)
             dupes_fut = None if dupes is None else _submit(_dupes_job)
             drift_fut = None if plan.drift is None else _submit(_drift_job)
 
-            # ---- pass 1: violations + observe(stats, check counts) -------
-            obs = Observation("validation_stats")
-            observed = _flag(df, plan, dims or {}, bucket_expr).observe(
-                obs, *_summary_exprs(df, plan)
-            )
+            # ---- pass 1: the violations row stream -----------------------
             key_cols = plan.unique_keys[0] if plan.unique_keys else df.columns[:1]
-            # deterministic per-row discriminator so two different rows
-            # sharing the unique key (the very thing the engine detects)
-            # each count as a violating row; byte-identical full rows still
-            # collapse — those are exactly what drop_duplicates removes when
-            # declared
-            from pysemantic_spark.operators.skew import hashable_cols
-
-            row_hash = F.xxhash64(*[F.col(c) for c in hashable_cols(df)]).alias(
-                "_row_hash"
-            )
-            viol = observed.filter(F.size(VIOLATIONS_COL) > 0).select(
-                *key_cols,
-                F.explode(VIOLATIONS_COL).alias("check_name"),
-                BUCKET_COL,
-                row_hash,
+            viol = flagged.filter(F.size(VIOLATIONS_COL) > 0).select(
+                *key_cols, F.explode(VIOLATIONS_COL).alias("check_name"), BUCKET_COL
             )
             _mark("compile_and_plan")
             if violations_sink:
-                viol_small = _sink(viol, violations_sink)
-            else:
-                viol_small = viol.persist()
-                viol_small.count()  # force the pass
-            metrics = obs.get
+                viol.write.format(sink_format).mode("overwrite").save(violations_sink)
             _mark("pass1_violations_write")
-            # the one job that depends on pass 1: it reads pass 1's sink
-            viol_rows_per_bucket = _violating_rows_per_bucket(
-                viol_small, key_cols
-            ).toPandas()
-            bucket_totals = totals_fut.result()
+            merged = summary_fut.result()
             if dupes_fut is not None:
                 dupes, n_dup_keys = dupes_fut.result()
             if drift_fut is not None:
@@ -528,42 +588,19 @@ def execute(
         if dupes is not None and not dupes_sink:
             dupes.unpersist(blocking=True)
         raise
-    finally:
-        if viol is not None and not violations_sink:
-            viol.unpersist(blocking=True)
 
-    report = bucket_totals.merge(viol_rows_per_bucket, on="bucket", how="left")
-    report["n_violating_rows"] = (
-        report["n_violating_rows"].fillna(0).astype("int64")
+    import pandas as pd
+
+    report = pd.DataFrame(
+        merged["_buckets"],
+        columns=["bucket", "n_rows", "n_violating_rows", "passed", "summary"],
     )
-    report["passed"] = report["n_violating_rows"] == 0
-    report = report.sort_values("bucket").reset_index(drop=True)
-
-    # ---- unpack observe() metrics into tall frames ------------------------
-    n_rows = int(metrics["n_rows"])
-    stats_rows = []
-    for f_ in df.schema.fields:
-        c = f_.name
-        stats_rows.append(
-            {
-                "column": c,
-                "n_rows": n_rows,
-                "n_nulls": int(metrics[f"{c}__nulls"] or 0),
-                "null_rate": (int(metrics[f"{c}__nulls"] or 0) / n_rows) if n_rows else 0.0,
-                "min": metrics[f"{c}__min"],
-                "max": metrics[f"{c}__max"],
-                "approx_distinct": int(metrics[f"{c}__approx_distinct"] or 0),
-            }
-        )
-    counts_rows = [
-        {"check_name": n, "n_violations": int(metrics[f"__chk__{n}"] or 0)}
-        for n in _counted_checks(plan)
-    ]
+    stats, check_counts = _report_frames(merged)
 
     return {
-        "n_rows": n_rows,
-        "stats": pd.DataFrame(stats_rows),
-        "check_counts": pd.DataFrame(counts_rows),
+        "n_rows": merged["n_rows"],
+        "stats": stats,
+        "check_counts": check_counts,
         "partition_report": report,
         "dupes": dupes,
         "n_dup_keys": n_dup_keys,
@@ -612,33 +649,3 @@ def _apply_postprocessors(df: DataFrame, spec: DatasetSpec) -> DataFrame:
             )
         df = df.transform(fn)
     return df
-
-
-def _unpivot_stats(wide: DataFrame, stat_cols: list[str]) -> DataFrame:
-    parts = []
-    for c in stat_cols:
-        parts.append(
-            F.struct(
-                F.lit(c).alias("column"),
-                F.col("n_rows").alias("n_rows"),
-                F.col(f"{c}__nulls").alias("n_nulls"),
-                (F.col(f"{c}__nulls") / F.col("n_rows")).alias("null_rate"),
-                F.col(f"{c}__min").alias("min"),
-                F.col(f"{c}__max").alias("max"),
-                F.col(f"{c}__approx_distinct").alias("approx_distinct"),
-            )
-        )
-    return wide.select(F.explode(F.array(*parts)).alias("s")).select("s.*")
-
-
-def _unpivot_checks(wide: DataFrame, plan: CheckPlan) -> DataFrame:
-    names = _counted_checks(plan)
-    if not names:
-        return wide.sparkSession.createDataFrame(
-            [], "check_name string, n_violations long"
-        )
-    parts = [
-        F.struct(F.lit(n).alias("check_name"), F.col(f"__chk__{n}").alias("n_violations"))
-        for n in names
-    ]
-    return wide.select(F.explode(F.array(*parts)).alias("s")).select("s.*")

@@ -9,13 +9,19 @@ Two implementations behind one interface:
 - `ParquetManifestIO` — self-contained fallback with identical semantics:
   hash-bucketed Parquet layout (`bucket=NNN/` directories → Spark partition
   pruning prunes scans to pending buckets) plus a JSON checkpoint manifest
-  recording per-bucket lineage (input fingerprint), row counts, stats,
-  status, and wall time.
+  recording per-bucket lineage (input fingerprint), row counts, status,
+  wall time and the bucket's own summary row (the runner's per-bucket
+  summary: counts, per-check counts, per-column nulls, min/max and distinct
+  sketch), with the summary layout once per manifest. The first bucket of
+  each chunk also carries the chunk record: phase timings, drift rows and
+  the chunk's duplicate-key count and sink.
 
 Resume contract (north_star): a killed job restarts and re-validates ONLY
 buckets not marked done in the manifest; the bucket filter is a partition-
 directory filter, so pruning happens at the file index — done buckets are
-never even listed, let alone scanned.
+never even listed, let alone scanned. `table_report` merges the stored
+summaries of the done buckets, so a killed-and-resumed table reports what
+one `execute()` over the same rows reports, distinct counts included.
 """
 
 from __future__ import annotations
@@ -28,6 +34,7 @@ from dataclasses import asdict, dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 BUCKET_PART_COL = "bucket"
 
@@ -42,7 +49,8 @@ class BucketEntry:
     input_fingerprint: str = ""
     run_id: str = ""
     wall_time_sec: float = 0.0
-    stats: dict = field(default_factory=dict)
+    stats: dict = field(default_factory=dict)  # the chunk record, first bucket only
+    summary: str = ""  # the bucket's summary row as JSON ("" when empty)
 
 
 @dataclass
@@ -50,6 +58,7 @@ class Manifest:
     n_buckets: int
     bucket_key: str
     entries: dict[int, BucketEntry] = field(default_factory=dict)
+    summary_schema: dict = field(default_factory=dict)  # StructType JSON
 
     def pending(self) -> list[int]:
         # quarantined buckets are parked, not retried: their data drifted
@@ -67,23 +76,15 @@ class Manifest:
         ]
 
     def to_json(self) -> str:
-        return json.dumps(
-            {
-                "n_buckets": self.n_buckets,
-                "bucket_key": self.bucket_key,
-                "entries": {str(b): asdict(e) for b, e in self.entries.items()},
-            },
-            indent=1,
-        )
+        return json.dumps(asdict(self), indent=1)
 
     @classmethod
     def from_json(cls, s: str) -> "Manifest":
         d = json.loads(s)
-        m = cls(n_buckets=d["n_buckets"], bucket_key=d["bucket_key"])
-        m.entries = {
+        d["entries"] = {
             int(b): BucketEntry(**e) for b, e in d.get("entries", {}).items()
         }
-        return m
+        return cls(**d)
 
 
 class ParquetManifestIO:
@@ -265,11 +266,19 @@ def run_resumable(
     execute() with the chunk left pending (at-least-once semantics: rerun
     revalidates it).
 
+    Each bucket's entry keeps its own summary row from execute()'s
+    partition report, and the manifest keeps their layout, for
+    :func:`table_report`. The chunk's first bucket also keeps the chunk
+    record: ``phase_timings``, ``drift`` rows, and ``n_dup_keys`` and
+    ``dupes_path`` of the chunk's duplicate-key groups.
+
     Returns {"processed": [...buckets], "skipped": [...already-done],
     "quarantined": [...buckets parked this or earlier runs]}.
     """
-    from pysemantic_spark.operators.runner import execute
+    from pysemantic_spark.operators.runner import _summary_schema, execute
+    from pysemantic_spark.plans.compiler import CheckPlan, compile_spec
 
+    plan = spec if isinstance(spec, CheckPlan) else compile_spec(spec)
     manifest = io.load_manifest()
     pending = manifest.pending()
     # skipped = verifiably DONE buckets only; quarantined buckets are
@@ -294,52 +303,45 @@ def run_resumable(
     for chunk in chunks:
         t0 = time.time()
         df = io.read_buckets(spark, chunk).drop(BUCKET_PART_COL)
+        sink = os.path.join(violations_dir, f"run={run_id}", f"chunk={chunk[0]}")
         out = execute(
-            spark,
-            df,
-            spec,
-            dims=dims,
-            bucket_by=manifest.bucket_key,
-            n_buckets=manifest.n_buckets,
-            violations_sink=os.path.join(violations_dir, f"run={run_id}", f"chunk={chunk[0]}"),
+            spark, df, plan, dims=dims, bucket_by=manifest.bucket_key,
+            n_buckets=manifest.n_buckets, violations_sink=sink,
         )
         wall = time.time() - t0
         report = out["partition_report"].set_index("bucket")
-        stats = out["stats"].to_dict(orient="records")
-        drift_pdf = out.get("drift")
+        drift_pdf = out["drift"]
         quarantine_chunk = (
-            getattr(getattr(spec, "drift", None), "on_drift", "ignore")
-            == "quarantine"
-            and drift_pdf is not None
+            plan.drift is not None
+            and plan.drift.on_drift == "quarantine"
             and bool(drift_pdf["drifted"].any())
         )
+        manifest.summary_schema = json.loads(_summary_schema(df.schema, plan).json())
         for b in chunk:
             e = manifest.entries.get(b) or BucketEntry(b)
             if b in report.index:
                 e.n_rows = int(report.loc[b, "n_rows"])
                 e.n_violating_rows = int(report.loc[b, "n_violating_rows"])
                 e.passed = bool(report.loc[b, "passed"])
+                e.summary = report.loc[b, "summary"]
             else:  # bucket empty
-                e.n_rows = 0
-                e.n_violating_rows = 0
-                e.passed = True
+                e.n_rows, e.n_violating_rows, e.passed, e.summary = 0, 0, True, ""
             e.status = "quarantined" if quarantine_chunk else "done"
             e.run_id = run_id
             e.wall_time_sec = round(wall / len(chunk), 3)
             e.input_fingerprint = io._bucket_fingerprint(b)
+            e.stats = {}
             if b == chunk[0]:
-                e.stats = {"n_chunk_rows": out["n_rows"], "chunk_stats": stats}
-                # per-phase wall clock of the chunk's execute() run rides the
-                # manifest: a resumed job's operator can spot a degrading
-                # phase (e.g. pass-1 write slowing as the table grows)
-                # without any external metrics store
-                if out.get("timings"):
-                    e.stats["phase_timings"] = out["timings"]
-                if out.get("drift") is not None:
-                    # drifted/not-drifted rows ride the manifest (tiny frame)
-                    e.stats["drift"] = out["drift"].to_dict(orient="records")
-            else:
-                e.stats = {}
+                # the chunk record: per-phase wall clock (a resumed job's
+                # operator can spot a degrading phase without any external
+                # metrics store), drift rows, and the chunk's dup-key facts
+                e.stats = {
+                    "phase_timings": out["timings"],
+                    "n_dup_keys": out["n_dup_keys"],
+                    "dupes_path": out["dupes_path"],
+                }
+                if drift_pdf is not None:
+                    e.stats["drift"] = drift_pdf.to_dict(orient="records")
             manifest.entries[b] = e
         io.save_manifest(manifest)
         processed.extend(chunk)
@@ -349,4 +351,53 @@ def run_resumable(
         "skipped": skipped,
         "run_id": run_id,
         "quarantined": manifest.quarantined(),
+    }
+
+
+def table_report(io: ParquetManifestIO) -> dict:
+    """Table-level report of the done buckets, merged from the summary
+    rows stored in their manifest entries with the merge execute() uses
+    (runner._report: sums, min of mins, max of maxes, the union of the
+    per-bucket theta sketches). A table validated in killed-and-resumed
+    chunks therefore reports exactly what one execute() over the same rows
+    reports, ``approx_distinct`` included. The buckets must have been
+    validated under one spec (the manifest keeps one summary layout).
+
+    Returns dict(n_rows=int, n_violating_rows=int, all_passed=bool,
+    stats=pandas, check_counts=pandas, partition_report=pandas) with
+    execute()'s columns; partition_report lists every done bucket, an
+    empty one with 0 rows, where execute() lists only buckets with rows.
+    Duplicate keys are NOT merged: each chunk's
+    ``n_dup_keys``/``dupes_path`` stay on its chunk record, because a key
+    whose copies span chunks is in no chunk's groups (ROADMAP item 1(a)),
+    so a sum would undercount. Runs one small Spark job on the active
+    session; the stored rows enter it as one JSON literal, so no Python
+    worker starts.
+    """
+    import pandas as pd
+
+    from pysemantic_spark.operators.runner import _JSON_OPTS, _report, _report_frames
+
+    m = io.load_manifest()
+    if not m.summary_schema:
+        raise ValueError(f"{io.root}: no bucket validated by run_resumable yet")
+    done = [m.entries[b] for b in sorted(m.entries) if m.entries[b].status == "done"]
+    layout = T.StructType.fromJson(m.summary_schema)
+    rows = F.lit("[" + ",".join(e.summary for e in done if e.summary) + "]")
+    summary = SparkSession.active().range(1).select(
+        F.explode(F.from_json(rows, T.ArrayType(layout), _JSON_OPTS)).alias("s")
+    )
+    merged = _report(summary.select("s.*"), layout).first()
+    stats, check_counts = _report_frames(merged)
+    report = pd.DataFrame(
+        [(e.bucket, e.n_rows, e.n_violating_rows, bool(e.passed)) for e in done],
+        columns=["bucket", "n_rows", "n_violating_rows", "passed"],
+    )
+    return {
+        "n_rows": merged["n_rows"],
+        "n_violating_rows": merged["n_violating_rows"],
+        "all_passed": merged["n_violating_rows"] == 0,
+        "stats": stats,
+        "check_counts": check_counts,
+        "partition_report": report,
     }

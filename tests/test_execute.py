@@ -42,9 +42,7 @@ def test_violations_written_to_sink(run):
     _, oracle, out, spark, sink = run
     written = spark.read.parquet(sink)
     assert written.count() == len(oracle["violations"])
-    assert set(written.columns) == {
-        "conv_id", "turn_idx", "check_name", "_bucket", "_row_hash"
-    }
+    assert set(written.columns) == {"conv_id", "turn_idx", "check_name", "_bucket"}
 
 
 def test_report_totals(run):
@@ -112,6 +110,52 @@ def test_execute_counts_dup_key_violating_rows_individually(spark, tmp_path):
     assert out["partition_report"]["n_rows"].sum() == 3
 
 
+def test_identical_violating_rows_count_per_row(spark):
+    """Byte-identical violating rows count once each in n_violating_rows,
+    as in n_rows, on both validate() and execute()."""
+    import pandas as pd
+
+    from pysemantic_spark.operators.runner import validate
+    from pysemantic_spark.spec import DatasetSpec
+
+    pdf = pd.DataFrame(
+        {"conv_id": ["c1", "c1", "c1"], "turn_idx": [0, 0, 1],
+         "role": ["robot", "robot", "user"]}  # two identical violating rows
+    )
+    spec = DatasetSpec.from_dict(
+        "t", {"column_rules": {"role": {"unique_values": ["user", "assistant"]}}}
+    )
+    df = spark.createDataFrame(pdf)
+    lazy = validate(spark, df, spec, bucket_by="conv_id", n_buckets=4)
+    lazy_rep = lazy.partition_report.toPandas()
+    out = execute(spark, df, spec, bucket_by="conv_id", n_buckets=4)
+    for rep in (lazy_rep, out["partition_report"]):
+        assert rep["n_rows"].tolist() == [3]
+        assert rep["n_violating_rows"].tolist() == [2]
+        assert rep["passed"].tolist() == [False]
+
+
+def test_validate_on_empty_input(spark):
+    """On a 0-row input the lazy stats and check counts are 0, not NULL,
+    as execute() reports them."""
+    from pysemantic_spark.operators.runner import validate
+    from pysemantic_spark.spec import DatasetSpec
+
+    spec = DatasetSpec.from_dict(
+        "t", {"column_rules": {"role": {"unique_values": ["user", "assistant"]}}}
+    )
+    df = spark.createDataFrame([], "conv_id string, turn_idx long, role string")
+    res = validate(spark, df, spec, bucket_by="conv_id", n_buckets=4)
+    stats = res.stats.toPandas().set_index("column")
+    assert stats["n_rows"].tolist() == [0, 0, 0]
+    assert stats["n_nulls"].tolist() == [0, 0, 0]
+    assert stats["null_rate"].tolist() == [0.0, 0.0, 0.0]
+    assert stats["approx_distinct"].tolist() == [0, 0, 0]
+    counts = res.check_counts.toPandas()
+    assert counts["n_violations"].tolist() == [0]
+    assert res.partition_report.count() == 0
+
+
 @pytest.mark.parametrize("with_sink", [True, False], ids=["sink", "persist"])
 def test_execute_on_empty_input(spark, tmp_path, with_sink):
     """A 0-row input with a uniqueness key returns zero counts and an empty
@@ -153,6 +197,8 @@ def test_execute_on_empty_input(spark, tmp_path, with_sink):
     assert out["n_rows"] == 0
     assert out["n_dup_keys"] == 0
     assert out["partition_report"].empty
+    assert out["stats"]["n_nulls"].tolist() == [0, 0, 0]
+    assert out["check_counts"]["n_violations"].tolist() == [0]
     assert (out["dupes_path"] is not None) == with_sink
 
 
@@ -287,9 +333,8 @@ def test_execute_report_agrees_with_lazy_validate(spark, run):
 
 
 def test_execute_jobs_inherit_the_callers_job_group(spark, tmp_path):
-    """Every job of one call (pass 1, the helper-thread jobs and the
-    dependent count) runs in the caller's job group, so cancelJobGroup
-    reaches all of them."""
+    """Every job of one call (pass 1 and the helper-thread jobs) runs in
+    the caller's job group, so cancelJobGroup reaches all of them."""
     import numpy as np
     import pandas as pd
 
@@ -325,7 +370,8 @@ def test_execute_jobs_inherit_the_callers_job_group(spark, tmp_path):
         sc.setLocalProperty("spark.job.interruptOnCancel", None)
     grouped = sorted(tracker.getJobIdsForGroup("execute-group"))
     assert set(tracker.getJobIdsForGroup(None)) - ungrouped == set()
-    # pass 1, bucket totals, dup-key groups, drift and the violating-row count
+    # pass 1's write, the summary (one job per AQE query stage), the
+    # dup-key groups and drift
     assert len(grouped) >= 5
     assert grouped == list(range(grouped[0], grouped[-1] + 1))
 

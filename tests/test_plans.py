@@ -15,6 +15,7 @@ from pyspark.sql import functions as F
 from pysemantic_spark.fixtures import dim_tools_pdf, transcripts_pdf, transcripts_spec
 from pysemantic_spark.operators import dedup, similarity
 from pysemantic_spark.operators.runner import validate
+from pysemantic_spark.plans.compiler import compile_spec
 
 
 def _plan(df) -> str:
@@ -164,53 +165,51 @@ def test_ks_between_scans_are_pruned(spark, parts):
     assert "Window" in plans["ks_between"]
 
 
-def test_violating_rows_per_bucket_is_agg_shaped(spark):
-    """VERDICT r2 #4: the per-bucket violating-row count must compile to
-    partial+final HashAggregates with every exchange keyed by the bucket
-    (+ dedup tuple) — never a bucket-less global Distinct of the full
-    violations output."""
+def _summary(spark, pdf, spec_dict):
+    """The per-bucket summary execute() collects, over ``pdf`` bucketed by
+    ``k`` into 4 buckets."""
+    from pysemantic_spark.operators import runner
+    from pysemantic_spark.spec import DatasetSpec
+
+    plan = compile_spec(DatasetSpec.from_dict("t", spec_dict))
+    df = spark.createDataFrame(pdf)
+    res = validate(spark, df, plan, bucket_by="k", n_buckets=4)
+    return runner._bucket_summary(res.flagged, runner._summary_schema(df.schema, plan))
+
+
+def test_bucket_summary_is_agg_shaped(spark):
+    """VERDICT r2 #4: the per-bucket summary compiles to partial+final
+    aggregation with every input-sized exchange keyed by the bucket: no
+    Expand (a rollup would copy every input row) and no bucket-less
+    Distinct of the violating rows."""
     import pandas as pd
 
-    from pysemantic_spark.operators.runner import _violating_rows_per_bucket
-
-    viol = spark.createDataFrame(
-        pd.DataFrame(
-            {
-                "k": [1, 1, 2, 3, 3, 3],
-                "_row_hash": [10, 10, 20, 30, 31, 31],
-                "_bucket": [0, 0, 1, 1, 1, 1],
-            }
-        )
-    )
-    out = _violating_rows_per_bucket(viol, ["k"])
-    got = {r["bucket"]: r["n_violating_rows"] for r in out.collect()}
-    # bucket 0: one distinct (k, hash); bucket 1: (2,20), (3,30), (3,31)
-    assert got == {0: 1, 1: 3}
+    pdf = pd.DataFrame({"k": [1, 1, 2, 3, 3, 3], "v": [-1, -1, 5, -2, -3, 4]})
+    out = _summary(spark, pdf, {"column_rules": {"v": {"min": 0}}})
+    got = {r["bucket"]: (r["n_rows"], r["n_violating_rows"]) for r in out.collect()}
+    assert sum(n for n, _ in got.values()) == 6
+    # rows count one each, the identical (1, -1) rows included
+    assert sum(v for _, v in got.values()) == 4
     plan = _plan(out)
-    assert "HashAggregate" in plan and "partial" in plan.lower()
+    assert "Aggregate" in plan and "partial_" in plan, plan
+    assert "Expand" not in plan, plan
     for ln in plan.splitlines():
         if "Exchange hashpartitioning" in ln:
-            assert "_bucket" in ln or "bucket" in ln, ln
+            assert "_bucket" in ln, ln
+        if "HashAggregate(keys=[" in ln:
+            assert "_bucket" in ln, ln
 
 
-def test_violating_rows_per_bucket_counts_null_keys(spark):
-    """count(DISTINCT a, b) drops any-null tuples; the struct wrapper must
-    not — a violating row with a NULL key column still counts."""
+def test_bucket_summary_counts_violating_rows_with_null_keys(spark):
+    """A violating row whose key columns are NULL still counts (a count of
+    DISTINCT key tuples would drop any-NULL tuples)."""
     import pandas as pd
 
-    from pysemantic_spark.operators.runner import _violating_rows_per_bucket
-
-    viol = spark.createDataFrame(
-        pd.DataFrame(
-            {
-                "k": [None, None, 5.0],
-                "_row_hash": [1, 2, 3],
-                "_bucket": [0, 0, 0],
-            }
-        )
+    pdf = pd.DataFrame({"k": [None, None, 5.0], "v": [-1, -2, -3]})
+    out = _summary(
+        spark, pdf, {"column_rules": {"v": {"min": 0}}, "uniqueness": [["k"]]}
     )
-    out = _violating_rows_per_bucket(viol, ["k"])
-    assert out.collect()[0]["n_violating_rows"] == 3
+    assert sum(r["n_violating_rows"] for r in out.collect()) == 3
 
 
 def test_ivf_training_is_single_scan_no_count(spark):

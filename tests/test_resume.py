@@ -79,6 +79,13 @@ def test_kill_and_resume(spark, table):
     assert all(e.run_id for e in final.entries.values())
     # two distinct run ids prove the split execution
     assert len({e.run_id for e in final.entries.values()}) == 2
+    # each chunk's first bucket keeps the chunk's duplicate-key facts
+    for first_bucket in (0, 2, 4, 6):
+        rec = final.entries[first_bucket].stats
+        assert rec["dupes_path"].endswith(f"chunk={first_bucket}_dupes")
+        assert {"phase_timings", "n_dup_keys", "dupes_path"} <= set(rec)
+    assert sum(final.entries[b].stats["n_dup_keys"] for b in (0, 2, 4, 6)) > 0
+    assert all(final.entries[b].stats == {} for b in (1, 3, 5, 7))
 
 
 def test_resume_matches_single_run(spark, table, tmp_path):
@@ -99,6 +106,41 @@ def test_resume_matches_single_run(spark, table, tmp_path):
             m_split.entries[b].n_violating_rows
             == m_single.entries[b].n_violating_rows
         ), b
+
+
+def test_resumed_table_report_equals_one_execute(spark, tmp_path):
+    """A table validated in a killed run (2 chunks of 2 buckets) and its
+    resume reports exactly what one execute() over the same rows reports:
+    per-bucket counts, per-check counts, per-column nulls/min/max and the
+    theta-sketch distinct estimates, merged from the summary each bucket
+    stored."""
+    from pysemantic_spark.operators.runner import execute
+    from pysemantic_spark.sources.tableio import table_report
+
+    spec = transcripts_spec()
+    dims = {"dim_tools": spark.createDataFrame(dim_tools_pdf())}
+    io = ParquetManifestIO(str(tmp_path / "tbl"))
+    io.write_bucketed(
+        spark.createDataFrame(transcripts_pdf(n_rows=4_000)), "conv_id", N_BUCKETS
+    )
+    run_resumable(spark, io, spec, dims=dims, chunk_size=2, max_chunks=2)
+    run_resumable(spark, io, spec, dims=dims, chunk_size=2)
+    m = io.load_manifest()
+    assert all(e.status == "done" and e.summary for e in m.entries.values())
+
+    got = table_report(io)
+    df = io.read_buckets(spark, list(range(N_BUCKETS))).drop("bucket")
+    want = execute(spark, df, spec, dims=dims, bucket_by="conv_id", n_buckets=N_BUCKETS)
+
+    cols = ["bucket", "n_rows", "n_violating_rows", "passed"]
+    assert got["partition_report"][cols].to_dict("records") == (
+        want["partition_report"][cols].to_dict("records")
+    )
+    assert got["n_rows"] == want["n_rows"]
+    assert got["check_counts"].to_dict("records") == want["check_counts"].to_dict("records")
+    assert got["stats"].to_dict("records") == want["stats"].to_dict("records")
+    assert got["n_violating_rows"] == int(want["partition_report"]["n_violating_rows"].sum())
+    assert got["stats"]["approx_distinct"].gt(0).any()
 
 
 def test_idempotent_when_done(spark, table):

@@ -12,7 +12,11 @@ import time
 import duckdb
 import pandas as pd
 
-sys.path.insert(0, "/root/repo")
+# this checkout's package, on the driver and (via PYTHONPATH, when unset)
+# on the Python workers, whatever the cwd
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
+os.environ.setdefault("PYTHONPATH", ROOT)
 
 TABLES = [
     "region", "nation", "customer", "supplier", "part", "orders",
