@@ -374,25 +374,35 @@ def q_cosine_topk_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _exact_topk5(spark, sf_dir)
 
 
+def _drift_halves(spark: SparkSession, sf_dir: str) -> list[list[int]]:
+    """n_chars bin counts (20 bins on [0, 600)) of the even and the odd
+    doc_id half: ONE drift sketch of the documents keyed by doc_id % 2."""
+    from pysemantic_spark.operators.drift import drift_sketch, sketch_counts
+
+    layout = {"columns": {"n_chars": {"kind": "hist", "lo": 0.0, "hi": 600.0, "n_bins": 20}}}
+    docs = _read(spark, sf_dir, "documents", widen=False)
+    rows = drift_sketch(docs, layout, ["n_chars"], {"half": F.col("doc_id") % 2}).collect()
+    return [
+        sketch_counts(layout, ["n_chars"], [r[1:] for r in rows if r["half"] == h])[0]["n_chars"]
+        for h in (0, 1)
+    ]
+
+
 def q_psi_drift_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     """distribution-drift PSI of n_chars, even- vs odd-doc_id halves."""
-    from pysemantic_spark.operators.drift import psi_between
+    from pysemantic_spark.operators.drift import _psi_laplace_counts
 
-    docs = _read(spark, sf_dir, "documents")
-    base = docs.filter(F.col("doc_id") % 2 == 0)
-    cur = docs.filter(F.col("doc_id") % 2 == 1)
-    return psi_between(base, cur, "n_chars", lo=0.0, hi=600.0, n_bins=20)
+    psi = _psi_laplace_counts(*_drift_halves(spark, sf_dir))
+    return spark.createDataFrame([("n_chars", psi)], "column string, psi double")
 
 
 def q_ks_drift_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """distributed KS statistic of n_chars, even- vs odd-doc_id halves —
-    the 1-row declarative twin of psi_between."""
-    from pysemantic_spark.operators.drift import ks_between
+    """KS statistic of n_chars over the binned ECDFs, even- vs
+    odd-doc_id halves."""
+    from pysemantic_spark.operators.drift import _ks_counts
 
-    docs = _read(spark, sf_dir, "documents")
-    base = docs.filter(F.col("doc_id") % 2 == 0)
-    cur = docs.filter(F.col("doc_id") % 2 == 1)
-    return ks_between(base, cur, "n_chars", lo=0.0, hi=600.0, n_bins=20)
+    ks = _ks_counts(*_drift_halves(spark, sf_dir))
+    return spark.createDataFrame([("n_chars", ks)], "column string, ks double")
 
 
 def q_spec_drift_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -617,10 +627,11 @@ def q_streaming_drift_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     import uuid
 
     from pysemantic_spark.operators.drift import (
+        drift_rows_report,
         load_drift_baseline,
         save_drift_baseline,
+        windowed_drift_sketch,
     )
-    from pysemantic_spark.streaming import validate_stream as vs
 
     ev_path = f"{sf_dir}/events.parquet"
     # _read widens the row-group-limited fixture scan (round 7) — the
@@ -653,7 +664,7 @@ def q_streaming_drift_events(spark: SparkSession, sf_dir: str) -> DataFrame:
         # with the oracle's naive date_trunc
         .withColumn("ts", F.col("ts").cast("timestamp"))
     )
-    sk = vs.windowed_drift_sketch(
+    sk = windowed_drift_sketch(
         stream, baseline, ["value", "event_type"], ts_col="ts", window="1 hour"
     )
     qname = f"driftsk_{uuid.uuid4().hex[:12]}"
@@ -680,7 +691,7 @@ def q_streaming_drift_events(spark: SparkSession, sf_dir: str) -> DataFrame:
         spark.conf.set("spark.sql.shuffle.partitions", _old_sp)
     rows = spark.table(qname)
     # wire the scorer: the union of the windows gets a full metric report
-    report = vs.drift_rows_report(rows.collect(), baseline)
+    report = drift_rows_report(rows.collect(), baseline)
     assert len(report) >= 3, "drift_rows_report produced no metrics"
     os.unlink(bl_path)
     shutil.rmtree(stage_dir, ignore_errors=True)
@@ -720,8 +731,8 @@ def q_streaming_drift_append_events(spark: SparkSession, sf_dir: str) -> DataFra
     from pysemantic_spark.operators.drift import (
         load_drift_baseline,
         save_drift_baseline,
+        windowed_drift_sketch,
     )
-    from pysemantic_spark.streaming import validate_stream as vs
 
     ev_path = f"{sf_dir}/events.parquet"
     # _read widens the row-group-limited fixture scan (round 7) — the
@@ -784,7 +795,7 @@ def q_streaming_drift_append_events(spark: SparkSession, sf_dir: str) -> DataFra
         .filter(F.col("event_id") % 2 == 1)
         .withColumn("ts", F.col("ts").cast("timestamp"))
     )
-    sk = vs.windowed_drift_sketch(
+    sk = windowed_drift_sketch(
         stream, baseline, ["value", "event_type"],
         ts_col="ts", window="1 hour", watermark="1 second",
     )

@@ -178,6 +178,7 @@ def _bucketize(args) -> int:
 
 
 def _validate(args) -> int:
+    from pysemantic_spark.errors import SpecValidationError
     from pysemantic_spark.session import get_spark
     from pysemantic_spark.sources.tableio import ParquetManifestIO, run_resumable, table_report
     from pysemantic_spark.spec import load_spec_file
@@ -209,7 +210,11 @@ def _validate(args) -> int:
         for e in m.entries.values():
             e.status = "pending"
         io.save_manifest(m)
-    out = run_resumable(spark, io, spec, dims=dims, chunk_size=args.chunk_size)
+    try:
+        out = run_resumable(spark, io, spec, dims=dims, chunk_size=args.chunk_size)
+    except SpecValidationError as e:  # e.g. a referential dim not passed via --dim
+        print(f"{args.spec}: {e}", file=sys.stderr)
+        return 1
     report = {
         k: v.to_dict(orient="records") if hasattr(v, "to_dict") else v
         for k, v in table_report(io).items()

@@ -2,18 +2,23 @@
 
 One sketch: fixed-bin counts. ``bin_expr`` maps a numeric value to a bin id
 in [0, n_bins+1] (0 = underflow, n_bins+1 = overflow); a categorical value
-is its own bin. Counts are n_bins+2 numbers per column whatever the input
-size, and sketches of two parts of the data merge by summing their counts.
+is its own bin. The sketch is rows ``(*by, column, bin, cnt)``, built by
+ONE function, :func:`drift_sketch`: a single scan and one
+``groupBy(*by, column, bin)`` count over every drift column, in the bin
+layout of a baseline sketch (its ``lo``/``hi``/``n_bins``). Counts of equal
+``(column, bin)`` merge by summing, so the same rows serve a baseline
+(``by`` empty), each bucket of an ``execute()`` (``by`` = the bucket), a
+streaming window (``by`` = the window) and any union of these; counts merge
+only when binned under the same baseline layout.
 
-- :func:`multi_sketch_counts` counts every drift column's bins in ONE scan,
-  for the baseline file (:func:`save_drift_baseline`) and for the current
-  side of :func:`spec_drift_report` (the YAML ``drift:`` block execute()
-  runs). The streaming sketch (``streaming.validate_stream``) counts the
-  same bins per window. Batch and streaming rows come from one scorer,
-  :func:`_drift_rows`.
-- :func:`psi_between` / :func:`ks_between` are the same metrics as 1-row
-  declarative DataFrames (two pruned scans, a tiny bin spine), so external
-  engines can replicate them from SQL.
+- :func:`sketch_counts` is the one reader: it sums sketch rows into the
+  count vectors the metrics take, for the baseline file
+  (:func:`build_drift_baseline`) and for :func:`_drift_rows`, the one
+  scorer behind :func:`spec_drift_report` (the YAML ``drift:`` block
+  execute() runs), :func:`drift_rows_report` (streaming windows) and the
+  per-bucket counts of a resumable run (``sources.tableio``).
+- :func:`windowed_drift_sketch` is :func:`drift_sketch` under a
+  watermark, keyed by tumbling window.
 - :func:`ecdf_sketch_arrow` — per-bucket quantile grid via Arrow
   `applyInPandas` (the pandas/Arrow-UDAF path): each bucket's pandas group
   computes a q-grid. Arrow-batched, never per-row Python.
@@ -56,113 +61,8 @@ def bin_expr(col: str, lo: float, hi: float, n_bins: int) -> "F.Column":
     )
 
 
-def _bin_spine(
-    baseline: DataFrame, current: DataFrame, col: str, lo: float, hi: float,
-    n_bins: int,
-) -> tuple[DataFrame, DataFrame]:
-    """(bin, cb, cc) for every bin id 0..n_bins+1 (0 where a side has no
-    rows in the bin), and the 1-row totals (tb, tc) as doubles.
-
-    Each side is one pruned scan of ``col`` and a partial+final agg of
-    ≤ n_bins+2 groups, left-joined onto a ``range`` spine of the bin ids;
-    nothing after the aggs grows with input size."""
-    def binned(df: DataFrame, name: str) -> DataFrame:
-        return (
-            df.select(bin_expr(col, lo, hi, n_bins).alias("bin"))
-            .filter(F.col("bin").isNotNull())
-            .groupBy("bin")
-            .agg(F.count(F.lit(1)).alias(name))
-        )
-
-    bins = baseline.sparkSession.range(0, n_bins + 2).select(
-        F.col("id").cast("int").alias("bin")
-    )
-    joined = (
-        bins.join(binned(baseline, "cb"), "bin", "left")
-        .join(binned(current, "cc"), "bin", "left")
-        .select(
-            "bin",
-            F.coalesce("cb", F.lit(0)).alias("cb"),
-            F.coalesce("cc", F.lit(0)).alias("cc"),
-        )
-    )
-    totals = joined.agg(
-        F.sum("cb").cast("double").alias("tb"), F.sum("cc").cast("double").alias("tc")
-    )
-    return joined, totals
-
-
-def psi_between(
-    baseline: DataFrame,
-    current: DataFrame,
-    col: str,
-    lo: float,
-    hi: float,
-    n_bins: int = 20,
-) -> DataFrame:
-    """Distributed PSI between two frames as a 1-row DataFrame
-    (column, psi) — fully declarative so external engines can replicate it
-    bit-for-bit (Laplace-smoothed: p_i = (c_i + 1) / (t + n_bins + 2)).
-
-    Two pruned scans (only ``col``), two partial+final aggs of ≤ n_bins+2
-    groups, one tiny join — nothing here grows with input size."""
-    nb = n_bins + 2
-    joined, totals = _bin_spine(baseline, current, col, lo, hi, n_bins)
-    # totals come from their own agg and a broadcast cross join, so no
-    # scalar subquery is needed
-    with_tot = joined.crossJoin(F.broadcast(totals))
-    p = (F.col("cb") + 1) / (F.col("tb") + nb)
-    q = (F.col("cc") + 1) / (F.col("tc") + nb)
-    return with_tot.agg(
-        F.round(F.sum((p - q) * F.log(p / q)), 6).alias("psi")
-    ).select(F.lit(col).alias("column"), "psi")
-
-
-def ks_between(
-    baseline: DataFrame,
-    current: DataFrame,
-    col: str,
-    lo: float,
-    hi: float,
-    n_bins: int = 20,
-) -> DataFrame:
-    """Distributed KS statistic between two frames as a 1-row DataFrame
-    (column, ks) — the declarative twin of :func:`psi_between`.
-
-    KS = max_bin |CDF_baseline − CDF_current| over the binned ECDF.
-    Two pruned scans (only ``col``), two partial+final aggs of ≤ n_bins+2
-    groups, a tiny spine join, then a window cumsum over the n_bins+2
-    aggregated rows (single tiny partition — input size never reaches the
-    window). Fully SQL-replicable for external verification."""
-    from pyspark.sql import Window
-
-    joined, totals = _bin_spine(baseline, current, col, lo, hi, n_bins)
-    # one partition is fine: the window only sees the n_bins+2 aggregated
-    # rows (Spark still logs "No Partition Defined" for it)
-    w = Window.orderBy("bin").rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    cum = joined.select(
-        F.sum("cb").over(w).cast("double").alias("ccb"),
-        F.sum("cc").over(w).cast("double").alias("ccc"),
-    ).crossJoin(F.broadcast(totals))
-    # greatest(total, 1) mirrors the driver-side _ks_counts guard: an empty
-    # side reports ks as a real number (max |cdf| of the other side), never
-    # a NULL that silently reads as "no drift"
-    return cum.agg(
-        F.round(
-            F.max(
-                F.abs(
-                    F.col("ccb") / F.greatest(F.col("tb"), F.lit(1.0))
-                    - F.col("ccc") / F.greatest(F.col("tc"), F.lit(1.0))
-                )
-            ),
-            6,
-        ).alias("ks")
-    ).select(F.lit(col).alias("column"), "ks")
-
-
 # ---------------------------------------------------------------------------
-# Driver-side metrics over bin counts (formulas in the module docstring;
-# psi_between/ks_between compute the same numbers in SQL)
+# Driver-side metrics over bin counts (formulas in the module docstring)
 # ---------------------------------------------------------------------------
 
 
@@ -200,59 +100,66 @@ def _cat_psi_laplace(base: dict[str, int], cur: dict[str, int]) -> float:
     return round(out, 6)
 
 
-def multi_sketch_counts(
-    df: DataFrame,
-    numeric_specs: dict[str, tuple[float, float, int]],
-    cat_cols: list[str],
-    max_categories: int = 10_000,
-) -> tuple[dict[str, list[int]], dict[str, dict[str, int]]]:
-    """Sketch counts for EVERY drift column in ONE scan.
+def drift_sketch(
+    df: DataFrame, baseline: dict, columns: list[str],
+    by: dict[str, "F.Column"] | None = None,
+) -> DataFrame:
+    """The drift sketch of ``df``: rows ``(*by, column, bin, cnt)`` for
+    every drift column, in ``baseline``'s bin layout.
 
-    All columns' bin ids / category values are stacked into a single
-    array<string> and posexploded, so one pass + one agg of
-    Σ(n_bins+2) + Σ|categories| groups covers the whole drift block —
-    no per-column scans. Null values drop out per element (nulls are
-    tracked by the null-rate stat, not the drift sketch).
-
-    The driver collect is BOUNDED: before collecting, a per-column group
-    count (partial+final agg over the already-aggregated counts frame,
-    ≤ one row per column) verifies every categorical column has at most
-    ``max_categories`` distinct values; a miscategorized high-cardinality
-    column (user_id, free text) raises SpecValidationError instead of
-    landing Σ|categories| rows on the driver. Bin/hash such columns into
-    a bounded numeric surrogate to put them under drift."""
+    A numeric column's bin is ``bin_expr`` over the baseline's lo/hi/n_bins,
+    a categorical column's bin is its value, both as strings; NULL bins drop
+    out (nulls are tracked by the null-rate stat). ``by`` maps output names
+    to key expressions over ``df`` (a bucket, a window). One scan of the
+    drift and key columns, one ``groupBy(*by, column, bin)`` count: at most
+    Σ(n_bins+2) + Σ|categories| rows per key."""
     from pysemantic_spark.errors import SpecValidationError
 
-    exprs: list = []
-    order: list[tuple[str, str]] = []
-    for c, (lo, hi, nbins) in numeric_specs.items():
-        exprs.append(bin_expr(c, lo, hi, nbins).cast("string"))
-        order.append(("hist", c))
-    for c in cat_cols:
-        exprs.append(F.col(c).cast("string"))
-        order.append(("cat", c))
-    hist = {c: [0] * (nbins + 2) for c, (_, _, nbins) in numeric_specs.items()}
-    cat: dict[str, dict[str, int]] = {c: {} for c in cat_cols}
-    if not exprs:
-        return hist, cat
-    counts = (
-        df.select(F.posexplode(F.array(*exprs)).alias("ci", "val"))
-        .filter(F.col("val").isNotNull())
-        .groupBy("ci", "val")
+    by = by or {}
+    missing = [c for c in columns if c not in baseline.get("columns", {})]
+    if missing:
+        raise SpecValidationError(f"drift baseline lacks sketches for columns {missing}")
+    cells = []
+    for c in columns:
+        e = baseline["columns"][c]
+        b = bin_expr(c, e["lo"], e["hi"], e["n_bins"]) if e["kind"] == "hist" else F.col(c)
+        cells.append(F.struct(F.lit(c).alias("column"), b.cast("string").alias("bin")))
+    return (
+        df.select(*[k.alias(n) for n, k in by.items()], F.inline(F.array(*cells)))
+        .filter(F.col("bin").isNotNull())
+        .groupBy(*by, "column", "bin")
         .agg(F.count(F.lit(1)).alias("cnt"))
     )
-    if cat_cols:
-        counts = counts.persist()
+
+
+def _collect_sketch(
+    df: DataFrame, baseline: dict, columns: list[str],
+    by: dict[str, "F.Column"] | None, max_categories: int,
+) -> list:
+    """:func:`drift_sketch` collected to the driver, BOUNDED: before the
+    collect, a count of distinct bins per categorical column over the
+    keyed counts (≤ one row per column) checks that none has more than
+    ``max_categories`` values; a miscategorized high-cardinality column
+    (user_id, free text) raises SpecValidationError instead of landing on
+    the driver. The collect is then at most (keys) × (Σ(n_bins+2) +
+    Σ max_categories) rows. Bin/hash such columns into a bounded numeric
+    surrogate to put them under drift."""
+    from pysemantic_spark.errors import SpecValidationError
+
+    sketch = drift_sketch(df, baseline, columns, by)
+    cats = [c for c in columns if baseline["columns"][c]["kind"] == "cat"]
+    if not cats:
+        return sketch.collect()
+    sketch = sketch.persist()
+    try:
         sizes = (
-            counts.groupBy("ci").agg(F.count(F.lit(1)).alias("n_distinct")).collect()
+            sketch.filter(F.col("column").isin(cats))
+            .groupBy("column")
+            .agg(F.countDistinct("bin").alias("n"))
+            .collect()
         )
-        oversized = {
-            order[r["ci"]][1]: r["n_distinct"]
-            for r in sizes
-            if order[r["ci"]][0] == "cat" and r["n_distinct"] > max_categories
-        }
+        oversized = {r["column"]: r["n"] for r in sizes if r["n"] > max_categories}
         if oversized:
-            counts.unpersist()
             raise SpecValidationError(
                 f"categorical drift column(s) exceed max_categories="
                 f"{max_categories}: {oversized} — a sketch must stay bounded; "
@@ -260,15 +167,26 @@ def multi_sketch_counts(
                 "`max_categories` in the drift block if the cardinality is "
                 "genuinely intended"
             )
-    rows = counts.collect()
-    if cat_cols:
-        counts.unpersist()
-    for r in rows:
-        kind, c = order[r["ci"]]
-        if kind == "hist":
-            hist[c][int(r["val"])] = r["cnt"]
-        else:
-            cat[c][r["val"]] = r["cnt"]
+        return sketch.collect()
+    finally:
+        sketch.unpersist()
+
+
+def sketch_counts(
+    baseline: dict, columns: list[str], counts
+) -> tuple[dict[str, list[int]], dict[str, dict[str, int]]]:
+    """Sum sketch rows ``counts`` — (column, bin, cnt) triples of any keys,
+    in ``baseline``'s bin layout — into per-column count vectors: ``hist``
+    (n_bins+2 counts per numeric column) and ``cat`` (value → count per
+    categorical column). Rows of columns not in ``columns`` are ignored."""
+    entries = baseline["columns"]
+    hist = {c: [0] * (entries[c]["n_bins"] + 2) for c in columns if entries[c]["kind"] == "hist"}
+    cat: dict[str, dict[str, int]] = {c: {} for c in columns if entries[c]["kind"] != "hist"}
+    for c, b, n in counts:
+        if c in hist:
+            hist[c][int(b)] += int(n)
+        elif c in cat:
+            cat[c][str(b)] = cat[c].get(str(b), 0) + int(n)
     return hist, cat
 
 
@@ -297,7 +215,7 @@ def build_drift_baseline(
                 f"drift column {c!r} has unsupported type {dt.simpleString()} "
                 "(numeric → histogram, string/boolean → categorical)"
             )
-    numeric_specs: dict[str, tuple[float, float, int]] = {}
+    out: dict = {"n_bins": n_bins, "columns": {}}
     if numeric:
         bounds = df.agg(
             *[F.min(c).cast("double").alias(f"{c}__lo") for c in numeric],
@@ -310,17 +228,15 @@ def build_drift_baseline(
                 lo, hi = 0.0, 1.0
             if hi <= lo:
                 hi = lo + 1.0
-            numeric_specs[c] = (float(lo), float(hi), n_bins)
-    hist, cat = multi_sketch_counts(
-        df, numeric_specs, cats, max_categories=max_categories
-    )
-    out: dict = {"n_bins": n_bins, "columns": {}}
-    for c, (lo, hi, nbins) in numeric_specs.items():
-        out["columns"][c] = {
-            "kind": "hist", "lo": lo, "hi": hi, "n_bins": nbins, "counts": hist[c],
-        }
+            out["columns"][c] = {"kind": "hist", "lo": float(lo), "hi": float(hi), "n_bins": n_bins}
     for c in cats:
-        out["columns"][c] = {"kind": "cat", "counts": cat[c]}
+        out["columns"][c] = {"kind": "cat"}
+    cols = list(out["columns"])
+    hist, cat = sketch_counts(
+        out, cols, _collect_sketch(df, out, cols, None, max_categories)
+    )
+    for c in cols:
+        out["columns"][c]["counts"] = hist[c] if c in hist else cat[c]
     return out
 
 
@@ -374,52 +290,48 @@ def spec_drift_baseline(drift_spec) -> dict:
 
 
 def spec_drift_report(
-    df: DataFrame, drift_spec, baseline: dict | None = None
-) -> pd.DataFrame:
+    df: DataFrame, drift_spec, bucket: "F.Column", baseline: dict | None = None
+) -> tuple[pd.DataFrame, dict]:
     """Run a DriftSpec (YAML ``drift:`` block) against its baseline file,
     or against ``baseline`` when the caller already loaded and checked it
     with :func:`spec_drift_baseline`.
 
-    Current-side sketches for every declared column come from ONE fused
-    scan (:func:`multi_sketch_counts`); metrics are computed driver-side
-    from the two tiny count vectors. Returns pandas
-    (column, metric, value, threshold, drifted) — the rows execute()
-    attaches to its output."""
+    The current side is ONE drift sketch keyed by ``bucket`` (an int
+    Column over ``df``), collected under the ``max_categories`` bound of
+    :func:`_collect_sketch`: at most (buckets) × (Σ(n_bins+2) +
+    Σ max_categories) rows. Returns ``(rows, counts)``: pandas (column,
+    metric, value, threshold, drifted) scored over the sum of every
+    bucket's counts — the rows execute() attaches to its output — and
+    bucket → that bucket's sketch rows as [column, bin, cnt] lists."""
     base = spec_drift_baseline(drift_spec) if baseline is None else baseline
-    numeric_specs = {
-        c: (e["lo"], e["hi"], e["n_bins"])
-        for c, e in base["columns"].items()
-        if c in set(drift_spec.columns) and e["kind"] == "hist"
-    }
-    cat_cols = [
-        c for c in drift_spec.columns if base["columns"][c]["kind"] == "cat"
-    ]
-    hist, cat = multi_sketch_counts(
-        df, numeric_specs, cat_cols,
-        max_categories=getattr(drift_spec, "max_categories", 10_000),
-    )
-    return _drift_rows(
-        base, drift_spec.columns, hist, cat,
+    counts: dict = {}
+    for r in _collect_sketch(
+        df, base, drift_spec.columns, {"bucket": bucket}, drift_spec.max_categories
+    ):
+        counts.setdefault(r["bucket"], []).append(list(r[1:]))
+    rows = _drift_rows(
+        base, drift_spec.columns, [t for ts in counts.values() for t in ts],
         psi_threshold=drift_spec.psi_threshold,
         ks_threshold=drift_spec.ks_threshold,
     )
+    return rows, counts
 
 
 def _drift_rows(
     base: dict,
     columns: list[str],
-    hist: dict[str, list[int]],
-    cat: dict[str, dict[str, int]],
+    counts,
     psi_threshold: float,
     ks_threshold: float,
 ) -> pd.DataFrame:
-    """Score current counts against a loaded baseline sketch: pandas
+    """Score current sketch rows against a loaded baseline sketch: pandas
     (column, metric, value, threshold, drifted), one psi and one ks row per
     histogram column and one psi row per categorical column, in
-    ``columns`` order. ``hist``/``cat`` hold the current side's counts as
-    :func:`multi_sketch_counts` returns them. A column with no current
-    values and a non-empty baseline is drifted on every row, whatever its
-    value (see the module docstring)."""
+    ``columns`` order. ``counts`` are (column, bin, cnt) triples, summed by
+    :func:`sketch_counts`. A column with no current values and a non-empty
+    baseline is drifted on every row, whatever its value (see the module
+    docstring)."""
+    hist, cat = sketch_counts(base, columns, counts)
     rows = []
     for c in columns:
         entry = base["columns"][c]
@@ -440,6 +352,55 @@ def _drift_rows(
                  "threshold": thr, "drifted": empty or value > thr}
             )
     return pd.DataFrame(rows)
+
+
+def windowed_drift_sketch(
+    stream_df: DataFrame,
+    baseline: dict,
+    columns: list[str],
+    ts_col: str = "ts",
+    window: str = "1 minute",
+    watermark: str = "2 minutes",
+) -> DataFrame:
+    """Watermarked per-window drift sketch of a (streaming) frame:
+    :func:`drift_sketch` keyed by the tumbling window of ``ts_col``, as
+    rows (window_start, window_end, column, bin, cnt). State is bounded by
+    the watermark, never by the input rate, and the output is append-mode
+    capable. Streaming never computes the metric inline: PSI/KS need a
+    window's full bin vector, which exists only once the watermark closes
+    the window; feed completed windows to :func:`drift_rows_report`.
+
+    ``baseline`` is a loaded sketch dict (save_drift_baseline /
+    load_drift_baseline)."""
+    return drift_sketch(
+        stream_df.withWatermark(ts_col, watermark), baseline, columns,
+        {"w": F.window(ts_col, window)},
+    ).select(
+        F.col("w.start").alias("window_start"),
+        F.col("w.end").alias("window_end"),
+        "column", "bin", "cnt",
+    )
+
+
+def drift_rows_report(
+    sketch_rows,
+    baseline: dict,
+    ks_threshold: float = 0.1,
+    psi_threshold: float = 0.2,
+) -> pd.DataFrame:
+    """Score sketch rows (collected Rows or pandas with column, bin, cnt,
+    e.g. from :func:`windowed_drift_sketch`) against the baseline with
+    :func:`_drift_rows`, for every baseline column. Counts of the same
+    (column, bin) are summed, so rows of several windows are scored as the
+    union of those windows; pass one window's rows to score that window."""
+    if isinstance(sketch_rows, pd.DataFrame):
+        counts = sketch_rows[["column", "bin", "cnt"]].itertuples(index=False)
+    else:
+        counts = ((r["column"], r["bin"], r["cnt"]) for r in sketch_rows)
+    return _drift_rows(
+        baseline, list(baseline["columns"]), counts,
+        psi_threshold=psi_threshold, ks_threshold=ks_threshold,
+    )
 
 
 def ecdf_sketch_arrow(

@@ -38,11 +38,13 @@ frame and runs every job in one concurrent wave, with no job depending on
 another. Helper threads run the summary (one collect: per-bucket rows and
 their table-level merge), the duplicate-key groups (one per declared key,
 grouped by the key alone; written to a sink, never collected, their count
-observed on the write) and the drift scan. Alongside them the main thread
-writes the violations row stream. At 100 TB that is the minimum I/O shape:
-full data crosses the scanner for the violations and the summary;
-shuffles touch only ≤ n_buckets partial summaries per task and (conv_id,
-turn_idx) pairs, and nothing unbounded lands on the driver.
+observed on the write) and the drift sketch, keyed by the same bucket, so
+its per-bucket counts merge by summing like the summary rows. Alongside
+them the main thread writes the violations row stream. At 100 TB that is
+the minimum I/O shape: full data crosses the scanner for the violations
+and the summary; shuffles touch only ≤ n_buckets partial summaries per
+task and (conv_id, turn_idx) pairs, and nothing unbounded lands on the
+driver.
 
 Semantics vs the reference (pysemantic/validator.py ::
 DataFrameValidator.clean → SeriesValidator.clean loop): the reference drops
@@ -260,13 +262,16 @@ def _flag(
     """``df`` + the violation bitmap + the bucket id: the referential
     marks as broadcast left-outer joins (fact side unshuffled), then ONE
     fused projection of every row check. df-level pre-rules are the
-    caller's, applied before."""
+    caller's, applied before. A referential check whose dim is not in
+    ``dims`` raises SpecValidationError here, before any job runs."""
+    from pysemantic_spark.errors import SpecValidationError
+
     input_cols = df.columns
     work = df
     ref_flag_cols: list[tuple[str, Column]] = []
     for ref in plan.referential:
         if ref.dim_table not in dims:
-            raise KeyError(
+            raise SpecValidationError(
                 f"referential check {ref.name}: dim table {ref.dim_table!r} "
                 f"not provided (have {sorted(dims)})"
             )
@@ -446,12 +451,17 @@ def execute(
         ``<violations_sink>_dupes``), never collected: their count is
         observed on that sink write (a ``count()`` of the persisted groups
         without a sink);
-      - drift, when the spec has a ``drift:`` block: one fused scan of the
-        drift columns against the baseline, which is loaded and checked
-        before any job starts, so a bad block fails with no sink written.
+      - drift, when the spec has a ``drift:`` block: one drift sketch
+        (``drift.spec_drift_report``) of the drift columns keyed by the
+        bucket, computed on ``df`` (the dim joins stay out of its plan), in
+        the layout of the baseline, which is loaded and checked before any
+        job starts, so a bad block fails with no sink written. The
+        table-level ``drift`` rows are scored over the sum of the buckets'
+        counts, and each bucket's counts ride its partition report row.
     Pass 1 (main thread, full width) writes the violations row stream to
       ``violations_sink``; without a sink nothing reads it, so it is skipped.
-    ``on_drift: fail`` raises only after every job has finished.
+    ``on_drift: fail`` raises only after every job has finished; it
+    scores the call's input as a whole.
 
     Helper threads inherit the caller's local properties (job group,
     description, scheduler pool) and session tags, so ``setJobGroup`` /
@@ -463,8 +473,10 @@ def execute(
     n_rows=int, violations_path=..., drift=pandas or None, timings=dict).
     Tiny frames come back as pandas; anything that can grow with the data
     (violations, dupes) stays a path + lazy handle. ``partition_report``
-    holds bucket, n_rows, n_violating_rows, passed and ``summary``: the
-    bucket's whole summary row as JSON (``_JSON_OPTS``), which
+    holds bucket, n_rows, n_violating_rows, passed, ``summary``: the
+    bucket's whole summary row as JSON (``_JSON_OPTS``), and
+    ``drift_counts``: the bucket's drift sketch rows as [column, bin, cnt]
+    lists (None without a ``drift:`` block), both of which
     ``run_resumable`` keeps per bucket. ``timings`` holds driver wall-clock
     seconds: ``compile_and_plan`` (compile, baseline load, building the
     summary, helper submission, pass-1 planning), ``pass1_violations_write`` (pass 1's
@@ -507,7 +519,8 @@ def execute(
         df = df.dropDuplicates()
     if plan.drop_na:
         df = df.na.drop("any")
-    flagged = _flag(df, plan, dims or {}, _bucket_expr_default(bucket_by, n_buckets))
+    bucket = _bucket_expr_default(bucket_by, n_buckets)
+    flagged = _flag(df, plan, dims or {}, bucket)
     layout = _summary_schema(df.schema, plan)
 
     # one row: the per-bucket rows as a sorted list, and their merge. Built
@@ -538,10 +551,11 @@ def execute(
     def _drift_job():
         from pysemantic_spark.operators.drift import spec_drift_report
 
-        return spec_drift_report(df, plan.drift, baseline)
+        # keyed by the bucket over df, not flagged: the dim joins stay out
+        return spec_drift_report(df, plan.drift, bucket, baseline)
 
     n_dup_keys = 0
-    drift_pdf = None
+    drift_pdf = drift_counts = None
     try:
         with ThreadPoolExecutor(max_workers=3) as pool:
 
@@ -568,7 +582,7 @@ def execute(
             if dupes_fut is not None:
                 dupes, n_dup_keys = dupes_fut.result()
             if drift_fut is not None:
-                drift_pdf = drift_fut.result()
+                drift_pdf, drift_counts = drift_fut.result()
         _mark("pass2_overlapped")
 
         if plan.drift is not None and plan.drift.on_drift == "fail":
@@ -594,6 +608,9 @@ def execute(
     report = pd.DataFrame(
         merged["_buckets"],
         columns=["bucket", "n_rows", "n_violating_rows", "passed", "summary"],
+    )
+    report["drift_counts"] = None if drift_counts is None else pd.Series(
+        [drift_counts.get(b, []) for b in report["bucket"]], index=report.index, dtype=object
     )
     stats, check_counts = _report_frames(merged)
 

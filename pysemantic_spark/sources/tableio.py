@@ -10,18 +10,22 @@ Two implementations behind one interface:
   hash-bucketed Parquet layout (`bucket=NNN/` directories → Spark partition
   pruning prunes scans to pending buckets) plus a JSON checkpoint manifest
   recording per-bucket lineage (input fingerprint), row counts, status,
-  wall time and the bucket's own summary row (the runner's per-bucket
+  wall time, the bucket's own summary row (the runner's per-bucket
   summary: counts, per-check counts, per-column nulls, min/max and distinct
-  sketch), with the summary layout once per manifest. The first bucket of
-  each chunk also carries the chunk record: phase timings, drift rows and
-  the chunk's duplicate-key count and sink.
+  sketch) and its own drift sketch counts with the id of the baseline they
+  were binned under, with the summary layout and the drift scoring (the
+  baseline, columns and thresholds) once per manifest. The first bucket of
+  each chunk also carries the chunk record: phase timings and the chunk's
+  duplicate-key count and sink.
 
 Resume contract (north_star): a killed job restarts and re-validates ONLY
 buckets not marked done in the manifest; the bucket filter is a partition-
 directory filter, so pruning happens at the file index — done buckets are
 never even listed, let alone scanned. `table_report` merges the stored
-summaries of the done buckets, so a killed-and-resumed table reports what
-one `execute()` over the same rows reports, distinct counts included.
+summaries and drift counts of the done buckets, so a killed-and-resumed
+table reports what one `execute()` over the same rows reports, distinct
+counts and drift rows included. ``on_drift: quarantine`` parks exactly the
+buckets whose own counts score drifted, whatever the chunk size.
 """
 
 from __future__ import annotations
@@ -51,6 +55,8 @@ class BucketEntry:
     wall_time_sec: float = 0.0
     stats: dict = field(default_factory=dict)  # the chunk record, first bucket only
     summary: str = ""  # the bucket's summary row as JSON ("" when empty)
+    drift_counts: list = field(default_factory=list)  # [column, bin, cnt] rows
+    drift_baseline: str = ""  # id of the baseline drift_counts were binned under
 
 
 @dataclass
@@ -59,6 +65,9 @@ class Manifest:
     bucket_key: str
     entries: dict[int, BucketEntry] = field(default_factory=dict)
     summary_schema: dict = field(default_factory=dict)  # StructType JSON
+    # the last run's drift scoring: base (the baseline sketch), columns,
+    # psi_threshold and ks_threshold; {} without a drift: block
+    drift: dict = field(default_factory=dict)
 
     def pending(self) -> list[int]:
         # quarantined buckets are parked, not retried: their data drifted
@@ -189,8 +198,9 @@ def requalify_buckets(
     list must name only quarantined buckets (naming a done/pending one
     raises — requalify is a quarantine-release action, not a generic
     status reset; use the CLI validate without --resume for a full
-    re-run). Drift evidence recorded in entry.stats is kept for audit.
-    Returns the buckets requalified."""
+    re-run). The drift evidence recorded in each entry (``drift_counts``
+    and ``drift_baseline``) is kept for audit until the bucket is
+    revalidated. Returns the buckets requalified."""
     manifest = io.load_manifest()
     quarantined = set(manifest.quarantined())
     if buckets is None:
@@ -243,6 +253,13 @@ class IcebergIO:
 # Resumable validation driver
 # ---------------------------------------------------------------------------
 
+def _baseline_id(base: dict) -> str:
+    """Identity of a loaded drift baseline: md5 of its canonical JSON."""
+    import hashlib
+
+    return hashlib.md5(json.dumps(base, sort_keys=True).encode()).hexdigest()
+
+
 def run_resumable(
     spark: SparkSession,
     io: ParquetManifestIO,
@@ -258,23 +275,28 @@ def run_resumable(
     manifest is atomically rewritten, so a kill loses at most one chunk of
     work. ``max_chunks`` bounds this run (used by tests to simulate a kill).
 
-    Drift action (spec ``drift.on_drift``): ``ignore`` records the drift
-    rows in the manifest and completes the chunk; ``quarantine`` marks the
-    chunk's buckets status="quarantined" — they are NOT revalidated on
-    resume (pending() skips them) until an operator clears the status or
-    refreshes the baseline; ``fail`` propagates DriftDetectedError from
-    execute() with the chunk left pending (at-least-once semantics: rerun
-    revalidates it).
-
-    Each bucket's entry keeps its own summary row from execute()'s
-    partition report, and the manifest keeps their layout, for
-    :func:`table_report`. The chunk's first bucket also keeps the chunk
-    record: ``phase_timings``, ``drift`` rows, and ``n_dup_keys`` and
+    Each bucket's entry keeps its own summary row and drift sketch counts
+    from execute()'s partition report, and the id of the baseline the
+    counts were binned under; the manifest keeps the summary layout and
+    the drift scoring, for :func:`table_report`. The chunk's first bucket
+    also keeps the chunk record: ``phase_timings``, and ``n_dup_keys`` and
     ``dupes_path`` of the chunk's duplicate-key groups.
+
+    Drift action (spec ``drift.on_drift``): ``ignore`` records the counts
+    and completes the buckets; ``quarantine`` marks status="quarantined"
+    exactly the buckets whose OWN counts score drifted, so the parked set
+    does not depend on ``chunk_size``. A bucket with no rows is never
+    quarantined; one whose drift column is all NULL is drifted (the
+    empty-side rule of ``drift._drift_rows``). Parked buckets are NOT
+    revalidated on resume (pending() skips them) until an operator
+    requalifies them. ``fail`` propagates DriftDetectedError from
+    execute(), which scores the chunk's input as a whole, with the chunk
+    left pending (at-least-once semantics: rerun revalidates it).
 
     Returns {"processed": [...buckets], "skipped": [...already-done],
     "quarantined": [...buckets parked this or earlier runs]}.
     """
+    from pysemantic_spark.operators.drift import _drift_rows, spec_drift_baseline
     from pysemantic_spark.operators.runner import _summary_schema, execute
     from pysemantic_spark.plans.compiler import CheckPlan, compile_spec
 
@@ -292,6 +314,13 @@ def run_resumable(
     ]
     run_id = uuid.uuid4().hex[:12]
     violations_dir = violations_dir or os.path.join(io.root, "violations")
+    scoring, baseline_id = {}, ""
+    if plan.drift is not None:
+        d = plan.drift
+        scoring = {"base": spec_drift_baseline(d), "columns": d.columns,
+                   "psi_threshold": d.psi_threshold, "ks_threshold": d.ks_threshold}
+        baseline_id = _baseline_id(scoring["base"])
+    quarantine = plan.drift is not None and plan.drift.on_drift == "quarantine"
 
     processed: list[int] = []
     chunks = [
@@ -310,23 +339,25 @@ def run_resumable(
         )
         wall = time.time() - t0
         report = out["partition_report"].set_index("bucket")
-        drift_pdf = out["drift"]
-        quarantine_chunk = (
-            plan.drift is not None
-            and plan.drift.on_drift == "quarantine"
-            and bool(drift_pdf["drifted"].any())
-        )
         manifest.summary_schema = json.loads(_summary_schema(df.schema, plan).json())
+        manifest.drift = scoring
         for b in chunk:
             e = manifest.entries.get(b) or BucketEntry(b)
+            counts = None
             if b in report.index:
                 e.n_rows = int(report.loc[b, "n_rows"])
                 e.n_violating_rows = int(report.loc[b, "n_violating_rows"])
                 e.passed = bool(report.loc[b, "passed"])
                 e.summary = report.loc[b, "summary"]
+                counts = report.loc[b, "drift_counts"]
             else:  # bucket empty
                 e.n_rows, e.n_violating_rows, e.passed, e.summary = 0, 0, True, ""
-            e.status = "quarantined" if quarantine_chunk else "done"
+            e.drift_counts, e.drift_baseline = counts or [], baseline_id
+            drifted = (
+                quarantine and counts is not None
+                and bool(_drift_rows(counts=counts, **scoring)["drifted"].any())
+            )
+            e.status = "quarantined" if drifted else "done"
             e.run_id = run_id
             e.wall_time_sec = round(wall / len(chunk), 3)
             e.input_fingerprint = io._bucket_fingerprint(b)
@@ -334,14 +365,12 @@ def run_resumable(
             if b == chunk[0]:
                 # the chunk record: per-phase wall clock (a resumed job's
                 # operator can spot a degrading phase without any external
-                # metrics store), drift rows, and the chunk's dup-key facts
+                # metrics store) and the chunk's dup-key facts
                 e.stats = {
                     "phase_timings": out["timings"],
                     "n_dup_keys": out["n_dup_keys"],
                     "dupes_path": out["dupes_path"],
                 }
-                if drift_pdf is not None:
-                    e.stats["drift"] = drift_pdf.to_dict(orient="records")
             manifest.entries[b] = e
         io.save_manifest(manifest)
         processed.extend(chunk)
@@ -364,18 +393,31 @@ def table_report(io: ParquetManifestIO) -> dict:
     validated under one spec (the manifest keeps one summary layout).
 
     Returns dict(n_rows=int, n_violating_rows=int, all_passed=bool,
-    stats=pandas, check_counts=pandas, partition_report=pandas) with
-    execute()'s columns; partition_report lists every done bucket, an
-    empty one with 0 rows, where execute() lists only buckets with rows.
+    stats=pandas, check_counts=pandas, partition_report=pandas,
+    drift=pandas or None, drift_excluded=list) with execute()'s columns;
+    partition_report lists every done bucket, an empty one with 0 rows,
+    where execute() lists only buckets with rows.
+
+    ``drift`` is execute()'s drift rows (``drift._drift_rows``) over the
+    summed drift counts of the done buckets, scored with the manifest's
+    drift scoring (None when the last run had no ``drift:`` block): sums
+    of exact counts, so a resumed table reports what one execute() reports.
+    Counts merge only under one baseline: a refreshed baseline bins with
+    new lo/hi, so only done buckets whose counts were binned under the
+    manifest's current baseline (same ``drift_baseline`` id) enter the
+    sum. The other done buckets are named in ``drift_excluded`` (sorted);
+    they leave ``drift`` and enter every other number.
+
     Duplicate keys are NOT merged: each chunk's
     ``n_dup_keys``/``dupes_path`` stay on its chunk record, because a key
     whose copies span chunks is in no chunk's groups (ROADMAP item 1(a)),
     so a sum would undercount. Runs one small Spark job on the active
     session; the stored rows enter it as one JSON literal, so no Python
-    worker starts.
+    worker starts. The drift sums are plain Python, with no Spark job.
     """
     import pandas as pd
 
+    from pysemantic_spark.operators.drift import _drift_rows
     from pysemantic_spark.operators.runner import _JSON_OPTS, _report, _report_frames
 
     m = io.load_manifest()
@@ -393,6 +435,12 @@ def table_report(io: ParquetManifestIO) -> dict:
         [(e.bucket, e.n_rows, e.n_violating_rows, bool(e.passed)) for e in done],
         columns=["bucket", "n_rows", "n_violating_rows", "passed"],
     )
+    drift, excluded = None, []
+    if m.drift:
+        bid = _baseline_id(m.drift["base"])
+        excluded = [e.bucket for e in done if e.drift_baseline != bid]
+        counts = [t for e in done if e.drift_baseline == bid for t in e.drift_counts]
+        drift = _drift_rows(counts=counts, **m.drift)
     return {
         "n_rows": merged["n_rows"],
         "n_violating_rows": merged["n_violating_rows"],
@@ -400,4 +448,6 @@ def table_report(io: ParquetManifestIO) -> dict:
         "stats": stats,
         "check_counts": check_counts,
         "partition_report": report,
+        "drift": drift,
+        "drift_excluded": excluded,
     }

@@ -149,8 +149,8 @@ class DriftSpec:
     max_categories: int = 10_000
     # what execute()/run_resumable do when a drift metric crosses its
     # threshold: "ignore" (report rows only), "fail" (raise), or
-    # "quarantine" (run_resumable marks the chunk quarantined and skips it
-    # on resume)
+    # "quarantine" (run_resumable marks each bucket whose own counts drift
+    # quarantined and skips it on resume)
     on_drift: str = "ignore"
 
     def __post_init__(self) -> None:

@@ -1,11 +1,18 @@
 from __future__ import annotations
 
+import os
 import random
 
 import pandas as pd
 import pytest
 
 from pysemantic_spark.session import get_spark
+
+# The session's default driver heap (48g) is sized for a cluster driver: on
+# a host with less memory the JVM grows its heap past what the host has
+# and is OOM-killed mid-suite. The tests' data is small; 4g holds the whole
+# suite (driver JVM peak RSS 4.6-5.1 GB on a 4-core, 16 GB host).
+os.environ.setdefault("SPARK_DRIVER_MEMORY", "4g")
 
 
 @pytest.fixture(scope="session")

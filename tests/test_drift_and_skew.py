@@ -25,8 +25,24 @@ def frames(spark):
     )
 
 
+def _layout(hist=None, cats=()):
+    """A baseline bin layout: ``hist`` maps numeric columns to (lo, hi,
+    n_bins); ``cats`` are categorical columns."""
+    cols = {c: {"kind": "hist", "lo": lo, "hi": hi, "n_bins": nb}
+            for c, (lo, hi, nb) in (hist or {}).items()}
+    cols.update({c: {"kind": "cat"} for c in cats})
+    return {"columns": cols}
+
+
+def _counts(df, layout, max_categories=10_000):
+    """(hist, cat) of ``df`` through drift_sketch and sketch_counts."""
+    cols = list(layout["columns"])
+    rows = drift._collect_sketch(df, layout, cols, None, max_categories)
+    return drift.sketch_counts(layout, cols, rows)
+
+
 def _hist(df, col="v", lo=0.0, hi=200.0, n_bins=32):
-    return drift.multi_sketch_counts(df, {col: (lo, hi, n_bins)}, [])[0][col]
+    return _counts(df, _layout({col: (lo, hi, n_bins)}))[0][col]
 
 
 def test_no_drift_between_same_distributions(spark, frames):
@@ -45,8 +61,8 @@ def test_drift_detected_on_shift(spark, frames):
 
 def test_categorical_psi(spark, frames):
     dfb, dfs, _, _ = frames
-    b = drift.multi_sketch_counts(dfb, {}, ["g"])[1]["g"]
-    c = drift.multi_sketch_counts(dfs, {}, ["g"])[1]["g"]
+    b = _counts(dfb, _layout(cats=["g"]))[1]["g"]
+    c = _counts(dfs, _layout(cats=["g"]))[1]["g"]
     assert drift._cat_psi_laplace(b, c) < 0.02
     skewed = drift._cat_psi_laplace(b, {"0": 100, "1": 1})
     assert skewed > 0.5
@@ -65,10 +81,11 @@ def test_ecdf_sketch_arrow(spark, frames):
     assert abs(med - exp) < 1.0
 
 
-def test_ks_between_matches_numpy(spark, frames):
+def test_ks_counts_matches_numpy(spark, frames):
+    """_ks_counts over the sketch's bin counts equals numpy's KS over the
+    same binning."""
     dfb, _, dfx, base = frames
-    got = drift.ks_between(dfb, dfx, "v", lo=0.0, hi=200.0, n_bins=20).collect()[0]
-    assert got["column"] == "v"
+    got = drift._ks_counts(_hist(dfb, n_bins=20), _hist(dfx, n_bins=20))
     # numpy oracle: same binning, cumulative diff
     xb = base["v"].to_numpy()
     xx = dfx.toPandas()["v"].to_numpy()
@@ -81,21 +98,34 @@ def test_ks_between_matches_numpy(spark, frames):
 
     cb, cc = counts(xb), counts(xx)
     exp = np.max(np.abs(np.cumsum(cb) / cb.sum() - np.cumsum(cc) / cc.sum()))
-    assert abs(got["ks"] - exp) < 1e-5
+    assert abs(got - exp) < 1e-5
     # sanity: shifted distribution drifts hard
-    assert got["ks"] > 0.3
+    assert got > 0.3
 
 
-def test_multi_sketch_counts_matches_pandas(spark, frames):
+def test_drift_sketch_counts_match_pandas(spark, frames):
+    """drift_sketch's rows, summed by sketch_counts, equal pandas bin counts
+    and value counts, unkeyed and keyed by a bucket (each bucket's rows
+    are that bucket's counts)."""
     dfb, _, _, base = frames
-    hist, cat = drift.multi_sketch_counts(
-        dfb, {"v": (0.0, 200.0, 10)}, ["g"]
-    )
-    w = 200.0 / 10
-    b = np.clip(np.floor((base["v"].to_numpy() - 0.0) / w).astype(int) + 1, None, 11)
-    b = np.where(base["v"].to_numpy() < 0.0, 0, b)
-    assert hist["v"] == list(np.bincount(b, minlength=12))
+    layout = _layout({"v": (0.0, 200.0, 10)}, ["g"])
+
+    def bins(v):
+        w = 200.0 / 10
+        b = np.clip(np.floor((v - 0.0) / w).astype(int) + 1, None, 11)
+        return list(np.bincount(np.where(v < 0.0, 0, b), minlength=12))
+
+    hist, cat = _counts(dfb, layout)
+    assert hist["v"] == bins(base["v"].to_numpy())
     assert cat["g"] == {str(k): int(v) for k, v in base["g"].value_counts().items()}
+    rows = drift._collect_sketch(
+        dfb, layout, ["v", "g"], {"bucket": (F.col("g") % 2).cast("int")}, 10_000
+    )
+    for b in (0, 1):
+        part = base[base["g"] % 2 == b]
+        h, c = drift.sketch_counts(layout, ["v", "g"], [r[1:] for r in rows if r["bucket"] == b])
+        assert h["v"] == bins(part["v"].to_numpy())
+        assert c["g"] == {str(k): int(v) for k, v in part["g"].value_counts().items()}
 
 
 def test_spec_drift_wired_into_execute(spark, frames, tmp_path):
@@ -153,6 +183,25 @@ def test_spec_drift_compile_validation():
         DatasetSpec.from_dict("t", {"drift": {"columns": ["v"], "baseline": "b.json"}})
     )
     assert plan.drift is not None and plan.drift.columns == ["v"]
+
+
+
+def test_drift_oracle_rows_match_duckdb(spark):
+    """The five drift rows of the driver contract (batch PSI/KS, the spec
+    drift block through execute(), both streaming sketches) match their
+    DuckDB oracles at sf0.001, the fixture beside the one
+    tools/check_oracle.py reads by default."""
+    import inspect
+    import os
+    import sys
+
+    sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+    from tools import check_oracle
+
+    default = inspect.signature(check_oracle.main).parameters["sf_dir"].default
+    rows = ["psi_drift_documents", "ks_drift_documents", "spec_drift_documents",
+            "streaming_drift_events", "streaming_drift_append_events"]
+    assert check_oracle.main(os.path.join(os.path.dirname(default), "sf0.001"), only=rows) == 0
 
 
 # --- skew ------------------------------------------------------------------
@@ -222,14 +271,36 @@ def test_categorical_drift_cardinality_guard(spark):
         F.concat(F.lit("user_"), F.col("id")).alias("user_id")
     )
     with pytest.raises(SpecValidationError, match="max_categories"):
-        drift.multi_sketch_counts(wide, {}, ["user_id"], max_categories=10_000)
+        _counts(wide, _layout(cats=["user_id"]), max_categories=10_000)
     # bounded cardinality still sketches fine under the same cap
     small = spark.range(1_000_000).select(
         (F.col("id") % 7).cast("string").alias("bucketed")
     )
-    _, cat = drift.multi_sketch_counts(small, {}, ["bucketed"], max_categories=10_000)
+    _, cat = _counts(small, _layout(cats=["bucketed"]), max_categories=10_000)
     assert sum(cat["bucketed"].values()) == 1_000_000
     assert len(cat["bucketed"]) == 7
+
+
+def test_categorical_drift_guard_counts_categories_across_buckets(spark):
+    """Keyed by bucket, the guard counts a column's distinct values over
+    all buckets, not its rows: 8 buckets that each hold all 240 values are
+    240 categories in 1,920 sketch rows. At the cap the collect is exactly
+    its stated bound, buckets × max_categories rows; one under, it refuses."""
+    from pysemantic_spark.errors import SpecValidationError
+
+    df = spark.range(2_400).select(
+        (F.col("id") % 240).cast("string").alias("c"),
+        ((F.col("id") / 240).cast("int") % 8).alias("k"),
+    )
+    layout, by = _layout(cats=["c"]), {"bucket": F.col("k")}
+    with pytest.raises(SpecValidationError, match="max_categories"):
+        drift._collect_sketch(df, layout, ["c"], by, max_categories=239)
+    rows = drift._collect_sketch(df, layout, ["c"], by, max_categories=240)
+    assert len(rows) == 8 * 240
+    assert {r["bucket"] for r in rows} == set(range(8))
+    assert sum(r["cnt"] for r in rows) == 2_400
+    _, cat = drift.sketch_counts(layout, ["c"], [r[1:] for r in rows])
+    assert len(cat["c"]) == 240 and sum(cat["c"].values()) == 2_400
 
 
 def test_drift_baseline_respects_max_categories(spark):
@@ -257,23 +328,23 @@ def test_spec_drift_max_categories_knob(spark, frames, tmp_path):
         {"drift": {"columns": ["gs"], "baseline": bl, "max_categories": 2}},
     )
     with pytest.raises(SpecValidationError, match="max_categories"):
-        spec_drift_report(cats, spec.drift)
+        spec_drift_report(cats, spec.drift, F.lit(0))
     ok = DatasetSpec.from_dict(
         "t", {"drift": {"columns": ["gs"], "baseline": bl, "max_categories": 10}}
     )
-    rep = spec_drift_report(cats, ok.drift)
+    rep, _ = spec_drift_report(cats, ok.drift, F.lit(0))
     assert set(rep["column"]) == {"gs"}
 
 
-def test_ks_between_empty_side_is_not_null(spark, frames):
-    """ADVICE r2: an empty side must NOT surface as ks=NULL (silently read
-    as 'no drift') — the distributed path now mirrors _ks_counts'
-    max(total, 1) guard and reports the full divergence instead."""
+def test_ks_counts_empty_side_is_not_null(spark, frames):
+    """ADVICE r2: an empty side must NOT surface as a missing KS (silently
+    read as 'no drift'): _ks_counts floors the empty total at 1 and
+    reports the full divergence, a number."""
     dfb, _, _, _ = frames
     empty = dfb.filter(F.lit(False))
-    row = drift.ks_between(empty, dfb, "v", lo=0.0, hi=200.0, n_bins=16).first()
-    assert row["ks"] is not None
-    assert row["ks"] == pytest.approx(1.0, abs=1e-6)
+    ks = drift._ks_counts(_hist(empty, n_bins=16), _hist(dfb, n_bins=16))
+    assert ks is not None
+    assert ks == pytest.approx(1.0, abs=1e-6)
 
 
 def test_spec_drift_empty_current_column_is_drifted(spark, tmp_path):
@@ -292,9 +363,9 @@ def test_spec_drift_empty_current_column_is_drifted(spark, tmp_path):
     bl = str(tmp_path / "bl.json")
     save_drift_baseline(base, ["c", "v"], bl)
     spec = DatasetSpec.from_dict("t", {"drift": {"columns": ["c", "v"], "baseline": bl}})
-    rep = spec_drift_report(cur, spec.drift).set_index(["column", "metric"])
+    rep = spec_drift_report(cur, spec.drift, F.lit(0))[0].set_index(["column", "metric"])
     assert rep.loc[("c", "psi"), "value"] == 0.0
     assert bool(rep.loc[("c", "psi"), "drifted"])
     # columns with current values drift by their formulas only
-    same = spec_drift_report(base, spec.drift).set_index(["column", "metric"])
+    same = spec_drift_report(base, spec.drift, F.lit(0))[0].set_index(["column", "metric"])
     assert not same["drifted"].any()

@@ -8,10 +8,12 @@ known-good recipe instead of rediscovering it."""
 from __future__ import annotations
 
 import sys
+from pathlib import Path
 
 import pytest
 
-sys.path.insert(0, "/root/repo")
+# this checkout's tools, whatever the cwd
+sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
 
 from tools import iceberg_smoke as ism
 

@@ -116,53 +116,25 @@ def test_ngram_inverted_index_no_cartesian(spark):
 
 
 def test_drift_sketch_scan_is_pruned_and_single(spark, parts):
-    """The spec-drift current-side sketch must read ONLY the drift columns
-    (ReadSchema pruning through the posexplode) and scan the table once for
-    ALL drift columns together."""
+    """The drift sketch execute() collects (drift_sketch, keyed by the
+    bucket) reads ONLY the drift columns and the bucket key, and scans the
+    table once for ALL drift columns together."""
     from pysemantic_spark.operators import drift
+    from pysemantic_spark.operators.runner import _bucket_expr_default
 
     df, _, _ = parts
-    # capture the plan of the sketch aggregation (same DAG multi_sketch_counts
-    # collects): two numeric + one categorical column in ONE scan
-    exprs = [
-        drift.bin_expr("turn_idx", 0.0, 50.0, 16).cast("string"),
-        F.col("role").cast("string"),
-    ]
-    agg = (
-        df.select(F.posexplode(F.array(*exprs)).alias("ci", "val"))
-        .filter(F.col("val").isNotNull())
-        .groupBy("ci", "val")
-        .agg(F.count(F.lit(1)).alias("cnt"))
+    layout = {"columns": {
+        "turn_idx": {"kind": "hist", "lo": 0.0, "hi": 50.0, "n_bins": 16},
+        "role": {"kind": "cat"},
+    }}
+    sketch = drift.drift_sketch(
+        df, layout, ["turn_idx", "role"], {"bucket": _bucket_expr_default("conv_id", 8)}
     )
-    plan = _plan(agg)
+    plan = _plan(sketch)
     assert plan.count("FileScan parquet") == 1
     m = re.search(r"ReadSchema: struct<([^>]*)>", plan)
     read_cols = {c.split(":")[0] for c in m.group(1).split(",") if c}
-    assert read_cols == {"turn_idx", "role"}  # text/ts/conv_id never read
-
-
-def test_ks_between_scans_are_pruned(spark, parts):
-    """ks_between and psi_between (one shared bin spine) read only the
-    drift column on both sides; ks's window cumsum runs over the
-    aggregated n_bins-row spine, never input rows."""
-    from pysemantic_spark.operators.drift import ks_between, psi_between
-
-    df, _, _ = parts
-    base = df.filter(F.col("turn_idx") % 2 == 0)
-    cur = df.filter(F.col("turn_idx") % 2 == 1)
-    plans = {
-        fn.__name__: _plan(fn(base, cur, "turn_idx", 0.0, 50.0, n_bins=16))
-        for fn in (ks_between, psi_between)
-    }
-    for name, plan in plans.items():
-        scans = re.findall(r"ReadSchema: struct<([^>]*)>", plan)
-        assert scans, name
-        for m in scans:
-            cols = {c.split(":")[0] for c in m.split(",") if c}
-            assert cols <= {"turn_idx"}, (name, cols)
-    # the window operates post-aggregation: it must appear above an agg of
-    # the 18-row bin spine, so no Exchange of input-sized data feeds it
-    assert "Window" in plans["ks_between"]
+    assert read_cols == {"turn_idx", "role", "conv_id"}  # text/ts never read
 
 
 def _summary(spark, pdf, spec_dict):

@@ -319,8 +319,8 @@ def test_execute_bad_drift_block_fails_before_any_sink(spark, tmp_path):
 
 def test_run_resumable_quarantines_drifted_chunk(spark, tmp_path):
     """VERDICT r2 #9: on_drift: quarantine parks the drifted chunk's
-    buckets (status=quarantined, recorded drift rows) and a rerun SKIPS
-    them instead of revalidating."""
+    buckets (status=quarantined, each with its own drift counts) and a
+    rerun SKIPS them instead of revalidating."""
     import pandas as pd
     import numpy as np
 
@@ -351,8 +351,145 @@ def test_run_resumable_quarantines_drifted_chunk(spark, tmp_path):
     m = io.load_manifest()
     assert m.pending() == []  # parked, not retried
     assert all(e.status == "quarantined" for e in m.entries.values())
-    # drift evidence rides the manifest
-    assert any("drift" in e.stats for e in m.entries.values())
+    # per-bucket drift evidence rides the manifest: every quarantined
+    # entry carries its own counts (all of its rows, v has no NULLs),
+    # which score drifted on their own
+    from pysemantic_spark.operators.drift import _drift_rows
+
+    for e in m.entries.values():
+        assert e.drift_baseline and sum(n for _, _, n in e.drift_counts) == e.n_rows > 0
+        assert _drift_rows(counts=e.drift_counts, **m.drift)["drifted"].all()
     second = run_resumable(spark, io, spec, chunk_size=4)
     assert second["processed"] == []
     assert sorted(second["quarantined"]) == [0, 1, 2, 3]
+
+
+# ---------------------------------------------------------------------------
+# per-bucket drift: the ROADMAP probe shape
+# ---------------------------------------------------------------------------
+
+
+@pytest.fixture(scope="module")
+def probe(spark, tmp_path_factory):
+    """4,000 rows in 8 buckets on conv_id, ``v`` ~ N(100, 10) with bucket
+    3's ``v`` shifted by +60, as a bucketed table; and a 20-bin baseline
+    of the unshifted rows. Returns (io, baseline path)."""
+    import numpy as np
+    import pandas as pd
+
+    from pysemantic_spark.operators.drift import save_drift_baseline
+    from pysemantic_spark.operators.runner import _bucket_expr_default
+
+    rng = np.random.default_rng(11)
+    base = spark.createDataFrame(pd.DataFrame({
+        "conv_id": [f"c{i % 400:08d}" for i in range(4_000)],
+        "v": rng.normal(100, 10, 4_000),
+    }))
+    in3 = _bucket_expr_default("conv_id", N_BUCKETS) == 3
+    shifted = base.withColumn("v", F.when(in3, F.col("v") + 60).otherwise(F.col("v")))
+    root = tmp_path_factory.mktemp("probe")
+    bl = str(root / "bl.json")
+    save_drift_baseline(base, ["v"], bl, n_bins=20)
+    io = ParquetManifestIO(str(root / "tbl"))
+    io.write_bucketed(shifted, "conv_id", N_BUCKETS)
+    return io, bl
+
+
+def _drift_spec(bl, on_drift):
+    from pysemantic_spark.spec import DatasetSpec
+
+    return DatasetSpec.from_dict(
+        "t", {"drift": {"columns": ["v"], "baseline": bl, "n_bins": 20,
+                        "on_drift": on_drift}},
+    )
+
+
+def _killed_and_resumed(spark, io, spec, chunk_size):
+    """Every bucket back to pending, a run killed after one chunk, and its
+    resume."""
+    m = io.load_manifest()
+    for e in m.entries.values():
+        e.status = "pending"
+    io.save_manifest(m)
+    run_resumable(spark, io, spec, chunk_size=chunk_size, max_chunks=1)
+    return run_resumable(spark, io, spec, chunk_size=chunk_size)
+
+
+@pytest.mark.parametrize("chunk_size", [1, 2, N_BUCKETS])
+def test_resumed_drift_is_per_bucket(spark, probe, chunk_size):
+    """Killed and resumed at any chunk size, ``table_report``'s drift rows
+    equal one execute()'s over the same rows, value for value, and
+    ``on_drift: quarantine`` parks exactly the shifted bucket."""
+    from pysemantic_spark.operators.runner import execute
+    from pysemantic_spark.sources.tableio import table_report
+
+    io, bl = probe
+    spec = _drift_spec(bl, "ignore")
+    _killed_and_resumed(spark, io, spec, chunk_size)
+    got = table_report(io)
+    df = io.read_buckets(spark, list(range(N_BUCKETS))).drop("bucket")
+    want = execute(spark, df, spec, bucket_by="conv_id", n_buckets=N_BUCKETS)
+    assert got["drift"].to_dict("records") == want["drift"].to_dict("records")
+    assert got["drift"]["drifted"].any() and got["drift_excluded"] == []
+
+    out = _killed_and_resumed(spark, io, _drift_spec(bl, "quarantine"), chunk_size)
+    assert out["quarantined"] == [3]
+    m = io.load_manifest()
+    assert sorted(b for b, e in m.entries.items() if e.status == "done") == [
+        0, 1, 2, 4, 5, 6, 7
+    ]
+
+
+def test_table_report_drift_merges_only_the_current_baseline(spark, probe, tmp_path):
+    """After a baseline refresh, requalify and resume, the done buckets
+    were binned under two baselines. ``table_report`` scores only those
+    binned under the manifest's current baseline and names the rest in
+    ``drift_excluded``; every other number still covers all done buckets."""
+    import shutil
+
+    from pysemantic_spark.operators.drift import save_drift_baseline
+    from pysemantic_spark.operators.runner import execute
+    from pysemantic_spark.sources.tableio import requalify_buckets, table_report
+
+    io, bl0 = probe
+    bl = str(tmp_path / "bl.json")
+    shutil.copy(bl0, bl)
+    spec = _drift_spec(bl, "quarantine")
+    assert _killed_and_resumed(spark, io, spec, 2)["quarantined"] == [3]
+    assert table_report(io)["drift_excluded"] == []
+
+    # the operator accepts the drift: a baseline refreshed from the parked
+    # bucket has new lo/hi
+    save_drift_baseline(io.read_buckets(spark, [3]).drop("bucket"), ["v"], bl, n_bins=20)
+    assert requalify_buckets(io) == [3]
+    resumed = run_resumable(spark, io, spec, chunk_size=2)
+    assert resumed["processed"] == [3] and resumed["quarantined"] == []
+    got = table_report(io)
+    assert got["drift_excluded"] == [0, 1, 2, 4, 5, 6, 7]
+    assert got["n_rows"] == 4_000
+    want = execute(
+        spark, io.read_buckets(spark, [3]).drop("bucket"), spec,
+        bucket_by="conv_id", n_buckets=N_BUCKETS,
+    )
+    assert got["drift"].to_dict("records") == want["drift"].to_dict("records")
+
+
+def test_cli_validate_missing_dim_exits_1(spark, tmp_path, capsys):
+    """`validate` with a spec whose referential dim is not passed via
+    --dim prints one line naming the check and the missing dim, and exits
+    1, before any job runs."""
+    import os
+
+    from pysemantic_spark.cli import main as cli_main
+
+    io = ParquetManifestIO(str(tmp_path / "tbl"))
+    io.write_bucketed(spark.createDataFrame(transcripts_pdf(n_rows=200)), "conv_id", 4)
+    spec = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+                        "specs", "transcripts.yaml")
+    capsys.readouterr()
+    rc = cli_main(["validate", "--spec", spec, "--dataset", "transcripts",
+                   "--table", io.root])
+    err = capsys.readouterr().err.strip().splitlines()
+    assert rc == 1
+    assert len(err) == 1 and "referential:tool" in err[0] and "dim_tools" in err[0], err
+    assert "Traceback" not in err[0]

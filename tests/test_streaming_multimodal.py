@@ -1,70 +1,12 @@
-"""Structured Streaming validation and streaming drift tests."""
+"""Streaming drift tests: the window-keyed drift sketch and its scorer."""
 
 from __future__ import annotations
 
 import numpy as np
 import pandas as pd
-import pytest
 from pyspark.sql import functions as F
 
-from pysemantic_spark.fixtures import dim_tools_pdf, transcripts_pdf, transcripts_spec
-from pysemantic_spark.streaming import validate_stream as vs
-
-
-def test_streaming_violations_match_batch(spark, tmp_path):
-    pdf = transcripts_pdf(n_rows=3_000)
-    src = str(tmp_path / "src")
-    spark.createDataFrame(pdf).write.parquet(src)
-    schema = spark.read.parquet(src).schema
-    dims = {"dim_tools": spark.createDataFrame(dim_tools_pdf())}
-    spec = transcripts_spec()
-
-    stream = spark.readStream.schema(schema).parquet(src)
-    assert stream.isStreaming
-    viol = vs.violation_stream(stream, spec, ["conv_id", "turn_idx"], dims)
-    q = (
-        viol.writeStream.format("memory")
-        .queryName("viols")
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    got = spark.sql("select check_name, count(*) n from viols group by 1").collect()
-    got_counts = {r["check_name"]: r["n"] for r in got}
-
-    # batch reference
-    from pysemantic_spark.operators.runner import validate
-
-    batch = validate(spark, spark.read.parquet(src), spec, dims=dims)
-    exp = {
-        r["check_name"]: r["n_violations"]
-        for r in batch.check_counts.collect()
-        if r["n_violations"] > 0
-    }
-    assert got_counts == exp
-
-
-def test_windowed_counts_stream(spark, tmp_path):
-    pdf = transcripts_pdf(n_rows=2_000)
-    src = str(tmp_path / "src2")
-    spark.createDataFrame(pdf).write.parquet(src)
-    schema = spark.read.parquet(src).schema
-    stream = spark.readStream.schema(schema).parquet(src)
-    wc = vs.windowed_violation_counts(
-        stream, transcripts_spec(), ts_col="ts", window="1 hour",
-        watermark="2 hours",
-        dims={"dim_tools": spark.createDataFrame(dim_tools_pdf())},
-    )
-    q = (
-        wc.writeStream.format("memory").queryName("wc")
-        .outputMode("append").trigger(availableNow=True).start()
-    )
-    q.awaitTermination(120)
-    rows = spark.sql("select * from wc").collect()
-    # ts-null rows fall out of windows; remaining checks aggregate per hour
-    assert {r["check_name"] for r in rows} >= {"levels:role", "min:turn_idx"}
-    assert all(r["n_violations"] > 0 for r in rows)
+from pysemantic_spark.operators import drift
 
 
 def test_windowed_drift_sketch_stream_matches_batch(spark, tmp_path):
@@ -99,7 +41,7 @@ def test_windowed_drift_sketch_stream_matches_batch(spark, tmp_path):
     spark.createDataFrame(cur_pdf).write.parquet(src)
     schema = spark.read.parquet(src).schema
     stream = spark.readStream.schema(schema).parquet(src)
-    sk = vs.windowed_drift_sketch(
+    sk = drift.windowed_drift_sketch(
         stream, baseline, ["v", "cat"], ts_col="ts", window="1 minute"
     )
     q = (
@@ -111,13 +53,13 @@ def test_windowed_drift_sketch_stream_matches_batch(spark, tmp_path):
     assert len(rows) > 0
     assert len({(r["window_start"], r["window_end"]) for r in rows}) == 1
 
-    got = vs.drift_rows_report(rows, baseline).set_index(["column", "metric"])
+    got = drift.drift_rows_report(rows, baseline).set_index(["column", "metric"])
     spec = DatasetSpec.from_dict(
         "t", {"drift": {"columns": ["v", "cat"], "baseline": bl_path}}
     )
     exp = spec_drift_report(
-        spark.createDataFrame(cur_pdf[["v", "cat"]]), spec.drift
-    ).set_index(["column", "metric"])
+        spark.createDataFrame(cur_pdf[["v", "cat"]]), spec.drift, F.lit(0)
+    )[0].set_index(["column", "metric"])
     assert sorted(got.index) == sorted(exp.index)
     for idx in exp.index:
         assert got.loc[idx, "value"] == exp.loc[idx, "value"], idx
@@ -153,7 +95,7 @@ def test_drift_rows_report_scores_several_windows_as_their_union():
         ],
         columns=["window_start", "column", "bin", "cnt"],
     )
-    got = vs.drift_rows_report(rows, baseline).set_index(["column", "metric"])
+    got = drift.drift_rows_report(rows, baseline).set_index(["column", "metric"])
     union_v, union_cat = [0, 50, 50, 0], {"a": 50, "b": 50}
     assert got.loc[("v", "psi"), "value"] == _psi_laplace_counts(
         baseline["columns"]["v"]["counts"], union_v) == 0.0
@@ -163,7 +105,7 @@ def test_drift_rows_report_scores_several_windows_as_their_union():
         baseline["columns"]["cat"]["counts"], union_cat) == 0.0
     assert not got["drifted"].any()
     # one window alone still drifts
-    one = vs.drift_rows_report(rows[rows.window_start == w1], baseline)
+    one = drift.drift_rows_report(rows[rows.window_start == w1], baseline)
     assert one.set_index(["column", "metric"]).loc[("v", "psi"), "drifted"]
 
 
@@ -182,9 +124,9 @@ def test_drift_rows_report_empty_column_is_drifted():
         [("2024-01-01 00:00", "v", "1", 50), ("2024-01-01 00:00", "v", "2", 50)],
         columns=["window_start", "column", "bin", "cnt"],
     )
-    got = vs.drift_rows_report(rows, baseline).set_index(["column", "metric"])
+    got = drift.drift_rows_report(rows, baseline).set_index(["column", "metric"])
     assert got.loc[("cat", "psi"), "value"] == 0.0
     assert bool(got.loc[("cat", "psi"), "drifted"])
     assert not got.loc["v", "drifted"].any()
-    empty = vs.drift_rows_report(rows.iloc[:0], baseline)
+    empty = drift.drift_rows_report(rows.iloc[:0], baseline)
     assert empty["drifted"].all()
