@@ -339,23 +339,10 @@ def ngram_jaccard_pairs(
     threshold: float = 0.7,
     max_shingle_freq: int | None = None,
     prefix_filter: bool | None = None,
-    collapse_identical: bool = True,
 ) -> DataFrame:
     """Exact n-gram Jaccard near-dup pairs via inverted-index self-join.
 
     Returns (id_a, id_b, jaccard) with id_a < id_b, jaccard ≥ threshold.
-
-    ``collapse_identical`` (default on) pre-collapses identical token
-    streams to one representative and expands pairs back afterwards —
-    the same lossless band/index skew guard as the MinHash/SimHash
-    miners (:func:`collapse_identical_docs`): m byte-identical docs
-    share EVERY (prefix) shingle, so uncollapsed they are O(m²)
-    candidate pairs on every shared index key; collapsed they are one
-    rep. For identical docs whose every common shingle exceeds a
-    ``max_shingle_freq`` stop-cap this is strictly MORE complete than
-    uncollapsed mining (the cap could previously drop such a pair — the
-    documented lossy corner of the counting path); intra-group pairs
-    carry jaccard 1.0 by construction.
 
     Two exact plans, chosen by the threshold (``prefix_filter=None``,
     the default, picks automatically; True/False force):
@@ -378,30 +365,17 @@ def ngram_jaccard_pairs(
       (documented LOSSY: pairs whose every common shingle is capped are
       missed; the prefix path needs no cap to be exact).
 
-    No crossJoin in either plan."""
-    if collapse_identical:
-        sh_full, groups, clones, small = _fused_collapse(
-            df, id_col, _text_kernel(n)(F.col(text_col)), "_sh"
-        )
-        if not clones:  # no clones anywhere: mine everything, no expansion
-            return _ngram_pairs_on_shingles(
-                sh_full.drop("_tfp"), threshold, max_shingle_freq, prefix_filter
-            )
-        rep_pairs = _ngram_pairs_on_shingles(
-            _rep_rows(sh_full, groups),
-            threshold,
-            max_shingle_freq,
-            prefix_filter,
-        )
-        members_multi, mined = _multi_members_and_mined(sh_full, groups)
-        return _expand_pairs_multi(
-            rep_pairs, members_multi, mined, "jaccard", 1.0, small
-        )
-    sh = _materialize(
-        df.select(F.col(id_col).alias("_id"), _shingles_arrow(text_col, n).alias("_sh"))
-        .withColumn("_size", F.size("_sh"))
+    No crossJoin in either plan. Identical token streams mine as one
+    representative (:func:`_collapse_and_mine`); because of that, identical
+    docs whose every common shingle exceeds ``max_shingle_freq`` still pair,
+    at jaccard 1.0."""
+    pairs, clones = _collapse_and_mine(
+        df, id_col, text_col, n, "_sh",
+        lambda sh: _ngram_pairs_on_shingles(
+            sh, threshold, max_shingle_freq, prefix_filter
+        ),
     )
-    return _ngram_pairs_on_shingles(sh, threshold, max_shingle_freq, prefix_filter)
+    return _expand_pairs_multi(pairs, clones, "jaccard", 1.0)
 
 
 def _ngram_pairs_on_shingles(
@@ -411,9 +385,7 @@ def _ngram_pairs_on_shingles(
     prefix_filter: bool | None = None,
 ) -> DataFrame:
     """The two exact mining plans of :func:`ngram_jaccard_pairs`, over a
-    prepared (materialized) ``(_id, _sh, _size)`` shingle frame — shared
-    by the collapse-on path (which feeds it the representative rows of
-    the fused shingle+fingerprint scan) and the collapse-off path."""
+    prepared (materialized) ``(_id, _sh, _size)`` shingle frame."""
     if prefix_filter is None:
         prefix_filter = threshold >= 0.35
     sizes = sh.select("_id", "_size")
@@ -587,91 +559,6 @@ def token_stream_key(text_col: str) -> "F.Column":
     return F.md5(F.concat_ws(" ", tokens(text_col)))
 
 
-def collapse_identical_docs(
-    df: DataFrame, id_col: str, text_col: str
-) -> tuple[DataFrame, DataFrame]:
-    """Band-bucket skew guard for pair mining: collapse docs with
-    identical token streams to ONE representative (min id) each.
-
-    m byte-identical documents (dead-common at crawl scale: boilerplate,
-    mirrored pages, retry dupes) land in the SAME band bucket of EVERY
-    MinHash/SimHash band, generating O(m²) candidate pairs per band
-    before any verification — the first thing that falls over at 10⁹
-    docs. Mining representatives makes that O(reps²) where all m
-    identical docs contribute 1 rep; the dropped pairs are recovered
-    EXACTLY afterwards by :func:`expand_collapsed_pairs` (identical token
-    streams ⟹ jaccard 1.0 / hamming 0 with each other, and the same
-    score as their rep against everything else), so the guard is
-    lossless, not a capped truncation.
-
-    Returns (rep_df, members): ``rep_df`` = the representative rows of
-    ``df`` (original columns), ``members`` = (_id, _rep) for every doc."""
-    keyed = _materialize(
-        df.select(F.col(id_col), F.col(text_col)).withColumn(
-            "_tfp", token_stream_key(text_col)
-        )
-    )
-    reps = keyed.groupBy("_tfp").agg(F.min(id_col).alias("_rep"))
-    members = keyed.join(reps, "_tfp").select(
-        F.col(id_col).alias("_id"), "_rep"
-    )
-    rep_df = keyed.drop("_tfp").join(
-        reps.select(F.col("_rep").alias(id_col)), id_col, "left_semi"
-    )
-    return rep_df, members
-
-
-def expand_collapsed_pairs(
-    rep_pairs: DataFrame,
-    members: DataFrame,
-    mined_reps: DataFrame,
-    score_col: str | None,
-    identical_score,
-) -> DataFrame:
-    """Expand representative-level pairs back to all-document pairs.
-
-    - cross-group: each (rep_a, rep_b, score) pair expands to every
-      (member_a, member_b) with the SAME score (identical token streams
-      score identically against any third doc).
-    - intra-group: all pairs within a multi-member group, scored
-      ``identical_score`` (jaccard 1.0 / hamming 0) — but only for
-      groups whose rep is in ``mined_reps`` (reps that actually produced
-      a signature/fingerprint row; empty-token or sub-shingle-length
-      docs never mine and must not pair, matching uncollapsed
-      behavior).
-
-    Output ids re-canonicalized to id_a < id_b."""
-    score = [F.col(score_col)] if score_col else []
-    ma = members.select(F.col("_rep").alias("id_a"), F.col("_id").alias("_a"))
-    mb = members.select(F.col("_rep").alias("id_b"), F.col("_id").alias("_b"))
-    cross = (
-        rep_pairs.join(ma, "id_a")
-        .join(mb, "id_b")
-        .select(
-            F.least("_a", "_b").alias("id_a"),
-            F.greatest("_a", "_b").alias("id_b"),
-            *score,
-        )
-    )
-    mm = members.join(
-        mined_reps.select(F.col(mined_reps.columns[0]).alias("_rep")),
-        "_rep",
-        "left_semi",
-    )
-    iscore = (
-        [F.lit(identical_score).alias(score_col)] if score_col else []
-    )
-    intra = (
-        mm.select("_rep", F.col("_id").alias("_a"))
-        .join(mm.select("_rep", F.col("_id").alias("_b")), "_rep")
-        .filter(F.col("_a") < F.col("_b"))
-        .select(
-            F.col("_a").alias("id_a"), F.col("_b").alias("id_b"), *iscore
-        )
-    )
-    return cross.unionByName(intra)
-
-
 # clone-map rows below this measured size broadcast in the expansion
 # joins: ~16 MB serialized at the cap for LONG ids (two 8-byte values per
 # row), far under executor memory, and the alternative is 4-6
@@ -724,35 +611,57 @@ def _fused_collapse(
     return full, groups, row["g"] > 0, row["m"] <= _BROADCAST_MEMBERS
 
 
-def _rep_rows(sh_full: DataFrame, groups: DataFrame) -> DataFrame:
-    """Representative rows of a fused (shingle or token) frame (one per distinct
-    token stream) — the collapsed mining input. A semi join against the
-    cached group reps; materialized so the mining plan's several
-    references (sizes, inverted index, verify arrays) share one copy."""
-    return _materialize(
-        sh_full.join(
+def _collapse_and_mine(
+    df: DataFrame, id_col: str, text_col: str, n: int, arr_col: str, mine
+) -> tuple[DataFrame, tuple[DataFrame, DataFrame, bool] | None]:
+    """The identical-doc guard behind every text miner: docs with the same
+    token stream mine as ONE representative (the group's min id).
+
+    m byte-identical documents (dead-common at crawl scale: boilerplate,
+    mirrored pages, retry dupes) share every shingle and land in the same
+    bucket of every MinHash/SimHash band and index key, so mined as-is
+    they cost O(m²) candidate rows before any verification — the first
+    thing that falls over at 10⁹ docs. Mining representatives makes that
+    O(reps²). The guard is lossless: identical token streams score
+    jaccard 1.0 / hamming 0 with each other and the same as their rep
+    against everything else, so the dropped rows are recovered exactly
+    afterwards (:func:`_expand_pairs_multi`, or the label join of
+    :func:`duplicate_clusters`).
+
+    One :func:`_fused_collapse` over the ``n``-wide :func:`_text_kernel`
+    yields the array column ``arr_col`` and the fingerprint in the miner's
+    own text scan. ``mine`` maps an ``(_id, arr_col, _size)`` frame to its
+    output. Returns (output, clones): with no clones anywhere ``mine`` runs
+    over every doc and ``clones`` is None; otherwise ``mine`` runs over the
+    representative rows and ``clones`` = (members, mined_reps, small):
+    ``members`` = (_id, _rep) for every member of a multi-member group,
+    ``mined_reps`` = (_id) of those groups' reps whose docs mine (≥1
+    shingle or token; shorter docs never pair), and ``small`` = the clone
+    map is measured under the broadcast cap."""
+    full, groups, clones, small = _fused_collapse(
+        df, id_col, _text_kernel(n)(F.col(text_col)), arr_col
+    )
+    if not clones:
+        return mine(full.drop("_tfp")), None
+    # materialized: the mining plan's several references (sizes, inverted
+    # index, verify arrays) share one copy of the representative rows
+    reps = _materialize(
+        full.join(
             groups.select(F.col("_rep").alias("_id")), "_id", "left_semi"
         ).drop("_tfp")
     )
-
-
-def _multi_members_and_mined(
-    sh_full: DataFrame, groups: DataFrame
-) -> tuple[DataFrame, DataFrame]:
-    """(members_multi, mined) for pair expansion, from the cached fused
-    frames only: members of multi-member groups, and the multi-group
-    representatives that actually mine (cached ``_size > 0`` — no
-    shingle recomputation)."""
+    out = mine(reps)
+    # both read the cached frames only: no shingle or token recomputation
     multi = groups.filter(F.col("_gs") > 1)
-    members_multi = (
-        sh_full.select("_id", "_tfp")
+    members = (
+        full.select("_id", "_tfp")
         .join(multi.select("_tfp", "_rep"), "_tfp")
         .select("_id", "_rep")
     )
-    mined = multi.select(F.col("_rep").alias("_id")).join(
-        sh_full.filter(F.col("_size") > 0).select("_id"), "_id", "left_semi"
+    mined_reps = multi.select(F.col("_rep").alias("_id")).join(
+        full.filter(F.col("_size") > 0).select("_id"), "_id", "left_semi"
     )
-    return members_multi, mined
+    return out, (members, mined_reps, small)
 
 
 def _maybe_broadcast(df: DataFrame, small: bool) -> DataFrame:
@@ -761,20 +670,27 @@ def _maybe_broadcast(df: DataFrame, small: bool) -> DataFrame:
 
 def _expand_pairs_multi(
     rep_pairs: DataFrame,
-    members_multi: DataFrame,
-    mined_multi: DataFrame,
+    clones: tuple[DataFrame, DataFrame, bool] | None,
     score_col: str | None,
     identical_score,
-    small: bool = False,
 ) -> DataFrame:
-    """Expand representative pairs using the multi-member groups only —
-    row-identical to :func:`expand_collapsed_pairs` (property of the left
-    joins: a singleton rep has no ``members_multi`` row, so coalesce keeps
-    the rep id — exactly the identity row the full membership map carried).
-    Join traffic is O(pairs + clone members) instead of O(pairs × n);
-    with ``small`` (clone-member count measured under the broadcast cap by
-    the fused collapse sizing action) the clone-map sides broadcast and the
-    pair stream never exchanges."""
+    """Expand the representative pairs of :func:`_collapse_and_mine` back
+    to all-document pairs (ids re-canonicalized to id_a < id_b); with no
+    ``clones`` they already are.
+
+    - cross-group: each (rep_a, rep_b, score) pair expands to every
+      (member_a, member_b) with the SAME score. The joins are left joins
+      against the multi-member groups only: a singleton rep has no member
+      row, so coalesce keeps the rep id, and join traffic is O(pairs +
+      clone members) instead of O(pairs × n).
+    - intra-group: all pairs within a multi-member group whose rep mines,
+      scored ``identical_score`` (jaccard 1.0 / hamming 0).
+
+    With ``small`` the clone-map sides broadcast and the pair stream never
+    exchanges."""
+    if clones is None:
+        return rep_pairs
+    members_multi, mined_multi, small = clones
     score = [F.col(score_col)] if score_col else []
     ma = members_multi.select(F.col("_rep").alias("id_a"), F.col("_id").alias("_a"))
     mb = members_multi.select(F.col("_rep").alias("id_b"), F.col("_id").alias("_b"))
@@ -790,9 +706,7 @@ def _expand_pairs_multi(
         )
     )
     mm = members_multi.join(
-        _maybe_broadcast(
-            mined_multi.select(F.col(mined_multi.columns[0]).alias("_rep")), small
-        ),
+        _maybe_broadcast(mined_multi.select(F.col("_id").alias("_rep")), small),
         "_rep",
         "left_semi",
     )
@@ -815,47 +729,22 @@ def minhash_lsh_pairs(
     bands: int = 16,
     threshold: float = 0.7,
     verify: bool = True,
-    collapse_identical: bool = True,
 ) -> DataFrame:
     """MinHash+LSH near-dup pairs: band-bucket candidates, optional exact
     Jaccard verification (join text back only for candidates).
 
     Returns (id_a, id_b[, jaccard]). With bands=16/num_hashes=64 (r=4),
     collision prob at j=0.7 ≈ 0.98 — tune bands per target threshold.
-
-    ``collapse_identical`` (default on) pre-collapses identical token
-    streams to one representative before banding and expands the pairs
-    back afterwards — the lossless band-bucket skew guard
-    (:func:`collapse_identical_docs`): m byte-identical docs cost O(m)
-    candidate rows instead of O(m²)-per-band. Round 6: the collapse key
-    rides the miner's own shingle scan (:func:`_fused_collapse`)
-    so the guard costs no extra text pass; the fused frame also serves
-    the exact-Jaccard verify arrays, removing the OFF path's separate
-    verify scan."""
-    if collapse_identical:
-        sh_full, groups, clones, small = _fused_collapse(
-            df, id_col, _text_kernel(n)(F.col(text_col)), "_sh"
-        )
-        if not clones:
-            return _minhash_pairs_on_shingles(
-                sh_full.drop("_tfp"), num_hashes, bands, threshold, verify
-            )
-        rep_pairs = _minhash_pairs_on_shingles(
-            _rep_rows(sh_full, groups), num_hashes, bands, threshold, verify
-        )
-        # clone-group reps that produce a signature: ≥1 shingle (docs
-        # shorter than the shingle length never enter the index and must
-        # not pair) — read from the cached _size, never recomputed
-        members_multi, mined = _multi_members_and_mined(sh_full, groups)
-        return _expand_pairs_multi(
-            rep_pairs, members_multi, mined,
-            "jaccard" if verify else None, 1.0, small,
-        )
-    sh = _materialize(
-        df.select(F.col(id_col).alias("_id"), _shingles_arrow(text_col, n).alias("_sh"))
-        .withColumn("_size", F.size("_sh"))
+    Identical token streams band as one representative
+    (:func:`_collapse_and_mine`), and one shingle scan feeds both the
+    signatures and the verify arrays."""
+    pairs, clones = _collapse_and_mine(
+        df, id_col, text_col, n, "_sh",
+        lambda sh: _minhash_pairs_on_shingles(
+            sh, num_hashes, bands, threshold, verify
+        ),
     )
-    return _minhash_pairs_on_shingles(sh, num_hashes, bands, threshold, verify)
+    return _expand_pairs_multi(pairs, clones, "jaccard" if verify else None, 1.0)
 
 
 def _minhash_pairs_on_shingles(
@@ -1105,7 +994,6 @@ def simhash_near_dup_pairs(
     n_bands: int | None = None,
     portable_hash: bool = True,
     n_words: int = 1,
-    collapse_identical: bool = True,
 ) -> DataFrame:
     """Near-dup pairs with Hamming(fingerprint) ≤ max_hamming.
 
@@ -1126,37 +1014,18 @@ def simhash_near_dup_pairs(
     completeness for fewer candidate collisions; the round-1 default
     (4 × 15-bit bands) is exhaustive only up to r=3.
 
-    ``collapse_identical`` (default on): identical token streams mine as
-    one representative, pairs expanded back exactly afterwards (hamming 0
-    within a group; a member inherits its rep's hamming to everything
-    else) — see :func:`collapse_identical_docs` for the band-bucket skew
-    rationale. The collapse key rides the miner's own tokenization
-    (:func:`_fused_collapse` over the ``n = 0`` text kernel), so the
-    guard costs no extra text pass and the ≥1-token eligibility
-    predicate reads the cached token count."""
+    Identical token streams mine as one representative
+    (:func:`_collapse_and_mine` over the ``n = 0`` token kernel): hamming
+    0 within a group, and a member inherits its rep's hamming to
+    everything else."""
     _check_simhash_args(portable_hash, n_words)
     if n_bands is None:
         n_bands = max_hamming + 1
-    if collapse_identical:
-        tokf, groups, clones, small = _fused_collapse(
-            df, id_col, _text_kernel(0)(F.col(text_col)), "_tok"
-        )
-        mk = lambda frame: _simhash_pairs_on_tokens(  # noqa: E731
-            frame, max_hamming, n_bands, n_words
-        )
-        if not clones:
-            return mk(tokf.drop("_tfp"))
-        rep_pairs = mk(_rep_rows(tokf, groups))
-        # clone-group reps that produce a fingerprint: ≥1 token (empty
-        # docs never reach the words kernel and must not pair)
-        members_multi, mined = _multi_members_and_mined(tokf, groups)
-        return _expand_pairs_multi(
-            rep_pairs, members_multi, mined, "hamming", 0, small
-        )
-    tokf = _materialize(
-        df.select(F.col(id_col).alias("_id"), tokens(text_col).alias("_tok"))
+    pairs, clones = _collapse_and_mine(
+        df, id_col, text_col, 0, "_tok",
+        lambda tokf: _simhash_pairs_on_tokens(tokf, max_hamming, n_bands, n_words),
     )
-    return _simhash_pairs_on_tokens(tokf, max_hamming, n_bands, n_words)
+    return _expand_pairs_multi(pairs, clones, "hamming", 0)
 
 
 def _chunk_layout(
@@ -1379,7 +1248,7 @@ def duplicate_clusters(
     m(m−1)/2 intra-group pairs — at crawl scale a million-clone
     boilerplate group alone is 5×10¹¹ edge rows before clustering even
     starts. This operator never builds them: identical token streams
-    collapse to one representative (:func:`collapse_identical_docs`),
+    collapse to one representative (:func:`_collapse_and_mine`),
     ngram-Jaccard pairs are mined among REPRESENTATIVES only, connected
     components (star contraction; ``algorithm`` and ``max_iters`` pass
     through to :func:`connected_components`) run on that rep graph, and
@@ -1397,32 +1266,27 @@ def duplicate_clusters(
     unknown = set(ngram_kw) - {"max_shingle_freq", "prefix_filter"}
     if unknown:
         raise TypeError(f"duplicate_clusters: unknown ngram kwargs {unknown}")
-    sh_full, groups, clones, small = _fused_collapse(
-        df, id_col, _text_kernel(n)(F.col(text_col)), "_sh"
+    rep_labels, clones = _collapse_and_mine(
+        df, id_col, text_col, n, "_sh",
+        lambda sh: connected_components(
+            _ngram_pairs_on_shingles(
+                sh,
+                threshold,
+                ngram_kw.get("max_shingle_freq"),
+                ngram_kw.get("prefix_filter"),
+            ),
+            algorithm=algorithm,
+            max_iters=max_iters,
+        ),
     )
-    mine = lambda sh: _ngram_pairs_on_shingles(  # noqa: E731
-        sh,
-        threshold,
-        ngram_kw.get("max_shingle_freq"),
-        ngram_kw.get("prefix_filter"),
-    )
-    if not clones:  # no clones: the full graph IS the rep graph
-        return connected_components(
-            mine(sh_full.drop("_tfp")), algorithm=algorithm, max_iters=max_iters
-        )
-    rep_pairs = mine(_rep_rows(sh_full, groups))
-    rep_labels = connected_components(
-        rep_pairs, algorithm=algorithm, max_iters=max_iters
-    )
+    if clones is None:  # no clones: the full graph IS the rep graph
+        return rep_labels
+    members_multi, mined, small = clones
     # multi-member groups cluster even with no cross-group pair — but only
-    # if the group produces shingles (sub-shingle-length docs never pair);
-    # the predicate reads the cached _size of the clone-group reps only
-    members_multi, mined = _multi_members_and_mined(sh_full, groups)
+    # if the group produces shingles (sub-shingle-length docs never pair)
     labels_rep = rep_labels.select(F.col("node").alias("_rep"), "cluster_rep")
     mm = members_multi.join(
-        _maybe_broadcast(
-            mined.select(F.col(mined.columns[0]).alias("_rep")), small
-        ),
+        _maybe_broadcast(mined.select(F.col("_id").alias("_rep")), small),
         "_rep",
         "left_semi",
     )
@@ -1514,10 +1378,6 @@ def _star_forest_probe(edges: DataFrame) -> tuple[bool, int]:
     )
 
 
-def _is_star_forest(edges: DataFrame) -> bool:
-    return _star_forest_probe(edges)[0]
-
-
 # Edge count at or below which the contraction FINISHES LOCALLY (Kiveris
 # et al. 2014 §Optimizations: once the shrinking graph fits on one
 # machine, finish it there instead of paying log-n more distributed
@@ -1565,8 +1425,8 @@ def _star_contraction(edges0: DataFrame, max_iters: int) -> DataFrame:
     REGARDLESS of graph diameter (the provable fix for chain-shaped dup
     graphs, where min-label propagation needs O(diameter) rounds).
 
-    Termination: the EXACT star-forest shape test (:func:`_is_star_forest`)
-    runs once per round — it fires on the first star-forest state, one
+    Termination: the EXACT star-forest shape test
+    (:func:`_star_forest_probe`) runs once per round — it fires on the first star-forest state, one
     full round EARLIER than the round-5 signature-equality test (which
     needed an identity round to observe "nothing changed"), and it IS the
     correctness invariant, so the 2⁻⁶⁴ signature-collision hole is closed

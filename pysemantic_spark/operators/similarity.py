@@ -24,8 +24,8 @@ rank in :func:`_top_k`; the all-pairs operators verify in
 once on the driver and ship it inside the kernel, so the corpus is scanned
 once and never joined or shuffled; LSH and IVF mask each query's scoring
 to the corpus rows whose keys hit its probe set. The keys come from the
-functions behind :func:`hyperplane_buckets_arrow` (buckets) and
-:func:`nearest_centroids_arrow` (clusters), run inside the kernel on the
+function behind :func:`hyperplane_buckets_arrow` (buckets) and from
+:func:`_centroid_ranks` (clusters), run inside the kernel on the
 corpus side and on the driver for the queries. Only n_queries × k rows per
 task reach the final rank.
 
@@ -386,7 +386,7 @@ def train_ivf_centroids(
 ) -> np.ndarray:
     """Coarse quantizer for IVF: k-means on a driver-side sample, in ONE
     scan with no count() pre-pass. The centroids are a tiny (n_centroids
-    × dim) model shipped inside :func:`nearest_centroids_arrow`; only the
+    × dim) model shipped inside :func:`_centroid_ranks`; only the
     sample reaches the driver. NULL and ragged vectors (length ≠ ``dim``)
     are left out of the sample.
 
@@ -412,7 +412,7 @@ def train_ivf_centroids(
     else:
         sample = sel.limit(sample_size * 4).toPandas()[vec_col]
     # NULL and ragged vectors cannot be clustered; they are left out of the
-    # sample (and get no cluster in nearest_centroids_arrow)
+    # sample (and are in no cluster: _gemm_topk never scores them)
     x = np.array([
         np.asarray(v, dtype=np.float64)
         for v in sample
@@ -442,7 +442,13 @@ def train_ivf_centroids(
 
 def _centroid_ranks(centroids: np.ndarray):
     """ranks(X, n): (rows × dim) → (rows × n) int32 nearest centroid ids,
-    nearest first; see :func:`nearest_centroids_arrow`."""
+    nearest first: the one IVF assignment kernel.
+
+    Every (row, centroid) distance comes from one BLAS matmul:
+    argmin_c ||x−c||² = argmin_c (||c||² − 2·x·c), since ||x||² is
+    constant per row. The ranking is a stable argsort, so ties go to the
+    lower centroid id; a vector equidistant to two centroids up to float
+    error may rank either first."""
     C = np.ascontiguousarray(np.asarray(centroids, dtype=np.float64))
     c_sq = (C * C).sum(axis=1)
 
@@ -451,27 +457,6 @@ def _centroid_ranks(centroids: np.ndarray):
         return np.argsort(d, axis=1, kind="stable")[:, :n].astype(np.int32)
 
     return ranks
-
-
-def nearest_centroids_arrow(
-    vec_col: Column, centroids: np.ndarray, n: int = 1
-) -> Column:
-    """The ``n`` nearest centroid ids of each vector, nearest first, as an
-    array<int> Column: the one IVF assignment kernel. :func:`ivf_topk` uses
-    its ranking with ``n=1`` to place each corpus row in its cluster and
-    with ``n=n_probe`` for the query side's multi-probe list.
-
-    Every (row, centroid) distance comes from one BLAS matmul per Arrow
-    batch: argmin_c ||x−c||² = argmin_c (||c||² − 2·x·c), since ||x||² is
-    constant per row. The ranking is a stable argsort, so ties go to the
-    lower centroid id; a vector equidistant to two centroids up to float
-    error may rank either first.
-
-    A NULL vector, or one whose length is not the centroid dim, gets a
-    NULL result instead of failing the batch: it is in no cluster."""
-    ranks = _centroid_ranks(centroids)
-    dim = np.asarray(centroids).shape[1]
-    return _arrow_keys(lambda X: ranks(X, n), dim, "array<int>")(vec_col)
 
 
 def ivf_topk(
@@ -489,7 +474,7 @@ def ivf_topk(
 ) -> DataFrame:
     """IVF approximate top-k: score only corpus rows in the query's
     ``n_probe`` nearest coarse clusters. Both sides are assigned by
-    :func:`nearest_centroids_arrow` (corpus n=1, queries n=n_probe). The
+    :func:`_centroid_ranks` (corpus n=1, queries n=n_probe). The
     query side (vectors and probe lists) is evaluated once on the driver;
     each corpus row is assigned where it is read and scored in
     :func:`_gemm_topk` only for the queries that probe its cluster, so the

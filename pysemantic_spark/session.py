@@ -1,10 +1,12 @@
 """SparkSession factory tuned for the validation workload.
 
 Local mode takes its core count from ``SPARK_GRAFT_CPUS`` and its driver
-heap from ``SPARK_DRIVER_MEMORY``; on a real cluster the same builder is
-used minus the master/memory overrides. AQE, shuffle partitions and Arrow
-are set here; scan splits are left to Spark's own sizing (small files
-pack into shared splits, and ``spark-submit --conf`` governs).
+heap from ``SPARK_DRIVER_MEMORY`` (default: half the host's physical
+memory, at most 48g, so a small host's JVM never grows past what the
+host has); on a real cluster the same settings apply minus the
+master/memory overrides. AQE, shuffle partitions and Arrow are set here;
+scan splits are left to Spark's own sizing (small files pack into shared
+splits, and ``spark-submit --conf`` governs).
 
 PySpark's DataFrame debugging (``spark.python.sql.dataFrameDebugging.enabled``)
 is turned off. With it on, every DataFrame and Column call records its
@@ -22,6 +24,12 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import SparkSession
+
+
+def _default_driver_memory() -> str:
+    """Half of physical memory, at most 48g, as a Spark size string."""
+    phys = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    return f"{min(phys // 2 // 2**20, 48 * 1024)}m"
 
 
 def get_spark(
@@ -73,7 +81,10 @@ def get_spark(
         .config("spark.sql.adaptive.autoBroadcastJoinThreshold", "128m")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "48g"))
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_DRIVER_MEMORY") or _default_driver_memory(),
+        )
         # wide fused check projections + 64-way sketch aggs generate large
         # methods; default 240m code cache fills and disables the JIT
         .config("spark.driver.extraJavaOptions", "-XX:ReservedCodeCacheSize=1g")

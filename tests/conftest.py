@@ -8,10 +8,9 @@ import pytest
 
 from pysemantic_spark.session import get_spark
 
-# The session's default driver heap (48g) is sized for a cluster driver: on
-# a host with less memory the JVM grows its heap past what the host has
-# and is OOM-killed mid-suite. The tests' data is small; 4g holds the whole
-# suite (driver JVM peak RSS 4.6-5.1 GB on a 4-core, 16 GB host).
+# The session's default driver heap is half the host's memory; the tests'
+# data is small, and 4g holds the whole suite (driver JVM peak RSS 4.6-5.1
+# GB on a 4-core, 16 GB host) while leaving room for the Python workers.
 os.environ.setdefault("SPARK_DRIVER_MEMORY", "4g")
 
 
@@ -57,3 +56,16 @@ def edge_df(spark, edge_texts):
     return spark.createDataFrame(
         pd.DataFrame({"doc_id": range(len(texts)), "text": texts})
     )
+
+
+@pytest.fixture
+def clone_docs(spark):
+    """8 byte-identical docs + a near-dup + unrelated docs + 2 identical
+    sub-shingle-length shorts (must never pair at n=3)."""
+    body = "alpha beta gamma delta epsilon zeta eta theta iota kappa"
+    rows = [(i, body) for i in range(8)]
+    rows.append((100, body.replace("kappa", "lambda")))
+    rows.append((200, "one two three four five six seven eight nine ten"))
+    rows.append((201, "cats chase mice across seven silent rooftops at night yes"))
+    rows += [(300, "too short"), (301, "too short")]
+    return spark.createDataFrame(rows, "doc_id long, text string")

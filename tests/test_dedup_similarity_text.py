@@ -12,6 +12,8 @@ import sys
 import numpy as np
 import pandas as pd
 import pytest
+from hypothesis import HealthCheck, given, settings
+from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
 from pysemantic_spark.functions import text as tx
@@ -521,6 +523,210 @@ def test_simhash_banding_exhaustive_at_radius(spark):
 
 
 # ---------------------------------------------------------------------------
+# identical-doc collapse guard: the miners equal their uncollapsed cores
+# ---------------------------------------------------------------------------
+
+def _uncollapsed_pairs(miner, df, n=3, **kw):
+    """``miner``'s mining core run over EVERY row of ``df`` with no
+    collapse: the ground-truth reference for the collapse guard. SimHash
+    tokenizes with the JVM ``tokens()``, independently of the Arrow kernel
+    the guard runs."""
+    ids = F.col("doc_id").alias("_id")
+    if miner is dedup.simhash_near_dup_pairs:
+        r = kw["max_hamming"]
+        tokf = dedup._materialize(df.select(ids, tx.tokens("text").alias("_tok")))
+        return dedup._simhash_pairs_on_tokens(tokf, r, r + 1, kw.get("n_words", 1))
+    sh = dedup._materialize(
+        df.select(ids, dedup._shingles_arrow("text", n).alias("_sh"))
+        .withColumn("_size", F.size("_sh"))
+    )
+    if miner is dedup.minhash_lsh_pairs:
+        return dedup._minhash_pairs_on_shingles(
+            sh, kw["num_hashes"], kw["bands"], kw["threshold"], True
+        )
+    return dedup._ngram_pairs_on_shingles(
+        sh, kw["threshold"], kw.get("max_shingle_freq"), kw.get("prefix_filter")
+    )
+
+
+def _pair_rows(df_pairs, score_col):
+    """Sorted (id_a, id_b, score) rows: duplicates would show."""
+    return sorted(
+        (r["id_a"], r["id_b"], round(r[score_col], 6))
+        for r in df_pairs.collect()
+    )
+
+
+def _collapsed_and_core(miner, score_col, df, **kw):
+    """(collapsed pair rows, uncollapsed-core pair rows) of one miner."""
+    return (
+        _pair_rows(miner(df, "doc_id", "text", **kw), score_col),
+        _pair_rows(_uncollapsed_pairs(miner, df, **kw), score_col),
+    )
+
+
+def test_collapse_identical_docs_reps(spark, clone_docs):
+    reps, clones = dedup._collapse_and_mine(
+        clone_docs, "doc_id", "text", 3, "_sh", lambda frame: frame
+    )
+    members, mined, _ = clones
+    # 8 identical bodies → 1 rep; shorts → 1 rep; others 1 each
+    assert reps.count() == 5
+    m = {r["_id"]: r["_rep"] for r in members.collect()}
+    m.update({r["_id"]: r["_id"] for r in reps.collect() if r["_id"] not in m})
+    assert len(m) == 13
+    assert all(m[i] == 0 for i in range(8))
+    assert m[300] == m[301] == 300
+    # the short group never shingles at n=3, so only the 8-clone group mines
+    assert {r["_id"] for r in mined.collect()} == {0}
+
+
+def test_minhash_collapse_matches_uncollapsed(spark, clone_docs):
+    on, off = _collapsed_and_core(
+        dedup.minhash_lsh_pairs, "jaccard", clone_docs,
+        n=3, num_hashes=32, bands=8, threshold=0.5,
+    )
+    assert on == off
+    # all 28 identical-group pairs present at jaccard 1.0
+    for a, b in itertools.combinations(range(8), 2):
+        assert (a, b, 1.0) in on
+    # sub-shingle-length identical docs never pair
+    assert not any(a == 300 or b == 300 for a, b, _ in on)
+
+
+def test_simhash_collapse_matches_uncollapsed(spark, clone_docs):
+    on, off = _collapsed_and_core(
+        dedup.simhash_near_dup_pairs, "hamming", clone_docs, max_hamming=3
+    )
+    assert on == off
+    for a, b in itertools.combinations(range(8), 2):
+        assert (a, b, 0) in on
+    # "too short" has tokens (2) → fingerprints exist; identical → hamming 0
+    assert (300, 301, 0) in on
+
+
+def test_collapse_candidate_volume_is_linear(spark):
+    """m identical docs must contribute ONE representative to banding —
+    the band self-join sees O(groups), not O(m), rows, so candidate rows
+    inside any bucket grow O(reps²) with reps independent of m."""
+    body = " ".join(f"tok{i}" for i in range(12))
+    m = 50
+    df = spark.createDataFrame(
+        [(i, body) for i in range(m)] + [(999, "totally different words here now ok")],
+        "doc_id long, text string",
+    )
+    reps, (members, _, _) = dedup._collapse_and_mine(
+        df, "doc_id", "text", 3, "_sh", lambda frame: frame
+    )
+    assert reps.count() == 2          # 1 rep for the m clones + 1 other
+    assert members.count() == m       # every clone maps to its rep
+    ids = {r["_id"] for r in members.collect()} | {r["_id"] for r in reps.collect()}
+    assert len(ids) == m + 1
+    # end-to-end: the full C(m,2) duplicate pair list is still recovered
+    out = dedup.minhash_lsh_pairs(
+        df, "doc_id", "text", n=3, num_hashes=32, bands=8, threshold=0.9
+    )
+    assert out.count() == m * (m - 1) // 2
+
+
+@pytest.mark.parametrize("prefix_filter", [True, False])
+def test_ngram_collapse_matches_uncollapsed(spark, clone_docs, prefix_filter):
+    on, off = _collapsed_and_core(
+        dedup.ngram_jaccard_pairs, "jaccard", clone_docs,
+        n=3, threshold=0.5, prefix_filter=prefix_filter,
+    )
+    assert on == off
+    for a, b in itertools.combinations(range(8), 2):
+        assert (a, b, 1.0) in on
+    assert not any(a == 300 or b == 300 for a, b, _ in on)
+
+
+def test_collapse_fast_path_no_clones(spark):
+    docs = [(i, f"unique document number {i} about topic {i % 7} words "
+                f"padding alpha beta gamma {i}") for i in range(40)]
+    df = spark.createDataFrame(docs, "doc_id long, text string")
+    full, clones = dedup._collapse_and_mine(
+        df, "doc_id", "text", 3, "_sh", lambda frame: frame
+    )
+    assert clones is None
+    assert full.count() == 40
+    on, off = _collapsed_and_core(
+        dedup.ngram_jaccard_pairs, "jaccard", df, threshold=0.3
+    )
+    assert on == off
+
+
+def test_collapse_multi_expansion_matches_reference(spark):
+    """The multi-group-only expansion must be row-identical to the
+    uncollapsed core on a corpus mixing clones, near-dups, singletons, and
+    a sub-shingle clone group (which must NOT pair)."""
+    body = "the quick brown fox jumps over the lazy dog again and again"
+    near = "the quick brown fox jumps over the lazy dog again and once"
+    docs = (
+        [(i, body) for i in range(4)]
+        + [(10, near), (11, "completely different text on another topic here")]
+        + [(20, "too short"), (21, "too short")]  # < 3 tokens: never mines
+        + [(30, f"filler document {i} unrelated") for i in (0,)]
+    )
+    df = spark.createDataFrame(docs, "doc_id long, text string")
+    got, ref = _collapsed_and_core(
+        dedup.ngram_jaccard_pairs, "jaccard", df, threshold=0.5
+    )
+    assert got == ref
+    # clone-group pairs present with score 1.0; sub-shingle clones absent
+    ids = {(a, b) for a, b, _ in got}
+    assert (0, 1) in ids and (20, 21) not in ids
+
+
+_corpus_strategy = st.lists(
+    st.tuples(
+        # doc body: 4-9 tokens from a tiny vocab (forces shared shingles)
+        st.lists(
+            st.sampled_from([f"w{i}" for i in range(12)]),
+            min_size=4,
+            max_size=9,
+        ),
+        # clone multiplicity: how many byte-identical copies of this body
+        st.integers(min_value=1, max_value=5),
+    ),
+    min_size=2,
+    max_size=6,
+)
+
+_GUARDED_MINERS = {
+    "minhash": (dedup.minhash_lsh_pairs, "jaccard",
+                dict(n=2, num_hashes=16, bands=8, threshold=0.4)),
+    "ngram_prefix": (dedup.ngram_jaccard_pairs, "jaccard",
+                     dict(n=2, threshold=0.4, prefix_filter=True)),
+    "ngram_count": (dedup.ngram_jaccard_pairs, "jaccard",
+                    dict(n=2, threshold=0.4, prefix_filter=False)),
+    "simhash": (dedup.simhash_near_dup_pairs, "hamming", dict(max_hamming=3)),
+}
+
+
+@pytest.mark.parametrize("miner", list(_GUARDED_MINERS))
+@settings(
+    max_examples=5,
+    deadline=None,
+    suppress_health_check=[HealthCheck.function_scoped_fixture],
+)
+@given(corpus=_corpus_strategy)
+def test_collapse_guard_property(spark, miner, corpus):
+    """For ARBITRARY clone-heavy corpora, each miner's collapsed output is
+    its uncollapsed core's pair set, with identical scores."""
+    rows, nid = [], 0
+    for body, mult in corpus:
+        for _ in range(mult):
+            rows.append((nid, " ".join(body)))
+            nid += 1
+    df = spark.createDataFrame(rows, "doc_id long, text string")
+    fn, score_col, kw = _GUARDED_MINERS[miner]
+    on, off = _collapsed_and_core(fn, score_col, df, **kw)
+    assert on == off
+    dedup.release_intermediates()
+
+
+# ---------------------------------------------------------------------------
 # Arrow text kernels (tokens / shingles + fingerprint, SimHash words)
 # ---------------------------------------------------------------------------
 
@@ -587,9 +793,9 @@ def test_simhash_rejects_non_portable_hash(spark, docs_df):
 
 def test_simhash_null_and_empty_docs(spark):
     """NULL text and text that trims to "" get no fingerprint row and never
-    pair, with or without the collapse guard. Trim strips spaces only, so
-    " \t " is two empty tokens: it gets a fingerprint and pairs with its
-    clone at hamming 0."""
+    pair, through the collapse guard or in the uncollapsed core. Trim
+    strips spaces only, so " \t " is two empty tokens: it gets a
+    fingerprint and pairs with its clone at hamming 0."""
     texts = [None, None, "", "", "   ", "   ", " \t ", " \t ",
              "the quick brown fox", "the quick brown fox"]
     df = spark.createDataFrame(
@@ -597,14 +803,12 @@ def test_simhash_null_and_empty_docs(spark):
     )
     ids = {r["_id"] for r in dedup.simhash_fingerprints(df, "doc_id", "text").collect()}
     assert ids == {6, 7, 8, 9}
-    for collapse in (True, False):
-        got = {
-            tuple(r)
-            for r in dedup.simhash_near_dup_pairs(
-                df, "doc_id", "text", collapse_identical=collapse
-            ).collect()
-        }
-        assert got == {(6, 7, 0), (8, 9, 0)}, collapse
+    kw = dict(max_hamming=3)
+    for collapse, pairs in (
+        (True, dedup.simhash_near_dup_pairs(df, "doc_id", "text", **kw)),
+        (False, _uncollapsed_pairs(dedup.simhash_near_dup_pairs, df, **kw)),
+    ):
+        assert {tuple(r) for r in pairs.collect()} == {(6, 7, 0), (8, 9, 0)}, collapse
 
 
 def test_simhash_expansion_equals_banding(spark):
@@ -760,22 +964,18 @@ def test_vector_operators_bad_vectors(spark, op):
             BAD_VEC_OPS[op](df, queries).collect()
 
 
-def test_nearest_centroids_matches_numpy(spark):
-    """The IVF kernel ranks centroids like a full squared-L2 argsort (ties
-    to the lower id), and gives NULL for NULL and ragged vectors."""
+def test_nearest_centroids_matches_numpy():
+    """The IVF kernel ranks centroids like a full squared-L2 argsort, ties
+    to the lower id. Integer coordinates make every distance exact, so the
+    second corpus has real ties."""
     rng = np.random.default_rng(5)
-    cents = rng.standard_normal((6, 4))
-    vecs = rng.standard_normal((40, 4))
-    rows = [(i, list(map(float, v))) for i, v in enumerate(vecs)]
-    rows += [(40, None), (41, [1.0, 2.0, 3.0])]
-    df = spark.createDataFrame(rows, "i long, v array<double>")
-    got = {
-        r["i"]: r["ids"]
-        for r in df.select(
-            "i", similarity.nearest_centroids_arrow(F.col("v"), cents, 3).alias("ids")
-        ).collect()
-    }
-    d = ((vecs[:, None, :] - cents[None, :, :]) ** 2).sum(-1)
-    want = np.argsort(d, axis=1, kind="stable")[:, :3]
-    assert [got[i] for i in range(40)] == want.tolist()
-    assert got[40] is None and got[41] is None
+    for cents, vecs in (
+        (rng.standard_normal((6, 4)), rng.standard_normal((40, 4))),
+        (rng.integers(-2, 3, (6, 4)) * 1.0, rng.integers(-2, 3, (40, 4)) * 1.0),
+    ):
+        d = ((vecs[:, None, :] - cents[None, :, :]) ** 2).sum(-1)
+        want = np.argsort(d, axis=1, kind="stable")[:, :3]
+        got = similarity._centroid_ranks(cents)(vecs, 3)
+        assert got.tolist() == want.tolist()
+    top = np.sort(d, axis=1)[:, :3]
+    assert (top[:, 1:] == top[:, :-1]).any()  # the ties are exercised

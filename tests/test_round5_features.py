@@ -1,6 +1,6 @@
 """Round-5 additions: NULL-safe + adaptive keep-first dedup, connected-
 components convergence (large-star/small-star contraction),
-identical-doc collapse guard for MinHash/SimHash banding, deterministic
+duplicate clusters over the identical-doc collapse guard, deterministic
 IVF training sample, converter allowlist, exact-top-k memo invalidation."""
 
 from __future__ import annotations
@@ -149,116 +149,9 @@ def test_cc_star_matches_label_on_random_graphs(spark, monkeypatch):
 
 
 # ---------------------------------------------------------------------------
-# identical-doc collapse guard (band-bucket skew)
+# identical-doc collapse guard: the stop-cap corner (the guard's other
+# tests are in test_dedup_similarity_text.py)
 # ---------------------------------------------------------------------------
-
-def _docs(spark):
-    """8 byte-identical docs + a near-dup + unrelated docs + 2 identical
-    sub-shingle-length shorts (must never pair at n=3)."""
-    body = "alpha beta gamma delta epsilon zeta eta theta iota kappa"
-    rows = [(i, body) for i in range(8)]
-    rows.append((100, body.replace("kappa", "lambda")))
-    rows.append((200, "one two three four five six seven eight nine ten"))
-    rows.append((201, "cats chase mice across seven silent rooftops at night yes"))
-    rows += [(300, "too short"), (301, "too short")]
-    return spark.createDataFrame(rows, "doc_id long, text string")
-
-
-def test_collapse_identical_docs_reps(spark):
-    df = _docs(spark)
-    rep_df, members = dedup.collapse_identical_docs(df, "doc_id", "text")
-    # 8 identical bodies → 1 rep; shorts → 1 rep; others 1 each
-    assert rep_df.count() == 5
-    m = {r["_id"]: r["_rep"] for r in members.collect()}
-    assert len(m) == 13
-    assert all(m[i] == 0 for i in range(8))
-    assert m[300] == m[301] == 300
-
-
-def _pairset(df_pairs, score_col):
-    return {
-        (r["id_a"], r["id_b"], round(r[score_col], 6))
-        for r in df_pairs.collect()
-    }
-
-
-def test_minhash_collapse_matches_uncollapsed(spark):
-    df = _docs(spark)
-    kw = dict(n=3, num_hashes=32, bands=8, threshold=0.5)
-    on = _pairset(
-        dedup.minhash_lsh_pairs(df, "doc_id", "text", **kw), "jaccard"
-    )
-    off = _pairset(
-        dedup.minhash_lsh_pairs(
-            df, "doc_id", "text", collapse_identical=False, **kw
-        ),
-        "jaccard",
-    )
-    assert on == off
-    # all 28 identical-group pairs present at jaccard 1.0
-    for a, b in itertools.combinations(range(8), 2):
-        assert (a, b, 1.0) in on
-    # sub-shingle-length identical docs never pair
-    assert not any(a == 300 or b == 300 for a, b, _ in on)
-
-
-def test_simhash_collapse_matches_uncollapsed(spark):
-    df = _docs(spark)
-    on = _pairset(
-        dedup.simhash_near_dup_pairs(df, "doc_id", "text", max_hamming=3),
-        "hamming",
-    )
-    off = _pairset(
-        dedup.simhash_near_dup_pairs(
-            df, "doc_id", "text", max_hamming=3, collapse_identical=False
-        ),
-        "hamming",
-    )
-    assert on == off
-    for a, b in itertools.combinations(range(8), 2):
-        assert (a, b, 0) in on
-    # "too short" has tokens (2) → fingerprints exist; identical → hamming 0
-    assert (300, 301, 0) in on
-
-
-def test_collapse_candidate_volume_is_linear(spark):
-    """m identical docs must contribute ONE representative to banding —
-    the band self-join sees O(groups), not O(m), rows, so candidate rows
-    inside any bucket grow O(reps²) with reps independent of m."""
-    body = " ".join(f"tok{i}" for i in range(12))
-    m = 50
-    df = spark.createDataFrame(
-        [(i, body) for i in range(m)] + [(999, "totally different words here now ok")],
-        "doc_id long, text string",
-    )
-    rep_df, members = dedup.collapse_identical_docs(df, "doc_id", "text")
-    assert rep_df.count() == 2          # 1 rep for the m clones + 1 other
-    assert members.count() == m + 1
-    # end-to-end: the full C(m,2) duplicate pair list is still recovered
-    out = dedup.minhash_lsh_pairs(
-        df, "doc_id", "text", n=3, num_hashes=32, bands=8, threshold=0.9
-    )
-    assert out.count() == m * (m - 1) // 2
-
-
-@pytest.mark.parametrize("prefix_filter", [True, False])
-def test_ngram_collapse_matches_uncollapsed(spark, prefix_filter):
-    df = _docs(spark)
-    kw = dict(n=3, threshold=0.5, prefix_filter=prefix_filter)
-    on = _pairset(
-        dedup.ngram_jaccard_pairs(df, "doc_id", "text", **kw), "jaccard"
-    )
-    off = _pairset(
-        dedup.ngram_jaccard_pairs(
-            df, "doc_id", "text", collapse_identical=False, **kw
-        ),
-        "jaccard",
-    )
-    assert on == off
-    for a, b in itertools.combinations(range(8), 2):
-        assert (a, b, 1.0) in on
-    assert not any(a == 300 or b == 300 for a, b, _ in on)
-
 
 def test_ngram_collapse_survives_stop_cap(spark):
     """Identical docs whose every shingle is stop-capped previously could
@@ -268,13 +161,13 @@ def test_ngram_collapse_survives_stop_cap(spark):
     df = spark.createDataFrame(
         [(i, body) for i in range(5)], "doc_id long, text string"
     )
-    got = _pairset(
-        dedup.ngram_jaccard_pairs(
+    got = {
+        tuple(r)
+        for r in dedup.ngram_jaccard_pairs(
             df, "doc_id", "text", n=3, threshold=0.9,
             max_shingle_freq=2, prefix_filter=False,
-        ),
-        "jaccard",
-    )
+        ).collect()
+    }
     assert got == {
         (a, b, 1.0) for a, b in itertools.combinations(range(5), 2)
     }
@@ -343,60 +236,13 @@ def test_quarantine_requalify_lifecycle(spark, tmp_path):
     assert all(e.status == "done" for e in m.entries.values())
 
 
-from hypothesis import HealthCheck, given, settings
-from hypothesis import strategies as st
-
-_corpus_strategy = st.lists(
-    st.tuples(
-        # doc body: 4-9 tokens from a tiny vocab (forces shared shingles)
-        st.lists(
-            st.sampled_from([f"w{i}" for i in range(12)]),
-            min_size=4,
-            max_size=9,
-        ),
-        # clone multiplicity: how many byte-identical copies of this body
-        st.integers(min_value=1, max_value=5),
-    ),
-    min_size=2,
-    max_size=6,
-)
-
-
-@settings(
-    max_examples=8,
-    deadline=None,
-    suppress_health_check=[HealthCheck.function_scoped_fixture],
-)
-@given(corpus=_corpus_strategy)
-def test_collapse_guard_property_minhash(spark, corpus):
-    """For ARBITRARY clone-heavy corpora, collapsed and uncollapsed
-    MinHash mining yield the identical pair set with identical scores."""
-    rows, nid = [], 0
-    for body, mult in corpus:
-        for _ in range(mult):
-            rows.append((nid, " ".join(body)))
-            nid += 1
-    df = spark.createDataFrame(rows, "doc_id long, text string")
-    kw = dict(n=2, num_hashes=16, bands=8, threshold=0.4)
-    on = _pairset(
-        dedup.minhash_lsh_pairs(df, "doc_id", "text", **kw), "jaccard"
-    )
-    off = _pairset(
-        dedup.minhash_lsh_pairs(
-            df, "doc_id", "text", collapse_identical=False, **kw
-        ),
-        "jaccard",
-    )
-    assert on == off
-
-
 # ---------------------------------------------------------------------------
 # duplicate_clusters: cluster assignment without the O(m²) pair list
 # ---------------------------------------------------------------------------
 
 @pytest.mark.parametrize("algorithm", ["star"])
-def test_duplicate_clusters_equals_pairlist_path(spark, algorithm):
-    df = _docs(spark)  # 8 clones + near-dup + unrelated + 2 short clones
+def test_duplicate_clusters_equals_pairlist_path(spark, clone_docs, algorithm):
+    df = clone_docs  # 8 clones + near-dup + unrelated + 2 short clones
     kw = dict(n=3, threshold=0.5)
     exp = {
         (r["node"], r["cluster_rep"])

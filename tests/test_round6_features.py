@@ -2,8 +2,7 @@
 
 - stats-fed keep-first strategy chooser (no extra sizing scan) and the
   skew-safe ``agg_min`` keep-first plan (min_by hash agg, no window sort)
-- optimized collapse guard: no-clone fast path + multi-group-only expansion
-  (must stay row-identical to the round-5 reference implementation)
+- the collapse guard's sub-shingle clones and broadcastable clone map
 - star-contraction fixpoint hardening (_assert_star)
 - layout-independent IVF training sample BEYOND the 4×sample_size cap
 - ANN recall monotonicity (LSH tables nested by seed; IVF probes) and the
@@ -100,73 +99,8 @@ def test_keep_first_supplied_stats_same_rows(spark):
 
 
 # ---------------------------------------------------------------------------
-# collapse guard: fast path + multi-only expansion
+# collapse guard (its row-parity tests are in test_dedup_similarity_text.py)
 # ---------------------------------------------------------------------------
-
-def test_collapse_fast_path_no_clones(spark):
-    docs = [(i, f"unique document number {i} about topic {i % 7} words "
-                f"padding alpha beta gamma {i}") for i in range(40)]
-    df = spark.createDataFrame(docs, "doc_id long, text string")
-    sh_full, _groups, clones, _small = dedup._fused_collapse(
-        df, "doc_id", dedup._text_kernel(3)(F.col("text")), "_sh"
-    )
-    assert clones is False
-    assert sh_full.count() == 40
-    on = sorted(
-        tuple(r)
-        for r in dedup.ngram_jaccard_pairs(
-            df, "doc_id", "text", threshold=0.3, collapse_identical=True
-        ).collect()
-    )
-    off = sorted(
-        tuple(r)
-        for r in dedup.ngram_jaccard_pairs(
-            df, "doc_id", "text", threshold=0.3, collapse_identical=False
-        ).collect()
-    )
-    assert on == off
-
-
-def test_collapse_multi_expansion_matches_reference(spark):
-    """The round-6 multi-group-only expansion must be row-identical to the
-    round-5 reference path (collapse_identical_docs + expand_collapsed_pairs)
-    on a corpus mixing clones, near-dups, singletons, and a sub-shingle
-    clone group (which must NOT pair)."""
-    body = "the quick brown fox jumps over the lazy dog again and again"
-    near = "the quick brown fox jumps over the lazy dog again and once"
-    docs = (
-        [(i, body) for i in range(4)]
-        + [(10, near), (11, "completely different text on another topic here")]
-        + [(20, "too short"), (21, "too short")]  # < 3 tokens: never mines
-        + [(30, f"filler document {i} unrelated") for i in (0,)]
-    )
-    df = spark.createDataFrame(docs, "doc_id long, text string")
-
-    got = sorted(
-        tuple(r)
-        for r in dedup.ngram_jaccard_pairs(
-            df, "doc_id", "text", threshold=0.5, collapse_identical=True
-        ).collect()
-    )
-    # reference path, unchanged since round 5
-    rep_df, members = dedup.collapse_identical_docs(df, "doc_id", "text")
-    rep_pairs = dedup.ngram_jaccard_pairs(
-        rep_df, "doc_id", "text", threshold=0.5, collapse_identical=False
-    )
-    mined = rep_df.filter(
-        F.size(dedup._shingles_arrow("text", 3)) > 0
-    ).select(F.col("doc_id"))
-    ref = sorted(
-        tuple(r)
-        for r in dedup.expand_collapsed_pairs(
-            rep_pairs, members, mined, "jaccard", 1.0
-        ).collect()
-    )
-    assert got == ref
-    # clone-group pairs present with score 1.0; sub-shingle clones absent
-    ids = {(a, b) for a, b, _ in got}
-    assert (0, 1) in ids and (20, 21) not in ids
-
 
 def test_duplicate_clusters_sub_shingle_clones_never_cluster(spark):
     body = "the quick brown fox jumps over the lazy dog again and again"
@@ -189,13 +123,13 @@ def test_duplicate_clusters_sub_shingle_clones_never_cluster(spark):
 
 def test_is_star_forest_exact_shape_test(spark):
     stars = spark.createDataFrame([(3, 1), (2, 1), (9, 5)], "u long, v long")
-    assert dedup._is_star_forest(stars)
+    assert dedup._star_forest_probe(stars)[0]
     chain = spark.createDataFrame([(3, 2), (2, 1)], "u long, v long")
-    assert not dedup._is_star_forest(chain)  # center 2 also a leaf
+    assert not dedup._star_forest_probe(chain)[0]  # center 2 also a leaf
     dup_src = spark.createDataFrame([(3, 1), (3, 2)], "u long, v long")
-    assert not dedup._is_star_forest(dup_src)  # u appears twice
+    assert not dedup._star_forest_probe(dup_src)[0]  # u appears twice
     empty = spark.createDataFrame([], "u long, v long")
-    assert dedup._is_star_forest(empty)  # vacuous star forest
+    assert dedup._star_forest_probe(empty)[0]  # vacuous star forest
 
 
 def test_collapse_for_mining_reports_broadcastable_clone_map(spark):
@@ -205,12 +139,12 @@ def test_collapse_for_mining_reports_broadcastable_clone_map(spark):
     df = spark.createDataFrame(docs, "doc_id long, text string")
     # the shingle frame (n-gram miners) and the token frame (SimHash)
     for n, arr_col in ((3, "_sh"), (0, "_tok")):
-        full, groups, clones, small = dedup._fused_collapse(
-            df, "doc_id", dedup._text_kernel(n)(F.col("text")), arr_col
+        _, clones = dedup._collapse_and_mine(
+            df, "doc_id", "text", n, arr_col, lambda frame: frame
         )
-        assert clones is True
+        assert clones is not None
+        mm, mined, small = clones
         assert small is True  # 4 clone members, far under the broadcast cap
-        mm, mined = dedup._multi_members_and_mined(full, groups)
         assert mm.count() == 4
         assert mined.count() == 1  # one clone-group rep, and it mines
 

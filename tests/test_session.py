@@ -37,3 +37,15 @@ def test_ansi_cast_error_keeps_its_error_class(spark):
     with pytest.raises(NumberFormatException) as e:
         df.select(F.col("s").cast("int")).collect()
     assert e.value.getCondition() == "CAST_INVALID_INPUT"
+
+
+@pytest.mark.parametrize(
+    "phys_gib, want", [(16, "8192m"), (1, "512m"), (96, "49152m"), (512, "49152m")]
+)
+def test_default_driver_memory_is_half_of_host_capped(monkeypatch, phys_gib, want):
+    """No JVM: half of physical memory, never more than 48g."""
+    from pysemantic_spark import session
+
+    pages = {"SC_PAGE_SIZE": 4096, "SC_PHYS_PAGES": phys_gib * 2**30 // 4096}
+    monkeypatch.setattr(session.os, "sysconf", pages.__getitem__)
+    assert session._default_driver_memory() == want

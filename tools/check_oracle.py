@@ -41,7 +41,13 @@ def main(sf_dir: str = "/root/testdata/sf0.01", only: list[str] | None = None) -
     from pysemantic_spark.session import get_spark
     import __spark_entry__ as entrymod
 
-    spark = get_spark(app_name="oracle_check", shuffle_partitions=8)
+    # no console progress bar: its carriage returns, mixed into the result
+    # lines of a combined stdout/stderr log, break `grep '^OK'`
+    spark = get_spark(
+        app_name="oracle_check",
+        shuffle_partitions=8,
+        extra_conf={"spark.ui.showConsoleProgress": "false"},
+    )
     con = duckdb.connect()
     for t in TABLES:
         con.execute(
