@@ -179,16 +179,24 @@ def _bucketize(args) -> int:
 
 def _validate(args) -> int:
     from pysemantic_spark.errors import SpecValidationError
+    from pysemantic_spark.operators.runner import _require_dims
+    from pysemantic_spark.plans.compiler import compile_spec
     from pysemantic_spark.session import get_spark
     from pysemantic_spark.sources.tableio import ParquetManifestIO, run_resumable, table_report
     from pysemantic_spark.spec import load_spec_file
 
-    spark = get_spark(app_name="pysemantic_spark:validate")
     specs = load_spec_file(args.spec)
     if args.dataset not in specs:
         print(f"dataset {args.dataset!r} not in {args.spec}", file=sys.stderr)
         return 1
     spec = specs[args.dataset]
+    dim_paths = dict(d.split("=", 1) for d in args.dim)
+    # before the session starts and a fresh run resets the manifest
+    try:
+        _require_dims(compile_spec(spec), dim_paths)
+    except SpecValidationError as e:
+        print(f"{args.spec}: {e}", file=sys.stderr)
+        return 1
     io = ParquetManifestIO(args.table)
     import os
 
@@ -200,10 +208,8 @@ def _validate(args) -> int:
             file=sys.stderr,
         )
         return 1
-    dims = {}
-    for d in args.dim:
-        name, path = d.split("=", 1)
-        dims[name] = spark.read.parquet(path)
+    spark = get_spark(app_name="pysemantic_spark:validate")
+    dims = {name: spark.read.parquet(path) for name, path in dim_paths.items()}
     if not args.resume:
         # fresh run: reset manifest statuses by rewriting pending entries
         m = io.load_manifest()

@@ -29,12 +29,10 @@ from pyspark.storagelevel import StorageLevel
 _TRACKED: list[DataFrame] = []
 
 
-def materialize(
-    df: DataFrame, level: StorageLevel = StorageLevel.MEMORY_AND_DISK
-) -> DataFrame:
-    """Persist an intermediate consumed by multiple plan branches and
-    register it for later :func:`release_intermediates`."""
-    df.persist(level)
+def materialize(df: DataFrame) -> DataFrame:
+    """Persist (MEMORY_AND_DISK) an intermediate consumed by multiple plan
+    branches and register it for later :func:`release_intermediates`."""
+    df.persist(StorageLevel.MEMORY_AND_DISK)
     _TRACKED.append(df)
     return df
 

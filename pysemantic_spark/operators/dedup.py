@@ -144,13 +144,11 @@ def split_by_dup_keys(
     return df.join(dk, cond, "left_semi"), df.join(dk, cond, "left_anti")
 
 
-def keep_first_strategy(
-    df: DataFrame,
-    cols: list[str],
-    split_threshold: float = 0.7,
-    n_rows: int | None = None,
-    distinct_keys: int | None = None,
-) -> str:
+# distinct keys / rows at or above which keep-first takes the dup-split
+_SPLIT_THRESHOLD = 0.7
+
+
+def keep_first_strategy(df: DataFrame, cols: list[str]) -> str:
     """Pick the keep-first physical plan from one cheap agg: count + an
     approx_count_distinct sketch of the key struct (both map-side
     combinable — a single scan with a tiny shuffle). distinct_keys/rows
@@ -158,25 +156,14 @@ def keep_first_strategy(
     shuffling them through the window exchange; near 0 means most rows
     ARE duplicated → the split degenerates (empty anti branch) and pays a
     groupBy + two joins ON TOP of the same full window, measured 10×
-    slower than the plain window on an all-duplicate table.
-
-    ``n_rows``/``distinct_keys`` (round-6): feed the decision from stats
-    you already have — a resume-manifest row count, table metadata, a
-    prior agg — and the extra scan is skipped entirely. At 10¹² rows the
-    sizing pass is a whole extra pass over the table; the caller usually
-    knows both numbers (approximately is fine — only the ratio vs
-    ``split_threshold`` matters)."""
-    if n_rows is None or distinct_keys is None:
-        row = df.agg(
-            F.count(F.lit(1)).alias("n"),
-            F.approx_count_distinct(F.struct(*cols)).alias("k"),
-        ).first()
-        n_rows, distinct_keys = row["n"], row["k"]
-    return (
-        "split"
-        if n_rows == 0 or distinct_keys / n_rows >= split_threshold
-        else "window"
-    )
+    slower than the plain window on an all-duplicate table. The split
+    wins from ``_SPLIT_THRESHOLD`` up."""
+    row = df.agg(
+        F.count(F.lit(1)).alias("n"),
+        F.approx_count_distinct(F.struct(*cols)).alias("k"),
+    ).first()
+    n, k = row["n"], row["k"]
+    return "split" if n == 0 or k / n >= _SPLIT_THRESHOLD else "window"
 
 
 # Slack subtracted inside every ceil()-based PPJoin prune bound before
@@ -194,15 +181,11 @@ def exact_dedup_keep_first(
     cols: list[str],
     order_by: list[str],
     strategy: str = "auto",
-    split_threshold: float = 0.7,
-    n_rows: int | None = None,
-    distinct_keys: int | None = None,
 ) -> DataFrame:
     """Keep the first row per key under a deterministic order.
 
     Three physical plans; ``strategy="auto"`` picks between the first two
-    adaptively from the measured (or caller-supplied ``n_rows``/
-    ``distinct_keys`` — no extra scan then) distinct-key fraction
+    adaptively from the measured distinct-key fraction
     (:func:`keep_first_strategy`):
 
     - ``"split"`` — semi/anti dup-split (same pattern as the runner's
@@ -234,9 +217,7 @@ def exact_dedup_keep_first(
     :func:`split_by_dup_keys`'s null-safe joins), so duplicate NULL-key
     rows dedup to one survivor either way."""
     if strategy == "auto":
-        strategy = keep_first_strategy(
-            df, cols, split_threshold, n_rows=n_rows, distinct_keys=distinct_keys
-        )
+        strategy = keep_first_strategy(df, cols)
     if strategy not in ("split", "window", "agg_min"):
         raise ValueError(f"unknown keep-first strategy {strategy!r}")
     if strategy == "agg_min":
@@ -671,7 +652,7 @@ def _maybe_broadcast(df: DataFrame, small: bool) -> DataFrame:
 def _expand_pairs_multi(
     rep_pairs: DataFrame,
     clones: tuple[DataFrame, DataFrame, bool] | None,
-    score_col: str | None,
+    score_col: str,
     identical_score,
 ) -> DataFrame:
     """Expand the representative pairs of :func:`_collapse_and_mine` back
@@ -691,7 +672,6 @@ def _expand_pairs_multi(
     if clones is None:
         return rep_pairs
     members_multi, mined_multi, small = clones
-    score = [F.col(score_col)] if score_col else []
     ma = members_multi.select(F.col("_rep").alias("id_a"), F.col("_id").alias("_a"))
     mb = members_multi.select(F.col("_rep").alias("id_b"), F.col("_id").alias("_b"))
     ca = F.coalesce(F.col("_a"), F.col("id_a"))
@@ -702,7 +682,7 @@ def _expand_pairs_multi(
         .select(
             F.least(ca, cb).alias("id_a"),
             F.greatest(ca, cb).alias("id_b"),
-            *score,
+            F.col(score_col),
         )
     )
     mm = members_multi.join(
@@ -710,12 +690,15 @@ def _expand_pairs_multi(
         "_rep",
         "left_semi",
     )
-    iscore = [F.lit(identical_score).alias(score_col)] if score_col else []
     intra = (
         mm.select("_rep", F.col("_id").alias("_a"))
         .join(_maybe_broadcast(mm.select("_rep", F.col("_id").alias("_b")), small), "_rep")
         .filter(F.col("_a") < F.col("_b"))
-        .select(F.col("_a").alias("id_a"), F.col("_b").alias("id_b"), *iscore)
+        .select(
+            F.col("_a").alias("id_a"),
+            F.col("_b").alias("id_b"),
+            F.lit(identical_score).alias(score_col),
+        )
     )
     return cross.unionByName(intra)
 
@@ -728,29 +711,26 @@ def minhash_lsh_pairs(
     num_hashes: int = 64,
     bands: int = 16,
     threshold: float = 0.7,
-    verify: bool = True,
 ) -> DataFrame:
-    """MinHash+LSH near-dup pairs: band-bucket candidates, optional exact
+    """MinHash+LSH near-dup pairs: band-bucket candidates, then exact
     Jaccard verification (join text back only for candidates).
 
-    Returns (id_a, id_b[, jaccard]). With bands=16/num_hashes=64 (r=4),
+    Returns (id_a, id_b, jaccard). With bands=16/num_hashes=64 (r=4),
     collision prob at j=0.7 ≈ 0.98 — tune bands per target threshold.
     Identical token streams band as one representative
     (:func:`_collapse_and_mine`), and one shingle scan feeds both the
     signatures and the verify arrays."""
     pairs, clones = _collapse_and_mine(
         df, id_col, text_col, n, "_sh",
-        lambda sh: _minhash_pairs_on_shingles(
-            sh, num_hashes, bands, threshold, verify
-        ),
+        lambda sh: _minhash_pairs_on_shingles(sh, num_hashes, bands, threshold),
     )
-    return _expand_pairs_multi(pairs, clones, "jaccard" if verify else None, 1.0)
+    return _expand_pairs_multi(pairs, clones, "jaccard", 1.0)
 
 
 def _minhash_pairs_on_shingles(
-    sh: DataFrame, num_hashes: int, bands: int, threshold: float, verify: bool
+    sh: DataFrame, num_hashes: int, bands: int, threshold: float
 ) -> DataFrame:
-    """Banding + candidate join + optional exact verify over a prepared
+    """Banding + candidate join + exact verify over a prepared
     (materialized) ``(_id, _sh[, _size])`` shingle frame — one shingle
     computation feeds the signatures AND the verify arrays (the pre-fusion
     plan scanned text twice: once for signatures, once for verify)."""
@@ -781,8 +761,6 @@ def _minhash_pairs_on_shingles(
         .select(F.col("a._id").alias("id_a"), F.col("b._id").alias("id_b"))
         .distinct()
     )
-    if not verify:
-        return cand
     # shuffle_hash for the same reason as the prefix path's attach joins:
     # build on the doc-bounded shingle side, stream the candidate pairs —
     # no sort of the candidate stream (measured 4.3 s → 2.6 s at sf1.0)
@@ -991,7 +969,6 @@ def simhash_near_dup_pairs(
     id_col: str,
     text_col: str,
     max_hamming: int = 3,
-    n_bands: int | None = None,
     portable_hash: bool = True,
     n_words: int = 1,
 ) -> DataFrame:
@@ -1006,24 +983,20 @@ def simhash_near_dup_pairs(
     the band join runs narrower). Docs without a fingerprint (NULL, or
     text that trims to "") never pair.
 
-    ``n_bands`` defaults to ``max_hamming + 1``, which makes the banding
-    EXHAUSTIVE by pigeonhole: a pair within Hamming ≤ r differs in at most
-    r of the n_bands > r disjoint bands, so at least one band matches —
-    the output then EQUALS the exact hamming-≤r pair set of the
-    fingerprints (not a recall-lossy approximation). Fewer bands trade
-    completeness for fewer candidate collisions; the round-1 default
-    (4 × 15-bit bands) is exhaustive only up to r=3.
+    The fingerprint is cut into ``max_hamming + 1`` disjoint bands, which
+    makes the banding EXHAUSTIVE by pigeonhole: a pair within Hamming ≤ r
+    differs in at most r of the r + 1 bands, so at least one band matches —
+    the output EQUALS the exact hamming-≤r pair set of the fingerprints
+    (not a recall-lossy approximation).
 
     Identical token streams mine as one representative
     (:func:`_collapse_and_mine` over the ``n = 0`` token kernel): hamming
     0 within a group, and a member inherits its rep's hamming to
     everything else."""
     _check_simhash_args(portable_hash, n_words)
-    if n_bands is None:
-        n_bands = max_hamming + 1
     pairs, clones = _collapse_and_mine(
         df, id_col, text_col, 0, "_tok",
-        lambda tokf: _simhash_pairs_on_tokens(tokf, max_hamming, n_bands, n_words),
+        lambda tokf: _simhash_pairs_on_tokens(tokf, max_hamming, n_words),
     )
     return _expand_pairs_multi(pairs, clones, "hamming", 0)
 
@@ -1059,7 +1032,7 @@ def _chunk_layout(
 
 
 def _simhash_pairs_on_tokens(
-    tokf: DataFrame, max_hamming: int, n_bands: int, n_words: int
+    tokf: DataFrame, max_hamming: int, n_words: int
 ) -> DataFrame:
     """Candidate generation + exact popcount filter of
     :func:`simhash_near_dup_pairs`, over a prepared (materialized)
@@ -1068,15 +1041,14 @@ def _simhash_pairs_on_tokens(
 
     Two exact candidate schemes (round 7):
 
-    - **Band join** — exhaustive n_bands = r+1 banding (or the caller's
-      explicit recall-lossy n_bands): candidates = pairs equal in ≥1
-      band. With narrow bands this degenerates: at 60 bits / r=8 the
+    - **Band join** — exhaustive r+1 banding: candidates = pairs equal
+      in ≥1 band. With narrow bands this degenerates: at 60 bits / r=8 the
       9 bands are 6-7 bits wide (≤128 buckets) and the measured candidate
       stream at 50k docs was 9.1×10⁸ pairs — the join spends its whole
       wall time PRODUCING rows that the popcount immediately discards.
     - **Pigeonhole query expansion** (:func:`_chunk_layout`) — used
-      automatically when banding is exhaustive AND its narrowest band
-      would be <12 bits: cover the fingerprint with m = ⌊r/3⌋+1 chunks
+      automatically when the narrowest band would be <12 bits: cover
+      the fingerprint with m = ⌊r/3⌋+1 chunks
       (20 bits each at 60/r=8), so a qualifying pair agrees within
       k = ⌊r/m⌋ ≤ 2 bits on some chunk; one side explodes to its
       1+w+C(w,2) ≤k-bit chunk flips (211/chunk at 20 bits) and
@@ -1089,12 +1061,11 @@ def _simhash_pairs_on_tokens(
       join on (chunk, value) and keeps the candidate reduction.
 
     Both schemes are EXACT (the output is the full hamming-≤r pair set),
-    so they are interchangeable only in the exhaustive case — a caller
-    forcing a recall-lossy n_bands keeps the band join, whose output the
-    banding itself defines."""
+    so they are interchangeable."""
+    n_bands = max_hamming + 1
     word_names, bands_per_word, min_width = _band_layout(n_bands, n_words)
     layout = None
-    if n_bands == max_hamming + 1 and min_width < _MIN_BAND_BITS:
+    if min_width < _MIN_BAND_BITS:
         layout = _chunk_layout(_WORD_BITS, n_words, max_hamming)
     if layout is not None:
         fps = _materialize(_simhash_words(tokf, word_names))

@@ -20,7 +20,11 @@ Execution shape (SURVEY.md §3.4 — designed for 10^12 rows, tested small):
 
 Everything row-wise is a single whole-stage-codegen projection: the table is
 scanned ONCE per full-width pass, not once per check. Referential checks ride
-the same pass as broadcast hash joins (no shuffle of the fact side).
+the same pass as broadcast hash joins (no shuffle of the fact side). The
+bitmap is a ``concat`` of one array per check, ``[name]`` or empty, not
+``array_compact`` over nullable names: ``array_compact`` lowers to a
+``filter`` lambda, a higher-order function with no codegen, which would
+evaluate every check of every row interpreted.
 
 The per-bucket summary (:func:`_bucket_summary`) is the one definition of
 every count the runner reports. A row with any violation counts once in
@@ -256,6 +260,19 @@ def _counted_checks(plan: CheckPlan) -> list[str]:
     return [n for n in plan.check_names if not n.startswith("unique_key:")]
 
 
+def _require_dims(plan: CheckPlan, names) -> None:
+    """Raise SpecValidationError for the first referential check whose dim
+    table is not among ``names``."""
+    from pysemantic_spark.errors import SpecValidationError
+
+    for ref in plan.referential:
+        if ref.dim_table not in names:
+            raise SpecValidationError(
+                f"referential check {ref.name}: dim table {ref.dim_table!r} "
+                f"not provided (have {sorted(names)})"
+            )
+
+
 def _flag(
     df: DataFrame, plan: CheckPlan, dims: dict[str, DataFrame], bucket_expr: Column
 ) -> DataFrame:
@@ -263,18 +280,20 @@ def _flag(
     marks as broadcast left-outer joins (fact side unshuffled), then ONE
     fused projection of every row check. df-level pre-rules are the
     caller's, applied before. A referential check whose dim is not in
-    ``dims`` raises SpecValidationError here, before any job runs."""
-    from pysemantic_spark.errors import SpecValidationError
+    ``dims`` raises SpecValidationError here, before any job runs.
 
+    The bitmap concatenates, per check, ``array(name)`` when it fails and
+    a typed empty array when it passes, which codegens where
+    ``array_compact(array(CASE WHEN … THEN name END, …))`` runs a
+    ``filter`` lambda per row. The empty array is typed ``array<string>``
+    with ``containsNull = false``, so the bitmap and the sink's
+    ``check_name`` stay non-nullable; the DDL cast ``array<string>`` would
+    make both nullable."""
+    _require_dims(plan, dims)
     input_cols = df.columns
     work = df
-    ref_flag_cols: list[tuple[str, Column]] = []
+    checks = [(chk.name, chk.violation_expr()) for chk in plan.row_checks]
     for ref in plan.referential:
-        if ref.dim_table not in dims:
-            raise SpecValidationError(
-                f"referential check {ref.name}: dim table {ref.dim_table!r} "
-                f"not provided (have {sorted(dims)})"
-            )
         mark = f"__ref_ok__{ref.column}"
         dim = (
             dims[ref.dim_table]
@@ -283,21 +302,12 @@ def _flag(
             .withColumn(mark, F.lit(True))
         )
         work = work.join(F.broadcast(dim), on=ref.column, how="left")
-        ref_flag_cols.append(
-            (ref.name, F.col(ref.column).isNotNull() & F.col(mark).isNull())
-        )
+        missing = F.col(ref.column).isNotNull() & F.col(mark).isNull()
+        checks.append((ref.name, F.coalesce(missing, F.lit(False))))
 
-    flag_exprs: list[Column] = [
-        F.when(chk.violation_expr(), F.lit(chk.name)) for chk in plan.row_checks
-    ]
-    flag_exprs += [
-        F.when(F.coalesce(expr, F.lit(False)), F.lit(name))
-        for name, expr in ref_flag_cols
-    ]
-    if flag_exprs:
-        viol_arr = F.array_compact(F.array(*flag_exprs))
-    else:
-        viol_arr = F.array().cast("array<string>")
+    empty = F.array().cast(T.ArrayType(T.StringType(), containsNull=False))
+    flags = [F.when(cond, F.array(F.lit(name))).otherwise(empty) for name, cond in checks]
+    viol_arr = F.concat(*flags) if flags else empty
     return (
         work.withColumn(VIOLATIONS_COL, viol_arr)
         .withColumn(BUCKET_COL, bucket_expr)
@@ -435,7 +445,6 @@ def execute(
     n_buckets: int = 32,
     violations_sink: str | None = None,
     dupes_sink: str | None = None,
-    sink_format: str = "parquet",
 ) -> dict[str, Any]:
     """Production run: one concurrent wave of independent jobs.
 
@@ -447,10 +456,10 @@ def execute(
         stats and per-check counts. It is a second full-width scan, and
         the call's tail waits for it;
       - for EVERY declared unique key, the duplicate-key groups (see
-        :func:`_dup_groups`), written to ``dupes_sink`` (defaults to
-        ``<violations_sink>_dupes``), never collected: their count is
-        observed on that sink write (a ``count()`` of the persisted groups
-        without a sink);
+        :func:`_dup_groups`), written as Parquet to ``dupes_sink``
+        (defaults to ``<violations_sink>_dupes``), never collected: their
+        count is observed on that sink write (a ``count()`` of the
+        persisted groups without a sink);
       - drift, when the spec has a ``drift:`` block: one drift sketch
         (``drift.spec_drift_report``) of the drift columns keyed by the
         bucket, computed on ``df`` (the dim joins stay out of its plan), in
@@ -458,8 +467,9 @@ def execute(
         job starts, so a bad block fails with no sink written. The
         table-level ``drift`` rows are scored over the sum of the buckets'
         counts, and each bucket's counts ride its partition report row.
-    Pass 1 (main thread, full width) writes the violations row stream to
-      ``violations_sink``; without a sink nothing reads it, so it is skipped.
+    Pass 1 (main thread, full width) writes the violations row stream as
+      Parquet to ``violations_sink``; without a sink nothing reads it, so
+      it is skipped.
     ``on_drift: fail`` raises only after every job has finished; it
     scores the call's input as a whole.
 
@@ -542,9 +552,9 @@ def execute(
         if dupes_sink:
             dup_obs = Observation("dup_keys")  # the count rides the write
             observed = dupes.observe(dup_obs, F.count(F.lit(1)).alias("n"))
-            observed.write.format(sink_format).mode("overwrite").save(dupes_sink)
+            observed.write.mode("overwrite").parquet(dupes_sink)
             # read back with the schema just written: inference would cost a job
-            handle = spark.read.format(sink_format).schema(dupes.schema).load(dupes_sink)
+            handle = spark.read.schema(dupes.schema).parquet(dupes_sink)
             return handle, int(dup_obs.get["n"])
         return dupes, dupes.persist().count()
 
@@ -576,7 +586,7 @@ def execute(
             )
             _mark("compile_and_plan")
             if violations_sink:
-                viol.write.format(sink_format).mode("overwrite").save(violations_sink)
+                viol.write.mode("overwrite").parquet(violations_sink)
             _mark("pass1_violations_write")
             merged = summary_fut.result()
             if dupes_fut is not None:

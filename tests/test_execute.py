@@ -396,3 +396,18 @@ def test_execute_helper_job_error_propagates_and_joins_threads(spark, tmp_path):
     assert not [
         t for t in threading.enumerate() if t.name.startswith("ThreadPoolExecutor")
     ]
+
+
+def test_runner_clean_path_null_keys(spark):
+    """The execute/validate clean path's dup-split must also be NULL-safe:
+    duplicate NULL-key rows dedup to one survivor, not all survive."""
+    from pysemantic_spark.operators.runner import validate
+    from pysemantic_spark.spec import DatasetSpec
+
+    df = spark.createDataFrame(
+        [(1, 10), (1, 11), (None, 20), (None, 21), (2, 30)], "k int, v int"
+    )
+    spec = DatasetSpec(name="t", uniqueness=[["k"]], order_by=["v"])
+    clean = validate(spark, df, spec).clean
+    got = {(r["k"], r["v"]) for r in clean.collect()}
+    assert got == {(1, 10), (2, 30), (None, 20)}

@@ -16,6 +16,7 @@ from pysemantic_spark.fixtures import dim_tools_pdf, transcripts_pdf, transcript
 from pysemantic_spark.operators import dedup, similarity
 from pysemantic_spark.operators.runner import validate
 from pysemantic_spark.plans.compiler import compile_spec
+from pysemantic_spark.spec import DatasetSpec
 
 
 def _plan(df) -> str:
@@ -68,6 +69,25 @@ def test_stats_agg_is_partial_then_final(parts):
     assert "partial_" in plan
     # single-row result: one fact scan feeds the whole wide agg
     assert plan.count("transcripts.parquet") == 1
+
+
+@pytest.mark.parametrize("checks", ["spec", "none"])
+def test_violation_bitmap_codegens_and_keeps_non_null_names(spark, parts, checks):
+    """The bitmap is built without a higher-order function: no lambda
+    (array_compact's ``filter``) is left to evaluate interpreted in the
+    fused projection, and the check names stay non-nullable, also for a
+    spec with no row checks (the bitmap is then the typed empty array)."""
+    df, _, res = parts
+    if checks == "none":
+        res = validate(spark, df, DatasetSpec(name="t"), bucket_by="conv_id")
+    for frame in (res.violations, res.stats):
+        frame.collect()  # the executed plan, AQE's final one included
+        plan = _plan(frame)
+        assert "lambdafunction" not in plan, plan
+    dtype = res.flagged.schema["_violations"].dataType
+    assert dtype.simpleString() == "array<string>"
+    assert dtype.containsNull is False
+    assert res.violations.schema["check_name"].nullable is False
 
 
 def test_filter_pushdown_reaches_scan(spark, parts):
