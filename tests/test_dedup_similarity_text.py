@@ -1,8 +1,7 @@
 """Dedup family, similarity search, and text functions vs small oracles:
 exact and keep-first dedup, connected components and duplicate clusters,
 the n-gram, MinHash and SimHash miners with their identical-doc collapse
-guard and Arrow text kernels, the vector operators, and the release of
-the intermediates they persist."""
+guard and Arrow text kernels, and the vector operators."""
 
 from __future__ import annotations
 
@@ -12,7 +11,6 @@ import pickle
 import random
 import subprocess
 import sys
-import warnings
 
 import numpy as np
 import pandas as pd
@@ -24,11 +22,6 @@ from pyspark.sql import functions as F
 
 from pysemantic_spark.functions import text as tx
 from pysemantic_spark.operators import dedup, similarity
-from pysemantic_spark.operators.cache import (
-    release_intermediates,
-    tracked_count,
-    tracked_intermediates,
-)
 
 SF001 = "/root/testdata/sf0.001"
 
@@ -116,16 +109,6 @@ def test_keep_first_deterministic(spark):
     assert [r["v"] for r in got] == ["early", "solo"]
 
 
-def _events(spark, n=500, dup_every=50):
-    pdf = pd.DataFrame(
-        {
-            "k": [i // 1 if i % dup_every else i - 1 for i in range(n)],
-            "v": range(n),
-        }
-    )
-    return spark.createDataFrame(pdf)
-
-
 def _first_per_key(df, key, order):
     """The naive keep-first: row_number() over the whole table."""
     w = Window.partitionBy(key).orderBy(order)
@@ -134,34 +117,6 @@ def _first_per_key(df, key, order):
         .filter(F.col("rn") == 1)
         .drop("rn")
     )
-
-
-def test_keep_first_split_matches_naive_window(spark):
-    df = _events(spark)
-    got = (
-        dedup.exact_dedup_keep_first(df, ["k"], ["v"])
-        .orderBy("k", "v")
-        .collect()
-    )
-    exp = _first_per_key(df, "k", "v").orderBy("k", "v").collect()
-    assert [tuple(r) for r in got] == [tuple(r) for r in exp]
-
-
-def test_keep_first_window_input_is_dup_split_not_full_scan(spark):
-    """The window must consume the SEMI-JOIN branch (dup keys only), never
-    the full scan — the 10^12-row shuffle-volume guarantee."""
-    df = _events(spark)
-    plan = (
-        dedup.exact_dedup_keep_first(df, ["k"], ["v"])
-        ._jdf.queryExecution()
-        .optimizedPlan()
-        .toString()
-    )
-    # optimized plan: Window's child subtree contains the LeftSemi join
-    win_at = plan.find("Window")
-    assert win_at != -1
-    assert "LeftSemi" in plan[win_at:], plan
-    assert "LeftAnti" in plan, plan
 
 
 def _null_key_df(spark):
@@ -207,30 +162,6 @@ def test_keep_first_auto_matches_naive_window_with_nulls(spark):
     assert got == exp
 
 
-def test_keep_first_agg_min_matches_window(spark):
-    rows = [(0, i, i * 7 % 13) for i in range(400)]  # mega key: 400 rows
-    rows += [(k, 1000 + k, k % 5) for k in range(1, 50)]  # unique keys
-    rows += [(7, 2000, 99), (7, 2001, 98)]  # small dup group
-    rows += [(None, 3000, 1), (None, 3001, 2)]  # NULL keys group together
-    df = spark.createDataFrame(rows, "k long, ord long, v long")
-    nullsafe = lambda t: tuple((x is None, x) for x in t)  # noqa: E731
-    got = {}
-    for strat in ("window", "split", "agg_min"):
-        got[strat] = sorted(
-            (
-                tuple(r)
-                for r in dedup.exact_dedup_keep_first(
-                    df, ["k"], ["ord"], strategy=strat
-                ).collect()
-            ),
-            key=nullsafe,
-        )
-    assert got["agg_min"] == got["window"] == got["split"]
-    # column order preserved by the agg_min plan
-    out = dedup.exact_dedup_keep_first(df, ["k"], ["ord"], strategy="agg_min")
-    assert out.columns == df.columns
-
-
 # --- connected components and duplicate clusters -----------------------------
 
 def _edges(spark, edges):
@@ -251,28 +182,6 @@ def _union_find_min_labels(edges):
         if ra != rb:
             parent[max(ra, rb)] = min(ra, rb)
     return {n: find(n) for n in parent}
-
-
-def test_connected_components_known_graph(spark):
-    """Chain, triangle, and 2-cycle: every node labeled with the smallest
-    reachable id, clusters never merged across components."""
-    pairs = pd.DataFrame(
-        {
-            "id_a": [1, 2, 3,   10, 11, 10,   20],
-            "id_b": [2, 3, 4,   11, 12, 12,   21],
-        }
-    )
-    got = {
-        (r["node"], r["cluster_rep"])
-        for r in dedup.connected_components(
-            spark.createDataFrame(pairs)
-        ).collect()
-    }
-    release_intermediates()
-    exp = {(1, 1), (2, 1), (3, 1), (4, 1),
-           (10, 10), (11, 10), (12, 10),
-           (20, 20), (21, 20)}
-    assert got == exp
 
 
 def test_cc_star_converges_on_long_chain(spark):
@@ -307,70 +216,6 @@ def test_cc_star_matches_label_on_random_graphs(spark, monkeypatch):
             ).collect()
         }
         assert star == _union_find_min_labels(edges)
-
-
-def test_star_local_finish_equals_distributed(spark, monkeypatch):
-    """The min-root union-find local finish must produce the SAME
-    (node, cluster_rep) map as fully-distributed contraction rounds, on
-    graphs mixing chains, cliques, and singletons-with-one-edge."""
-    rng = random.Random(23)
-    for trial in range(3):
-        edges = {tuple(sorted(rng.sample(range(80), 2))) for _ in range(90)}
-        edges |= {(i, i + 1) for i in range(60, 75)}  # chain tail
-        p = _edges(spark, sorted(edges))
-        monkeypatch.setattr(dedup, "_LOCAL_FINISH_EDGES", 0)  # force rounds
-        dist = {
-            r["node"]: r["cluster_rep"]
-            for r in dedup.connected_components(
-                p, max_iters=25, algorithm="star"
-            ).collect()
-        }
-        monkeypatch.setattr(dedup, "_LOCAL_FINISH_EDGES", 10**9)  # force local
-        loc = {
-            r["node"]: r["cluster_rep"]
-            for r in dedup.connected_components(
-                p, max_iters=25, algorithm="star"
-            ).collect()
-        }
-        assert dist == loc
-
-
-def test_star_distributed_rounds_still_converge_on_chain(spark, monkeypatch):
-    """With the local finish disabled the distributed large/small-star
-    rounds must still reach the star forest on a diameter-40 chain —
-    the cap is an optimization, not a correctness crutch."""
-    monkeypatch.setattr(dedup, "_LOCAL_FINISH_EDGES", 0)
-    chain = [(i, i + 1) for i in range(40)]
-    got = dedup.connected_components(
-        _edges(spark, chain), max_iters=12, algorithm="star"
-    ).collect()
-    assert len(got) == 41
-    assert all(r["cluster_rep"] == 0 for r in got)
-
-
-def test_star_local_finish_fires_under_default_cap(spark):
-    """At test scale the measured edge count is far under the 1M cap, so
-    the local path must fire (and be exact) without any patching."""
-    edges = [(1, 2), (2, 3), (10, 11), (20, 21), (21, 22), (22, 23)]
-    got = {
-        r["node"]: r["cluster_rep"]
-        for r in dedup.connected_components(
-            _edges(spark, edges), algorithm="star"
-        ).collect()
-    }
-    assert got == {1: 1, 2: 1, 3: 1, 10: 10, 11: 10,
-                   20: 20, 21: 20, 22: 20, 23: 20}
-
-
-def test_is_star_forest_exact_shape_test(spark):
-    stars = spark.createDataFrame([(3, 1), (2, 1), (9, 5)], "u long, v long")
-    assert dedup._star_forest_probe(stars)[0]
-    chain = spark.createDataFrame([(3, 2), (2, 1)], "u long, v long")
-    assert not dedup._star_forest_probe(chain)[0]  # center 2 also a leaf
-    dup_src = spark.createDataFrame([(3, 1), (3, 2)], "u long, v long")
-    assert not dedup._star_forest_probe(dup_src)[0]  # u appears twice
-    empty = spark.createDataFrame([], "u long, v long")
-    assert dedup._star_forest_probe(empty)[0]  # vacuous star forest
 
 
 @pytest.mark.parametrize("algorithm", ["star"])
@@ -413,168 +258,6 @@ def test_duplicate_clusters_clone_group_without_cross_pairs(spark):
         for r in dedup.duplicate_clusters(df, "doc_id", "text").collect()
     }
     assert got == {(0, 0), (1, 0), (2, 0), (3, 0)}
-
-
-def test_duplicate_clusters_sub_shingle_clones_never_cluster(spark):
-    body = "the quick brown fox jumps over the lazy dog again and again"
-    docs = (
-        [(i, body) for i in range(3)]
-        + [(20, "tiny doc"), (21, "tiny doc")]  # identical but < shingle len
-        + [(50, "completely different content on an unrelated topic entirely")]
-    )
-    df = spark.createDataFrame(docs, "doc_id long, text string")
-    got = {
-        (r["node"], r["cluster_rep"])
-        for r in dedup.duplicate_clusters(df, "doc_id", "text").collect()
-    }
-    assert got == {(0, 0), (1, 0), (2, 0)}
-
-
-# --- n-gram prefix filter ----------------------------------------------------
-
-def _rand_docs(n_docs=40, seed=7):
-    rng = random.Random(seed)
-    vocab = [f"w{i}" for i in range(50)]
-    docs = []
-    for i in range(n_docs):
-        base = [rng.choice(vocab) for _ in range(30)]
-        docs.append((i, " ".join(base)))
-        if rng.random() < 0.5:  # planted near-dup: few token edits
-            mut = list(base)
-            for _ in range(rng.randint(1, 3)):
-                mut[rng.randrange(len(mut))] = rng.choice(vocab)
-            docs.append((1000 + i, " ".join(mut)))
-    return docs
-
-
-def test_ngram_prefix_filter_exact_recall(spark):
-    docs = _rand_docs(n_docs=30, seed=11)
-    df = spark.createDataFrame(pd.DataFrame(docs, columns=["doc_id", "text"]))
-    with tracked_intermediates():
-        with_f = {
-            (x["id_a"], x["id_b"], x["jaccard"])
-            for x in dedup.ngram_jaccard_pairs(
-                df, "doc_id", "text", n=2, threshold=0.5, prefix_filter=True
-            ).collect()
-        }
-        without = {
-            (x["id_a"], x["id_b"], x["jaccard"])
-            for x in dedup.ngram_jaccard_pairs(
-                df, "doc_id", "text", n=2, threshold=0.5, prefix_filter=False
-            ).collect()
-        }
-    assert with_f == without
-    assert with_f, "no pairs above threshold — vacuous"
-
-
-def test_ngram_prefix_index_shrinks(spark):
-    docs = _rand_docs(n_docs=30, seed=11)
-    df = spark.createDataFrame(pd.DataFrame(docs, columns=["doc_id", "text"]))
-    with tracked_intermediates():
-        sh = dedup._materialize(
-            df.select(F.col("doc_id").alias("_id"), dedup._shingles_arrow("text", 2).alias("_sh"))
-            .withColumn("_size", F.size("_sh"))
-        )
-        inv = sh.select("_id", F.explode("_sh").alias("shingle"))
-        full = inv.count()
-        pref = dedup.ngram_prefix_index(
-            inv, sh.select("_id", "_size"), threshold=0.5
-        ).count()
-    assert pref < full * 0.7, (pref, full)
-
-
-def test_prefix_path_keeps_float_boundary_pair(spark):
-    """Regression: the PPJoin positional filter computed
-    α = ceil(t/(1+t)·(|x|+|y|)) in doubles; at t=0.2 with |x|+|y|=18 the
-    product lands an ulp above its true value 3 (3.0000000000000004),
-    ceil over-tightens α to 4, and a true threshold-boundary pair
-    (overlap 3, jaccard exactly 0.2) was silently pruned — found by the
-    prefix==counting hypothesis property test (seed 1). All ceil-based
-    prune bounds now subtract _EXACT_EPS before rounding."""
-    rng = random.Random(1)
-    docs = []
-    for i in range(6):
-        L = rng.randint(2, 10)
-        toks = [f"w{rng.randrange(8)}" for _ in range(L)]
-        docs.append((i, " ".join(toks)))
-        if rng.random() < 0.4:
-            mut = list(toks)
-            if rng.random() < 0.5 and len(mut) > 2:
-                mut.pop(rng.randrange(len(mut)))
-            else:
-                mut.append(f"w{rng.randrange(8)}")
-            docs.append((1000 + i, " ".join(mut)))
-    df = spark.createDataFrame(pd.DataFrame(docs, columns=["doc_id", "text"]))
-    kw = dict(n=2, threshold=0.2)
-    prefix = {
-        (r["id_a"], r["id_b"], r["jaccard"])
-        for r in dedup.ngram_jaccard_pairs(
-            df, "doc_id", "text", prefix_filter=True, **kw
-        ).collect()
-    }
-    counting = {
-        (r["id_a"], r["id_b"], r["jaccard"])
-        for r in dedup.ngram_jaccard_pairs(
-            df, "doc_id", "text", prefix_filter=False, **kw
-        ).collect()
-    }
-    assert (5, 1001, 0.2) in prefix  # the boundary pair the old α dropped
-    assert prefix == counting
-
-
-# --- cache release -----------------------------------------------------------
-
-def _persistent_rdd_count(spark) -> int:
-    return spark.sparkContext._jsc.sc().getPersistentRDDs().size()
-
-
-def test_dedup_operators_release_intermediates(spark):
-    release_intermediates()
-    base = _persistent_rdd_count(spark)
-    docs = _rand_docs(n_docs=10)
-    df = spark.createDataFrame(pd.DataFrame(docs, columns=["doc_id", "text"]))
-    dedup.ngram_jaccard_pairs(df, "doc_id", "text", n=2, threshold=0.5).count()
-    dedup.minhash_lsh_pairs(
-        df, "doc_id", "text", n=2, num_hashes=16, bands=8, threshold=0.5
-    ).count()
-    assert tracked_count() > 0
-    freed = release_intermediates(blocking=True)
-    assert freed > 0 and tracked_count() == 0
-    assert _persistent_rdd_count(spark) <= base
-
-
-def test_similarity_operators_release_intermediates(spark):
-    release_intermediates()
-    base = _persistent_rdd_count(spark)
-    rng = np.random.default_rng(3)
-    pdf = pd.DataFrame(
-        {
-            "vec_id": range(60),
-            "embedding": [rng.normal(size=8).tolist() for _ in range(60)],
-        }
-    )
-    df = spark.createDataFrame(pdf)
-    # single-pass bucket-local verify: nothing is (or should be)
-    # persisted — the operator must not LEAK persisted RDDs
-    similarity.embedding_near_dup_pairs(
-        df, dim=8, threshold=0.5, n_planes=4, n_tables=4
-    ).count()
-    release_intermediates(blocking=True)
-    assert _persistent_rdd_count(spark) <= base
-    # the top-k operators score corpus batches in one kernel: they persist
-    # nothing, tracked or not
-    qdf = df.filter(F.col("vec_id") < 2).select(
-        F.col("vec_id").alias("query_id"), "embedding"
-    )
-    for out in (
-        similarity.cosine_topk(df, qdf, k=3),
-        similarity.lsh_bucketed_topk(
-            df, qdf, dim=8, k=3, n_planes=4, n_tables=4, n_probe_bits=1),
-        similarity.ivf_topk(df, qdf, dim=8, k=3, n_centroids=4),
-    ):
-        out.count()
-        assert tracked_count() == 0
-        assert _persistent_rdd_count(spark) <= base
 
 
 # --- similarity -------------------------------------------------------------
@@ -991,111 +674,6 @@ def test_ivf_sample_fraction_repartition_invariance(spark):
     assert base == shuffled
 
 
-@pytest.mark.parametrize("frac", [1.0, 0.4])
-def test_ivf_sample_layout_independent_beyond_cap(spark, frac):
-    """sample_size=20 → cap 80 ≪ 500 corpus rows: a limit() prefix (or a
-    per-partition-seeded Bernoulli set) would change under
-    repartitioning. Centroids must be bit-identical."""
-    emb = _emb(spark)
-    base = similarity.train_ivf_centroids(
-        emb, dim=64, n_centroids=4, sample_size=20, sample_fraction=frac
-    )
-    shuffled = similarity.train_ivf_centroids(
-        emb.repartition(7), dim=64, n_centroids=4, sample_size=20,
-        sample_fraction=frac,
-    )
-    assert np.array_equal(base, shuffled)
-
-
-def _exact_sets(spark, emb, queries, k=5):
-    exact = similarity.cosine_topk(emb, queries, k=k)
-    out: dict = {}
-    for r in exact.collect():
-        out.setdefault(r["query_id"], set()).add(r["vec_id"])
-    return out
-
-
-def _recall(approx_df, exact_sets, k=5):
-    got: dict = {}
-    for r in approx_df.collect():
-        got.setdefault(r["query_id"], set()).add(r["vec_id"])
-    return sum(
-        len(got.get(q, set()) & e) / len(e) for q, e in exact_sets.items()
-    ) / len(exact_sets)
-
-
-def test_lsh_recall_monotone_in_tables(spark):
-    """Tables are seeded seed + 7919*t, so the first L tables of a larger
-    run ARE the smaller run: candidates (hence recall) can only grow."""
-    emb = _emb(spark)
-    queries = _first_queries(emb, 3)
-    exact = _exact_sets(spark, emb, queries)
-    recalls = [
-        _recall(
-            similarity.lsh_bucketed_topk(
-                emb, queries, dim=64, k=5, n_planes=8,
-                n_tables=t, n_probe_bits=1,
-            ),
-            exact,
-        )
-        for t in (2, 6, 12)
-    ]
-    assert recalls == sorted(recalls), recalls
-
-
-def test_ivf_recall_monotone_in_probes_and_probe_all_is_exact(spark):
-    emb = _emb(spark)
-    queries = _first_queries(emb, 3)
-    exact = _exact_sets(spark, emb, queries)
-    kw = dict(dim=64, k=5, n_centroids=6, sample_fraction=1.0)
-    recalls = [
-        _recall(similarity.ivf_topk(emb, queries, n_probe=p, **kw), exact)
-        for p in (1, 2, 6)
-    ]
-    assert recalls == sorted(recalls), recalls
-    # probing every centroid scores the whole corpus → exactly the exact
-    # top-k (same rounding, same tie-break)
-    full = similarity.ivf_topk(emb, queries, n_probe=6, **kw)
-    got = {(r["query_id"], r["vec_id"]) for r in full.collect()}
-    want = {(q, v) for q, s in exact.items() for v in s}
-    assert got == want
-    assert recalls[-1] == 1.0
-
-
-def test_ivf_probe_all_equals_exact_property(spark):
-    """Sweep (n_centroids, sample_fraction): probing ALL centroids must
-    return the exact top-k whatever the coarse quantizer looks like."""
-    emb = _emb(spark).cache()
-    queries = _first_queries(emb, 2)
-    want = {
-        (q, v)
-        for q, s in _exact_sets(spark, emb, queries, k=4).items()
-        for v in s
-    }
-
-    @settings(
-        max_examples=4,
-        deadline=None,
-        suppress_health_check=[HealthCheck.too_slow],
-    )
-    @given(
-        n_centroids=st.integers(min_value=2, max_value=8),
-        frac=st.sampled_from([0.3, 0.7, 1.0]),
-    )
-    def check(n_centroids, frac):
-        full = similarity.ivf_topk(
-            emb, queries, dim=64, k=4, n_centroids=n_centroids,
-            n_probe=n_centroids, sample_fraction=frac,
-        )
-        got = {(r["query_id"], r["vec_id"]) for r in full.collect()}
-        assert got == want
-
-    try:
-        check()
-    finally:
-        emb.unpersist()
-
-
 # --- SimHash banding ----------------------------------------------------------
 
 def test_simhash_banding_exhaustive_at_radius(spark):
@@ -1289,23 +867,6 @@ def test_collapse_multi_expansion_matches_reference(spark):
     # clone-group pairs present with score 1.0; sub-shingle clones absent
     ids = {(a, b) for a, b, _ in got}
     assert (0, 1) in ids and (20, 21) not in ids
-
-
-def test_collapse_for_mining_reports_broadcastable_clone_map(spark):
-    docs = [(i, "same exact text body here repeated") for i in range(4)] + [
-        (10, "another unrelated document body entirely different")
-    ]
-    df = spark.createDataFrame(docs, "doc_id long, text string")
-    # the shingle frame (n-gram miners) and the token frame (SimHash)
-    for n, arr_col in ((3, "_sh"), (0, "_tok")):
-        _, clones = dedup._collapse_and_mine(
-            df, "doc_id", "text", n, arr_col, lambda frame: frame
-        )
-        assert clones is not None
-        mm, mined, small = clones
-        assert small is True  # 4 clone members, far under the broadcast cap
-        assert mm.count() == 4
-        assert mined.count() == 1  # one clone-group rep, and it mines
 
 
 def test_ngram_collapse_survives_stop_cap(spark):
@@ -1523,59 +1084,6 @@ def test_simhash_expansion_equals_banding(spark):
     dedup.release_intermediates()
     assert via_expansion == via_banding
     assert via_banding, "fixture produced no near-dup pairs - vacuous test"
-
-
-def test_multiword_simhash_equals_brute_force(spark):
-    """Property: exhaustive banding over a 2-word (128-bit) fingerprint
-    returns EXACTLY the hamming<=r pair set of the fingerprints."""
-    docs = _rand_docs()
-    df = spark.createDataFrame(pd.DataFrame(docs, columns=["doc_id", "text"]))
-    r = 8
-    with tracked_intermediates():
-        got = {
-            (x["id_a"], x["id_b"], x["hamming"])
-            for x in dedup.simhash_near_dup_pairs(
-                df, "doc_id", "text", max_hamming=r, n_words=2
-            ).collect()
-        }
-        fps = (
-            dedup.simhash_fingerprints(df, "doc_id", "text", n_bands=9, n_words=2)
-            .select("_id", "simhash", "simhash1")
-            .collect()
-        )
-    mask = (1 << 64) - 1
-    exp = set()
-    for i, a in enumerate(fps):
-        for b in fps[i + 1:]:
-            h = bin((a["simhash"] ^ b["simhash"]) & mask).count("1") + bin(
-                (a["simhash1"] ^ b["simhash1"]) & mask
-            ).count("1")
-            if h <= r:
-                lo, hi = sorted((a["_id"], b["_id"]))
-                exp.add((lo, hi, h))
-    assert got == exp
-    assert exp, "fixture produced no near-dup pairs — test is vacuous"
-
-
-def test_simhash_band_width_warning(spark):
-    docs = _rand_docs(n_docs=5)
-    df = spark.createDataFrame(pd.DataFrame(docs, columns=["doc_id", "text"]))
-    with pytest.warns(UserWarning, match="narrowest band"):
-        dedup.simhash_fingerprints(df, "doc_id", "text", n_bands=9, n_words=1)
-    with warnings.catch_warnings():
-        warnings.simplefilter("error")  # 2 words x 9 bands -> >=12-bit bands
-        dedup.simhash_fingerprints(df, "doc_id", "text", n_bands=9, n_words=2)
-
-
-def test_single_word_simhash_layout_unchanged(spark):
-    """n_words=1 must keep the single-word schema (simhash + band0..3) so
-    the portable DuckDB oracle stays byte-identical."""
-    docs = _rand_docs(n_docs=5)
-    df = spark.createDataFrame(pd.DataFrame(docs, columns=["doc_id", "text"]))
-    cols = dedup.simhash_fingerprints(
-        df, "doc_id", "text", n_bands=4, portable_hash=True
-    ).columns
-    assert cols == ["_id", "simhash", "band0", "band1", "band2", "band3"]
 
 
 def test_simhash_expansion_fires_for_driver_config(spark):

@@ -1,6 +1,5 @@
-"""The `__spark_entry__.py` driver contract: declared queries and their
-oracles, the cache release between queries, the exact-top-k memo and its
-invalidation key, and the equivalence of rewritten query shapes."""
+"""The `__spark_entry__.py` driver contract: the exact-top-k memo's
+invalidation key and the equivalence of rewritten query shapes."""
 
 from __future__ import annotations
 
@@ -9,34 +8,6 @@ import os
 from pyspark.sql import functions as F
 
 import __spark_entry__ as entrymod
-from pysemantic_spark.operators.cache import materialize, tracked_count
-
-SF001 = "/root/testdata/sf0.001"
-
-
-def test_queries_wrapper_releases_previous_intermediates(spark):
-    qs = entrymod.queries()
-    # the streaming twin must carry a full oracle
-    assert "streaming_drift_events" in qs
-    assert "streaming_drift_events" in entrymod.oracle_sql()
-    # the wrapper must call release on entry: simulate a leftover
-    leftover = materialize(spark.range(4))
-    leftover.count()
-    assert tracked_count() > 0
-    qs["top_events_by_value"](spark, SF001)
-    assert tracked_count() == 0
-
-
-def test_new_driver_queries_run_and_shape(spark):
-    qs, osql = entrymod.queries(), entrymod.oracle_sql()
-    for name, cols in [
-        ("ngram_prefix_pairs_documents", ["id_a", "id_b", "jaccard"]),
-        ("simhash_wide_documents", ["id_a", "id_b", "hamming"]),
-    ]:
-        assert name in qs and name in osql
-        df = qs[name](spark, SF001)
-        assert df.columns == cols
-        assert df.count() >= 0
 
 
 def test_source_fingerprint_tracks_mtime_and_size(tmp_path):
@@ -49,18 +20,6 @@ def test_source_fingerprint_tracks_mtime_and_size(tmp_path):
     os.utime(f, (1, 1))
     fp2 = entrymod._source_fingerprint(str(tmp_path), "embeddings")
     assert fp1 != fp2
-
-
-def test_exact_topk_memo_evicts_stale_fingerprints(spark):
-    entrymod._EXACT_TOPK_MEMO.clear()
-    abspath = os.path.abspath(SF001)
-    for i in range(3):  # three dead fingerprints for the same sf_dir
-        entrymod._EXACT_TOPK_MEMO[(abspath, (f"stale{i}", 0, 0))] = (None, None)
-    entrymod._exact_topk5(spark, SF001)
-    keys = [k for k in entrymod._EXACT_TOPK_MEMO if k[0] == abspath]
-    assert len(keys) == 1
-    assert keys[0][1] != ("stale0", 0, 0)
-    entrymod._EXACT_TOPK_MEMO.clear()
 
 
 def test_corpus_clean_conditional_agg_matches_filtered_groupby(spark):

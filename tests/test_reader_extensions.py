@@ -239,44 +239,6 @@ def test_combine_dt_dict_form_validation():
         DatasetSpec.from_dict("t", {"combine_dt_columns": {"ts": {"format": "x"}}})
 
 
-def test_dotted_path_converter(spark, tmp_path):
-    """A spec-file-only custom converter via module:function — no registry
-    registration, no engine-code edit."""
-    csv = tmp_path / "d.csv"
-    csv.write_text('name\n"  Alice   M  "\n"  bob "\n')
-    spec = DatasetSpec.from_dict(
-        "d",
-        {
-            "path": str(csv),
-            "dtypes": {"name": "str"},
-            "column_rules": {
-                "name": {
-                    "converters": [
-                        "pysemantic_spark.sources.readers:normalize_ws"
-                    ]
-                }
-            },
-        },
-    )
-    got = sorted(r["name"] for r in load_dataset(spark, spec).collect())
-    assert got == ["Alice M", "bob"]
-
-
-def test_dotted_path_converter_bad_path_fails_at_compile(spark, tmp_path, monkeypatch):
-    from pysemantic_spark.sources.readers import resolve_converter
-
-    with pytest.raises(ParserArgumentError, match="cannot import"):
-        resolve_converter("pysemantic_spark.no_such_module_xyz:fn")
-    # non-allowlisted modules are rejected BEFORE import
-    with pytest.raises(ParserArgumentError, match="allowlist"):
-        resolve_converter("os:not_a_function_xyz")
-    monkeypatch.setenv("PYSEMANTIC_SPARK_CONVERTER_MODULES", "os")
-    with pytest.raises(ParserArgumentError, match="no callable"):
-        resolve_converter("os:not_a_function_xyz")
-    with pytest.raises(ParserArgumentError, match="unknown converter"):
-        resolve_converter("not_registered")
-
-
 def test_converter_dotted_path_allowlist(monkeypatch):
     from pysemantic_spark.sources import readers
 

@@ -504,36 +504,6 @@ def test_cli_validate_missing_dim_exits_1(spark, tmp_path, capsys):
         assert f.read() == before
 
 
-def test_cli_requalify_missing_manifest_exits_1(tmp_path, capsys):
-    from pysemantic_spark import cli
-
-    rc = cli.main(["requalify", "--table", str(tmp_path / "nowhere")])
-    assert rc == 1
-    err = capsys.readouterr().err
-    assert "no checkpoint manifest" in err
-
-
-def test_run_resumable_skipped_disjoint_from_quarantined(spark, tmp_path):
-    """skipped must mean verifiably DONE; quarantined buckets are parked,
-    never double-reported as skipped."""
-    import pandas as pd
-
-    from pysemantic_spark.spec import DatasetSpec
-
-    io = ParquetManifestIO(str(tmp_path / "t"))
-    pdf = pd.DataFrame(
-        {"k": [f"k{i}" for i in range(200)], "v": range(200)}
-    )
-    io.write_bucketed(spark.createDataFrame(pdf), bucket_key="k", n_buckets=4)
-    spec = DatasetSpec.from_dict("t", {"column_rules": {"v": {"min": 0}}})
-    first = run_resumable(spark, io, spec, chunk_size=1, max_chunks=2)
-    second = run_resumable(spark, io, spec, chunk_size=1)
-    assert set(second["skipped"]) == set(first["processed"])
-    assert set(second["skipped"]).isdisjoint(set(second["quarantined"]))
-    m = io.load_manifest()
-    assert all(m.entries[b].status == "done" for b in second["skipped"])
-
-
 def test_quarantine_requalify_lifecycle(spark, tmp_path):
     """park → refresh baseline → requalify → resume."""
     import numpy as np
@@ -589,77 +559,3 @@ def test_quarantine_requalify_lifecycle(spark, tmp_path):
     assert second["quarantined"] == []
     m = io.load_manifest()
     assert all(e.status == "done" for e in m.entries.values())
-
-
-def test_resume_prunes_done_buckets_despite_partial_writes(spark, tmp_path):
-    """Kill semantics: a killed run leaves (a) a manifest with only its
-    completed chunks marked done and (b) PARTIAL in-flight sink output for
-    the chunk it died inside. Resume must revalidate exactly the non-done
-    buckets, and the authoritative output (the sink dirs named by the
-    manifest's per-bucket run_ids) must equal a clean never-killed run
-    row-for-row — the stale partial dir is dead weight, never read."""
-    import os
-
-    import pandas as pd
-
-    pdf = transcripts_pdf(n_rows=4_000)
-    df = spark.createDataFrame(pdf)
-    dims = {"dim_tools": spark.createDataFrame(dim_tools_pdf())}
-    spec = transcripts_spec()
-
-    io = ParquetManifestIO(str(tmp_path / "tbl"))
-    io.write_bucketed(df, "conv_id", 8)
-
-    # killed attempt: 1 chunk (buckets 0,1) completes…
-    first = run_resumable(spark, io, spec, dims=dims, chunk_size=2, max_chunks=1)
-    assert sorted(first["processed"]) == [0, 1]
-    # …and the kill leaves a PARTIAL in-flight write for the next chunk:
-    # a run dir the manifest never acknowledged, holding garbage rows
-    stale = tmp_path / "tbl" / "violations" / "run=deadbeefkill" / "chunk=2"
-    spark.createDataFrame(
-        [("POISON", -1)], "conv_id string, turn_idx long"
-    ).write.parquet(str(stale))
-
-    # resume: prunes exactly the done buckets
-    second = run_resumable(spark, io, spec, dims=dims, chunk_size=2)
-    assert sorted(second["skipped"]) == [0, 1]
-    assert sorted(second["processed"]) == [2, 3, 4, 5, 6, 7]
-
-    m = io.load_manifest()
-    assert m.pending() == []
-    run_ids = {e.run_id for e in m.entries.values()}
-    assert "deadbeefkill" not in run_ids  # stale attempt never acknowledged
-
-    # authoritative violations = the manifest-named run dirs only
-    def collect_viols(root, ids):
-        frames = []
-        vroot = os.path.join(root, "violations")
-        for rid in ids:
-            d = os.path.join(vroot, f"run={rid}")
-            if os.path.isdir(d):
-                for chunk in sorted(os.listdir(d)):
-                    frames.append(
-                        spark.read.parquet(os.path.join(d, chunk)).toPandas()
-                    )
-        out = pd.concat(frames, ignore_index=True)
-        return out.sort_values(list(out.columns)).reset_index(drop=True)
-
-    got = collect_viols(str(tmp_path / "tbl"), sorted(run_ids))
-    assert not (got["conv_id"] == "POISON").any()
-
-    # clean never-killed twin on identical data
-    io2 = ParquetManifestIO(str(tmp_path / "tbl2"))
-    io2.write_bucketed(df, "conv_id", 8)
-    clean = run_resumable(spark, io2, spec, dims=dims, chunk_size=8)
-    want = collect_viols(str(tmp_path / "tbl2"), [clean["run_id"]])
-    pd.testing.assert_frame_equal(
-        got.reset_index(drop=True), want.reset_index(drop=True)
-    )
-    # per-bucket manifest outcomes identical too (input_fingerprints are
-    # per-table lineage — part-file names are write-unique — so each
-    # manifest records its own, both non-empty)
-    m2 = io2.load_manifest()
-    for b in range(8):
-        assert m.entries[b].n_rows == m2.entries[b].n_rows, b
-        assert m.entries[b].n_violating_rows == m2.entries[b].n_violating_rows, b
-        assert m.entries[b].input_fingerprint and m2.entries[b].input_fingerprint, b

@@ -1,5 +1,7 @@
-"""Round-4 additions: keep-first dup-split, multi-word simhash, prefix
-filtering, legacy YAML tags, dotted converters, cache release."""
+"""Keep-first dup-split, multi-word SimHash, n-gram prefix filtering,
+legacy YAML tags, dotted-path converters, the release of persisted
+intermediates, the driver's text-mining queries, and connected
+components on a known graph."""
 
 from __future__ import annotations
 
@@ -9,19 +11,24 @@ import warnings
 import numpy as np
 import pandas as pd
 import pytest
+from pyspark.sql import Window
 from pyspark.sql import functions as F
 
-from pysemantic_spark.operators import dedup
+import __spark_entry__ as entrymod
+from pysemantic_spark.errors import ParserArgumentError, SpecValidationError
+from pysemantic_spark.operators import dedup, similarity
 from pysemantic_spark.operators.cache import (
+    materialize,
     release_intermediates,
     tracked_count,
     tracked_intermediates,
 )
+from pysemantic_spark.sources.readers import load_dataset
+from pysemantic_spark.sources.tableio import ParquetManifestIO, run_resumable
+from pysemantic_spark.spec import DatasetSpec, load_spec_file
 
+SF001 = "/root/testdata/sf0.001"
 
-# ---------------------------------------------------------------------------
-# exact_dedup_keep_first: semi/anti dup-split
-# ---------------------------------------------------------------------------
 
 def _events(spark, n=500, dup_every=50):
     pdf = pd.DataFrame(
@@ -33,6 +40,35 @@ def _events(spark, n=500, dup_every=50):
     return spark.createDataFrame(pdf)
 
 
+def _first_per_key(df, key, order):
+    """The naive keep-first: row_number() over the whole table."""
+    w = Window.partitionBy(key).orderBy(order)
+    return (
+        df.withColumn("rn", F.row_number().over(w))
+        .filter(F.col("rn") == 1)
+        .drop("rn")
+    )
+
+
+def _rand_docs(n_docs=40, seed=7):
+    rng = random.Random(seed)
+    vocab = [f"w{i}" for i in range(50)]
+    docs = []
+    for i in range(n_docs):
+        base = [rng.choice(vocab) for _ in range(30)]
+        docs.append((i, " ".join(base)))
+        if rng.random() < 0.5:  # planted near-dup: few token edits
+            mut = list(base)
+            for _ in range(rng.randint(1, 3)):
+                mut[rng.randrange(len(mut))] = rng.choice(vocab)
+            docs.append((1000 + i, " ".join(mut)))
+    return docs
+
+
+def _persistent_rdd_count(spark) -> int:
+    return spark.sparkContext._jsc.sc().getPersistentRDDs().size()
+
+
 def test_keep_first_split_matches_naive_window(spark):
     df = _events(spark)
     got = (
@@ -40,16 +76,7 @@ def test_keep_first_split_matches_naive_window(spark):
         .orderBy("k", "v")
         .collect()
     )
-    from pyspark.sql import Window
-
-    w = Window.partitionBy("k").orderBy("v")
-    exp = (
-        df.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") == 1)
-        .drop("rn")
-        .orderBy("k", "v")
-        .collect()
-    )
+    exp = _first_per_key(df, "k", "v").orderBy("k", "v").collect()
     assert [tuple(r) for r in got] == [tuple(r) for r in exp]
 
 
@@ -68,25 +95,6 @@ def test_keep_first_window_input_is_dup_split_not_full_scan(spark):
     assert win_at != -1
     assert "LeftSemi" in plan[win_at:], plan
     assert "LeftAnti" in plan, plan
-
-
-# ---------------------------------------------------------------------------
-# multi-word simhash
-# ---------------------------------------------------------------------------
-
-def _rand_docs(n_docs=40, seed=7):
-    rng = random.Random(seed)
-    vocab = [f"w{i}" for i in range(50)]
-    docs = []
-    for i in range(n_docs):
-        base = [rng.choice(vocab) for _ in range(30)]
-        docs.append((i, " ".join(base)))
-        if rng.random() < 0.5:  # planted near-dup: few token edits
-            mut = list(base)
-            for _ in range(rng.randint(1, 3)):
-                mut[rng.randrange(len(mut))] = rng.choice(vocab)
-            docs.append((1000 + i, " ".join(mut)))
-    return docs
 
 
 def test_multiword_simhash_equals_brute_force(spark):
@@ -132,8 +140,8 @@ def test_simhash_band_width_warning(spark):
 
 
 def test_single_word_simhash_layout_unchanged(spark):
-    """n_words=1 must keep the round-3 schema (simhash + band0..3) so the
-    portable DuckDB oracle stays byte-identical."""
+    """n_words=1 must keep the single-word schema (simhash + band0..3) so
+    the portable DuckDB oracle stays byte-identical."""
     docs = _rand_docs(n_docs=5)
     df = spark.createDataFrame(pd.DataFrame(docs, columns=["doc_id", "text"]))
     cols = dedup.simhash_fingerprints(
@@ -141,10 +149,6 @@ def test_single_word_simhash_layout_unchanged(spark):
     ).columns
     assert cols == ["_id", "simhash", "band0", "band1", "band2", "band3"]
 
-
-# ---------------------------------------------------------------------------
-# ngram prefix filter
-# ---------------------------------------------------------------------------
 
 def test_ngram_prefix_filter_exact_recall(spark):
     docs = _rand_docs(n_docs=30, seed=11)
@@ -182,13 +186,7 @@ def test_ngram_prefix_index_shrinks(spark):
     assert pref < full * 0.7, (pref, full)
 
 
-# ---------------------------------------------------------------------------
-# legacy YAML + dotted converters
-# ---------------------------------------------------------------------------
-
 def test_legacy_python_name_tags(tmp_path):
-    from pysemantic_spark.spec import load_spec_file
-
     p = tmp_path / "dict.yaml"
     p.write_text(
         """
@@ -213,9 +211,6 @@ iris:
 
 
 def test_legacy_python_name_tag_rejects_unknown(tmp_path):
-    from pysemantic_spark.errors import SpecValidationError
-    from pysemantic_spark.spec import load_spec_file
-
     p = tmp_path / "bad.yaml"
     p.write_text(
         """
@@ -231,9 +226,6 @@ x:
 def test_dotted_path_converter(spark, tmp_path):
     """A spec-file-only custom converter via module:function — no registry
     registration, no engine-code edit."""
-    from pysemantic_spark.sources.readers import load_dataset
-    from pysemantic_spark.spec import DatasetSpec
-
     csv = tmp_path / "d.csv"
     csv.write_text('name\n"  Alice   M  "\n"  bob "\n')
     spec = DatasetSpec.from_dict(
@@ -255,12 +247,11 @@ def test_dotted_path_converter(spark, tmp_path):
 
 
 def test_dotted_path_converter_bad_path_fails_at_compile(spark, tmp_path, monkeypatch):
-    from pysemantic_spark.errors import ParserArgumentError
     from pysemantic_spark.sources.readers import resolve_converter
 
     with pytest.raises(ParserArgumentError, match="cannot import"):
         resolve_converter("pysemantic_spark.no_such_module_xyz:fn")
-    # round-5: non-allowlisted modules are rejected BEFORE import
+    # non-allowlisted modules are rejected BEFORE import
     with pytest.raises(ParserArgumentError, match="allowlist"):
         resolve_converter("os:not_a_function_xyz")
     monkeypatch.setenv("PYSEMANTIC_SPARK_CONVERTER_MODULES", "os")
@@ -268,14 +259,6 @@ def test_dotted_path_converter_bad_path_fails_at_compile(spark, tmp_path, monkey
         resolve_converter("os:not_a_function_xyz")
     with pytest.raises(ParserArgumentError, match="unknown converter"):
         resolve_converter("not_registered")
-
-
-# ---------------------------------------------------------------------------
-# cache release discipline
-# ---------------------------------------------------------------------------
-
-def _persistent_rdd_count(spark) -> int:
-    return spark.sparkContext._jsc.sc().getPersistentRDDs().size()
 
 
 def test_dedup_operators_release_intermediates(spark):
@@ -294,8 +277,6 @@ def test_dedup_operators_release_intermediates(spark):
 
 
 def test_similarity_operators_release_intermediates(spark):
-    from pysemantic_spark.operators import similarity
-
     release_intermediates()
     base = _persistent_rdd_count(spark)
     rng = np.random.default_rng(3)
@@ -306,8 +287,8 @@ def test_similarity_operators_release_intermediates(spark):
         }
     )
     df = spark.createDataFrame(pdf)
-    # round-7 plan is single-pass bucket-local verify: nothing is (or
-    # should be) persisted — the operator must not LEAK persisted RDDs
+    # single-pass bucket-local verify: nothing is (or should be)
+    # persisted — the operator must not LEAK persisted RDDs
     similarity.embedding_near_dup_pairs(
         df, dim=8, threshold=0.5, n_planes=4, n_tables=4
     ).count()
@@ -330,49 +311,33 @@ def test_similarity_operators_release_intermediates(spark):
 
 
 def test_queries_wrapper_releases_previous_intermediates(spark):
-    import __spark_entry__ as entry
-
-    qs = entry.queries()
-    # the new streaming twin must carry a full oracle
+    qs = entrymod.queries()
+    # the streaming twin must carry a full oracle
     assert "streaming_drift_events" in qs
-    assert "streaming_drift_events" in entry.oracle_sql()
+    assert "streaming_drift_events" in entrymod.oracle_sql()
     # the wrapper must call release on entry: simulate a leftover
-    docs = pd.DataFrame(_rand_docs(n_docs=4), columns=["doc_id", "text"])
-    from pysemantic_spark.operators.cache import materialize
-
-    leftover = materialize(spark.createDataFrame(docs))
+    leftover = materialize(spark.range(4))
     leftover.count()
     assert tracked_count() > 0
-    qs["top_events_by_value"](spark, "/root/testdata/sf0.001")
+    qs["top_events_by_value"](spark, SF001)
     assert tracked_count() == 0
 
 
-# ---------------------------------------------------------------------------
-# new driver queries (round 4, second batch)
-# ---------------------------------------------------------------------------
-
 def test_new_driver_queries_run_and_shape(spark):
-    import __spark_entry__ as entry
-
-    qs, osql = entry.queries(), entry.oracle_sql()
+    qs, osql = entrymod.queries(), entrymod.oracle_sql()
     for name, cols in [
         ("ngram_prefix_pairs_documents", ["id_a", "id_b", "jaccard"]),
         ("simhash_wide_documents", ["id_a", "id_b", "hamming"]),
     ]:
         assert name in qs and name in osql
-        df = qs[name](spark, "/root/testdata/sf0.001")
+        df = qs[name](spark, SF001)
         assert df.columns == cols
         assert df.count() >= 0
 
 
 def test_run_resumable_skipped_disjoint_from_quarantined(spark, tmp_path):
     """skipped must mean verifiably DONE; quarantined buckets are parked,
-    never double-reported as skipped (round-3 ADVICE)."""
-    import pandas as pd
-
-    from pysemantic_spark.sources.tableio import ParquetManifestIO, run_resumable
-    from pysemantic_spark.spec import DatasetSpec
-
+    never double-reported as skipped."""
     io = ParquetManifestIO(str(tmp_path / "t"))
     pdf = pd.DataFrame(
         {"k": [f"k{i}" for i in range(200)], "v": range(200)}

@@ -1,45 +1,70 @@
-"""Round-6 features (round-5 VERDICT/ADVICE items):
-
-- stats-fed keep-first strategy chooser (no extra sizing scan) and the
-  skew-safe ``agg_min`` keep-first plan (min_by hash agg, no window sort)
-- the collapse guard's sub-shingle clones and broadcastable clone map
-- star-contraction fixpoint hardening (_assert_star)
-- layout-independent IVF training sample BEYOND the 4×sample_size cap
-- ANN recall monotonicity (LSH tables nested by seed; IVF probes) and the
-  probe-everything == exact identity, property-swept
-- resume with in-flight PARTIAL sink writes from a killed attempt
-- CLI requalify on a missing manifest exits 1 with a message
-- exact-top-k memo evicts stale fingerprints per sf_dir
-"""
+"""The skew-safe ``agg_min`` keep-first plan, the collapse guard's
+sub-shingle clones and clone map, the star-contraction fixpoint and its
+local finish, the layout-independent IVF training sample, ANN recall
+monotonicity and probe-everything == exact, resume over partial sink
+writes, CLI requalify on a missing manifest, the exact-top-k memo's
+eviction, and the PPJoin float-boundary regression."""
 
 from __future__ import annotations
 
 import os
+import random
 
 import numpy as np
 import pandas as pd
 import pytest
+from hypothesis import HealthCheck, given, settings
+from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
+import __spark_entry__ as entrymod
+from pysemantic_spark.fixtures import dim_tools_pdf, transcripts_pdf, transcripts_spec
 from pysemantic_spark.operators import dedup, similarity
+from pysemantic_spark.sources.tableio import ParquetManifestIO, run_resumable
 
 SF001 = "/root/testdata/sf0.001"
 
 
-# ---------------------------------------------------------------------------
-# keep-first: supplied stats + agg_min strategy
-# ---------------------------------------------------------------------------
+def _emb(spark):
+    return (
+        spark.read.parquet(f"{SF001}/embeddings.parquet")
+        .withColumn("embedding", F.col("embedding").cast("array<double>"))
+    )
 
-def _keepfirst_frame(spark):
+
+def _first_queries(emb, n):
+    return emb.filter(F.col("vec_id") < n).select(
+        F.col("vec_id").alias("query_id"), "embedding"
+    )
+
+
+def _exact_sets(spark, emb, queries, k=5):
+    exact = similarity.cosine_topk(emb, queries, k=k)
+    out: dict = {}
+    for r in exact.collect():
+        out.setdefault(r["query_id"], set()).add(r["vec_id"])
+    return out
+
+
+def _recall(approx_df, exact_sets, k=5):
+    got: dict = {}
+    for r in approx_df.collect():
+        got.setdefault(r["query_id"], set()).add(r["vec_id"])
+    return sum(
+        len(got.get(q, set()) & e) / len(e) for q, e in exact_sets.items()
+    ) / len(exact_sets)
+
+
+def _edges(spark, edges):
+    return spark.createDataFrame(list(edges), "id_a long, id_b long")
+
+
+def test_keep_first_agg_min_matches_window(spark):
     rows = [(0, i, i * 7 % 13) for i in range(400)]  # mega key: 400 rows
     rows += [(k, 1000 + k, k % 5) for k in range(1, 50)]  # unique keys
     rows += [(7, 2000, 99), (7, 2001, 98)]  # small dup group
     rows += [(None, 3000, 1), (None, 3001, 2)]  # NULL keys group together
-    return spark.createDataFrame(rows, "k long, ord long, v long")
-
-
-def test_keep_first_agg_min_matches_window(spark):
-    df = _keepfirst_frame(spark)
+    df = spark.createDataFrame(rows, "k long, ord long, v long")
     nullsafe = lambda t: tuple((x is None, x) for x in t)  # noqa: E731
     got = {}
     for strat in ("window", "split", "agg_min"):
@@ -58,50 +83,6 @@ def test_keep_first_agg_min_matches_window(spark):
     assert out.columns == df.columns
 
 
-def test_keep_first_strategy_from_supplied_stats():
-    """With both stats supplied the chooser never touches the frame —
-    a sentinel object with no .agg proves no sizing scan happens."""
-    sentinel = object()
-    assert (
-        dedup.keep_first_strategy(sentinel, ["k"], n_rows=100, distinct_keys=90)
-        == "split"
-    )
-    assert (
-        dedup.keep_first_strategy(sentinel, ["k"], n_rows=100, distinct_keys=10)
-        == "window"
-    )
-    assert (
-        dedup.keep_first_strategy(sentinel, ["k"], n_rows=0, distinct_keys=0)
-        == "split"
-    )
-
-
-def test_keep_first_supplied_stats_same_rows(spark):
-    df = _keepfirst_frame(spark)
-    nullsafe = lambda t: tuple((x is None, x) for x in t)  # noqa: E731
-    auto = sorted(
-        (
-            tuple(r)
-            for r in dedup.exact_dedup_keep_first(df, ["k"], ["ord"]).collect()
-        ),
-        key=nullsafe,
-    )
-    fed = sorted(
-        (
-            tuple(r)
-            for r in dedup.exact_dedup_keep_first(
-                df, ["k"], ["ord"], n_rows=453, distinct_keys=52
-            ).collect()
-        ),
-        key=nullsafe,
-    )
-    assert fed == auto
-
-
-# ---------------------------------------------------------------------------
-# collapse guard (its row-parity tests are in test_dedup_similarity_text.py)
-# ---------------------------------------------------------------------------
-
 def test_duplicate_clusters_sub_shingle_clones_never_cluster(spark):
     body = "the quick brown fox jumps over the lazy dog again and again"
     docs = (
@@ -116,10 +97,6 @@ def test_duplicate_clusters_sub_shingle_clones_never_cluster(spark):
     }
     assert got == {(0, 0), (1, 0), (2, 0)}
 
-
-# ---------------------------------------------------------------------------
-# star fixpoint hardening
-# ---------------------------------------------------------------------------
 
 def test_is_star_forest_exact_shape_test(spark):
     stars = spark.createDataFrame([(3, 1), (2, 1), (9, 5)], "u long, v long")
@@ -149,22 +126,11 @@ def test_collapse_for_mining_reports_broadcastable_clone_map(spark):
         assert mined.count() == 1  # one clone-group rep, and it mines
 
 
-# ---------------------------------------------------------------------------
-# IVF deterministic sampling beyond the cap
-# ---------------------------------------------------------------------------
-
-def _emb(spark):
-    return (
-        spark.read.parquet(f"{SF001}/embeddings.parquet")
-        .withColumn("embedding", F.col("embedding").cast("array<double>"))
-    )
-
-
 @pytest.mark.parametrize("frac", [1.0, 0.4])
 def test_ivf_sample_layout_independent_beyond_cap(spark, frac):
-    """sample_size=20 → cap 80 ≪ 500 corpus rows: the round-5 ADVICE case
-    where a limit() prefix (or a per-partition-seeded Bernoulli set) would
-    change under repartitioning. Centroids must be bit-identical."""
+    """sample_size=20 → cap 80 ≪ 500 corpus rows: a limit() prefix (or a
+    per-partition-seeded Bernoulli set) would change under
+    repartitioning. Centroids must be bit-identical."""
     emb = _emb(spark)
     base = similarity.train_ivf_centroids(
         emb, dim=64, n_centroids=4, sample_size=20, sample_fraction=frac
@@ -176,34 +142,11 @@ def test_ivf_sample_layout_independent_beyond_cap(spark, frac):
     assert np.array_equal(base, shuffled)
 
 
-# ---------------------------------------------------------------------------
-# ANN recall monotonicity + probe-all identity
-# ---------------------------------------------------------------------------
-
-def _exact_sets(spark, emb, queries, k=5):
-    exact = similarity.cosine_topk(emb, queries, k=k)
-    out: dict = {}
-    for r in exact.collect():
-        out.setdefault(r["query_id"], set()).add(r["vec_id"])
-    return out
-
-
-def _recall(approx_df, exact_sets, k=5):
-    got: dict = {}
-    for r in approx_df.collect():
-        got.setdefault(r["query_id"], set()).add(r["vec_id"])
-    return sum(
-        len(got.get(q, set()) & e) / len(e) for q, e in exact_sets.items()
-    ) / len(exact_sets)
-
-
 def test_lsh_recall_monotone_in_tables(spark):
     """Tables are seeded seed + 7919*t, so the first L tables of a larger
     run ARE the smaller run: candidates (hence recall) can only grow."""
     emb = _emb(spark)
-    queries = emb.filter(F.col("vec_id") < 3).select(
-        F.col("vec_id").alias("query_id"), "embedding"
-    )
+    queries = _first_queries(emb, 3)
     exact = _exact_sets(spark, emb, queries)
     recalls = [
         _recall(
@@ -220,9 +163,7 @@ def test_lsh_recall_monotone_in_tables(spark):
 
 def test_ivf_recall_monotone_in_probes_and_probe_all_is_exact(spark):
     emb = _emb(spark)
-    queries = emb.filter(F.col("vec_id") < 3).select(
-        F.col("vec_id").alias("query_id"), "embedding"
-    )
+    queries = _first_queries(emb, 3)
     exact = _exact_sets(spark, emb, queries)
     kw = dict(dim=64, k=5, n_centroids=6, sample_fraction=1.0)
     recalls = [
@@ -241,15 +182,9 @@ def test_ivf_recall_monotone_in_probes_and_probe_all_is_exact(spark):
 
 def test_ivf_probe_all_equals_exact_property(spark):
     """Sweep (n_centroids, sample_fraction): probing ALL centroids must
-    return the exact top-k whatever the coarse quantizer looks like —
-    the round-5 VERDICT's 'recall property-test across parameters'."""
-    from hypothesis import HealthCheck, given, settings
-    from hypothesis import strategies as st
-
+    return the exact top-k whatever the coarse quantizer looks like."""
     emb = _emb(spark).cache()
-    queries = emb.filter(F.col("vec_id") < 2).select(
-        F.col("vec_id").alias("query_id"), "embedding"
-    )
+    queries = _first_queries(emb, 2)
     want = {
         (q, v)
         for q, s in _exact_sets(spark, emb, queries, k=4).items()
@@ -279,21 +214,13 @@ def test_ivf_probe_all_equals_exact_property(spark):
         emb.unpersist()
 
 
-# ---------------------------------------------------------------------------
-# resume with in-flight partial writes
-# ---------------------------------------------------------------------------
-
 def test_resume_prunes_done_buckets_despite_partial_writes(spark, tmp_path):
-    """Kill semantics (round-5 VERDICT item 5): a killed run leaves (a) a
-    manifest with only its completed chunks marked done and (b) PARTIAL
-    in-flight sink output for the chunk it died inside. Resume must
-    revalidate exactly the non-done buckets, and the authoritative output
-    (the sink dirs named by the manifest's per-bucket run_ids) must equal
-    a clean never-killed run row-for-row — the stale partial dir is dead
-    weight, never read."""
-    from pysemantic_spark.fixtures import dim_tools_pdf, transcripts_pdf, transcripts_spec
-    from pysemantic_spark.sources.tableio import ParquetManifestIO, run_resumable
-
+    """Kill semantics: a killed run leaves (a) a manifest with only its
+    completed chunks marked done and (b) PARTIAL in-flight sink output for
+    the chunk it died inside. Resume must revalidate exactly the non-done
+    buckets, and the authoritative output (the sink dirs named by the
+    manifest's per-bucket run_ids) must equal a clean never-killed run
+    row-for-row — the stale partial dir is dead weight, never read."""
     pdf = transcripts_pdf(n_rows=4_000)
     df = spark.createDataFrame(pdf)
     dims = {"dim_tools": spark.createDataFrame(dim_tools_pdf())}
@@ -357,10 +284,6 @@ def test_resume_prunes_done_buckets_despite_partial_writes(spark, tmp_path):
         assert m.entries[b].input_fingerprint and m2.entries[b].input_fingerprint, b
 
 
-# ---------------------------------------------------------------------------
-# CLI error path + memo eviction
-# ---------------------------------------------------------------------------
-
 def test_cli_requalify_missing_manifest_exits_1(tmp_path, capsys):
     from pysemantic_spark import cli
 
@@ -371,8 +294,6 @@ def test_cli_requalify_missing_manifest_exits_1(tmp_path, capsys):
 
 
 def test_exact_topk_memo_evicts_stale_fingerprints(spark):
-    import __spark_entry__ as entrymod
-
     entrymod._EXACT_TOPK_MEMO.clear()
     abspath = os.path.abspath(SF001)
     for i in range(3):  # three dead fingerprints for the same sf_dir
@@ -384,27 +305,15 @@ def test_exact_topk_memo_evicts_stale_fingerprints(spark):
     entrymod._EXACT_TOPK_MEMO.clear()
 
 
-# ---------------------------------------------------------------------------
-# star contraction: measured local finish (Kiveris local-finish optimization)
-# ---------------------------------------------------------------------------
-
-def _uv_pairs(spark, edges):
-    return spark.createDataFrame(
-        [(a, b) for a, b in edges], "id_a long, id_b long"
-    )
-
-
 def test_star_local_finish_equals_distributed(spark, monkeypatch):
     """The min-root union-find local finish must produce the SAME
     (node, cluster_rep) map as fully-distributed contraction rounds, on
-    graphs mixing chains, cliques, and singetons-with-one-edge."""
-    import random
-
+    graphs mixing chains, cliques, and singletons-with-one-edge."""
     rng = random.Random(23)
     for trial in range(3):
         edges = {tuple(sorted(rng.sample(range(80), 2))) for _ in range(90)}
         edges |= {(i, i + 1) for i in range(60, 75)}  # chain tail
-        p = _uv_pairs(spark, sorted(edges))
+        p = _edges(spark, sorted(edges))
         monkeypatch.setattr(dedup, "_LOCAL_FINISH_EDGES", 0)  # force rounds
         dist = {
             r["node"]: r["cluster_rep"]
@@ -429,7 +338,7 @@ def test_star_distributed_rounds_still_converge_on_chain(spark, monkeypatch):
     monkeypatch.setattr(dedup, "_LOCAL_FINISH_EDGES", 0)
     chain = [(i, i + 1) for i in range(40)]
     got = dedup.connected_components(
-        _uv_pairs(spark, chain), max_iters=12, algorithm="star"
+        _edges(spark, chain), max_iters=12, algorithm="star"
     ).collect()
     assert len(got) == 41
     assert all(r["cluster_rep"] == 0 for r in got)
@@ -442,7 +351,7 @@ def test_star_local_finish_fires_under_default_cap(spark):
     got = {
         r["node"]: r["cluster_rep"]
         for r in dedup.connected_components(
-            _uv_pairs(spark, edges), algorithm="star"
+            _edges(spark, edges), algorithm="star"
         ).collect()
     }
     assert got == {1: 1, 2: 1, 3: 1, 10: 10, 11: 10,
@@ -450,16 +359,14 @@ def test_star_local_finish_fires_under_default_cap(spark):
 
 
 def test_prefix_path_keeps_float_boundary_pair(spark):
-    """Regression (round 6): the PPJoin positional filter computed
+    """Regression: the PPJoin positional filter computed
     α = ceil(t/(1+t)·(|x|+|y|)) in doubles; at t=0.2 with |x|+|y|=18 the
     product lands an ulp above its true value 3 (3.0000000000000004),
     ceil over-tightens α to 4, and a true threshold-boundary pair
     (overlap 3, jaccard exactly 0.2) was silently pruned — found by the
     prefix==counting hypothesis property test (seed 1). All ceil-based
     prune bounds now subtract _EXACT_EPS before rounding."""
-    import random as _random
-
-    rng = _random.Random(1)
+    rng = random.Random(1)
     docs = []
     for i in range(6):
         L = rng.randint(2, 10)

@@ -195,40 +195,3 @@ def test_postprocessors_applied_to_clean_only(spark):
     assert [r["name"] for r in got] == ["a", "b"]      # stripped
     assert all(r["tag"] == "ok" for r in got)          # df postprocessor
     assert res.violations.count() == 1                  # null name dropped
-
-
-def test_legacy_python_name_tags(tmp_path):
-    p = tmp_path / "dict.yaml"
-    p.write_text(
-        """
-iris:
-  path: /tmp/iris.csv
-  delimiter: ','
-  dtypes:
-    Species: !!python/name:__builtin__.str ''
-    Petal Length: !!python/name:builtins.float ''
-    Count: !!python/name:builtins.int ''
-    Fresh: !!python/name:builtins.bool ''
-"""
-    )
-    specs = load_spec_file(str(p))
-    d = {c: r for c, r in specs["iris"].dtypes.items()}
-    assert d == {
-        "Species": "string",
-        "Petal Length": "double",
-        "Count": "int",
-        "Fresh": "boolean",
-    }
-
-
-def test_legacy_python_name_tag_rejects_unknown(tmp_path):
-    p = tmp_path / "bad.yaml"
-    p.write_text(
-        """
-x:
-  dtypes:
-    c: !!python/name:os.system ''
-"""
-    )
-    with pytest.raises(SpecValidationError, match="python/name"):
-        load_spec_file(str(p))
