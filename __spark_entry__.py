@@ -305,11 +305,10 @@ def q_minhash_lsh_pairs_documents(spark: SparkSession, sf_dir: str) -> DataFrame
 def q_simhash_neardups_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SimHash near-dup pairs — FULL value oracle (upgraded from rows-only
     in round 3): the portable 60-bit md5 token hash is byte-identical in
-    DuckDB, and n_bands = max_hamming+1 = 9 makes the banding exhaustive by
-    pigeonhole (any pair within hamming ≤ 8 matches ≥ 1 of 9 disjoint
-    bands), so the banded+verified output EQUALS the exact hamming-≤8 pair
-    set that the oracle computes brute-force from its own identical
-    fingerprints."""
+    DuckDB, and the pigeonhole chunk join is exact (any pair within
+    hamming ≤ 8 agrees within 2 bits on ≥ 1 of 3 disjoint 20-bit chunks),
+    so the verified output EQUALS the exact hamming-≤8 pair set that the
+    oracle computes brute-force from its own identical fingerprints."""
     docs = _read(spark, sf_dir, "documents")
     pairs = dedup.simhash_near_dup_pairs(
         docs, "doc_id", "text", max_hamming=8, portable_hash=True
@@ -357,7 +356,12 @@ def _exact_topk5(spark: SparkSession, sf_dir: str) -> DataFrame:
         # (pandas, schema) entry per refresh (round-5 ADVICE)
         for stale in [k for k in _EXACT_TOPK_MEMO if k[0] == key[0]]:
             del _EXACT_TOPK_MEMO[stale]
-        emb = _read(spark, sf_dir, "embeddings").withColumn(
+        # widen=False: cosine_topk collects the query side first, so a
+        # widened read scans and exchanges the table twice (measured at
+        # sf0.1 on 4 cores: 0.86-1.01 s widened, 0.61-0.74 s plain); the top-k
+        # window breaks score ties by vec_id, so the rows do not depend
+        # on the partitioning
+        emb = _read(spark, sf_dir, "embeddings", widen=False).withColumn(
             "embedding", F.col("embedding").cast("array<double>")
         )
         qs = emb.filter(F.col("vec_id") < 5).select(
@@ -1103,8 +1107,9 @@ def _simhash_wide_sql(n_words: int = 2, max_hamming: int = 16) -> str:
     the 60-bit integer from md5 hex digits [1+15w, 15+15w) — byte-identical
     to word w of the Spark words kernel (`dedup._simhash_words_udf`) —
     bit-voted independently; hamming = sum of per-word popcounts. Quadratic over all
-    doc pairs (no banding needed oracle-side); the 17-band
-    pigeonhole-exhaustive Spark output must equal this set."""
+    doc pairs (no banding needed oracle-side); the pigeonhole-exact Spark
+    output (r + 1 bands: 10 bands of 12 bits at the query's r = 9) must
+    equal this set."""
     words = range(n_words)
     votes = ", ".join(
         f"sum(case when (h{w} >> {i}) & 1 = 1 then 1 else -1 end) as v{w}_{i}"

@@ -179,6 +179,7 @@ def _bucketize(args) -> int:
 
 def _validate(args) -> int:
     from pysemantic_spark.errors import SpecValidationError
+    from pysemantic_spark.operators.drift import spec_drift_baseline
     from pysemantic_spark.operators.runner import _require_dims
     from pysemantic_spark.plans.compiler import compile_spec
     from pysemantic_spark.session import get_spark
@@ -192,8 +193,11 @@ def _validate(args) -> int:
     spec = specs[args.dataset]
     dim_paths = dict(d.split("=", 1) for d in args.dim)
     # before the session starts and a fresh run resets the manifest
+    plan = compile_spec(spec)
     try:
-        _require_dims(compile_spec(spec), dim_paths)
+        _require_dims(plan, dim_paths)
+        if plan.drift is not None:
+            spec_drift_baseline(plan.drift)
     except SpecValidationError as e:
         print(f"{args.spec}: {e}", file=sys.stderr)
         return 1
@@ -217,8 +221,8 @@ def _validate(args) -> int:
             e.status = "pending"
         io.save_manifest(m)
     try:
-        out = run_resumable(spark, io, spec, dims=dims, chunk_size=args.chunk_size)
-    except SpecValidationError as e:  # e.g. a referential dim not passed via --dim
+        out = run_resumable(spark, io, plan, dims=dims, chunk_size=args.chunk_size)
+    except SpecValidationError as e:  # e.g. a drift column past the sketch's category bound
         print(f"{args.spec}: {e}", file=sys.stderr)
         return 1
     report = {

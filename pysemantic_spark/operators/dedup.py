@@ -9,8 +9,9 @@ Four families, all shuffle-conscious:
 - MinHash+LSH:  shingle → K minhashes (xxhash64 with per-hash seed mix) →
                 band buckets → pairs within buckets → exact-Jaccard verify.
 - SimHash:      bit-vote fingerprint of one or two 60-bit md5 token-hash
-                words; near-dup = small Hamming distance, candidates via a
-                band join or pigeonhole query expansion.
+                words; near-dup = small Hamming distance, candidates via one
+                pigeonhole chunk join (≤k-bit chunk flips against exact
+                chunk values; k = 0 is plain banding), exact popcount filter.
 
 Scale notes (100 TB / 10^9 docs):
 - The shingle self-join shuffles on the shingle; ultra-common shingles are
@@ -25,8 +26,11 @@ from __future__ import annotations
 
 import hashlib
 import logging
+import operator
 import re
 import warnings
+from functools import reduce
+from itertools import combinations
 
 import pandas as pd
 from pyspark.sql import DataFrame, Window
@@ -803,6 +807,7 @@ def _band_widths(n_bits: int, n_bands: int) -> list[int]:
 _WORD_BITS = 60
 # bands narrower than this make band self-joins near-quadratic at scale
 _MIN_BAND_BITS = 12
+_SIMHASH_WORDS = ("simhash", "simhash1")
 
 
 def _check_simhash_args(portable_hash: bool, n_words: int) -> None:
@@ -841,38 +846,87 @@ def simhash_fingerprints(
     → the band self-joins degenerate toward all-pairs at 10⁹ docs — the
     round-3 scale-killer); two words give 9 bands of 12-15 bits. The
     radius scales with width (same bit-flip rate per edited token), so
-    compare radii as a FRACTION of n_bits across widths. Bands are
-    assigned to words round-robin and split within each word, remaining
-    disjoint and covering all bits — the pigeonhole exhaustiveness
-    argument in :func:`simhash_near_dup_pairs` is width-independent.
-    Emits a computed-width warning when any band is narrower than 12
-    bits (candidate-explosion risk at corpus scale).
+    compare radii as a FRACTION of n_bits across widths. The bands are
+    the chunks of :func:`_simhash_chunks`: disjoint, covering all bits,
+    spread over the words and split within each. Emits a computed-width
+    warning when any band is narrower than 12 bits (candidate-explosion
+    risk at corpus scale).
 
     Only docs with ≥1 token get a row: NULL text and text that trims to
     "" (``""``, ``"   "``) have none. Trim strips spaces only, so
     ``" \\t "`` is the two empty tokens ``["", ""]`` and does get one.
 
     Output: (_id, simhash[, simhash1], band0..band{B-1}). Word 0 keeps
-    the name ``simhash`` so single-word callers (and the DuckDB oracle)
-    are unchanged."""
+    the name ``simhash`` so single-word callers see the same schema."""
     _check_simhash_args(portable_hash, n_words)
+    bands = _simhash_chunks(n_bands, n_words)
+    _warn_if_narrow(bands)
     tokf = df.select(F.col(id_col).alias("_id"), tokens(text_col).alias("_tok"))
-    return _simhash_fps(tokf, *_band_layout(n_bands, n_words))
-
-
-def _band_layout(n_bands: int, n_words: int) -> tuple[list[str], list[int], int]:
-    """(word_names, bands_per_word, narrowest band width) of a fingerprint
-    layout: bands spread over words in near-equal counts, and each word's
-    bands split its 60 bits into near-equal contiguous widths."""
-    word_names = ["simhash"] + [f"simhash{w}" for w in range(1, n_words)]
-    bands_per_word = _band_widths(n_bands, n_words) if n_words > 1 else [n_bands]
-    min_width = min(
-        w
-        for nb in bands_per_word
-        if nb > 0
-        for w in _band_widths(_WORD_BITS, nb)
+    return _simhash_words(tokf, n_words).select(
+        "*", *[v.alias(f"band{b}") for b, v in enumerate(_chunk_values(bands))]
     )
-    return word_names, bands_per_word, min_width
+
+
+def _simhash_chunks(m: int, n_words: int) -> list[tuple[int, int, int]]:
+    """``m`` disjoint contiguous bit chunks ``[(word, offset, width)]``
+    covering the fingerprint: chunks spread over the words in near-equal
+    counts, and each word's chunks split its 60 bits into near-equal
+    widths (with fewer chunks than words, the last words get none)."""
+    chunks = []
+    for w, nc in enumerate(_band_widths(m, n_words)):
+        offset = 0
+        for width in _band_widths(_WORD_BITS, nc) if nc else []:
+            chunks.append((w, offset, width))
+            offset += width
+    return chunks
+
+
+def _chunk_values(chunks: list[tuple[int, int, int]]) -> list["F.Column"]:
+    """Each chunk's bits of its fingerprint word, as a column."""
+    return [
+        F.shiftrightunsigned(F.col(_SIMHASH_WORDS[w]), offset).bitwiseAND(
+            F.lit((1 << width) - 1)
+        )
+        for w, offset, width in chunks
+    ]
+
+
+def _warn_if_narrow(bands: list[tuple[int, int, int]]) -> None:
+    narrowest = min(width for _, _, width in bands)
+    if narrowest < _MIN_BAND_BITS:
+        warnings.warn(
+            f"simhash banding: narrowest band is {narrowest} bits "
+            f"(<{_MIN_BAND_BITS}) — ~{1 << narrowest} buckets/band makes band "
+            f"self-joins near-quadratic at large corpus sizes; widen the "
+            f"fingerprint (n_words) or lower the radius/bands",
+            stacklevel=3,
+        )
+
+
+def _simhash_layout(
+    max_hamming: int, n_words: int
+) -> tuple[int, list[tuple[int, int, int]]]:
+    """``(k, chunks)`` of the pigeonhole chunk join at radius r: a pair
+    within Hamming r of each other agrees within k = ⌊r/m⌋ bits on SOME
+    of the m disjoint chunks, so joining every ≤k-bit flip of one side's
+    chunk values to the other side's exact values finds every pair.
+
+    - m = r + 1, k = 0 (the band join: some band is equal) when every
+      band is ≥ 12 bits wide;
+    - else m = max(⌊r/3⌋ + 1, n_words), k = ⌊r/m⌋ ≤ 2 when every chunk
+      width is in [k + 1, 30], which bounds the flips per chunk
+      (1 + w + C(w, 2) ≤ 466);
+    - else the narrow band join, with a warning."""
+    bands = _simhash_chunks(max_hamming + 1, n_words)
+    if min(width for _, _, width in bands) >= _MIN_BAND_BITS:
+        return 0, bands
+    m = max(max_hamming // 3 + 1, n_words)
+    k = max_hamming // m
+    chunks = _simhash_chunks(m, n_words)
+    if all(k + 1 <= width <= 30 for _, _, width in chunks):
+        return k, chunks
+    _warn_if_narrow(bands)
+    return 0, bands
 
 
 _SIMHASH_WORD_UDFS: dict[int, object] = {}
@@ -923,45 +977,16 @@ def _simhash_words_udf(n_words: int):
     return _SIMHASH_WORD_UDFS[n_words]
 
 
-def _simhash_words(tokf: DataFrame, word_names: list[str]) -> DataFrame:
-    """Fingerprint WORDS (no band columns) from a ``(_id, _tok)``
-    token-array frame; docs with no tokens (NULL or []) get no row."""
+def _simhash_words(tokf: DataFrame, n_words: int) -> DataFrame:
+    """Fingerprint words ``(_id, simhash[, simhash1])`` from a
+    ``(_id, _tok)`` token-array frame; docs with no tokens (NULL or [])
+    get no row."""
     words = tokf.filter(F.size("_tok") > 0).select(
-        "_id", _simhash_words_udf(len(word_names))(F.col("_tok")).alias("_w")
+        "_id", _simhash_words_udf(n_words)(F.col("_tok")).alias("_w")
     )
     return words.select(
-        "_id", *[F.col("_w")[w].alias(wn) for w, wn in enumerate(word_names)]
+        "_id", *[F.col("_w")[w].alias(_SIMHASH_WORDS[w]) for w in range(n_words)]
     )
-
-
-def _simhash_fps(
-    tokf: DataFrame, word_names: list[str], bands_per_word: list[int], min_width: int
-) -> DataFrame:
-    """Fingerprint words plus band0..band{B-1} (contiguous bit chunks per
-    word) for a :func:`_band_layout`, warning when the narrowest band is
-    under 12 bits."""
-    if min_width < _MIN_BAND_BITS:
-        warnings.warn(
-            f"simhash banding: narrowest band is {min_width} bits "
-            f"(<{_MIN_BAND_BITS}) — ~{1 << min_width} buckets/band makes band "
-            f"self-joins near-quadratic at large corpus sizes; widen the "
-            f"fingerprint (n_words) or lower the radius/bands",
-            stacklevel=3,
-        )
-    out = _simhash_words(tokf, word_names)
-    band_id = 0
-    for w, nb in enumerate(bands_per_word):
-        offset = 0
-        for width in _band_widths(_WORD_BITS, nb) if nb > 0 else []:
-            out = out.withColumn(
-                f"band{band_id}",
-                F.shiftrightunsigned(F.col(word_names[w]), offset).bitwiseAND(
-                    F.lit((1 << width) - 1)
-                ),
-            )
-            offset += width
-            band_id += 1
-    return out
 
 
 def simhash_near_dup_pairs(
@@ -974,20 +999,22 @@ def simhash_near_dup_pairs(
 ) -> DataFrame:
     """Near-dup pairs with Hamming(fingerprint) ≤ max_hamming.
 
-    Candidates via band equality, then exact popcount filter. Returns
-    (id_a, id_b, hamming). Fingerprints, ``portable_hash`` and
+    Returns (id_a, id_b, hamming). Fingerprints, ``portable_hash`` and
     ``n_words`` are those of :func:`simhash_fingerprints`; multi-word
-    fingerprints compute hamming as the sum of per-word popcounts (wide
-    fingerprints are the scale-safe way to run large radii: band width
-    ≥ 12 bits keeps band self-joins sub-quadratic; a warning fires when
-    the band join runs narrower). Docs without a fingerprint (NULL, or
-    text that trims to "") never pair.
+    fingerprints compute hamming as the sum of per-word popcounts. Docs
+    without a fingerprint (NULL, or text that trims to "") never pair.
 
-    The fingerprint is cut into ``max_hamming + 1`` disjoint bands, which
-    makes the banding EXHAUSTIVE by pigeonhole: a pair within Hamming ≤ r
-    differs in at most r of the r + 1 bands, so at least one band matches —
-    the output EQUALS the exact hamming-≤r pair set of the fingerprints
-    (not a recall-lossy approximation).
+    Candidates come from one pigeonhole chunk join (Manku, Jain and Das
+    Sarma, WWW 2007): the fingerprint is cut into m disjoint chunks, and
+    a pair within Hamming ≤ r agrees within k = ⌊r/m⌋ bits on at least
+    one of them, so joining each doc's ≤k-bit chunk flips to every doc's
+    exact chunk values, then filtering on the exact popcount, yields
+    EXACTLY the hamming-≤r pair set of the fingerprints (not a
+    recall-lossy approximation). With r + 1 chunks of ≥ 12 bits, k = 0
+    and the join is plain banding (some band is equal); narrower bands
+    switch to fewer, wider chunks with k ≤ 2 (:func:`_simhash_layout`).
+    Wide fingerprints (``n_words=2``) keep large radii on the band join;
+    a warning fires when neither layout avoids sub-12-bit bands.
 
     Identical token streams mine as one representative
     (:func:`_collapse_and_mine` over the ``n = 0`` token kernel): hamming
@@ -1001,198 +1028,91 @@ def simhash_near_dup_pairs(
     return _expand_pairs_multi(pairs, clones, "hamming", 0)
 
 
-def _chunk_layout(
-    word_bits: int, n_words: int, max_hamming: int
-) -> tuple[int, int, list[tuple[int, int, int]]] | None:
-    """Pigeonhole QUERY-EXPANSION layout for the exact hamming-≤r join
-    (used when exhaustive banding would need sub-12-bit bands): the
-    fingerprint's n_words·word_bits bits are covered by ``m`` disjoint
-    chunks with m = ⌊r/3⌋+1 (so 3m > r and k = ⌊r/m⌋ ≤ 2); by pigeonhole
-    a pair within hamming ≤ r agrees within ≤ k bits on SOME chunk, so
-    expanding one side by all ≤k-bit flips of each chunk and equi-joining
-    on (chunk idx, value) is EXACT-recall. Returns (m, k, chunks) with
-    chunks = [(word idx, bit offset, width)], or None when the layout is
-    unusable (chunks too wide for a bounded expansion, or r < 3)."""
-    if max_hamming < 3:
-        return None
-    m = max(max_hamming // 3 + 1, n_words)
-    k = max_hamming // m
-    chunks: list[tuple[int, int, int]] = []
-    per_word = _band_widths(m, n_words) if n_words > 1 else [m]
-    for w, nc in enumerate(per_word):
-        off = 0
-        for width in _band_widths(word_bits, nc) if nc > 0 else []:
-            chunks.append((w, off, width))
-            off += width
-    # expansion size per chunk is C(width,0..k) — cap it so the probe-side
-    # blowup stays bounded (~250 rows/chunk at 20 bits, k=2)
-    if any(width > 30 or width < k + 1 for _, _, width in chunks):
-        return None
-    return m, k, chunks
-
-
 def _simhash_pairs_on_tokens(
     tokf: DataFrame, max_hamming: int, n_words: int
 ) -> DataFrame:
-    """Candidate generation + exact popcount filter of
+    """Candidate join + exact popcount filter of
     :func:`simhash_near_dup_pairs`, over a prepared (materialized)
     ``(_id, _tok, ...)`` token-array frame, fingerprinted by the Arrow
     words kernel (:func:`_simhash_words`).
 
-    Two exact candidate schemes (round 7):
+    Both sides are projections of one cached fingerprint frame. The
+    exact side explodes each doc's m chunk values to ``(ci, cv)`` rows.
+    At k = 0 the probe side is that same projection, a self-join on
+    equal bands. At k > 0 it carries every ≤k-bit flip of each chunk:
+    at 60 bits / r = 8 the 9 exhaustive bands would be 6-7 bits wide
+    (≤128 buckets), and their measured candidate stream at 50k docs was
+    9.1×10⁸ pairs, nearly all discarded by the popcount; 3 chunks of 20
+    bits with 211 flips each cut it 3.9× (→ 2.3×10⁸)."""
+    k, chunks = _simhash_layout(max_hamming, n_words)
+    fps = _materialize(_simhash_words(tokf, n_words))
+    # MEASURED broadcast decision (same discipline as _BROADCAST_MEMBERS).
+    # The count also fills the cache before the join's two sides read it;
+    # left to the join, both would compute it at once. The exact side is
+    # m rows/doc of ~32 bytes; under the cap it broadcasts and the probe
+    # side becomes a pure scan→explode→probe pipeline with NO exchange
+    # (the static planner can't see this through the Generate). Past the
+    # cap the join falls back to the planner's shuffle strategy on
+    # (chunk, value), which keeps the candidate reduction.
+    small = fps.count() * len(chunks) <= 2_000_000
+    values = _chunk_values(chunks)
 
-    - **Band join** — exhaustive r+1 banding: candidates = pairs equal
-      in ≥1 band. With narrow bands this degenerates: at 60 bits / r=8 the
-      9 bands are 6-7 bits wide (≤128 buckets) and the measured candidate
-      stream at 50k docs was 9.1×10⁸ pairs — the join spends its whole
-      wall time PRODUCING rows that the popcount immediately discards.
-    - **Pigeonhole query expansion** (:func:`_chunk_layout`) — used
-      automatically when the narrowest band would be <12 bits: cover
-      the fingerprint with m = ⌊r/3⌋+1 chunks
-      (20 bits each at 60/r=8), so a qualifying pair agrees within
-      k = ⌊r/m⌋ ≤ 2 bits on some chunk; one side explodes to its
-      1+w+C(w,2) ≤k-bit chunk flips (211/chunk at 20 bits) and
-      equi-joins the other side's exact chunk values. Wider keys cut the
-      measured candidate stream 3.9× (9.1×10⁸ → 2.3×10⁸) and the probe
-      side is a pure projection of the cached fingerprint frame, so the
-      only exchange left is the tiny survivor distinct. The planner
-      broadcasts the exact side at bench scale (3 rows/doc); at corpus
-      scales past the broadcast bound the same plan becomes a shuffle
-      join on (chunk, value) and keeps the candidate reduction.
-
-    Both schemes are EXACT (the output is the full hamming-≤r pair set),
-    so they are interchangeable."""
-    n_bands = max_hamming + 1
-    word_names, bands_per_word, min_width = _band_layout(n_bands, n_words)
-    layout = None
-    if min_width < _MIN_BAND_BITS:
-        layout = _chunk_layout(_WORD_BITS, n_words, max_hamming)
-    if layout is not None:
-        fps = _materialize(_simhash_words(tokf, word_names))
-        # MEASURED broadcast decision (same discipline as
-        # _BROADCAST_MEMBERS): the count() rides the just-persisted frame
-        # — the first action would materialize it anyway. The exact side
-        # is m rows/doc of ~32 bytes; under the cap it broadcasts and the
-        # probe side becomes a pure scan→explode→probe pipeline with NO
-        # exchange (the static planner can't see this through the
-        # Generate, and AQE still leaves the probe-side shuffle files).
-        # Past the cap the join falls back to the planner's shuffle
-        # strategy, which keeps the candidate reduction.
-        small = fps.count() * len(layout[2]) <= 2_000_000
-        return _simhash_pairs_expansion(
-            fps, word_names, max_hamming, layout, small
+    def side(s: str, *cols: "F.Column") -> DataFrame:
+        """``(id_s, sh{s}_0[, sh{s}_1], *cols)`` over the fingerprints."""
+        return fps.select(
+            F.col("_id").alias(f"id_{s}"),
+            *[F.col(_SIMHASH_WORDS[w]).alias(f"sh{s}_{w}") for w in range(n_words)],
+            *cols,
         )
-    fps = _materialize(_simhash_fps(tokf, word_names, bands_per_word, min_width))
-    # ONE self-join on exploded (band index, band value) keys — not
-    # n_bands separate self-joins unioned (round-7: the unioned plan paid
-    # 2×n_bands exchanges + a union before the distinct; the exploded join
-    # shuffles the same rows once and keeps the identical candidate set,
-    # since (bidx, bval) equality ⟺ equality in that band)
-    bucketed = fps.select(
-        "_id",
-        *word_names,
-        F.posexplode(
-            F.array(*[F.col(f"band{b}") for b in range(n_bands)])
-        ).alias("bidx", "bval"),
-    )
-    a, c = bucketed.alias("a"), bucketed.alias("b")
-    cands = (
-        a.join(c, on=["bidx", "bval"])
-        .filter(F.col("a._id") < F.col("b._id"))
-        .select(
-            F.col("a._id").alias("id_a"),
-            F.col("b._id").alias("id_b"),
-            *[F.col(f"a.{wn}").alias(f"sha_{w}") for w, wn in enumerate(word_names)],
-            *[F.col(f"b.{wn}").alias(f"shb_{w}") for w, wn in enumerate(word_names)],
-        )
-    )
-    hamming = None
-    for w in range(n_words):
-        h = F.bit_count(F.col(f"sha_{w}").bitwiseXOR(F.col(f"shb_{w}")))
-        hamming = h if hamming is None else hamming + h
-    # popcount-filter BEFORE the distinct (round 7): the narrow exhaustive
-    # bands make the raw candidate stream O(Σ bucket²) rows — ~10⁸ at 50k
-    # docs with 60-bit/9-band fingerprints — and `distinct()` first paid a
-    # full exchange of all of them (32-byte rows, multi-GB). The hamming
-    # filter is a pure per-row function of (sha, shb), which are constants
-    # per doc pair, so filter∘distinct ≡ distinct∘filter — row-identical —
-    # but the filter runs inside the join's whole-stage-codegen pipeline
-    # and only TRUE near-dups (a ~10⁴× smaller set) reach the exchange.
-    return (
-        cands.withColumn("hamming", hamming)
-        .filter(F.col("hamming") <= max_hamming)
-        .select("id_a", "id_b", "hamming")
-        .distinct()
-    )
 
-
-def _simhash_pairs_expansion(
-    fps: DataFrame,
-    word_names: list[str],
-    max_hamming: int,
-    layout: tuple[int, int, list[tuple[int, int, int]]],
-    small: bool = False,
-) -> DataFrame:
-    """Pigeonhole query-expansion candidate join over a materialized
-    ``(_id, simhash[, simhash1..])`` fingerprint frame — see
-    :func:`_simhash_pairs_on_tokens` for the scheme and its exactness
-    argument. One side carries every ≤k-bit flip of each chunk (a pure
-    projection+explode of the cached frame — no shuffle); the other
-    carries the exact chunk values; survivors of the in-join popcount
-    filter are the only rows that ever reach an exchange."""
-    from itertools import combinations
-
-    _, k, chunks = layout
-    chunk_vals = [
-        F.shiftrightunsigned(F.col(word_names[w]), off).bitwiseAND(
-            F.lit((1 << width) - 1)
-        )
-        for (w, off, width) in chunks
-    ]
-    # One probe branch per chunk, unioned: each branch explodes a LITERAL
-    # flip array (constant-folded to a single array object) and XORs the
-    # chunk value AFTER the explode. Building one array of 633 xor-structs
-    # per row instead blew the whole-stage-codegen method limit and
-    # de-codegen'd the entire probe stage — explode, join, popcount and
-    # the distinct's partial aggregate all ran interpreted, measured ~10×
-    # slower than this shape on the same candidate volume.
-    sha_cols = [
-        F.col(wn).alias(f"sha_{w}") for w, wn in enumerate(word_names)
-    ]
-    probe = None
-    for ci, ((_, _, width), cv) in enumerate(zip(chunks, chunk_vals)):
-        flips = [0]
-        if k >= 1:
-            flips += [1 << p for p in range(width)]
-        if k >= 2:
-            flips += [
-                (1 << p) | (1 << q) for p, q in combinations(range(width), 2)
+    chunk_rows = F.posexplode(F.array(*values)).alias("ci", "cv")
+    exact = side("b", chunk_rows)
+    if k == 0:
+        probe = side("a", chunk_rows)
+    else:
+        # One probe branch per chunk, unioned: each branch explodes a
+        # LITERAL flip array (constant-folded to a single array object)
+        # and XORs the chunk value AFTER the explode. Building one array
+        # of 633 xor-structs per row instead blew the whole-stage-codegen
+        # method limit and de-codegen'd the entire probe stage — explode,
+        # join, popcount and the distinct's partial aggregate all ran
+        # interpreted, measured ~10× slower than this shape on the same
+        # candidate volume.
+        probe = None
+        for ci, ((_, _, width), cv) in enumerate(zip(chunks, values)):
+            flips = [
+                sum(1 << p for p in bits)
+                for j in range(k + 1)
+                for bits in combinations(range(width), j)
             ]
-        branch = fps.select(
-            F.col("_id").alias("id_a"),
-            *sha_cols,
-            F.lit(ci).alias("ci"),
-            cv.alias("_cv0"),
-            F.explode(F.array(*[F.lit(int(f)) for f in flips])).alias("_f"),
-        ).select(
-            "id_a",
-            *[f"sha_{w}" for w in range(len(word_names))],
-            "ci",
-            F.col("_cv0").bitwiseXOR(F.col("_f")).alias("cv"),
-        )
-        probe = branch if probe is None else probe.unionByName(branch)
-    exact = fps.select(
-        F.col("_id").alias("id_b"),
-        *[F.col(wn).alias(f"shb_{w}") for w, wn in enumerate(word_names)],
-        F.posexplode(F.array(*chunk_vals)).alias("ci", "cv"),
-    )
+            branch = side(
+                "a",
+                F.lit(ci).alias("ci"),
+                cv.alias("_cv0"),
+                F.explode(F.array(*[F.lit(f) for f in flips])).alias("_f"),
+            ).select(
+                "id_a",
+                *[f"sha_{w}" for w in range(n_words)],
+                "ci",
+                F.col("_cv0").bitwiseXOR(F.col("_f")).alias("cv"),
+            )
+            probe = branch if probe is None else probe.unionByName(branch)
     cands = probe.join(_maybe_broadcast(exact, small), on=["ci", "cv"]).filter(
         F.col("id_a") < F.col("id_b")
     )
-    hamming = None
-    for w in range(len(word_names)):
-        h = F.bit_count(F.col(f"sha_{w}").bitwiseXOR(F.col(f"shb_{w}")))
-        hamming = h if hamming is None else hamming + h
+    hamming = reduce(
+        operator.add,
+        [
+            F.bit_count(F.col(f"sha_{w}").bitwiseXOR(F.col(f"shb_{w}")))
+            for w in range(n_words)
+        ],
+    )
+    # popcount-filter BEFORE the distinct: the raw candidate stream is
+    # O(Σ bucket²) rows, and the hamming filter is a pure per-row function
+    # of (sha, shb), constants per doc pair, so filter∘distinct ≡
+    # distinct∘filter — row-identical — but the filter runs inside the
+    # join's whole-stage-codegen pipeline and only TRUE near-dups (a ~10⁴×
+    # smaller set) reach the distinct's exchange.
     return (
         cands.withColumn("hamming", hamming)
         .filter(F.col("hamming") <= max_hamming)

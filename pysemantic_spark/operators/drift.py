@@ -270,8 +270,10 @@ def load_drift_baseline(path: str) -> dict:
 
 def spec_drift_baseline(drift_spec) -> dict:
     """Load the baseline sketch a DriftSpec names and check that it covers
-    every declared column; raises SpecValidationError otherwise. File I/O
-    only, no Spark job, so execute() runs it before starting any."""
+    every declared column; raises SpecValidationError naming the path when
+    the file is missing or not JSON, or lacks a column. File I/O only, no
+    Spark job, so execute() and CLI ``validate`` run it before starting
+    any."""
     from pysemantic_spark.errors import SpecValidationError
 
     if not drift_spec.baseline:
@@ -279,7 +281,12 @@ def spec_drift_baseline(drift_spec) -> dict:
             "drift: block declared without a `baseline` sketch path — "
             "build one with save_drift_baseline(baseline_df, columns, path)"
         )
-    base = load_drift_baseline(drift_spec.baseline)
+    try:
+        base = load_drift_baseline(drift_spec.baseline)
+    except (OSError, ValueError) as e:  # missing, unreadable or not JSON
+        raise SpecValidationError(
+            f"drift baseline {drift_spec.baseline} cannot be loaded: {e}"
+        ) from e
     missing = [c for c in drift_spec.columns if c not in base["columns"]]
     if missing:
         raise SpecValidationError(

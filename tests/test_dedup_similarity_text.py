@@ -11,6 +11,7 @@ import pickle
 import random
 import subprocess
 import sys
+import warnings
 
 import numpy as np
 import pandas as pd
@@ -75,6 +76,45 @@ def test_ngram_jaccard_matches_python_oracle(spark, docs_df):
         if jc >= 0.3:
             exp[(i, j)] = round(jc, 6)
     assert got == exp
+
+
+def test_prefix_path_keeps_float_boundary_pair(spark):
+    """Regression: the PPJoin positional filter computed
+    α = ceil(t/(1+t)·(|x|+|y|)) in doubles; at t=0.2 with |x|+|y|=18 the
+    product lands an ulp above its true value 3 (3.0000000000000004),
+    ceil over-tightens α to 4, and a true threshold-boundary pair
+    (overlap 3, jaccard exactly 0.2) was silently pruned — found by the
+    prefix==counting hypothesis property test (seed 1). All ceil-based
+    prune bounds now subtract _EXACT_EPS before rounding."""
+    rng = random.Random(1)
+    docs = []
+    for i in range(6):
+        L = rng.randint(2, 10)
+        toks = [f"w{rng.randrange(8)}" for _ in range(L)]
+        docs.append((i, " ".join(toks)))
+        if rng.random() < 0.4:
+            mut = list(toks)
+            if rng.random() < 0.5 and len(mut) > 2:
+                mut.pop(rng.randrange(len(mut)))
+            else:
+                mut.append(f"w{rng.randrange(8)}")
+            docs.append((1000 + i, " ".join(mut)))
+    df = spark.createDataFrame(pd.DataFrame(docs, columns=["doc_id", "text"]))
+    kw = dict(n=2, threshold=0.2)
+    prefix = {
+        (r["id_a"], r["id_b"], r["jaccard"])
+        for r in dedup.ngram_jaccard_pairs(
+            df, "doc_id", "text", prefix_filter=True, **kw
+        ).collect()
+    }
+    counting = {
+        (r["id_a"], r["id_b"], r["jaccard"])
+        for r in dedup.ngram_jaccard_pairs(
+            df, "doc_id", "text", prefix_filter=False, **kw
+        ).collect()
+    }
+    assert (5, 1001, 0.2) in prefix  # the boundary pair the old α dropped
+    assert prefix == counting
 
 
 def test_minhash_lsh_finds_near_dups(spark, docs_df):
@@ -160,6 +200,30 @@ def test_keep_first_auto_matches_naive_window_with_nulls(spark):
         for r in dedup.exact_dedup_keep_first(df, ["k"], ["v"]).collect()
     }
     assert got == exp
+
+
+def test_keep_first_agg_min_matches_window(spark):
+    rows = [(0, i, i * 7 % 13) for i in range(400)]  # mega key: 400 rows
+    rows += [(k, 1000 + k, k % 5) for k in range(1, 50)]  # unique keys
+    rows += [(7, 2000, 99), (7, 2001, 98)]  # small dup group
+    rows += [(None, 3000, 1), (None, 3001, 2)]  # NULL keys group together
+    df = spark.createDataFrame(rows, "k long, ord long, v long")
+    nullsafe = lambda t: tuple((x is None, x) for x in t)  # noqa: E731
+    got = {}
+    for strat in ("window", "split", "agg_min"):
+        got[strat] = sorted(
+            (
+                tuple(r)
+                for r in dedup.exact_dedup_keep_first(
+                    df, ["k"], ["ord"], strategy=strat
+                ).collect()
+            ),
+            key=nullsafe,
+        )
+    assert got["agg_min"] == got["window"] == got["split"]
+    # column order preserved by the agg_min plan
+    out = dedup.exact_dedup_keep_first(df, ["k"], ["ord"], strategy="agg_min")
+    assert out.columns == df.columns
 
 
 # --- connected components and duplicate clusters -----------------------------
@@ -258,6 +322,85 @@ def test_duplicate_clusters_clone_group_without_cross_pairs(spark):
         for r in dedup.duplicate_clusters(df, "doc_id", "text").collect()
     }
     assert got == {(0, 0), (1, 0), (2, 0), (3, 0)}
+
+
+def test_is_star_forest_exact_shape_test(spark):
+    stars = spark.createDataFrame([(3, 1), (2, 1), (9, 5)], "u long, v long")
+    assert dedup._star_forest_probe(stars)[0]
+    chain = spark.createDataFrame([(3, 2), (2, 1)], "u long, v long")
+    assert not dedup._star_forest_probe(chain)[0]  # center 2 also a leaf
+    dup_src = spark.createDataFrame([(3, 1), (3, 2)], "u long, v long")
+    assert not dedup._star_forest_probe(dup_src)[0]  # u appears twice
+    empty = spark.createDataFrame([], "u long, v long")
+    assert dedup._star_forest_probe(empty)[0]  # vacuous star forest
+
+
+def test_star_local_finish_equals_distributed(spark, monkeypatch):
+    """The min-root union-find local finish must produce the SAME
+    (node, cluster_rep) map as fully-distributed contraction rounds, on
+    graphs mixing chains, cliques, and singletons-with-one-edge."""
+    rng = random.Random(23)
+    for trial in range(3):
+        edges = {tuple(sorted(rng.sample(range(80), 2))) for _ in range(90)}
+        edges |= {(i, i + 1) for i in range(60, 75)}  # chain tail
+        p = _edges(spark, sorted(edges))
+        monkeypatch.setattr(dedup, "_LOCAL_FINISH_EDGES", 0)  # force rounds
+        dist = {
+            r["node"]: r["cluster_rep"]
+            for r in dedup.connected_components(
+                p, max_iters=25, algorithm="star"
+            ).collect()
+        }
+        monkeypatch.setattr(dedup, "_LOCAL_FINISH_EDGES", 10**9)  # force local
+        loc = {
+            r["node"]: r["cluster_rep"]
+            for r in dedup.connected_components(
+                p, max_iters=25, algorithm="star"
+            ).collect()
+        }
+        assert dist == loc
+
+
+def test_star_distributed_rounds_still_converge_on_chain(spark, monkeypatch):
+    """With the local finish disabled the distributed large/small-star
+    rounds must still reach the star forest on a diameter-40 chain —
+    the cap is an optimization, not a correctness crutch."""
+    monkeypatch.setattr(dedup, "_LOCAL_FINISH_EDGES", 0)
+    chain = [(i, i + 1) for i in range(40)]
+    got = dedup.connected_components(
+        _edges(spark, chain), max_iters=12, algorithm="star"
+    ).collect()
+    assert len(got) == 41
+    assert all(r["cluster_rep"] == 0 for r in got)
+
+
+def test_star_local_finish_fires_under_default_cap(spark):
+    """At test scale the measured edge count is far under the 1M cap, so
+    the local path must fire (and be exact) without any patching."""
+    edges = [(1, 2), (2, 3), (10, 11), (20, 21), (21, 22), (22, 23)]
+    got = {
+        r["node"]: r["cluster_rep"]
+        for r in dedup.connected_components(
+            _edges(spark, edges), algorithm="star"
+        ).collect()
+    }
+    assert got == {1: 1, 2: 1, 3: 1, 10: 10, 11: 10,
+                   20: 20, 21: 20, 22: 20, 23: 20}
+
+
+def test_duplicate_clusters_sub_shingle_clones_never_cluster(spark):
+    body = "the quick brown fox jumps over the lazy dog again and again"
+    docs = (
+        [(i, body) for i in range(3)]
+        + [(20, "tiny doc"), (21, "tiny doc")]  # identical but < shingle len
+        + [(50, "completely different content on an unrelated topic entirely")]
+    )
+    df = spark.createDataFrame(docs, "doc_id long, text string")
+    got = {
+        (r["node"], r["cluster_rep"])
+        for r in dedup.duplicate_clusters(df, "doc_id", "text").collect()
+    }
+    assert got == {(0, 0), (1, 0), (2, 0)}
 
 
 # --- similarity -------------------------------------------------------------
@@ -674,6 +817,111 @@ def test_ivf_sample_fraction_repartition_invariance(spark):
     assert base == shuffled
 
 
+def _exact_sets(spark, emb, queries, k=5):
+    exact = similarity.cosine_topk(emb, queries, k=k)
+    out: dict = {}
+    for r in exact.collect():
+        out.setdefault(r["query_id"], set()).add(r["vec_id"])
+    return out
+
+
+def _recall(approx_df, exact_sets, k=5):
+    got: dict = {}
+    for r in approx_df.collect():
+        got.setdefault(r["query_id"], set()).add(r["vec_id"])
+    return sum(
+        len(got.get(q, set()) & e) / len(e) for q, e in exact_sets.items()
+    ) / len(exact_sets)
+
+
+@pytest.mark.parametrize("frac", [1.0, 0.4])
+def test_ivf_sample_layout_independent_beyond_cap(spark, frac):
+    """sample_size=20 → cap 80 ≪ 500 corpus rows: a limit() prefix (or a
+    per-partition-seeded Bernoulli set) would change under
+    repartitioning. Centroids must be bit-identical."""
+    emb = _emb(spark)
+    base = similarity.train_ivf_centroids(
+        emb, dim=64, n_centroids=4, sample_size=20, sample_fraction=frac
+    )
+    shuffled = similarity.train_ivf_centroids(
+        emb.repartition(7), dim=64, n_centroids=4, sample_size=20,
+        sample_fraction=frac,
+    )
+    assert np.array_equal(base, shuffled)
+
+
+def test_lsh_recall_monotone_in_tables(spark):
+    """Tables are seeded seed + 7919*t, so the first L tables of a larger
+    run ARE the smaller run: candidates (hence recall) can only grow."""
+    emb = _emb(spark)
+    queries = _first_queries(emb, 3)
+    exact = _exact_sets(spark, emb, queries)
+    recalls = [
+        _recall(
+            similarity.lsh_bucketed_topk(
+                emb, queries, dim=64, k=5, n_planes=8,
+                n_tables=t, n_probe_bits=1,
+            ),
+            exact,
+        )
+        for t in (2, 6, 12)
+    ]
+    assert recalls == sorted(recalls), recalls
+
+
+def test_ivf_recall_monotone_in_probes_and_probe_all_is_exact(spark):
+    emb = _emb(spark)
+    queries = _first_queries(emb, 3)
+    exact = _exact_sets(spark, emb, queries)
+    kw = dict(dim=64, k=5, n_centroids=6, sample_fraction=1.0)
+    recalls = [
+        _recall(similarity.ivf_topk(emb, queries, n_probe=p, **kw), exact)
+        for p in (1, 2, 6)
+    ]
+    assert recalls == sorted(recalls), recalls
+    # probing every centroid scores the whole corpus → exactly the exact
+    # top-k (same rounding, same tie-break)
+    full = similarity.ivf_topk(emb, queries, n_probe=6, **kw)
+    got = {(r["query_id"], r["vec_id"]) for r in full.collect()}
+    want = {(q, v) for q, s in exact.items() for v in s}
+    assert got == want
+    assert recalls[-1] == 1.0
+
+
+def test_ivf_probe_all_equals_exact_property(spark):
+    """Sweep (n_centroids, sample_fraction): probing ALL centroids must
+    return the exact top-k whatever the coarse quantizer looks like."""
+    emb = _emb(spark).cache()
+    queries = _first_queries(emb, 2)
+    want = {
+        (q, v)
+        for q, s in _exact_sets(spark, emb, queries, k=4).items()
+        for v in s
+    }
+
+    @settings(
+        max_examples=4,
+        deadline=None,
+        suppress_health_check=[HealthCheck.too_slow],
+    )
+    @given(
+        n_centroids=st.integers(min_value=2, max_value=8),
+        frac=st.sampled_from([0.3, 0.7, 1.0]),
+    )
+    def check(n_centroids, frac):
+        full = similarity.ivf_topk(
+            emb, queries, dim=64, k=4, n_centroids=n_centroids,
+            n_probe=n_centroids, sample_fraction=frac,
+        )
+        got = {(r["query_id"], r["vec_id"]) for r in full.collect()}
+        assert got == want
+
+    try:
+        check()
+    finally:
+        emb.unpersist()
+
+
 # --- SimHash banding ----------------------------------------------------------
 
 def test_simhash_banding_exhaustive_at_radius(spark):
@@ -937,6 +1185,23 @@ def test_collapse_guard_property(spark, miner, corpus):
     dedup.release_intermediates()
 
 
+def test_collapse_for_mining_reports_broadcastable_clone_map(spark):
+    docs = [(i, "same exact text body here repeated") for i in range(4)] + [
+        (10, "another unrelated document body entirely different")
+    ]
+    df = spark.createDataFrame(docs, "doc_id long, text string")
+    # the shingle frame (n-gram miners) and the token frame (SimHash)
+    for n, arr_col in ((3, "_sh"), (0, "_tok")):
+        _, clones = dedup._collapse_and_mine(
+            df, "doc_id", "text", n, arr_col, lambda frame: frame
+        )
+        assert clones is not None
+        mm, mined, small = clones
+        assert small is True  # 4 clone members, far under the broadcast cap
+        assert mm.count() == 4
+        assert mined.count() == 1  # one clone-group rep, and it mines
+
+
 # ---------------------------------------------------------------------------
 # Arrow text kernels (tokens / shingles + fingerprint, SimHash words)
 # ---------------------------------------------------------------------------
@@ -989,7 +1254,7 @@ def test_simhash_portable_hash_matches_duckdb(spark, edge_df):
         fps = dedup.simhash_fingerprints(
             df, "doc_id", "text", portable_hash=True, n_words=n_words
         )
-        for frame in (fps, dedup._simhash_words(tokf, names)):
+        for frame in (fps, dedup._simhash_words(tokf, n_words)):
             got = {r["_id"]: tuple(r[c] for c in names) for r in frame.collect()}
             assert got == duck, n_words
 
@@ -1022,80 +1287,91 @@ def test_simhash_null_and_empty_docs(spark):
         assert {tuple(r) for r in pairs.collect()} == {(6, 7, 0), (8, 9, 0)}, collapse
 
 
-def test_simhash_expansion_equals_banding(spark):
-    """The pigeonhole query-expansion candidate scheme (fires when
-    exhaustive banding would need sub-12-bit bands: one 60-bit word, r=8)
-    must produce EXACTLY the band-join pair set — both are exact, so the
-    outputs must be row-identical including the hamming values."""
+def _planted_near_dup_docs(spark):
+    """300 docs over a 30-word vocabulary; the last 50 are one-token
+    edits of earlier ones."""
     rng = random.Random(7)
     vocab = [f"w{i}" for i in range(30)]
     rows = []
     for i in range(250):
         toks = [rng.choice(vocab) for _ in range(rng.randint(8, 40))]
         rows.append((i, " ".join(toks)))
-    # planted near-dups: light mutations of earlier docs
     for i in range(250, 300):
         base = list(rows[rng.randrange(0, 250)][1].split())
         base[rng.randrange(0, len(base))] = rng.choice(vocab)
         rows.append((i, " ".join(base)))
-    df = spark.createDataFrame(pd.DataFrame(rows, columns=["doc_id", "text"]))
+    return spark.createDataFrame(pd.DataFrame(rows, columns=["doc_id", "text"]))
+
+
+def test_simhash_expansion_equals_banding(spark, monkeypatch):
+    """At one 60-bit word and r=8 the picker takes the k=2 expansion (3
+    chunks of 20 bits). Forced onto the k=0 band join over the 9
+    exhaustive bands, the one chunk join must return the same rows,
+    hamming values included: both layouts are exact."""
+    df = _planted_near_dup_docs(spark)
     tokf = dedup._materialize(
         df.select(F.col("doc_id").alias("_id"), tx.tokens("text").alias("_tok"))
     )
-    r, n_bands = 8, 9
-    layout = dedup._chunk_layout(60, 1, r)
-    assert layout is not None and layout[0] == 3 and layout[1] == 2
-    word_names = ["simhash"]
-    fps_words = dedup._materialize(dedup._simhash_words(tokf, word_names))
-    via_expansion = {
-        (x["id_a"], x["id_b"], x["hamming"])
-        for x in dedup._simhash_pairs_expansion(
-            fps_words, word_names, r, layout, small=True
-        ).collect()
-    }
-    with pytest.warns(UserWarning, match="narrowest band"):
-        fps = dedup._materialize(
-            dedup._simhash_fps(tokf, *dedup._band_layout(n_bands, 1))
-        )
-    bucketed = fps.select(
-        "_id",
-        *word_names,
-        F.posexplode(
-            F.array(*[F.col(f"band{b}") for b in range(n_bands)])
-        ).alias("bidx", "bval"),
-    )
-    a, c = bucketed.alias("a"), bucketed.alias("b")
-    via_banding = {
-        (x["id_a"], x["id_b"], x["hamming"])
-        for x in (
-            a.join(c, on=["bidx", "bval"])
-            .filter(F.col("a._id") < F.col("b._id"))
-            .select(
-                F.col("a._id").alias("id_a"),
-                F.col("b._id").alias("id_b"),
-                F.bit_count(
-                    F.col("a.simhash").bitwiseXOR(F.col("b.simhash"))
-                ).alias("hamming"),
-            )
-            .filter(F.col("hamming") <= r)
-            .distinct()
-        ).collect()
-    }
+    r = 8
+    assert dedup._simhash_layout(r, 1) == (2, [(0, 0, 20), (0, 20, 20), (0, 40, 20)])
+    via_expansion = {tuple(x) for x in dedup._simhash_pairs_on_tokens(tokf, r, 1).collect()}
+    bands = dedup._simhash_chunks(r + 1, 1)
+    assert min(w for _, _, w in bands) < 12
+    monkeypatch.setattr(dedup, "_simhash_layout", lambda *_: (0, bands))
+    via_banding = {tuple(x) for x in dedup._simhash_pairs_on_tokens(tokf, r, 1).collect()}
     dedup.release_intermediates()
     assert via_expansion == via_banding
     assert via_banding, "fixture produced no near-dup pairs - vacuous test"
 
 
 def test_simhash_expansion_fires_for_driver_config(spark):
-    """The operator selects the expansion scheme exactly when its r+1
-    bands would be sub-12-bit; the driver's wide config (2x60 bits, r=9
-    -> 12-bit bands) must stay on the band join."""
-    assert dedup._chunk_layout(60, 1, 8) is not None
-    assert dedup._chunk_layout(60, 1, 2) is None  # r<3: bounded expansion n/a
-    # r=9 over 2 words: m = max(4, 2) = 4 chunks of 30 bits, k=2 - usable,
-    # but the 12-bit bands mean the pairs path never asks for it
-    lay = dedup._chunk_layout(60, 2, 9)
-    assert lay is not None and lay[0] == 4 and lay[1] == 2
+    """The picker takes the expansion exactly when the r+1 bands would be
+    sub-12-bit: `simhash_neardups_documents` (one word, r=8) expands with
+    no warning, `simhash_wide_documents` (2x60 bits, r=9 -> 12-bit bands)
+    stays on the band join, and small radii band."""
+    with warnings.catch_warnings():
+        warnings.simplefilter("error")
+        assert dedup._simhash_layout(8, 1) == (2, dedup._simhash_chunks(3, 1))
+        k, bands = dedup._simhash_layout(9, 2)
+        assert k == 0 and len(bands) == 10 and {w for _, _, w in bands} == {12}
+        assert dedup._simhash_layout(2, 1) == (0, [(0, 0, 20), (0, 20, 20), (0, 40, 20)])
+        # r=12 over 2 words: 13 bands would be 8-9 bits; m = max(5, 2)
+        # chunks, 3 in word 0 and 2 in word 1, within k=2 bits
+        assert dedup._simhash_layout(12, 2) == (
+            2, [(0, 0, 20), (0, 20, 20), (0, 40, 20), (1, 0, 30), (1, 30, 30)]
+        )
+    # a radius no layout covers with >=12-bit bands or bounded flips
+    with pytest.warns(UserWarning, match="narrowest band"):
+        k, bands = dedup._simhash_layout(60, 1)
+    assert k == 0 and len(bands) == 61
+
+
+def test_simhash_two_word_expansion_matches_brute_force(spark):
+    """r=12 over two words takes the k=2 expansion over 5 chunks: the pair
+    set must equal the brute-force hamming-<=12 set over the
+    fingerprint words."""
+    df = _planted_near_dup_docs(spark)
+    r = 12
+    assert dedup._simhash_layout(r, 2)[0] == 2
+    words = [
+        (row["_id"], row["simhash"], row["simhash1"])
+        for row in dedup.simhash_fingerprints(df, "doc_id", "text", n_words=2).collect()
+    ]
+    mask = (1 << 64) - 1
+    want = set()
+    for (ia, a0, a1), (ib, b0, b1) in itertools.combinations(words, 2):
+        h = bin((a0 ^ b0) & mask).count("1") + bin((a1 ^ b1) & mask).count("1")
+        if h <= r:
+            want.add((min(ia, ib), max(ia, ib), h))
+    got = {
+        tuple(x)
+        for x in dedup.simhash_near_dup_pairs(
+            df, "doc_id", "text", max_hamming=r, n_words=2
+        ).collect()
+    }
+    dedup.release_intermediates()
+    assert got == want
+    assert want, "fixture produced no near-dup pairs - vacuous test"
 
 
 def _kernel_vs_spark(df, n):

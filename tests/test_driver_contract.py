@@ -1,5 +1,6 @@
 """The `__spark_entry__.py` driver contract: the exact-top-k memo's
-invalidation key and the equivalence of rewritten query shapes."""
+invalidation key and its eviction of stale entries, and the equivalence
+of rewritten query shapes."""
 
 from __future__ import annotations
 
@@ -8,6 +9,8 @@ import os
 from pyspark.sql import functions as F
 
 import __spark_entry__ as entrymod
+
+SF001 = "/root/testdata/sf0.001"
 
 
 def test_source_fingerprint_tracks_mtime_and_size(tmp_path):
@@ -20,6 +23,18 @@ def test_source_fingerprint_tracks_mtime_and_size(tmp_path):
     os.utime(f, (1, 1))
     fp2 = entrymod._source_fingerprint(str(tmp_path), "embeddings")
     assert fp1 != fp2
+
+
+def test_exact_topk_memo_evicts_stale_fingerprints(spark):
+    entrymod._EXACT_TOPK_MEMO.clear()
+    abspath = os.path.abspath(SF001)
+    for i in range(3):  # three dead fingerprints for the same sf_dir
+        entrymod._EXACT_TOPK_MEMO[(abspath, (f"stale{i}", 0, 0))] = (None, None)
+    entrymod._exact_topk5(spark, SF001)
+    keys = [k for k in entrymod._EXACT_TOPK_MEMO if k[0] == abspath]
+    assert len(keys) == 1
+    assert keys[0][1] != ("stale0", 0, 0)
+    entrymod._EXACT_TOPK_MEMO.clear()
 
 
 def test_corpus_clean_conditional_agg_matches_filtered_groupby(spark):

@@ -5,6 +5,9 @@ remaining buckets, and the combined result equals a never-killed run
 
 from __future__ import annotations
 
+import os
+
+import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
@@ -107,6 +110,76 @@ def test_resume_matches_single_run(spark, table, tmp_path):
             m_split.entries[b].n_violating_rows
             == m_single.entries[b].n_violating_rows
         ), b
+
+
+def test_resume_prunes_done_buckets_despite_partial_writes(spark, tmp_path):
+    """Kill semantics: a killed run leaves (a) a manifest with only its
+    completed chunks marked done and (b) PARTIAL in-flight sink output for
+    the chunk it died inside. Resume must revalidate exactly the non-done
+    buckets, and the authoritative output (the sink dirs named by the
+    manifest's per-bucket run_ids) must equal a clean never-killed run
+    row-for-row — the stale partial dir is dead weight, never read."""
+    pdf = transcripts_pdf(n_rows=4_000)
+    df = spark.createDataFrame(pdf)
+    dims = {"dim_tools": spark.createDataFrame(dim_tools_pdf())}
+    spec = transcripts_spec()
+
+    io = ParquetManifestIO(str(tmp_path / "tbl"))
+    io.write_bucketed(df, "conv_id", 8)
+
+    # killed attempt: 1 chunk (buckets 0,1) completes…
+    first = run_resumable(spark, io, spec, dims=dims, chunk_size=2, max_chunks=1)
+    assert sorted(first["processed"]) == [0, 1]
+    # …and the kill leaves a PARTIAL in-flight write for the next chunk:
+    # a run dir the manifest never acknowledged, holding garbage rows
+    stale = tmp_path / "tbl" / "violations" / "run=deadbeefkill" / "chunk=2"
+    spark.createDataFrame(
+        [("POISON", -1)], "conv_id string, turn_idx long"
+    ).write.parquet(str(stale))
+
+    # resume: prunes exactly the done buckets
+    second = run_resumable(spark, io, spec, dims=dims, chunk_size=2)
+    assert sorted(second["skipped"]) == [0, 1]
+    assert sorted(second["processed"]) == [2, 3, 4, 5, 6, 7]
+
+    m = io.load_manifest()
+    assert m.pending() == []
+    run_ids = {e.run_id for e in m.entries.values()}
+    assert "deadbeefkill" not in run_ids  # stale attempt never acknowledged
+
+    # authoritative violations = the manifest-named run dirs only
+    def collect_viols(root, ids):
+        frames = []
+        vroot = os.path.join(root, "violations")
+        for rid in ids:
+            d = os.path.join(vroot, f"run={rid}")
+            if os.path.isdir(d):
+                for chunk in sorted(os.listdir(d)):
+                    frames.append(
+                        spark.read.parquet(os.path.join(d, chunk)).toPandas()
+                    )
+        out = pd.concat(frames, ignore_index=True)
+        return out.sort_values(list(out.columns)).reset_index(drop=True)
+
+    got = collect_viols(str(tmp_path / "tbl"), sorted(run_ids))
+    assert not (got["conv_id"] == "POISON").any()
+
+    # clean never-killed twin on identical data
+    io2 = ParquetManifestIO(str(tmp_path / "tbl2"))
+    io2.write_bucketed(df, "conv_id", 8)
+    clean = run_resumable(spark, io2, spec, dims=dims, chunk_size=8)
+    want = collect_viols(str(tmp_path / "tbl2"), [clean["run_id"]])
+    pd.testing.assert_frame_equal(
+        got.reset_index(drop=True), want.reset_index(drop=True)
+    )
+    # per-bucket manifest outcomes identical too (input_fingerprints are
+    # per-table lineage — part-file names are write-unique — so each
+    # manifest records its own, both non-empty)
+    m2 = io2.load_manifest()
+    for b in range(8):
+        assert m.entries[b].n_rows == m2.entries[b].n_rows, b
+        assert m.entries[b].n_violating_rows == m2.entries[b].n_violating_rows, b
+        assert m.entries[b].input_fingerprint and m2.entries[b].input_fingerprint, b
 
 
 def test_resumed_table_report_equals_one_execute(spark, tmp_path):
@@ -260,7 +333,6 @@ def _drift_frames(spark, tmp_path, columns):
     to N(160, 10), both with a unique ``k``; returns (current, baseline
     path)."""
     import numpy as np
-    import pandas as pd
 
     from pysemantic_spark.operators.drift import save_drift_baseline
 
@@ -480,8 +552,6 @@ def test_cli_validate_missing_dim_exits_1(spark, tmp_path, capsys):
     --dim prints one line naming the check and the missing dim, and exits
     1, before any job runs. A fresh (not --resume) run leaves the
     manifest as it was: its finished buckets stay done."""
-    import os
-
     from pysemantic_spark.cli import main as cli_main
 
     io = ParquetManifestIO(str(tmp_path / "tbl"))
@@ -502,6 +572,49 @@ def test_cli_validate_missing_dim_exits_1(spark, tmp_path, capsys):
     assert "Traceback" not in err[0]
     with open(io.manifest_path, "rb") as f:
         assert f.read() == before
+
+
+def test_cli_validate_bad_drift_baseline_exits_1(spark, tmp_path, capsys):
+    """`validate` with a spec whose drift baseline is missing, or is not
+    JSON, prints one line naming the baseline path and exits 1 before the
+    session starts. A fresh (not --resume) run leaves the manifest as it
+    was: its finished buckets stay done."""
+    from pysemantic_spark.cli import main as cli_main
+
+    io = ParquetManifestIO(str(tmp_path / "tbl"))
+    io.write_bucketed(spark.createDataFrame(transcripts_pdf(n_rows=200)), "conv_id", 4)
+    dims = {"dim_tools": spark.createDataFrame(dim_tools_pdf())}
+    run_resumable(spark, io, transcripts_spec(), dims=dims, chunk_size=2, max_chunks=1)
+    assert [b for b, e in io.load_manifest().entries.items() if e.status == "done"]
+    with open(io.manifest_path, "rb") as f:
+        before = f.read()
+    not_json = tmp_path / "not_json.json"
+    not_json.write_text("not json")
+    for baseline in (tmp_path / "missing.json", not_json):
+        spec = tmp_path / "drift.yaml"
+        spec.write_text(
+            "t:\n"
+            "  column_rules:\n    turn_idx:\n      min: 0\n"
+            f"  drift:\n    columns: [turn_idx]\n    baseline: {baseline}\n"
+        )
+        capsys.readouterr()
+        rc = cli_main(["validate", "--spec", str(spec), "--dataset", "t",
+                       "--table", io.root])
+        err = capsys.readouterr().err.strip().splitlines()
+        assert rc == 1
+        assert len(err) == 1 and str(baseline) in err[0], err
+        assert "Traceback" not in err[0]
+        with open(io.manifest_path, "rb") as f:
+            assert f.read() == before
+
+
+def test_cli_requalify_missing_manifest_exits_1(tmp_path, capsys):
+    from pysemantic_spark import cli
+
+    rc = cli.main(["requalify", "--table", str(tmp_path / "nowhere")])
+    assert rc == 1
+    err = capsys.readouterr().err
+    assert "no checkpoint manifest" in err
 
 
 def test_quarantine_requalify_lifecycle(spark, tmp_path):

@@ -140,8 +140,9 @@ def test_simhash_band_width_warning(spark):
 
 
 def test_single_word_simhash_layout_unchanged(spark):
-    """n_words=1 must keep the single-word schema (simhash + band0..3) so
-    the portable DuckDB oracle stays byte-identical."""
+    """n_words=1 keeps the public single-word schema: ``simhash`` plus
+    band0..3 (the DuckDB oracle reads neither; it rebuilds the words from
+    md5 itself)."""
     docs = _rand_docs(n_docs=5)
     df = spark.createDataFrame(pd.DataFrame(docs, columns=["doc_id", "text"]))
     cols = dedup.simhash_fingerprints(
