@@ -13,6 +13,9 @@ Four families, all shuffle-conscious:
                 pigeonhole chunk join (≤k-bit chunk flips against exact
                 chunk values; k = 0 is plain banding), exact popcount filter.
 
+Both Jaccard miners share one candidate verify (``_verify_jaccard``) and
+one threshold rule: filter on the unrounded jaccard, round only the output.
+
 Scale notes (100 TB / 10^9 docs):
 - The shingle self-join shuffles on the shingle; ultra-common shingles are
   skew bombs → `max_shingle_freq` drops the top of the DF (standard
@@ -327,7 +330,9 @@ def ngram_jaccard_pairs(
 ) -> DataFrame:
     """Exact n-gram Jaccard near-dup pairs via inverted-index self-join.
 
-    Returns (id_a, id_b, jaccard) with id_a < id_b, jaccard ≥ threshold.
+    Returns (id_a, id_b, jaccard) with id_a < id_b. A pair is kept when its
+    unrounded jaccard is ≥ ``threshold``; only the output column is
+    rounded, to 6 places (:func:`_jaccard_at_least`).
 
     Two exact plans, chosen by the threshold (``prefix_filter=None``,
     the default, picks automatically; True/False force):
@@ -335,8 +340,9 @@ def ngram_jaccard_pairs(
     - **Prefix path** (selective thresholds, auto when t ≥ 0.35 —
       AllPairs/PPJoin): only each doc's first ⌈(1−t)·|g|⌉+1 shingles in
       global rarity order enter the index (:func:`ngram_prefix_index`,
-      exact-recall by construction) → distinct candidate pairs → exact
-      verify via ``array_intersect`` on the full shingle arrays. The
+      exact-recall by construction) → candidate pairs → the two-stage
+      verify of :func:`_verify_jaccard` (hashed overlap bound, then the
+      exact ``array_intersect`` of the shingle arrays). The
       most frequent shingles — the quadratic join keys — never enter
       any prefix, so candidates stop scaling with the common-shingle
       tail. Per-candidate verify costs O(|g|), which is why this path
@@ -441,80 +447,7 @@ def _ngram_pairs_on_shingles(
             )
             .select(F.col("a._id").alias("id_a"), F.col("b._id").alias("id_b"))
         )
-        # Verification in two stages (round 7). The exact per-candidate
-        # string array_intersect was the measured wall (~15 s of the 21 s
-        # query at sf1.0: 17M candidates × a hash-set build over ~53
-        # strings each). Stage 1 — a LOOSENED EXACT pre-filter on 64-bit
-        # hashed shingle arrays: longs intersect ~4× cheaper than strings
-        # and halve the attach-join payload. Hash collisions distort the
-        # hashed intersection in two ways, both handled: a cross-doc
-        # collision can only INFLATE it (extra survivors, removed by stage
-        # 2); two TRUE common shingles colliding can DEFLATE it — but only
-        # by as many slots as collide within a doc's own array, which is
-        # exactly `_size − size(array_distinct(hashed))` per doc, so adding
-        # both docs' collision counts to the hashed intersection restores a
-        # provable upper bound on the true overlap. A qualifying pair
-        # (true overlap ≥ α) therefore always passes. Stage 2 — the exact
-        # string verify, now over the handful of survivors. The candidate
-        # stream is no longer distinct()ed first (one fewer full exchange);
-        # the post-filter distinct dedups the tiny survivor set instead.
-        hsets = _materialize(
-            sh.select(
-                "_id",
-                F.size("_sh").alias("_hsz"),
-                F.transform("_sh", lambda s: F.xxhash64(s)).alias("_shh"),
-            ).withColumn(
-                "_hdup", F.col("_hsz") - F.size(F.array_distinct("_shh"))
-            )
-        )
-        # (join strategy left to the planner here: a forced shuffle_hash
-        # was measured ~1.5× SLOWER than the default on this occurrence-
-        # stream attach — unlike the minhash verify below, where it wins)
-        ha = hsets.select(
-            F.col("_id").alias("id_a"),
-            F.col("_shh").alias("hh_a"),
-            F.col("_hsz").alias("sz_a"),
-            F.col("_hdup").alias("dup_a"),
-        )
-        hb = hsets.select(
-            F.col("_id").alias("id_b"),
-            F.col("_shh").alias("hh_b"),
-            F.col("_hsz").alias("sz_b"),
-            F.col("_hdup").alias("dup_b"),
-        )
-        alpha_pair = F.ceil(
-            t / (t + F.lit(1.0)) * (F.col("sz_a") + F.col("sz_b"))
-            - F.lit(_EXACT_EPS)
-        )
-        survivors = (
-            cand.join(ha, "id_a")
-            .join(hb, "id_b")
-            .filter(
-                F.size(F.array_intersect("hh_a", "hh_b"))
-                + F.col("dup_a")
-                + F.col("dup_b")
-                >= alpha_pair
-            )
-            .select("id_a", "id_b")
-            .distinct()
-        )
-        shingle_sets = sh.select("_id", "_sh")
-        return (
-            survivors.join(
-                shingle_sets.withColumnsRenamed({"_id": "id_a", "_sh": "sh_a"}), "id_a"
-            )
-            .join(
-                shingle_sets.withColumnsRenamed({"_id": "id_b", "_sh": "sh_b"}), "id_b"
-            )
-            .withColumn("inter", F.size(F.array_intersect("sh_a", "sh_b")))
-            .withColumn(
-                "_j",
-                F.col("inter")
-                / (F.size("sh_a") + F.size("sh_b") - F.col("inter")),
-            )
-            .filter(F.col("_j") >= threshold)
-            .select("id_a", "id_b", F.round("_j", 6).alias("jaccard"))
-        )
+        return _verify_jaccard(cand, sh, threshold)
     a, b = inv.alias("a"), inv.alias("b")
     pairs = (
         a.join(b, on="shingle")
@@ -522,15 +455,78 @@ def _ngram_pairs_on_shingles(
         .groupBy(F.col("a._id").alias("id_a"), F.col("b._id").alias("id_b"))
         .agg(F.count(F.lit(1)).alias("inter"))
     )
-    return (
+    return _jaccard_at_least(
         pairs.join(sizes.withColumnsRenamed({"_id": "id_a", "_size": "size_a"}), "id_a")
-        .join(sizes.withColumnsRenamed({"_id": "id_b", "_size": "size_b"}), "id_b")
-        .withColumn(
-            "_j",
-            F.col("inter") / (F.col("size_a") + F.col("size_b") - F.col("inter")),
+        .join(sizes.withColumnsRenamed({"_id": "id_b", "_size": "size_b"}), "id_b"),
+        threshold,
+    )
+
+
+def _verify_jaccard(cand: DataFrame, sh: DataFrame, threshold: float) -> DataFrame:
+    """The one candidate verify of the Jaccard miners: (id_a, id_b)
+    candidate pairs, repeats allowed, against the miner's ``(_id, _sh,
+    _size)`` shingle frame → (id_a, id_b, jaccard) of the pairs at or
+    above ``threshold`` (:func:`_jaccard_at_least`).
+
+    Two stages (round 7). The exact per-candidate string
+    ``array_intersect`` was the measured wall (~15 s of a 21 s prefix-path
+    query at sf1.0: 17M candidates × a hash-set build over ~53 strings
+    each). Stage 1 is a LOOSENED EXACT pre-filter on 64-bit hashed
+    shingle arrays (the AllPairs/PPJoin overlap bound, Bayardo et al.
+    2007: J ≥ t ⟺ overlap ≥ t/(1+t)·(|x|+|y|)): longs intersect ~4×
+    cheaper than strings and halve the attach-join payload. Hash
+    collisions distort the hashed intersection in two ways, both handled:
+    a cross-doc collision can only INFLATE it (extra survivors, removed by
+    stage 2); two TRUE common shingles colliding can DEFLATE it, but only
+    by as many slots as collide within a doc's own array, which is
+    exactly ``_size − size(array_distinct(hashed))`` per doc, so adding
+    both docs' collision counts restores a provable upper bound on the
+    true overlap and a qualifying pair always passes. The candidate
+    stream is not distinct()ed first (one fewer full exchange); the
+    survivors are. Stage 2 is the exact string verify over them."""
+    t = F.lit(float(threshold))
+    # not materialized: a cache that both join sides read was computed twice
+    # whenever their query stages ran at once, and hashing each side's
+    # shingles measured no slower than persisting them (bench_extra.py, sf0.1)
+    hsets = sh.select(
+        "_id", "_size", F.transform("_sh", lambda s: F.xxhash64(s)).alias("_shh")
+    ).withColumn("_hdup", F.col("_size") - F.size(F.array_distinct("_shh")))
+    # the alpha ceil subtracts _EXACT_EPS for the reason the prefix path's
+    # prune bounds do: it only ever loosens stage 1
+    alpha = F.ceil(
+        t / (t + F.lit(1.0)) * (F.col("size_a") + F.col("size_b"))
+        - F.lit(_EXACT_EPS)
+    )
+    survivors = (
+        cand.join(hsets.toDF("id_a", "size_a", "hh_a", "dup_a"), "id_a")
+        .join(hsets.toDF("id_b", "size_b", "hh_b", "dup_b"), "id_b")
+        .filter(
+            F.size(F.array_intersect("hh_a", "hh_b"))
+            + F.col("dup_a")
+            + F.col("dup_b")
+            >= alpha
         )
-        .filter(F.col("_j") >= threshold)
-        .select("id_a", "id_b", F.round("_j", 6).alias("jaccard"))
+        .select("id_a", "id_b")
+        .distinct()
+    )
+    exact = sh.select("_id", "_sh", "_size")
+    return _jaccard_at_least(
+        survivors.join(exact.toDF("id_a", "sh_a", "size_a"), "id_a")
+        .join(exact.toDF("id_b", "sh_b", "size_b"), "id_b")
+        .withColumn("inter", F.size(F.array_intersect("sh_a", "sh_b"))),
+        threshold,
+    )
+
+
+def _jaccard_at_least(pairs: DataFrame, threshold: float) -> DataFrame:
+    """The one Jaccard threshold rule of the text miners: over (id_a, id_b,
+    inter, size_a, size_b) rows, keep the pairs whose UNROUNDED jaccard
+    inter / (size_a + size_b − inter) is ≥ ``threshold``, and round only
+    the output column to 6 places. Every Jaccard oracle filters the same
+    way."""
+    j = F.col("inter") / (F.col("size_a") + F.col("size_b") - F.col("inter"))
+    return pairs.filter(j >= threshold).select(
+        "id_a", "id_b", F.round(j, 6).alias("jaccard")
     )
 
 
@@ -716,10 +712,13 @@ def minhash_lsh_pairs(
     bands: int = 16,
     threshold: float = 0.7,
 ) -> DataFrame:
-    """MinHash+LSH near-dup pairs: band-bucket candidates, then exact
-    Jaccard verification (join text back only for candidates).
+    """MinHash+LSH near-dup pairs: band-bucket candidates, then the exact
+    Jaccard verify of :func:`_verify_jaccard` (shingles join back only for
+    candidates).
 
-    Returns (id_a, id_b, jaccard). With bands=16/num_hashes=64 (r=4),
+    Returns (id_a, id_b, jaccard). A pair is kept when its unrounded
+    jaccard is ≥ ``threshold``; only the output column is rounded, to 6
+    places (:func:`_jaccard_at_least`). With bands=16/num_hashes=64 (r=4),
     collision prob at j=0.7 ≈ 0.98 — tune bands per target threshold.
     Identical token streams band as one representative
     (:func:`_collapse_and_mine`), and one shingle scan feeds both the
@@ -734,10 +733,11 @@ def minhash_lsh_pairs(
 def _minhash_pairs_on_shingles(
     sh: DataFrame, num_hashes: int, bands: int, threshold: float
 ) -> DataFrame:
-    """Banding + candidate join + exact verify over a prepared
-    (materialized) ``(_id, _sh[, _size])`` shingle frame — one shingle
-    computation feeds the signatures AND the verify arrays (the pre-fusion
-    plan scanned text twice: once for signatures, once for verify)."""
+    """Banding + candidate join over a prepared (materialized) ``(_id,
+    _sh, _size)`` shingle frame, verified by :func:`_verify_jaccard` — one
+    shingle computation feeds the signatures AND the verify arrays (the
+    pre-fusion plan scanned text twice: once for signatures, once for
+    verify)."""
     # The generated expression lists are SQL text, one F.expr per element:
     # one JVM call each, where building the same Column tree costs one call
     # per node. The text holds only integers and internal column names.
@@ -763,37 +763,8 @@ def _minhash_pairs_on_shingles(
         a.join(b_, on=["band", "bucket"])
         .filter(F.col("a._id") < F.col("b._id"))
         .select(F.col("a._id").alias("id_a"), F.col("b._id").alias("id_b"))
-        .distinct()
     )
-    # shuffle_hash for the same reason as the prefix path's attach joins:
-    # build on the doc-bounded shingle side, stream the candidate pairs —
-    # no sort of the candidate stream (measured 4.3 s → 2.6 s at sf1.0)
-    out = (
-        cand.join(
-            sh.withColumnsRenamed({"_id": "id_a", "_sh": "sh_a"}).hint(
-                "shuffle_hash"
-            ),
-            "id_a",
-        )
-        .join(
-            sh.withColumnsRenamed({"_id": "id_b", "_sh": "sh_b"}).hint(
-                "shuffle_hash"
-            ),
-            "id_b",
-        )
-        .withColumn("inter", F.size(F.array_intersect("sh_a", "sh_b")))
-        .withColumn(
-            "jaccard",
-            F.round(
-                F.col("inter")
-                / (F.size("sh_a") + F.size("sh_b") - F.col("inter")),
-                6,
-            ),
-        )
-        .filter(F.col("jaccard") >= threshold)
-        .select("id_a", "id_b", "jaccard")
-    )
-    return out
+    return _verify_jaccard(cand, sh, threshold)
 
 
 def _band_widths(n_bits: int, n_bands: int) -> list[int]:
@@ -1151,6 +1122,9 @@ def duplicate_clusters(
     to a cluster even when their rep has no cross-group pair (they pair
     with each other), docs too short to produce a shingle never cluster,
     and singleton docs with no qualifying pair are absent.
+
+    Docs pair when their unrounded jaccard is ≥ ``threshold``, the rule
+    of :func:`ngram_jaccard_pairs` (whose mining plans run here).
 
     Returns (node, cluster_rep). Property-tested equal to the pair-list
     path on mixed clone/near-dup corpora."""

@@ -19,9 +19,6 @@ only when binned under the same baseline layout.
   per-bucket counts of a resumable run (``sources.tableio``).
 - :func:`windowed_drift_sketch` is :func:`drift_sketch` under a
   watermark, keyed by tumbling window.
-- :func:`ecdf_sketch_arrow` — per-bucket quantile grid via Arrow
-  `applyInPandas` (the pandas/Arrow-UDAF path): each bucket's pandas group
-  computes a q-grid. Arrow-batched, never per-row Python.
 
 Metrics, from the baseline counts cb and current counts cc (totals tb, tc),
 rounded to 6 decimals:
@@ -408,30 +405,3 @@ def drift_rows_report(
         baseline, list(baseline["columns"]), counts,
         psi_threshold=psi_threshold, ks_threshold=ks_threshold,
     )
-
-
-def ecdf_sketch_arrow(
-    df: DataFrame, col: str, bucket_col: str, n_quantiles: int = 101
-) -> pd.DataFrame:
-    """Per-bucket quantile grid via applyInPandas (Arrow UDAF path).
-
-    Returns pandas DF (bucket, q, value) with n_quantiles rows per bucket.
-    Each group is one Arrow batch into pandas — vectorized, no row loop."""
-    qs = [i / (n_quantiles - 1) for i in range(n_quantiles)]
-
-    def grid(pdf: pd.DataFrame) -> pd.DataFrame:
-        vals = pdf[col].dropna()
-        if len(vals) == 0:
-            return pd.DataFrame({"bucket": [], "q": [], "value": []})
-        quant = vals.quantile(qs, interpolation="linear")
-        return pd.DataFrame(
-            {"bucket": pdf[bucket_col].iloc[0], "q": qs, "value": quant.values}
-        )
-
-    out = (
-        df.select(bucket_col, col)
-        .groupBy(bucket_col)
-        .applyInPandas(grid, schema="bucket long, q double, value double")
-    )
-    return out.toPandas()
-

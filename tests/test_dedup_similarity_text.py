@@ -1,7 +1,8 @@
 """Dedup family, similarity search, and text functions vs small oracles:
 exact and keep-first dedup, connected components and duplicate clusters,
 the n-gram, MinHash and SimHash miners with their identical-doc collapse
-guard and Arrow text kernels, and the vector operators."""
+guard, Jaccard threshold rule and Arrow text kernels, the vector
+operators, and the release of the operators' persisted intermediates."""
 
 from __future__ import annotations
 
@@ -23,6 +24,11 @@ from pyspark.sql import functions as F
 
 from pysemantic_spark.functions import text as tx
 from pysemantic_spark.operators import dedup, similarity
+from pysemantic_spark.operators.cache import (
+    release_intermediates,
+    tracked_count,
+    tracked_intermediates,
+)
 
 SF001 = "/root/testdata/sf0.001"
 
@@ -43,6 +49,21 @@ def _jaccard(a: str, b: str, n: int = 2) -> float:
         return set(" ".join(toks[i:i + n]) for i in range(len(toks) - n + 1))
     A, B = sh(a), sh(b)
     return len(A & B) / len(A | B) if A | B else 0.0
+
+
+def _rand_docs(n_docs=40, seed=7):
+    rng = random.Random(seed)
+    vocab = [f"w{i}" for i in range(50)]
+    docs = []
+    for i in range(n_docs):
+        base = [rng.choice(vocab) for _ in range(30)]
+        docs.append((i, " ".join(base)))
+        if rng.random() < 0.5:  # planted near-dup: few token edits
+            mut = list(base)
+            for _ in range(rng.randint(1, 3)):
+                mut[rng.randrange(len(mut))] = rng.choice(vocab)
+            docs.append((1000 + i, " ".join(mut)))
+    return docs
 
 
 @pytest.fixture(scope="module")
@@ -117,6 +138,42 @@ def test_prefix_path_keeps_float_boundary_pair(spark):
     assert prefix == counting
 
 
+def test_ngram_prefix_filter_exact_recall(spark):
+    docs = _rand_docs(n_docs=30, seed=11)
+    df = spark.createDataFrame(pd.DataFrame(docs, columns=["doc_id", "text"]))
+    with tracked_intermediates():
+        with_f = {
+            (x["id_a"], x["id_b"], x["jaccard"])
+            for x in dedup.ngram_jaccard_pairs(
+                df, "doc_id", "text", n=2, threshold=0.5, prefix_filter=True
+            ).collect()
+        }
+        without = {
+            (x["id_a"], x["id_b"], x["jaccard"])
+            for x in dedup.ngram_jaccard_pairs(
+                df, "doc_id", "text", n=2, threshold=0.5, prefix_filter=False
+            ).collect()
+        }
+    assert with_f == without
+    assert with_f, "no pairs above threshold — vacuous"
+
+
+def test_ngram_prefix_index_shrinks(spark):
+    docs = _rand_docs(n_docs=30, seed=11)
+    df = spark.createDataFrame(pd.DataFrame(docs, columns=["doc_id", "text"]))
+    with tracked_intermediates():
+        sh = dedup._materialize(
+            df.select(F.col("doc_id").alias("_id"), dedup._shingles_arrow("text", 2).alias("_sh"))
+            .withColumn("_size", F.size("_sh"))
+        )
+        inv = sh.select("_id", F.explode("_sh").alias("shingle"))
+        full = inv.count()
+        pref = dedup.ngram_prefix_index(
+            inv, sh.select("_id", "_size"), threshold=0.5
+        ).count()
+    assert pref < full * 0.7, (pref, full)
+
+
 def test_minhash_lsh_finds_near_dups(spark, docs_df):
     got = {
         (r["id_a"], r["id_b"])
@@ -127,6 +184,33 @@ def test_minhash_lsh_finds_near_dups(spark, docs_df):
     assert (0, 3) in got  # exact dup always collides
     assert (0, 1) in got  # near dup (j≈0.78)
     assert all(_jaccard(DOCS[a][1], DOCS[b][1], 2) >= 0.3 for a, b in got)
+
+
+@pytest.mark.parametrize(
+    "miner",
+    [
+        # the driver config: a J = 2/3 pair misses every 2-row band with
+        # probability (1 − (2/3)²)³² ≈ 7·10⁻⁹
+        lambda df, t: dedup.minhash_lsh_pairs(
+            df, "doc_id", "text", n=1, num_hashes=64, bands=32, threshold=t
+        ),
+        lambda df, t: dedup.ngram_jaccard_pairs(
+            df, "doc_id", "text", n=1, threshold=t, prefix_filter=True
+        ),
+        lambda df, t: dedup.ngram_jaccard_pairs(
+            df, "doc_id", "text", n=1, threshold=t, prefix_filter=False
+        ),
+    ],
+    ids=["minhash", "ngram_prefix", "ngram_counting"],
+)
+def test_jaccard_threshold_filters_unrounded(spark, miner):
+    """{a, b} against {a, b, c} is jaccard 2/3, which rounds to the
+    threshold 0.666667 but lies below it: every miner filters on the
+    unrounded value and rounds only the output."""
+    df = spark.createDataFrame([(1, "a b"), (2, "a b c")], "doc_id long, text string")
+    with tracked_intermediates():
+        assert miner(df, 0.666667).collect() == []
+        assert [tuple(r) for r in miner(df, 0.6).collect()] == [(1, 2, 0.666667)]
 
 
 def test_simhash_exact_dup_zero_hamming(spark, docs_df):
@@ -226,6 +310,44 @@ def test_keep_first_agg_min_matches_window(spark):
     assert out.columns == df.columns
 
 
+def _events(spark, n=500, dup_every=50):
+    pdf = pd.DataFrame(
+        {
+            "k": [i // 1 if i % dup_every else i - 1 for i in range(n)],
+            "v": range(n),
+        }
+    )
+    return spark.createDataFrame(pdf)
+
+
+def test_keep_first_split_matches_naive_window(spark):
+    df = _events(spark)
+    got = (
+        dedup.exact_dedup_keep_first(df, ["k"], ["v"])
+        .orderBy("k", "v")
+        .collect()
+    )
+    exp = _first_per_key(df, "k", "v").orderBy("k", "v").collect()
+    assert [tuple(r) for r in got] == [tuple(r) for r in exp]
+
+
+def test_keep_first_window_input_is_dup_split_not_full_scan(spark):
+    """The window must consume the SEMI-JOIN branch (dup keys only), never
+    the full scan — the 10^12-row shuffle-volume guarantee."""
+    df = _events(spark)
+    plan = (
+        dedup.exact_dedup_keep_first(df, ["k"], ["v"])
+        ._jdf.queryExecution()
+        .optimizedPlan()
+        .toString()
+    )
+    # optimized plan: Window's child subtree contains the LeftSemi join
+    win_at = plan.find("Window")
+    assert win_at != -1
+    assert "LeftSemi" in plan[win_at:], plan
+    assert "LeftAnti" in plan, plan
+
+
 # --- connected components and duplicate clusters -----------------------------
 
 def _edges(spark, edges):
@@ -246,6 +368,28 @@ def _union_find_min_labels(edges):
         if ra != rb:
             parent[max(ra, rb)] = min(ra, rb)
     return {n: find(n) for n in parent}
+
+
+def test_connected_components_known_graph(spark):
+    """Chain, triangle, and 2-cycle: every node labeled with the smallest
+    reachable id, clusters never merged across components."""
+    pairs = pd.DataFrame(
+        {
+            "id_a": [1, 2, 3,   10, 11, 10,   20],
+            "id_b": [2, 3, 4,   11, 12, 12,   21],
+        }
+    )
+    got = {
+        (r["node"], r["cluster_rep"])
+        for r in dedup.connected_components(
+            spark.createDataFrame(pairs)
+        ).collect()
+    }
+    release_intermediates()
+    exp = {(1, 1), (2, 1), (3, 1), (4, 1),
+           (10, 10), (11, 10), (12, 10),
+           (20, 20), (21, 20)}
+    assert got == exp
 
 
 def test_cc_star_converges_on_long_chain(spark):
@@ -515,6 +659,61 @@ def test_embedding_near_dup_multi_table_recall(spark):
     assert r1 < 0.35          # single table demonstrably lossy here
     assert r24 > 0.75         # multi-table recovers (E ~ 0.89)
     assert r24 > r1 + 0.3
+
+
+# --- persisted intermediates -------------------------------------------------
+
+def _persistent_rdd_count(spark) -> int:
+    return spark.sparkContext._jsc.sc().getPersistentRDDs().size()
+
+
+def test_dedup_operators_release_intermediates(spark):
+    release_intermediates()
+    base = _persistent_rdd_count(spark)
+    docs = _rand_docs(n_docs=10)
+    df = spark.createDataFrame(pd.DataFrame(docs, columns=["doc_id", "text"]))
+    dedup.ngram_jaccard_pairs(df, "doc_id", "text", n=2, threshold=0.5).count()
+    dedup.minhash_lsh_pairs(
+        df, "doc_id", "text", n=2, num_hashes=16, bands=8, threshold=0.5
+    ).count()
+    assert tracked_count() > 0
+    freed = release_intermediates(blocking=True)
+    assert freed > 0 and tracked_count() == 0
+    assert _persistent_rdd_count(spark) <= base
+
+
+def test_similarity_operators_release_intermediates(spark):
+    release_intermediates()
+    base = _persistent_rdd_count(spark)
+    rng = np.random.default_rng(3)
+    pdf = pd.DataFrame(
+        {
+            "vec_id": range(60),
+            "embedding": [rng.normal(size=8).tolist() for _ in range(60)],
+        }
+    )
+    df = spark.createDataFrame(pdf)
+    # single-pass bucket-local verify: nothing is (or should be)
+    # persisted — the operator must not LEAK persisted RDDs
+    similarity.embedding_near_dup_pairs(
+        df, dim=8, threshold=0.5, n_planes=4, n_tables=4
+    ).count()
+    release_intermediates(blocking=True)
+    assert _persistent_rdd_count(spark) <= base
+    # the top-k operators score corpus batches in one kernel: they persist
+    # nothing, tracked or not
+    qdf = df.filter(F.col("vec_id") < 2).select(
+        F.col("vec_id").alias("query_id"), "embedding"
+    )
+    for out in (
+        similarity.cosine_topk(df, qdf, k=3),
+        similarity.lsh_bucketed_topk(
+            df, qdf, dim=8, k=3, n_planes=4, n_tables=4, n_probe_bits=1),
+        similarity.ivf_topk(df, qdf, dim=8, k=3, n_centroids=4),
+    ):
+        out.count()
+        assert tracked_count() == 0
+        assert _persistent_rdd_count(spark) <= base
 
 
 # --- text functions ----------------------------------------------------------
@@ -959,6 +1158,60 @@ def test_simhash_banding_exhaustive_at_radius(spark):
         ).collect()
     }
     assert got == exact and len(exact) > 0
+
+
+def test_multiword_simhash_equals_brute_force(spark):
+    """Property: exhaustive banding over a 2-word (128-bit) fingerprint
+    returns EXACTLY the hamming<=r pair set of the fingerprints."""
+    docs = _rand_docs()
+    df = spark.createDataFrame(pd.DataFrame(docs, columns=["doc_id", "text"]))
+    r = 8
+    with tracked_intermediates():
+        got = {
+            (x["id_a"], x["id_b"], x["hamming"])
+            for x in dedup.simhash_near_dup_pairs(
+                df, "doc_id", "text", max_hamming=r, n_words=2
+            ).collect()
+        }
+        fps = (
+            dedup.simhash_fingerprints(df, "doc_id", "text", n_bands=9, n_words=2)
+            .select("_id", "simhash", "simhash1")
+            .collect()
+        )
+    mask = (1 << 64) - 1
+    exp = set()
+    for i, a in enumerate(fps):
+        for b in fps[i + 1:]:
+            h = bin((a["simhash"] ^ b["simhash"]) & mask).count("1") + bin(
+                (a["simhash1"] ^ b["simhash1"]) & mask
+            ).count("1")
+            if h <= r:
+                lo, hi = sorted((a["_id"], b["_id"]))
+                exp.add((lo, hi, h))
+    assert got == exp
+    assert exp, "fixture produced no near-dup pairs — test is vacuous"
+
+
+def test_simhash_band_width_warning(spark):
+    docs = _rand_docs(n_docs=5)
+    df = spark.createDataFrame(pd.DataFrame(docs, columns=["doc_id", "text"]))
+    with pytest.warns(UserWarning, match="narrowest band"):
+        dedup.simhash_fingerprints(df, "doc_id", "text", n_bands=9, n_words=1)
+    with warnings.catch_warnings():
+        warnings.simplefilter("error")  # 2 words x 9 bands -> >=12-bit bands
+        dedup.simhash_fingerprints(df, "doc_id", "text", n_bands=9, n_words=2)
+
+
+def test_single_word_simhash_layout_unchanged(spark):
+    """n_words=1 keeps the public single-word schema: ``simhash`` plus
+    band0..3 (the DuckDB oracle reads neither; it rebuilds the words from
+    md5 itself)."""
+    docs = _rand_docs(n_docs=5)
+    df = spark.createDataFrame(pd.DataFrame(docs, columns=["doc_id", "text"]))
+    cols = dedup.simhash_fingerprints(
+        df, "doc_id", "text", n_bands=4, portable_hash=True
+    ).columns
+    assert cols == ["_id", "simhash", "band0", "band1", "band2", "band3"]
 
 
 # ---------------------------------------------------------------------------

@@ -68,19 +68,6 @@ def test_categorical_psi(spark, frames):
     assert skewed > 0.5
 
 
-def test_ecdf_sketch_arrow(spark, frames):
-    dfb, _, _, base = frames
-    out = drift.ecdf_sketch_arrow(
-        dfb.withColumn("bucket", (F.col("g") % 2).cast("long")), "v", "bucket",
-        n_quantiles=11,
-    )
-    assert set(out["bucket"]) == {0, 1}
-    assert len(out) == 22
-    med = out[(out.bucket == 0) & (out.q == 0.5)]["value"].iloc[0]
-    exp = base[base.g % 2 == 0]["v"].median()
-    assert abs(med - exp) < 1.0
-
-
 def test_ks_counts_matches_numpy(spark, frames):
     """_ks_counts over the sketch's bin counts equals numpy's KS over the
     same binning."""

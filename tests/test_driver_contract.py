@@ -1,6 +1,7 @@
 """The `__spark_entry__.py` driver contract: the exact-top-k memo's
-invalidation key and its eviction of stale entries, and the equivalence
-of rewritten query shapes."""
+invalidation key and its eviction of stale entries, the equivalence of
+rewritten query shapes, the query wrapper's release of leftover
+intermediates, and the text-mining queries' output shape."""
 
 from __future__ import annotations
 
@@ -9,6 +10,7 @@ import os
 from pyspark.sql import functions as F
 
 import __spark_entry__ as entrymod
+from pysemantic_spark.operators.cache import materialize, tracked_count
 
 SF001 = "/root/testdata/sf0.001"
 
@@ -72,3 +74,28 @@ def test_corpus_clean_conditional_agg_matches_filtered_groupby(spark):
     )
     assert old.exceptAll(new).count() == 0
     assert new.exceptAll(old).count() == 0
+
+
+def test_queries_wrapper_releases_previous_intermediates(spark):
+    qs = entrymod.queries()
+    # the streaming twin must carry a full oracle
+    assert "streaming_drift_events" in qs
+    assert "streaming_drift_events" in entrymod.oracle_sql()
+    # the wrapper must call release on entry: simulate a leftover
+    leftover = materialize(spark.range(4))
+    leftover.count()
+    assert tracked_count() > 0
+    qs["top_events_by_value"](spark, SF001)
+    assert tracked_count() == 0
+
+
+def test_new_driver_queries_run_and_shape(spark):
+    qs, osql = entrymod.queries(), entrymod.oracle_sql()
+    for name, cols in [
+        ("ngram_prefix_pairs_documents", ["id_a", "id_b", "jaccard"]),
+        ("simhash_wide_documents", ["id_a", "id_b", "hamming"]),
+    ]:
+        assert name in qs and name in osql
+        df = qs[name](spark, SF001)
+        assert df.columns == cols
+        assert df.count() >= 0

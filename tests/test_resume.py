@@ -13,6 +13,7 @@ from pyspark.sql import functions as F
 
 from pysemantic_spark.fixtures import dim_tools_pdf, transcripts_pdf, transcripts_spec
 from pysemantic_spark.sources.tableio import ParquetManifestIO, run_resumable
+from pysemantic_spark.spec import DatasetSpec
 
 N_BUCKETS = 8
 
@@ -233,7 +234,6 @@ def test_run_resumable_depends_only_on_the_io_interface(spark, tmp_path):
     import pandas as pd
 
     from pysemantic_spark.sources import tableio
-    from pysemantic_spark.spec import DatasetSpec
 
     inner = tableio.ParquetManifestIO(str(tmp_path / "t"))
     pdf = pd.DataFrame(
@@ -301,7 +301,6 @@ def test_execute_on_drift_fail_raises(spark, tmp_path):
     from pysemantic_spark.errors import DriftDetectedError
     from pysemantic_spark.operators.drift import save_drift_baseline
     from pysemantic_spark.operators.runner import execute
-    from pysemantic_spark.spec import DatasetSpec
 
     rng = np.random.default_rng(5)
     base = spark.createDataFrame(
@@ -353,7 +352,6 @@ def test_execute_drift_fail_leaves_nothing_persisted(spark, tmp_path):
     persisted without sinks: the violations frame and the dup-key groups."""
     from pysemantic_spark.errors import DriftDetectedError
     from pysemantic_spark.operators.runner import execute
-    from pysemantic_spark.spec import DatasetSpec
 
     shifted, bl = _drift_frames(spark, tmp_path, ["v"])
     spec = DatasetSpec.from_dict(
@@ -375,7 +373,6 @@ def test_execute_bad_drift_block_fails_before_any_sink(spark, tmp_path):
     before any job runs: the violations sink is never written."""
     from pysemantic_spark.errors import SpecValidationError
     from pysemantic_spark.operators.runner import execute
-    from pysemantic_spark.spec import DatasetSpec
 
     shifted, bl = _drift_frames(spark, tmp_path, ["v"])
     spec = DatasetSpec.from_dict(
@@ -398,7 +395,6 @@ def test_run_resumable_quarantines_drifted_chunk(spark, tmp_path):
     import numpy as np
 
     from pysemantic_spark.operators.drift import save_drift_baseline
-    from pysemantic_spark.spec import DatasetSpec
 
     rng = np.random.default_rng(6)
     base = spark.createDataFrame(
@@ -469,7 +465,6 @@ def probe(spark, tmp_path_factory):
 
 
 def _drift_spec(bl, on_drift):
-    from pysemantic_spark.spec import DatasetSpec
 
     return DatasetSpec.from_dict(
         "t", {"drift": {"columns": ["v"], "baseline": bl, "n_bins": 20,
@@ -624,7 +619,6 @@ def test_quarantine_requalify_lifecycle(spark, tmp_path):
 
     from pysemantic_spark.operators.drift import save_drift_baseline
     from pysemantic_spark.sources.tableio import requalify_buckets
-    from pysemantic_spark.spec import DatasetSpec
 
     rng = np.random.default_rng(6)
     base = spark.createDataFrame(
@@ -672,3 +666,20 @@ def test_quarantine_requalify_lifecycle(spark, tmp_path):
     assert second["quarantined"] == []
     m = io.load_manifest()
     assert all(e.status == "done" for e in m.entries.values())
+
+
+def test_run_resumable_skipped_disjoint_from_quarantined(spark, tmp_path):
+    """skipped must mean verifiably DONE; quarantined buckets are parked,
+    never double-reported as skipped."""
+    io = ParquetManifestIO(str(tmp_path / "t"))
+    pdf = pd.DataFrame(
+        {"k": [f"k{i}" for i in range(200)], "v": range(200)}
+    )
+    io.write_bucketed(spark.createDataFrame(pdf), bucket_key="k", n_buckets=4)
+    spec = DatasetSpec.from_dict("t", {"column_rules": {"v": {"min": 0}}})
+    first = run_resumable(spark, io, spec, chunk_size=1, max_chunks=2)
+    second = run_resumable(spark, io, spec, chunk_size=1)
+    assert set(second["skipped"]) == set(first["processed"])
+    assert set(second["skipped"]).isdisjoint(set(second["quarantined"]))
+    m = io.load_manifest()
+    assert all(m.entries[b].status == "done" for b in second["skipped"])
