@@ -133,40 +133,52 @@ def _collect_sketch(
     df: DataFrame, baseline: dict, columns: list[str],
     by: dict[str, "F.Column"] | None, max_categories: int,
 ) -> list:
-    """:func:`drift_sketch` collected to the driver, BOUNDED: before the
-    collect, a count of distinct bins per categorical column over the
-    keyed counts (≤ one row per column) checks that none has more than
-    ``max_categories`` values; a miscategorized high-cardinality column
-    (user_id, free text) raises SpecValidationError instead of landing on
-    the driver. The collect is then at most (keys) × (Σ(n_bins+2) +
-    Σ max_categories) rows. Bin/hash such columns into a bounded numeric
-    surrogate to put them under drift."""
+    """:func:`drift_sketch` collected to the driver, BOUNDED, in one
+    collect: the keyed rows are regrouped by ``(column, bin)``, each with
+    its per-key counts as a list, and at most ``bound + 1`` groups are
+    collected, bound = Σ(n_bins+2) over the histogram columns +
+    ``max_categories`` per categorical column, then expanded back to rows
+    ``(*by, column, bin, cnt)``. A histogram column has at most n_bins+2
+    bins, so a collect that reaches ``bound + 1`` groups holds more than
+    ``max_categories`` bins of some categorical column; a miscategorized
+    high-cardinality column (user_id, free text) raises SpecValidationError
+    instead of landing on the driver, and no sketch is persisted or counted
+    first. The collect is at most (keys) × bound rows; without a
+    categorical column the keyed rows are collected as they are. Bin/hash
+    such columns into a bounded numeric surrogate to put them under
+    drift."""
+    from collections import Counter
+
+    from pyspark.sql import Row
+
     from pysemantic_spark.errors import SpecValidationError
 
+    by = by or {}
+    entries = baseline["columns"]
     sketch = drift_sketch(df, baseline, columns, by)
-    cats = [c for c in columns if baseline["columns"][c]["kind"] == "cat"]
-    if not cats:
+    cats = [c for c in columns if entries[c]["kind"] == "cat"]
+    if not cats:  # histogram bins alone are bounded by construction
         return sketch.collect()
-    sketch = sketch.persist()
-    try:
-        sizes = (
-            sketch.filter(F.col("column").isin(cats))
-            .groupBy("column")
-            .agg(F.countDistinct("bin").alias("n"))
-            .collect()
+    bound = sum(entries[c]["n_bins"] + 2 for c in columns if c not in cats)
+    bound += max_categories * len(cats)
+    groups = (
+        sketch.groupBy("column", "bin")
+        .agg(F.collect_list(F.struct(*by, "cnt")).alias("keyed"))
+        .limit(bound + 1)
+        .collect()
+    )
+    seen = Counter(g["column"] for g in groups)
+    oversized = {c: seen[c] for c in cats if seen[c] > max_categories}
+    if oversized:
+        raise SpecValidationError(
+            f"categorical drift column(s) exceed max_categories="
+            f"{max_categories}: {oversized} values (counted up to the collect "
+            "bound) — a sketch must stay bounded; hash/bin the column to a "
+            "bounded numeric surrogate, or raise `max_categories` in the "
+            "drift block if the cardinality is genuinely intended"
         )
-        oversized = {r["column"]: r["n"] for r in sizes if r["n"] > max_categories}
-        if oversized:
-            raise SpecValidationError(
-                f"categorical drift column(s) exceed max_categories="
-                f"{max_categories}: {oversized} — a sketch must stay bounded; "
-                "hash/bin the column to a bounded numeric surrogate, or raise "
-                "`max_categories` in the drift block if the cardinality is "
-                "genuinely intended"
-            )
-        return sketch.collect()
-    finally:
-        sketch.unpersist()
+    row = Row(*by, "column", "bin", "cnt")
+    return [row(*k[:-1], g["column"], g["bin"], k[-1]) for g in groups for k in g["keyed"]]
 
 
 def sketch_counts(

@@ -2,7 +2,7 @@
 
 Execution shape (SURVEY.md §3.4 — designed for 10^12 rows, tested small):
 
-    scan ──▶ [broadcast left-outer join per referential dim]
+    scan ──▶ [broadcast existence join per referential check]
          ──▶ ONE projection emitting the full violation bitmap
              (`_violations: array<string>` of failed check names)
          ──▶ artifacts:
@@ -18,10 +18,20 @@ Execution shape (SURVEY.md §3.4 — designed for 10^12 rows, tested small):
              dupes        sort-merge dedup counts on the composite key,
                           computed on a two-column pruned scan
 
+Every query is ONE ``spark.sql`` statement of text (the checks come from
+``plans.compiler`` as SQL), parsed and analysed once: the flagged frame over
+``df`` with the dims as frame parameters, and the violations, the summary
+and its merge each over the flagged frame. Built as Column trees, the same
+queries cost hundreds of Py4J round trips per call.
+
 Everything row-wise is a single whole-stage-codegen projection: the table is
-scanned ONCE per full-width pass, not once per check. Referential checks ride
-the same pass as broadcast hash joins (no shuffle of the fact side). The
-bitmap is a ``concat`` of one array per check, ``[name]`` or empty, not
+scanned ONCE per full-width pass, not once per check. A referential check is
+a correlated ``NOT EXISTS`` in the same projection, which Spark plans as a
+``BroadcastHashJoin … ExistenceJoin``: one broadcast of the dim per query,
+no ``distinct`` of its key (a semi-join needs no unique key) and no shuffle
+of the fact side. When a filter on the bitmap is pushed below the
+projection, it copies the ``NOT EXISTS`` and the copy reuses the broadcast.
+The bitmap is a ``concat`` of one array per check, ``[name]`` or empty, not
 ``array_compact`` over nullable names: ``array_compact`` lowers to a
 ``filter`` lambda, a higher-order function with no codegen, which would
 evaluate every check of every row interpreted.
@@ -33,8 +43,8 @@ every count the runner reports. A row with any violation counts once in
 (:func:`_report`): sums, min of mins, max of maxes, and the estimate of
 the union of the per-bucket theta sketches (mergeable sketches, as in
 "Approximate Distinct Counts for Billions of Datasets", SIGMOD 2019).
-``validate()`` merges them lazily, ``execute()`` in the same job as the
-summary, and ``tableio.table_report`` from the rows a resumable run stored
+``validate()`` merges them lazily, ``execute()`` in the same statement as
+the summary, and ``tableio.table_report`` from the rows a resumable run stored
 per bucket, so all three report the same numbers.
 
 `execute()` is the production orchestration: it plans only the flagged
@@ -67,7 +77,7 @@ from pyspark.sql import Column, DataFrame, Observation, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from pysemantic_spark.plans.compiler import CheckPlan, compile_spec
+from pysemantic_spark.plans.compiler import CheckPlan, _lit, _q, compile_spec
 from pysemantic_spark.spec import DatasetSpec
 
 VIOLATIONS_COL = "_violations"
@@ -142,7 +152,7 @@ def _summary_schema(schema: T.StructType, plan: CheckPlan) -> T.StructType:
     hashes 8 bytes per row instead of the full body. Map-bearing columns get the null count
     only (maps are neither orderable nor hashable in Spark). The field
     names carry the kind, which is all :func:`_summary_agg` and
-    :func:`_report` dispatch on."""
+    :func:`_report_sql` dispatch on."""
     long = T.LongType()
     fields = [T.StructField("bucket", T.IntegerType())]
     fields += [T.StructField(n, long) for n in ("n_rows", "n_violating_rows")]
@@ -158,18 +168,10 @@ def _summary_schema(schema: T.StructType, plan: CheckPlan) -> T.StructType:
     return T.StructType(fields)
 
 
-# The summary and its merge are SQL text, one F.expr per expression: built
-# as Column trees they cost ~1,500 Py4J round trips per execute() call.
-
-
-def _q(name: str) -> str:
-    """``name`` as a SQL identifier."""
-    return "`" + name.replace("`", "``") + "`"
-
-
-def _lit(text: str) -> str:
-    """``text`` as a SQL string literal."""
-    return "'" + text.replace("\\", "\\\\").replace("'", "\\'") + "'"
+# The typed empty bitmap: array<string> with containsNull = false, folded
+# to a literal. The DDL cast of array() to array<string> would make the
+# bitmap and the sink's check_name nullable.
+_EMPTY = "array_remove(array(''), '')"
 
 
 def _summary_agg(name: str) -> str:
@@ -192,24 +194,28 @@ def _summary_agg(name: str) -> str:
     )
 
 
-def _bucket_summary(flagged: DataFrame, schema: T.StructType) -> DataFrame:
-    """The per-bucket summary (layout: :func:`_summary_schema`): ONE
-    groupBy over the flagged frame, partial+final, its only input-sized
-    exchange keyed by the bucket."""
-    return flagged.groupBy(F.col(BUCKET_COL).alias("bucket")).agg(
-        *[F.expr(f"{_summary_agg(n)} AS {_q(n)}") for n in schema.fieldNames()[1:]]
-    )
+def _summary_sql(layout: T.StructType) -> str:
+    """The per-bucket summary (layout: :func:`_summary_schema`) of the
+    frame parameter ``{flagged}``: ONE groupBy, partial+final, its only
+    input-sized exchange keyed by the bucket."""
+    aggs = ", ".join(f"{_summary_agg(n)} AS {_q(n)}" for n in layout.fieldNames()[1:])
+    return f"SELECT {BUCKET_COL} AS bucket, {aggs} FROM {{flagged}} GROUP BY {BUCKET_COL}"
 
 
-def _report(summary: DataFrame, layout: T.StructType, *extra: Column) -> DataFrame:
-    """The merge of any set of rows of the summary ``layout``, as ONE row:
-    the ``extra`` aggregates; every summary field (bar the bucket) merged
-    under its own name — the sum of the counts, the min of the mins and the
-    max of the maxes (as strings), the estimate of the union of the theta
-    sketches; and ``stats`` (per input column: n_rows, n_nulls, null_rate,
-    min, max, approx_distinct) and ``check_counts`` (check_name,
-    n_violations) as arrays of structs. Counts are 0, not NULL, over no
-    rows, and min/max NULL."""
+def _bucket_summary(flagged: DataFrame, layout: T.StructType) -> DataFrame:
+    """:func:`_summary_sql` over ``flagged``."""
+    return flagged.sparkSession.sql(_summary_sql(layout), flagged=flagged)
+
+
+def _report_sql(layout: T.StructType, source: str, *extra: str) -> str:
+    """The merge of the rows of ``source`` (SQL text of a relation of the
+    summary ``layout``) as ONE row: the ``extra`` aggregates; every summary
+    field (bar the bucket) merged under its own name — the sum of the
+    counts, the min of the mins and the max of the maxes (as strings), the
+    estimate of the union of the theta sketches; and ``stats`` (per input
+    column: n_rows, n_nulls, null_rate, min, max, approx_distinct) and
+    ``check_counts`` (check_name, n_violations) as arrays of structs.
+    Counts are 0, not NULL, over no rows, and min/max NULL."""
     names = layout.fieldNames()
     merges = []
     for n in names[1:]:
@@ -220,7 +226,7 @@ def _report(summary: DataFrame, layout: T.StructType, *extra: Column) -> DataFra
             agg = f"CAST({kind}({_q(n)}) AS STRING)"
         else:
             agg = f"theta_sketch_estimate(theta_union_agg({_q(n)}, {_SKETCH_LG_K}))"
-        merges.append(F.expr(f"{agg} AS {_q(n)}"))
+        merges.append(f"{agg} AS {_q(n)}")
 
     def field(name: str, dtype: str) -> str:
         return _q(name) if name in names else f"CAST(NULL AS {dtype})"
@@ -239,12 +245,16 @@ def _report(summary: DataFrame, layout: T.StructType, *extra: Column) -> DataFra
         for n in names
         if n.startswith("__chk__")
     )
-    return summary.agg(*extra, *merges).selectExpr(
-        "*",
-        f"array({stats}) AS stats",
-        f"CAST(array({checks}) AS array<struct<check_name:string,n_violations:bigint>>)"
-        " AS check_counts",
+    return (
+        f"SELECT *, array({stats}) AS stats,"
+        f" CAST(array({checks}) AS array<struct<check_name:string,n_violations:bigint>>)"
+        f" AS check_counts FROM (SELECT {', '.join([*extra, *merges])} FROM {source})"
     )
+
+
+def _report(summary: DataFrame, layout: T.StructType) -> DataFrame:
+    """:func:`_report_sql` over the rows of ``summary``."""
+    return summary.sparkSession.sql(_report_sql(layout, "{summary}"), summary=summary)
 
 
 def _report_frames(row) -> tuple:
@@ -276,42 +286,50 @@ def _require_dims(plan: CheckPlan, names) -> None:
 def _flag(
     df: DataFrame, plan: CheckPlan, dims: dict[str, DataFrame], bucket_expr: Column
 ) -> DataFrame:
-    """``df`` + the violation bitmap + the bucket id: the referential
-    marks as broadcast left-outer joins (fact side unshuffled), then ONE
-    fused projection of every row check. df-level pre-rules are the
-    caller's, applied before. A referential check whose dim is not in
-    ``dims`` raises SpecValidationError here, before any job runs.
+    """``df`` + the violation bitmap + the bucket id, as ONE ``spark.sql``
+    statement over ``df`` (the bucket added) with the dims as frame
+    parameters: every row check and every referential ``NOT EXISTS``
+    (``plans.compiler``) in one fused projection, each referential check a
+    broadcast existence join (fact side unshuffled, dim not deduplicated).
+    df-level pre-rules are the caller's, applied before. A referential
+    check whose dim is not in ``dims`` raises SpecValidationError here,
+    before any job runs. ``spark.sql`` drops the temporary views of the
+    frame parameters once the statement is analysed.
 
     The bitmap concatenates, per check, ``array(name)`` when it fails and
-    a typed empty array when it passes, which codegens where
+    the typed empty array ``_EMPTY`` when it passes, which codegens where
     ``array_compact(array(CASE WHEN … THEN name END, …))`` runs a
-    ``filter`` lambda per row. The empty array is typed ``array<string>``
-    with ``containsNull = false``, so the bitmap and the sink's
-    ``check_name`` stay non-nullable; the DDL cast ``array<string>`` would
-    make both nullable."""
+    ``filter`` lambda per row; the bitmap and the sink's ``check_name``
+    stay non-nullable."""
     _require_dims(plan, dims)
-    input_cols = df.columns
-    work = df
-    checks = [(chk.name, chk.violation_expr()) for chk in plan.row_checks]
+    params: dict[str, str] = {}  # dim table -> frame parameter name
+    checks = [(chk.name, chk.violation_sql()) for chk in plan.row_checks]
     for ref in plan.referential:
-        mark = f"__ref_ok__{ref.column}"
-        dim = (
-            dims[ref.dim_table]
-            .select(F.col(ref.dim_column).alias(ref.column))
-            .distinct()
-            .withColumn(mark, F.lit(True))
-        )
-        work = work.join(F.broadcast(dim), on=ref.column, how="left")
-        missing = F.col(ref.column).isNotNull() & F.col(mark).isNull()
-        checks.append((ref.name, F.coalesce(missing, F.lit(False))))
+        dim = params.setdefault(ref.dim_table, f"dim{len(params)}")
+        checks.append((ref.name, ref.violation_sql(dim)))
+    flags = [
+        f"CASE WHEN {cond} THEN array({_lit(name)}) ELSE {_EMPTY} END" for name, cond in checks
+    ]
+    bitmap = f"concat({', '.join(flags)})" if flags else _EMPTY
+    cols = ", ".join(f"f.{_q(c)}" for c in df.columns)
+    return df.sparkSession.sql(
+        f"SELECT {cols}, {bitmap} AS {VIOLATIONS_COL}, f.{BUCKET_COL} FROM {{df}} f",
+        df=df.withColumn(BUCKET_COL, bucket_expr),
+        **{name: dims[table] for table, name in params.items()},
+    )
 
-    empty = F.array().cast(T.ArrayType(T.StringType(), containsNull=False))
-    flags = [F.when(cond, F.array(F.lit(name))).otherwise(empty) for name, cond in checks]
-    viol_arr = F.concat(*flags) if flags else empty
-    return (
-        work.withColumn(VIOLATIONS_COL, viol_arr)
-        .withColumn(BUCKET_COL, bucket_expr)
-        .select(*input_cols, VIOLATIONS_COL, BUCKET_COL)
+
+def _violation_rows(flagged: DataFrame, key_cols: list[str]) -> DataFrame:
+    """The violations row stream of ``flagged``: the key columns, one
+    ``check_name`` per failed check, and the bucket. A row that fails no
+    check explodes to no row; Spark infers ``size(_violations) > 0`` from
+    the explode and pushes it below the projection, which copies the
+    bitmap and its ``NOT EXISTS`` into that filter."""
+    keys = ", ".join(_q(c) for c in key_cols)
+    return flagged.sparkSession.sql(
+        f"SELECT {keys}, explode({VIOLATIONS_COL}) AS check_name, {BUCKET_COL}"
+        " FROM {flagged}",
+        flagged=flagged,
     )
 
 
@@ -347,10 +365,7 @@ def validate(
 
     # --- violations row stream --------------------------------------------
     key_cols = plan.unique_keys[0] if plan.unique_keys else input_cols[:1]
-    violations = (
-        flagged.filter(F.size(VIOLATIONS_COL) > 0)
-        .select(*key_cols, F.explode(VIOLATIONS_COL).alias("check_name"), BUCKET_COL)
-    )
+    violations = _violation_rows(flagged, key_cols)
 
     # --- unique-key duplicate detection: sort-merge agg on a PRUNED scan --
     row_ok = F.size(VIOLATIONS_COL) == 0
@@ -450,11 +465,11 @@ def execute(
 
     Plans only the flagged frame; validate()'s other artifacts are not built.
     Before pass 1 runs, helper threads start:
-      - the per-bucket summary (:func:`_bucket_summary`), collected as ONE
-        row together with its table-level merge (:func:`_report` over
-        the ≤ n_buckets summary rows): the partition report, per-column
-        stats and per-check counts. It is a second full-width scan, and
-        the call's tail waits for it;
+      - the per-bucket summary (:func:`_summary_sql`), collected as ONE
+        row together with its table-level merge (:func:`_report_sql` over
+        the ≤ n_buckets summary rows) in one statement: the partition
+        report, per-column stats and per-check counts. It is a second
+        full-width scan, and the call's tail waits for it;
       - for EVERY declared unique key, the duplicate-key groups (see
         :func:`_dup_groups`), written as Parquet to ``dupes_sink``
         (defaults to ``<violations_sink>_dupes``), never collected: their
@@ -533,15 +548,17 @@ def execute(
     flagged = _flag(df, plan, dims or {}, bucket)
     layout = _summary_schema(df.schema, plan)
 
-    # one row: the per-bucket rows as a sorted list, and their merge. Built
-    # here, so the helper thread only runs it.
+    # one statement, one row: the per-bucket rows as a sorted list, and
+    # their merge. Built here, so the helper thread only runs it.
     opts = ", ".join(f"{_lit(k)}, {_lit(v)}" for k, v in _JSON_OPTS.items())
-    buckets = F.expr(
+    buckets = (
         "array_sort(collect_list(named_struct('bucket', bucket, 'n_rows', n_rows,"
         " 'n_violating_rows', n_violating_rows, 'passed', n_violating_rows = 0,"
         f" 'summary', to_json(struct(*), map({opts}))))) AS _buckets"
     )
-    summary = _report(_bucket_summary(flagged, layout), layout, buckets)
+    summary = spark.sql(
+        _report_sql(layout, f"({_summary_sql(layout)})", buckets), flagged=flagged
+    )
 
     dupes, _ = _dup_groups(df, plan)
     if dupes is not None and dupes_sink is None and violations_sink is not None:
@@ -581,9 +598,7 @@ def execute(
 
             # ---- pass 1: the violations row stream -----------------------
             key_cols = plan.unique_keys[0] if plan.unique_keys else df.columns[:1]
-            viol = flagged.filter(F.size(VIOLATIONS_COL) > 0).select(
-                *key_cols, F.explode(VIOLATIONS_COL).alias("check_name"), BUCKET_COL
-            )
+            viol = _violation_rows(flagged, key_cols)
             _mark("compile_and_plan")
             if violations_sink:
                 viol.write.mode("overwrite").parquet(violations_sink)

@@ -1,16 +1,22 @@
-"""Spec → CheckPlan: compile YAML trait rules into Spark Column predicates.
+"""Spec → CheckPlan: compile YAML trait rules into SQL predicates.
 
 This is the analog of the reference's SchemaValidator.get_parser_args()
 (pysemantic/validator.py, the 'kwargs dict' physical plan) — except our IR is
-a set of **vectorized Boolean Column expressions** plus aggregation/join
-specs, so Catalyst folds constants, fuses the whole rule set into one
-whole-stage-codegen projection, and pushes column pruning to the scan.
+a set of **Boolean SQL expressions as text** plus aggregation/join specs. The
+runner splices every check of a plan into ONE ``spark.sql`` statement, which
+Spark parses and analyses once per query: Catalyst folds constants, fuses
+the whole rule set into one whole-stage-codegen projection, and pushes
+column pruning to the scan. Text costs no Py4J round trip per expression,
+where each Column call costs one or more.
 
 Check kinds:
 - row checks (violation = Boolean expr per row):
     not_null, min, max, regex, levels, exclude, bad_cast
 - key checks: unique_key (composite-key duplicate detection)
-- join checks: referential (broadcast anti-join vs a dimension table)
+- join checks: referential, a correlated ``NOT EXISTS`` against the dim
+  table, which Spark plans as a broadcast existence join: the dim key need
+  not be unique, so it is never deduplicated, and the fact side is never
+  shuffled
 - distribution checks: drift (KS/PSI vs a baseline sketch; operators/drift.py)
 
 Violation-predicate semantics (match the reference SeriesValidator.clean()
@@ -19,15 +25,19 @@ row-drop behavior, SURVEY.md §2.2):
   nullability is its own rule (`is_drop_na`), so a null row is counted once.
 - `exclude` fires only on listed values; a row survives cleaning iff it fires
   no check (conjunction), which makes rule order irrelevant for survivors.
+
+The text is written for ``spark.sql(text, **frames)``, which formats it
+with ``str.format`` to splice in the frame parameters: every identifier and
+literal built here (:func:`_q`, :func:`_lit`) has its braces doubled.
 """
 
 from __future__ import annotations
 
+import datetime
+import numbers
 from dataclasses import dataclass, field
 from typing import Any
 
-from pyspark.sql import Column
-from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from pysemantic_spark.errors import SpecValidationError
@@ -49,6 +59,46 @@ def spark_type(canonical: str) -> T.DataType:
     return _SPARK_TYPES[canonical]
 
 
+def _braces(text: str) -> str:
+    return text.replace("{", "{{").replace("}", "}}")
+
+
+def _q(name: str) -> str:
+    """``name`` as a SQL identifier (braces doubled, see the module
+    docstring)."""
+    return "`" + _braces(name.replace("`", "``")) + "`"
+
+
+def _lit(value: Any) -> str:
+    """``value`` as a SQL literal of the type ``F.lit`` would give it
+    (braces doubled, see the module docstring): an int is INT, or BIGINT
+    past 32 bits, exact at any size; a float is DOUBLE; a date or datetime
+    is a DATE or TIMESTAMP (in the session time zone); a string is a quoted
+    string, its backslashes and quotes escaped."""
+    if value is None:
+        return "NULL"
+    if isinstance(value, bool):
+        return "TRUE" if value else "FALSE"
+    if isinstance(value, numbers.Integral):
+        return str(int(value))
+    if isinstance(value, numbers.Real):
+        return f"CAST({_lit(repr(float(value)))} AS DOUBLE)"
+    if isinstance(value, datetime.datetime):
+        return f"TIMESTAMP {_lit(value.isoformat(sep=' '))}"
+    if isinstance(value, datetime.date):
+        return f"DATE {_lit(value.isoformat())}"
+    if isinstance(value, str):
+        return "'" + _braces(value.replace("\\", "\\\\").replace("'", "\\'")) + "'"
+    raise SpecValidationError(f"no SQL literal for {value!r} ({type(value).__name__})")
+
+
+def _in(column: str, values: list) -> str:
+    """``column IN (values)``; FALSE for an empty list, as ``isin()``."""
+    if not values:
+        return "FALSE"
+    return f"{column} IN ({', '.join(_lit(v) for v in values)})"
+
+
 @dataclass
 class Check:
     """One compiled check. ``name`` keys every downstream artifact
@@ -60,51 +110,45 @@ class Check:
     key: list[str] = field(default_factory=list)
     params: dict[str, Any] = field(default_factory=dict)
 
-    def violation_expr(self) -> Column:
-        """Boolean Column: True where this row violates the check.
-
-        Null-safe: wrapped so three-valued logic can never leak a NULL
-        into the violation bitmap.
-        """
-        c = F.col(self.column)
+    def violation_sql(self) -> str:
+        """SQL text, TRUE where a row violates the check, never NULL: the
+        predicate is wrapped in ``coalesce(…, FALSE)`` so three-valued logic
+        cannot leak a NULL into the violation bitmap."""
+        c = _q(self.column)
         k = self.kind
         if k == "not_null":
-            return c.isNull()
+            return f"{c} IS NULL"
         if k in ("min", "max"):
             v = self.params["value"]
             if isinstance(v, (int, float)) and not isinstance(v, bool):
                 # ANSI mode: comparing a raw string column to a numeric
                 # literal would THROW on unparseable values; try_cast makes
                 # them NULL (they surface via bad_cast / null-rate instead).
-                # Integral declared types compare as LONG — routing longs
+                # Integral declared types compare as BIGINT — routing longs
                 # through double would lose exactness past 2^53.
                 declared = self.params.get("col_dtype")
                 if declared in ("int", "long") and isinstance(v, int):
-                    cc = c.try_cast("long")
-                    bound = F.lit(int(v))
+                    cc, bound = f"try_cast({c} AS BIGINT)", _lit(int(v))
                 else:
-                    cc = c.try_cast("double")
-                    bound = F.lit(float(v))
+                    cc, bound = f"try_cast({c} AS DOUBLE)", _lit(float(v))
             else:
-                cc = c
-                bound = F.lit(v)
-            cmp = (cc < bound) if k == "min" else (cc > bound)
-            expr = c.isNotNull() & cmp
+                cc, bound = c, _lit(v)
+            expr = f"{c} IS NOT NULL AND {cc} {'<' if k == 'min' else '>'} {bound}"
         elif k == "regex":
-            # rlike = unanchored search, matching the reference's re.search
-            expr = c.isNotNull() & ~c.rlike(self.params["pattern"])
+            # RLIKE = unanchored search, matching the reference's re.search
+            expr = f"{c} IS NOT NULL AND NOT {c} RLIKE {_lit(self.params['pattern'])}"
         elif k == "levels":
-            expr = c.isNotNull() & ~c.isin(*self.params["values"])
+            expr = f"{c} IS NOT NULL AND NOT {_in(c, self.params['values'])}"
         elif k == "exclude":
-            expr = c.isNotNull() & c.isin(*self.params["values"])
+            expr = f"{c} IS NOT NULL AND {_in(c, self.params['values'])}"
         elif k == "bad_cast":
             # try_cast, not cast: ANSI mode (Spark 4 default) makes a plain
             # cast THROW on malformed input instead of yielding NULL
-            t = spark_type(self.params["dtype"])
-            expr = c.isNotNull() & c.try_cast(t).isNull()
+            t = spark_type(self.params["dtype"]).simpleString()
+            expr = f"{c} IS NOT NULL AND try_cast({c} AS {t}) IS NULL"
         else:
             raise SpecValidationError(f"{self.name}: not a row check ({k})")
-        return F.coalesce(expr, F.lit(False))
+        return f"coalesce({expr}, FALSE)"
 
 
 @dataclass
@@ -113,6 +157,21 @@ class ReferentialCheck:
     column: str
     dim_table: str  # logical name or path; resolved by the runner via `dims`
     dim_column: str
+
+    def violation_sql(self, dim: str) -> str:
+        """SQL text, TRUE where a fact row's non-NULL value has no match
+        in the dim: a correlated ``NOT EXISTS`` over the frame parameter
+        ``dim``, with the fact row aliased ``f``. Spark plans it as a
+        ``BroadcastHashJoin … ExistenceJoin``: the dim is neither
+        deduplicated nor shuffled, repeated dim keys cannot duplicate a fact
+        row, and a NULL dim key matches nothing. Written as ``c IN (SELECT
+        …)`` inside ``coalesce`` or ``CASE`` it would get the null-aware
+        rewrite and plan as a ``BroadcastNestedLoopJoin``."""
+        c = f"f.{_q(self.column)}"
+        return (
+            f"{c} IS NOT NULL AND NOT EXISTS (SELECT /*+ BROADCAST(d) */ 1"
+            f" FROM {{{dim}}} d WHERE d.{_q(self.dim_column)} = {c})"
+        )
 
 
 @dataclass

@@ -65,6 +65,9 @@ class Manifest:
     bucket_key: str
     entries: dict[int, BucketEntry] = field(default_factory=dict)
     summary_schema: dict = field(default_factory=dict)  # StructType JSON
+    # the table's StructType JSON as written, the bucket column last; {} in
+    # a manifest written before it was kept (reads then infer the schema)
+    table_schema: dict = field(default_factory=dict)
     # the last run's drift scoring: base (the baseline sketch), columns,
     # psi_threshold and ks_threshold; {} without a drift: block
     drift: dict = field(default_factory=dict)
@@ -132,15 +135,19 @@ class ParquetManifestIO:
         out = df.withColumn(
             BUCKET_PART_COL,
             F.pmod(F.xxhash64(F.col(bucket_key)), F.lit(n_buckets)).cast("int"),
-        ).withColumn("_salt", salt_expr(salt_factor, *entropy))
+        )
         (
-            out.repartition(n_buckets * salt_factor, F.col(BUCKET_PART_COL), F.col("_salt"))
+            out.withColumn("_salt", salt_expr(salt_factor, *entropy))
+            .repartition(n_buckets * salt_factor, F.col(BUCKET_PART_COL), F.col("_salt"))
             .drop("_salt")
             .write.mode("overwrite")
             .partitionBy(BUCKET_PART_COL)
             .parquet(self.data_dir)
         )
-        manifest = Manifest(n_buckets=n_buckets, bucket_key=bucket_key)
+        manifest = Manifest(
+            n_buckets=n_buckets, bucket_key=bucket_key,
+            table_schema=json.loads(out.schema.json()),
+        )
         for b in range(n_buckets):
             manifest.entries[b] = BucketEntry(
                 bucket=b, input_fingerprint=self._bucket_fingerprint(b)
@@ -152,9 +159,15 @@ class ParquetManifestIO:
         """Partition-pruned scan of the given buckets only.
 
         The filter on the partition column resolves at the file index —
-        `.explain` shows PartitionFilters, zero files from done buckets."""
-        df = spark.read.parquet(self.data_dir)
-        return df.filter(F.col(BUCKET_PART_COL).isin(buckets))
+        `.explain` shows PartitionFilters, zero files from done buckets. The
+        scan reads with the schema the manifest keeps, so no Parquet schema
+        inference job runs; only a manifest written before the schema was
+        kept falls back to inference."""
+        reader = spark.read
+        schema = self.load_manifest().table_schema
+        if schema:
+            reader = reader.schema(T.StructType.fromJson(schema))
+        return reader.parquet(self.data_dir).filter(F.col(BUCKET_PART_COL).isin(buckets))
 
     # ---- manifest ---------------------------------------------------------
 

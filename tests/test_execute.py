@@ -411,3 +411,80 @@ def test_runner_clean_path_null_keys(spark):
     clean = validate(spark, df, spec).clean
     got = {(r["k"], r["v"]) for r in clean.collect()}
     assert got == {(1, 10), (2, 30), (None, 20)}
+
+
+# Values that SQL text must carry verbatim: quotes, backslashes, the braces
+# that spark.sql's str.format reads, and non-ASCII text.
+_ODD = ["it's", "back\\slash", "{brace}", "a}{b", "ünï€", "{0}", "x'}{'y", None, "plain"]
+
+
+@pytest.mark.parametrize(
+    "rules",
+    [
+        {"s": {"unique_values": ["it's", "back\\slash", "{brace}", "ünï€"]}},
+        {"s": {"exclude": ["a}{b", "{0}", "x'}{'y", "ünï€"]}},
+        {"s": {"regex": "^[a-z]{2}|[{]0[}]|\\\\|'s$|ü"}},
+        {"s": {"min": "b'\\{", "max": "{z}ü"}},
+        {"n": {"min": 2**53 + 1, "max": 2**53 + 3}},
+        {"t{1}": {"is_drop_na": True, "unique_values": ["{q}"]}},
+    ],
+    ids=["levels", "exclude", "regex", "min_max_text", "long_bounds", "brace_column"],
+)
+def test_sql_text_literals_match_oracle(spark, rules):
+    """Every rule value reaches the check SQL verbatim: validate() and
+    execute() count what the pandas oracle counts, integer bounds past 2^53
+    compare exactly (through a double, 2^53 + 1 reads as 2^53), and
+    execute() leaves no temporary view of its frame parameters behind."""
+    import pandas as pd
+
+    from pysemantic_spark.operators.runner import validate
+    from pysemantic_spark.spec import DatasetSpec
+
+    pdf = pd.DataFrame({
+        "s": _ODD * 3,
+        "n": [2**53 - 1 + i % 6 for i in range(27)],
+        "t{1}": ["{q}", None, "r"] * 9,
+    })
+    spec = DatasetSpec.from_dict("t", {"dtypes": {"n": "long"}, "column_rules": rules})
+    exp = pandas_oracle(pdf, spec, {})["violations"]["check_name"].value_counts()
+    assert exp.sum() > 0
+    df = spark.createDataFrame(pdf)
+    views = {t.name for t in spark.catalog.listTables()}
+    lazy = validate(spark, df, spec, bucket_by="s", n_buckets=4)
+    got_lazy = {r["check_name"]: r["n_violations"] for r in lazy.check_counts.collect()}
+    out = execute(spark, df, spec, bucket_by="s", n_buckets=4)
+    got = dict(zip(out["check_counts"]["check_name"], out["check_counts"]["n_violations"]))
+    for counts in (got_lazy, got):
+        checked = {n: c for n, c in counts.items() if not n.startswith("bad_cast:")}
+        assert checked == {n: int(exp.get(n, 0)) for n in checked}, counts
+        assert set(exp.index) <= set(checked)
+    assert {t.name for t in spark.catalog.listTables()} == views
+
+
+def test_referential_dim_with_repeated_and_null_keys(spark):
+    """A dim key need not be unique or non-NULL: repeated keys duplicate no
+    fact row, a NULL key matches nothing, and the counts equal the
+    oracle's, on validate() and execute()."""
+    import pandas as pd
+
+    from pysemantic_spark.operators.runner import validate
+    from pysemantic_spark.spec import DatasetSpec
+
+    pdf = pd.DataFrame({"k": range(30), "tool": ["a", "b", "c", None, "a", "d"] * 5})
+    dim_pdf = pd.DataFrame({"key": ["a", "a", "a", None, "b", None]})
+    spec = DatasetSpec.from_dict(
+        "t", {"column_rules": {"tool": {"reference": {"table": "dim", "column": "key"}}}}
+    )
+    exp = pandas_oracle(pdf, spec, {"dim": dim_pdf})
+    df = spark.createDataFrame(pdf)
+    dims = {"dim": spark.createDataFrame(dim_pdf)}
+    res = validate(spark, df, spec, dims=dims, bucket_by="k", n_buckets=4)
+    flagged = sorted(res.flagged.select("k", "tool").collect(), key=lambda r: r["k"])
+    assert [tuple(r) for r in flagged] == list(pdf.itertuples(index=False, name=None))
+    assert res.violations.count() == len(exp["violations"]) == 10
+    assert res.clean.count() == len(exp["clean"])
+    out = execute(spark, df, spec, dims=dims, bucket_by="k", n_buckets=4)
+    assert out["n_rows"] == len(pdf)
+    assert out["check_counts"].set_index("check_name")["n_violations"].to_dict() == {
+        "referential:tool": 10
+    }

@@ -16,7 +16,7 @@ from pysemantic_spark.fixtures import dim_tools_pdf, transcripts_pdf, transcript
 from pysemantic_spark.operators import dedup, similarity
 from pysemantic_spark.operators.runner import validate
 from pysemantic_spark.plans.compiler import compile_spec
-from pysemantic_spark.spec import DatasetSpec
+from pysemantic_spark.spec import DatasetSpec, DriftSpec
 
 
 def _plan(df) -> str:
@@ -42,16 +42,26 @@ def test_fused_pass_scans_table_exactly_once(parts):
 
 
 def test_referential_is_broadcast_not_shuffle(parts):
+    """A referential check is a broadcast existence join: no nested-loop
+    join (the null-aware rewrite of ``IN (SELECT …)`` inside ``CASE``), no
+    hash exchange on either side (the dim key is not deduplicated), and
+    each query builds the dim broadcast once; the copy of the ``NOT
+    EXISTS`` that the violations filter pushdown makes reuses it."""
     _, _, res = parts
-    plan = _plan(res.violations)
-    assert "BroadcastHashJoin" in plan
-    # the FACT side must not be exchanged for the join: the only Exchange
-    # allowed in this plan feeds the broadcast (dim dedup)
-    fact_exchanges = [
-        ln for ln in plan.splitlines()
-        if "Exchange hashpartitioning" in ln and "tool" not in ln
-    ]
-    assert fact_exchanges == [], fact_exchanges
+    for frame in (res.violations, res.check_counts):
+        frame.collect()
+        plan = _plan(frame)
+        final = plan.split("== Initial Plan ==")[0]
+        assert "ExistenceJoin" in final and "BroadcastHashJoin" in final, plan
+        assert "BroadcastNestedLoopJoin" not in plan, plan
+        builds = [ln for ln in final.splitlines()
+                  if "BroadcastExchange" in ln and "ReusedExchange" not in ln]
+        assert len(builds) == 1, final
+        for ln in plan.splitlines():
+            if "Exchange hashpartitioning" in ln:
+                assert "_bucket" in ln, ln  # only the summary's bucket key
+    final = _plan(res.violations).split("== Initial Plan ==")[0]
+    assert final.count("ExistenceJoin") == 2 and "ReusedExchange" in final, final
 
 
 def test_dupes_scan_is_column_pruned(parts):
@@ -271,3 +281,34 @@ def test_near_dup_buckets_evaluate_once_and_share_exchange(spark, tmp_path):
     assert final.count("ArrowEvalPython") == 1, final
     assert final.count("FileScan") == 1, final
     assert "ReusedExchange" in final, final
+
+
+@pytest.mark.parametrize("drift, n_jobs", [(False, 8), (True, 11)])
+def test_execute_job_budget(spark, parts, tmp_path, drift, n_jobs):
+    """The Spark jobs of one warm execute() with a violations sink, counted
+    by job id set difference. Without drift: per query one dim broadcast
+    and its scan jobs, for pass 1 (broadcast, write), the summary
+    (broadcast, scan, per-bucket merge, one-row result) and the dup-key
+    groups (scan, write). The drift block adds three: the sketch scan, the
+    per-key counts regrouped by (column, bin), and the bounded collect. A
+    change that adds a job says why."""
+    from pysemantic_spark.operators.drift import save_drift_baseline
+    from pysemantic_spark.operators.runner import execute
+
+    df, dims, _ = parts
+    spec = transcripts_spec()
+    if drift:
+        baseline = str(tmp_path / "baseline.json")
+        save_drift_baseline(df, ["turn_idx", "role"], baseline)
+        spec.drift = DriftSpec(columns=["turn_idx", "role"], baseline=baseline)
+
+    def call():
+        execute(spark, df, spec, dims=dims, bucket_by="conv_id", n_buckets=8,
+                violations_sink=str(tmp_path / "violations"))
+
+    call()  # warm
+    tracker = spark.sparkContext.statusTracker()
+    before = set(tracker.getJobIdsForGroup() or [])
+    call()
+    new = set(tracker.getJobIdsForGroup() or []) - before
+    assert len(new) == n_jobs, sorted(new)

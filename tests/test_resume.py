@@ -218,6 +218,37 @@ def test_resumed_table_report_equals_one_execute(spark, tmp_path):
     assert got["stats"]["approx_distinct"].gt(0).any()
 
 
+def test_read_buckets_reads_with_the_stored_schema(spark, tmp_path):
+    """write_bucketed keeps the table schema in the manifest, so a bucket
+    read starts no Spark job (Parquet schema inference starts one). A
+    manifest written before the schema was kept reads with the inferred
+    schema, the same one, and its table still validates and resumes."""
+    import json
+
+    pdf = transcripts_pdf(n_rows=2_000)
+    io = ParquetManifestIO(str(tmp_path / "tbl"))
+    io.write_bucketed(spark.createDataFrame(pdf), "conv_id", 4)
+    tracker = spark.sparkContext.statusTracker()
+    before = set(tracker.getJobIdsForGroup() or [])
+    stored = io.read_buckets(spark, [0, 1])
+    assert set(tracker.getJobIdsForGroup() or []) - before == set()
+
+    with open(io.manifest_path) as f:
+        old = json.load(f)
+    del old["table_schema"]
+    with open(io.manifest_path, "w") as f:
+        json.dump(old, f)
+    assert io.read_buckets(spark, [0, 1]).schema == stored.schema
+    spec = transcripts_spec()
+    dims = {"dim_tools": spark.createDataFrame(dim_tools_pdf())}
+    first = run_resumable(spark, io, spec, dims=dims, chunk_size=2, max_chunks=1)
+    second = run_resumable(spark, io, spec, dims=dims, chunk_size=2)
+    assert first["processed"] == [0, 1] and second["processed"] == [2, 3]
+    m = io.load_manifest()
+    assert m.pending() == []
+    assert sum(e.n_rows for e in m.entries.values()) == len(pdf)
+
+
 def test_idempotent_when_done(spark, table):
     io, dims, _ = table
     third = run_resumable(spark, io, transcripts_spec(), dims=dims)
