@@ -321,14 +321,18 @@ def _flag(
 
 def _violation_rows(flagged: DataFrame, key_cols: list[str]) -> DataFrame:
     """The violations row stream of ``flagged``: the key columns, one
-    ``check_name`` per failed check, and the bucket. A row that fails no
-    check explodes to no row; Spark infers ``size(_violations) > 0`` from
-    the explode and pushes it below the projection, which copies the
-    bitmap and its ``NOT EXISTS`` into that filter."""
+    ``check_name`` per failed check, and the bucket. An outer explode and
+    a ``check_name IS NOT NULL`` filter drop a row that fails no check:
+    from an inner explode Spark infers ``size(_violations) > 0`` and
+    pushes it below the projection, which evaluates the bitmap, every
+    check and every ``NOT EXISTS`` a second time. The filter leaves
+    ``check_name`` NULL-free, and the ``coalesce`` only restores its
+    non-nullable type."""
     keys = ", ".join(_q(c) for c in key_cols)
     return flagged.sparkSession.sql(
-        f"SELECT {keys}, explode({VIOLATIONS_COL}) AS check_name, {BUCKET_COL}"
-        " FROM {flagged}",
+        f"SELECT {keys}, coalesce(check_name, '') AS check_name, {BUCKET_COL} FROM"
+        f" (SELECT {keys}, explode_outer({VIOLATIONS_COL}) AS check_name, {BUCKET_COL}"
+        " FROM {flagged}) WHERE check_name IS NOT NULL",
         flagged=flagged,
     )
 

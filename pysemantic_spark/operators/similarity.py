@@ -3,18 +3,19 @@
 - `cosine_topk`         — exact brute-force top-k: every corpus row scores
                           against every query where it is read.
 - `cosine_pairs_exact`  — exact all-pairs cosine ≥ threshold via BLOCKED
-                          GEMM (`mapInPandas` over block pairs): the honest
-                          brute-force baseline, and the RIGHT scale path when
-                          the threshold sits near the bulk of the cosine
-                          distribution (weak selectivity), where any LSH
-                          operating point degenerates to all-pairs anyway.
+                          GEMM (one cell row per block pair, `mapInArrow`):
+                          the honest brute-force baseline, and the RIGHT
+                          scale path when the threshold sits near the bulk
+                          of the cosine distribution (weak selectivity),
+                          where any LSH operating point degenerates to
+                          all-pairs anyway.
 - `lsh_bucketed_topk`   — sub-linear top-k: random-hyperplane LSH buckets
                           (seeded planes, multi-table + multi-probe); each
                           query scores only its buckets' candidates.
 - `ivf_topk`            — sub-linear top-k: k-means coarse clusters, each
                           query scores only its n_probe nearest clusters.
 - `embedding_near_dup_pairs` — cosine ≥ threshold pairs via multi-table
-                          (optionally multi-probe) LSH bucket self-join +
+                          (optionally multi-probe) LSH bucket cells +
                           exact verify.
 
 One kernel per job, each a float64 GEMM of unit vectors with cosines
@@ -29,6 +30,10 @@ function behind :func:`hyperplane_buckets_arrow` (buckets) and from
 corpus side and on the driver for the queries. Only n_queries × k rows per
 task reach the final rank.
 
+The all-pairs operators route each vector, tagged with its block or
+bucket ``src``, straight to its cells: one ``groupBy`` packs them, with no
+join, into the Arrow cell rows that :func:`_gemm_pairs` verifies.
+
 Bad vectors, one rule for all five: a NULL vector, or one whose length is
 not ``dim``, never scores, never appears in the output and never moves
 another row's id; an all-zero vector scores 0.0; a NULL or ragged query
@@ -36,7 +41,7 @@ returns no rows. ``cosine_topk`` takes ``dim`` from its queries and
 ``cosine_pairs_exact`` has none; their docstrings say how a length
 mismatch fails.
 
-The blocked-GEMM path shuffles each vector n_blocks/2 times by
+The blocked-GEMM path shuffles each vector n_blocks times by
 construction (that IS all-pairs work); its knob is block size = one
 bounded GEMM per task.
 """
@@ -45,6 +50,7 @@ from __future__ import annotations
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -167,53 +173,66 @@ def cosine_topk(
 
 
 def _gemm_pairs(threshold: float):
-    """The one all-pairs verify kernel: a ``mapInPandas`` body mapping
-    block-pair rows (ids_a, vecs_a, ids_b, vecs_b, same) to (id_a, id_b,
-    cos_sim) with id_a < id_b and cos_sim ≥ ``threshold``. A ``same`` row
-    scores one block's upper triangle against itself, any other row every
-    (a, b) cell, as one float64 GEMM of unit vectors (a zero vector scores
-    0.0); vectors of different lengths raise a ValueError naming them.
-    Helpers stay nested in here: cloudpickle ships a closure by value but
-    a module-level function by reference, which would make every cold
-    Python worker import this package."""
+    """The one all-pairs verify kernel: a ``mapInArrow`` body mapping cell
+    rows (home, same, src, ids, vecs) to (id_a, id_b, cos_sim) with id_a <
+    id_b and cos_sim ≥ ``threshold``. A cell's vectors are unit-normalized
+    once (a zero vector scores 0.0); those whose ``src`` is ``home`` form
+    block A, scored against itself (upper triangle) when ``same`` is set
+    and against each other ``src`` value's vectors, one float64 GEMM per
+    block pair. Vectors of different lengths in one cell raise a
+    ValueError naming them. The cells are read from the Arrow offsets and
+    flat value buffers, and each input batch yields one record batch whose
+    ids keep the type of ``ids``. Helpers stay nested in here: cloudpickle
+    ships a closure by value but a module-level function by reference,
+    which would make every cold Python worker import this package."""
     thr = float(threshold)
 
-    def unit(vecs, dim=None):
-        lens = sorted({len(v) for v in vecs} | ({dim} if dim is not None else set()))
-        if len(lens) > 1:
-            raise ValueError(f"vectors of lengths {lens} in one block pair; "
-                             "all-pairs cosine needs one length")
-        M = np.stack([np.asarray(v, dtype=np.float64) for v in vecs])
-        norms = np.linalg.norm(M, axis=1)
-        norms[norms == 0] = 1.0
-        return M / norms[:, None]
+    def keep(G, ids_a, ids_b, out, upper=False):
+        # threshold the rounded value, as the SQL oracle does: a raw-value
+        # threshold is 1-ulp-fragile under another engine's summation order
+        cos = np.round(G, 6)
+        hit = cos >= thr
+        ii, jj = np.nonzero(np.triu(hit, 1) if upper else hit)
+        ia, ib = ids_a[ii], ids_b[jj]
+        lo, hi = np.minimum(ia, ib), np.maximum(ia, ib)
+        ok = lo != hi  # a repeated id never pairs with itself
+        for part, col in zip(out, (lo[ok], hi[ok], cos[ii, jj][ok])):
+            part.append(col)
+
+    def values(lists):  # (offsets, flat values) of a list column
+        return lists.offsets.to_numpy(), lists.values.to_numpy(zero_copy_only=False)
 
     def score(batches):
-        for pdf in batches:
-            for row in pdf.itertuples(index=False):
-                ids_a = np.asarray(row.ids_a)
-                An = unit(row.vecs_a)
-                if row.same:
-                    G = An @ An.T
-                    ii, jj = np.triu_indices(len(An), k=1)
-                    ids_b = ids_a
-                else:
-                    ids_b = np.asarray(row.ids_b)
-                    G = An @ unit(row.vecs_b, An.shape[1]).T
-                    ii, jj = np.unravel_index(np.arange(G.size), G.shape)
-                # threshold the rounded value, as the SQL oracle does: a
-                # raw-value threshold is 1-ulp-fragile under another
-                # engine's summation order
-                cos = np.round(G[ii, jj], 6)
-                keep = cos >= thr
-                if not keep.any():
+        for batch in batches:
+            home, same, src, ids, vecs = (batch.column(c) for c in (
+                "home", "same", "src", "ids", "vecs"))
+            home, same = home.to_numpy(), same.to_numpy(zero_copy_only=False)
+            (src_off, srcs), (id_off, idv) = values(src), values(ids)
+            cell_off, (vec_off, flat) = vecs.offsets.to_numpy(), values(vecs.values)
+            out = ([idv[:0]], [idv[:0]], [np.empty(0)])
+            for c in range(batch.num_rows):
+                v0, v1 = cell_off[c], cell_off[c + 1]
+                lens = np.diff(vec_off[v0:v1 + 1])
+                if (lens != lens[0]).any():
+                    raise ValueError(f"vectors of lengths {sorted(set(lens.tolist()))} in "
+                                     "one cell; all-pairs cosine needs one length")
+                M = flat[vec_off[v0]:vec_off[v1]].astype(np.float64).reshape(v1 - v0, lens[0])
+                norms = np.linalg.norm(M, axis=1)
+                norms[norms == 0] = 1.0
+                M /= norms[:, None]
+                s, cid = srcs[src_off[c]:src_off[c + 1]], idv[id_off[c]:id_off[c + 1]]
+                a = s == home[c]
+                if not a.any():
                     continue
-                ia, ib = ids_a[ii[keep]], ids_b[jj[keep]]
-                lo, hi = np.minimum(ia, ib), np.maximum(ia, ib)
-                ok = lo != hi  # a repeated id never pairs with itself
-                yield pd.DataFrame(
-                    {"id_a": lo[ok], "id_b": hi[ok], "cos_sim": cos[keep][ok]}
-                )
+                A, ids_a = M[a], cid[a]
+                if same[c]:
+                    keep(A @ A.T, ids_a, ids_a, out, upper=True)
+                for b in np.unique(s[~a]):
+                    keep(A @ M[s == b].T, ids_a, cid[s == b], out)
+            yield pa.RecordBatch.from_arrays(
+                [pa.array(np.concatenate(part), type=t) for part, t in
+                 zip(out, (ids.type.value_type, ids.type.value_type, pa.float64()))],
+                names=["id_a", "id_b", "cos_sim"])
 
     return score
 
@@ -229,41 +248,37 @@ def cosine_pairs_exact(
     """EXACT all-pairs cosine near-dup: (id_a, id_b, cos_sim) with
     id_a < id_b and cos_sim ≥ threshold, via blocked GEMM.
 
-    Plan: hash-assign each vector to one of ``n_blocks`` blocks, pack each
-    block into ONE row (groupBy + collect_list), explode block b against
-    partner blocks b..n_blocks-1 (an equi-join on the partner id — no
-    cartesian), then one numpy matmul per block pair inside mapInPandas
-    (:func:`_gemm_pairs`). Every task is a bounded (|block| × |block|)
-    GEMM and holds at most two blocks; size n_blocks so a block is ~tens
-    of MB. The shuffle moves each vector n_blocks/2 times (the all-pairs
-    data movement — use the LSH paths when the threshold prunes).
+    Plan: hash-assign each vector to one of ``n_blocks`` blocks and route
+    it to the cell (least(b, p), greatest(b, p)) of every partner block p;
+    one ``groupBy`` packs each cell into ONE row (no join, no cartesian),
+    and :func:`_gemm_pairs` runs one numpy matmul per cell inside
+    ``mapInArrow``: a block against itself in cell (b, b), block lo
+    against block hi in cell (lo, hi). Every task is a bounded
+    (|block| × |block|) GEMM and holds at most two blocks; size n_blocks
+    so a block is ~tens of MB. The shuffle moves each vector n_blocks
+    times (the all-pairs data movement — use the LSH paths when the
+    threshold prunes).
 
-    A NULL vector never pairs and never moves another row's id; an
+    A NULL vector or id never pairs and never moves another row's id; an
     all-zero vector scores 0.0. There is no ``dim`` argument: vectors of
     different lengths fail the job with a ValueError naming the lengths.
     """
     # vectors shuffle in their source element type (the kernel upcasts to
-    # float64 exactly), and a NULL vector is dropped before packing:
-    # collect_list would skip it but keep its id
-    base = df.filter(F.col(vec_col).isNotNull()).select(
-        F.col(id_col).alias("vid"),
-        F.col(vec_col).alias("vec"),
-        F.pmod(F.xxhash64(F.col(id_col)), F.lit(n_blocks)).cast("int").alias("blk"),
+    # float64 exactly), and a NULL vector or id is dropped before packing:
+    # collect_list would skip it but keep the other
+    routed = df.filter(F.col(vec_col).isNotNull() & F.col(id_col).isNotNull()).select(
+        F.col(id_col).cast(id_type).alias("_id"),
+        F.col(vec_col).alias("_vec"),
+        F.pmod(F.xxhash64(F.col(id_col)), F.lit(n_blocks)).alias("src"),
+        F.explode(F.sequence(F.lit(0), F.lit(n_blocks - 1))).alias("p"),
     )
-    packed = base.groupBy("blk").agg(
-        F.collect_list("vid").alias("ids"), F.collect_list("vec").alias("vecs")
-    )
-    left = packed.withColumn(
-        "partner", F.explode(F.sequence(F.col("blk"), F.lit(n_blocks - 1)))
-    )
-    right = packed.select(
-        F.col("blk").alias("partner"), F.col("ids").alias("ids_b"), F.col("vecs").alias("vecs_b")
-    )
-    joined = left.join(right, "partner").select(
-        F.col("ids").alias("ids_a"), F.col("vecs").alias("vecs_a"), "ids_b", "vecs_b",
-        (F.col("blk") == F.col("partner")).alias("same"),
-    )
-    return joined.mapInPandas(
+    cells = routed.groupBy(
+        F.least("src", "p").alias("home"), F.greatest("src", "p").alias("other")
+    ).agg(F.collect_list("src").alias("src"), F.collect_list("_id").alias("ids"),
+          F.collect_list("_vec").alias("vecs"))
+    return cells.select(
+        "home", (F.col("home") == F.col("other")).alias("same"), "src", "ids", "vecs"
+    ).mapInArrow(
         _gemm_pairs(threshold), schema=f"id_a {id_type}, id_b {id_type}, cos_sim double"
     )
 
@@ -528,19 +543,22 @@ def embedding_near_dup_pairs(
       cos ≥ 0.4 (θ≤66.4°): k=8+probe → p≈0.14; L=24 → recall ≈ 0.975
     A single table has recall = p — 9% at cos 0.5.
 
-    Verification is BUCKET-LOCAL: vectors are grouped once per (table,
-    bucket); each bucket is verified against itself and (with probing) its
-    one-bit-flip partner buckets by ONE float64 GEMM per bucket pair
-    (:func:`_gemm_pairs`), and only pairs with cos ≥ threshold leave the
-    task, deduplicated across tables by a tiny groupBy. No candidate-pair
+    Verification is BUCKET-LOCAL: each vector is routed to the cell of its
+    (table, bucket) and, with probing, to the cell of each one-bit flip
+    below its bucket, so the smaller bucket of a pair owns it; one
+    ``groupBy`` packs each cell into one row (no join). In
+    :func:`_gemm_pairs` (``mapInArrow``) a cell's own bucket is verified
+    against itself and against each flip bucket by ONE float64 GEMM per
+    bucket pair, and only pairs with cos ≥ threshold leave the task,
+    deduplicated across tables by a tiny groupBy. No candidate-pair
     rows exist (building them measured 114M pairs / ~120 GB of
     attached vectors at 20k docs, 157 s, vs ~7 s bucket-local). Shuffle
-    volume is each vector × n_tables (+ the ≤(k+1)-fold bucket-pair
-    replication of packed buckets). A NULL or ragged vector (length ≠
-    ``dim``) is in no bucket and never pairs; an all-zero vector scores
-    0.0. Skew note: one pathological bucket (a near-constant direction)
-    packs into one task; identical-vector floods should be collapsed
-    upstream like the text miners do."""
+    volume is each vector × n_tables (× at most 1 + n_planes cells with
+    probing). A NULL or ragged vector (length ≠ ``dim``) is in no bucket
+    and never pairs, nor does a NULL id; an all-zero vector scores 0.0. Skew note: one
+    pathological bucket (a near-constant direction) is one cell, one row
+    and one task; identical-vector floods should be collapsed upstream
+    like the text miners do."""
     if n_probe_bits not in (0, 1):
         raise ValueError("n_probe_bits supports 0 (single) or 1 (multi-probe)")
     id_type = df.schema[id_col].dataType.simpleString()
@@ -554,46 +572,27 @@ def embedding_near_dup_pairs(
     )
     # posexplode_outer plus an explicit filter, not posexplode: the inner
     # generator makes the optimizer infer `size(_buckets) > 0` below the
-    # projection, which runs the bucket UDF a second time, and the filter
-    # gives both `packed` branches the join's `bk IS NOT NULL`, so the
-    # bucket-pair join reuses one exchange instead of planning it twice
+    # projection, which runs the bucket UDF a second time. A NULL id is
+    # dropped too: collect_list would skip it but keep its vector
     exploded = base.select(
-        "_id", "_vec", F.posexplode_outer("_buckets").alias("tbl", "bk")
-    ).filter(F.col("bk").isNotNull())
-    packed = exploded.groupBy("tbl", "bk").agg(
-        F.collect_list("_id").alias("ids"), F.collect_list("_vec").alias("vecs")
-    )
-    # Bucket pairs that can hold a candidate: a bucket against itself, and
-    # (with probing) against each one-bit flip. Each unordered bucket pair
-    # is owned by its numerically-smaller member so it is verified ONCE; a
-    # flip always differs from its origin, so `>=` keeps the self pair and
-    # exactly the larger flips.
-    partners = [F.col("bk")]
-    if n_probe_bits == 1:
-        partners += [F.col("bk").bitwiseXOR(F.lit(1 << p)) for p in range(n_planes)]
-    left = packed.select(
-        "tbl",
-        F.col("bk").alias("bk_a"),
-        F.col("ids").alias("ids_a"),
-        F.col("vecs").alias("vecs_a"),
-        F.explode(
-            F.array_compact(
-                F.array(*[F.when(p >= F.col("bk"), p) for p in partners])
-            )
-        ).alias("bk_b"),
-    )
-    right = packed.select(
-        "tbl",
-        F.col("bk").alias("bk_b"),
-        F.col("ids").alias("ids_b"),
-        F.col("vecs").alias("vecs_b"),
-    )
-    joined = left.join(right, on=["tbl", "bk_b"]).select(
-        "ids_a", "vecs_a", "ids_b", "vecs_b", (F.col("bk_a") == F.col("bk_b")).alias("same")
-    )
-    survivors = joined.mapInPandas(
+        "_id", "_vec", F.posexplode_outer("_buckets").alias("tbl", "src")
+    ).filter(F.col("src").isNotNull() & F.col("_id").isNotNull())
+    # A bucket pairs with itself and (probing) each one-bit flip; the
+    # smaller bucket owns the pair, so a vector goes to its own cell and to
+    # the cell of each flip below it (a set bit cleared). Flips are NULL-
+    # padded and dropped after the explode: array_compact is a lambda.
+    src = F.col("src")
+    cells = [src] + [F.when(src.bitwiseAND(1 << p) != 0, src.bitwiseXOR(1 << p))
+                     for p in range(n_planes * n_probe_bits)]
+    routed = exploded.select(
+        "tbl", "src", "_id", "_vec", F.explode(F.array(*cells)).alias("home")
+    ).filter(F.col("home").isNotNull())
+    survivors = routed.groupBy("tbl", "home").agg(
+        F.collect_list("src").alias("src"), F.collect_list("_id").alias("ids"),
+        F.collect_list("_vec").alias("vecs"),
+    ).select("home", F.lit(True).alias("same"), "src", "ids", "vecs").mapInArrow(
         _gemm_pairs(threshold), schema=f"id_a {id_type}, id_b {id_type}, cos_sim double"
     )
-    # a pair surviving in several (table, bucket-pair) cells is emitted once
-    # per cell; max() keeps one value even if BLAS blocking ever differed
+    # a pair surviving in several (table, cell) rows is emitted once per
+    # row; max() keeps one value even if BLAS blocking ever differed
     return survivors.groupBy("id_a", "id_b").agg(F.max("cos_sim").alias("cos_sim"))

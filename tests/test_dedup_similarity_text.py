@@ -16,6 +16,7 @@ import warnings
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 import pytest
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
@@ -624,6 +625,43 @@ def test_embedding_near_dup_pairs(spark, emb_df):
     assert (0, 9) not in got
 
 
+@pytest.mark.parametrize("n_planes, n_probe_bits", [(1, 0), (1, 1), (4, 0), (4, 1)])
+def test_embedding_near_dup_pairs_verifies_bucket_pairs(spark, emb_df, n_planes, n_probe_bits):
+    """The LSH miner verifies exactly its bucket pairs: per table, each
+    bucket against itself and, with probing, against each one-bit flip at
+    or above it. At threshold -1.0 every candidate survives, so the rows
+    equal a numpy enumeration of those bucket pairs over the operator's
+    own bucket function, deduplicated across tables."""
+    df, vecs = emb_df
+    n_tables = 3
+    keys = similarity._hyperplane_keys(8, n_planes, n_tables, 42)(vecs)
+    vn = vecs / np.linalg.norm(vecs, axis=1, keepdims=True)
+    flips = [0] + [1 << p for p in range(n_planes)] * n_probe_bits
+    want = {}
+    for t in range(n_tables):
+        members: dict = {}
+        for i, b in enumerate(keys[:, t].tolist()):
+            members.setdefault(b, []).append(i)
+        for b, own in members.items():
+            for other in {b ^ f for f in flips if b ^ f >= b} & members.keys():
+                cands = (itertools.combinations(own, 2) if other == b
+                         else itertools.product(own, members[other]))
+                for i, j in cands:
+                    want[min(i, j), max(i, j)] = round(float(vn[i] @ vn[j]), 6)
+    got = {
+        (r["id_a"], r["id_b"]): r["cos_sim"]
+        for r in similarity.embedding_near_dup_pairs(
+            df, dim=8, threshold=-1.0, n_planes=n_planes, n_tables=n_tables,
+            n_probe_bits=n_probe_bits, seed=42,
+        ).collect()
+    }
+    assert got.keys() == want.keys()
+    for k_, v in got.items():
+        assert v == pytest.approx(want[k_], abs=2e-6)
+    if n_planes == 1 and n_probe_bits:  # two buckets, one flip apart: all pairs
+        assert len(got) == len(vecs) * (len(vecs) - 1) // 2
+
+
 def test_embedding_near_dup_multi_table_recall(spark):
     """Multi-table LSH must recover the recall a single sign-LSH table
     loses at moderate thresholds: at cos 0.5 one 6-plane table collides
@@ -792,7 +830,7 @@ def test_cosine_pairs_exact_matches_numpy(spark, emb_df):
             for j in range(i + 1, len(vecs))
             if g[i, j] >= thr
         }
-        for n_blocks in (1, 7):
+        for n_blocks in (1, 3, 7):
             got = {
                 (r["id_a"], r["id_b"]): r["cos_sim"]
                 for r in similarity.cosine_pairs_exact(
@@ -808,7 +846,7 @@ _UNPICKLE_AND_RUN = """
 import pickle, sys
 fn, arg = pickle.loads(sys.stdin.buffer.read())
 out = fn(arg)
-if not hasattr(out, "shape"):  # a mapInPandas body yields frames
+if not hasattr(out, "shape"):  # a map body yields frames or batches
     out = list(out)
 loaded = sorted(m for m in sys.modules if m.startswith("pysemantic_spark"))
 sys.stdout.buffer.write(pickle.dumps((out, loaded)))
@@ -844,18 +882,23 @@ def test_gemm_kernel_pickles_by_value(tmp_path):
     # across blocks: id 5 on both sides, a zero vector (id 7)
     cross_a = ([1, 5], [[1, 0, 0, 0], [0, 1, 0, 0]])
     cross_b = ([5, 7, 9], [[0, 1, 0, 0], [0, 0, 0, 0], [0.5, 0.5, 0, 0]])
-    pdf = pd.DataFrame({
-        "ids_a": [same[0], cross_a[0]],
-        "vecs_a": [same[1], cross_a[1]],
-        "ids_b": [same[0], cross_b[0]],
-        "vecs_b": [same[1], cross_b[1]],
+    # as one Arrow batch of two cells: block A against itself, and block A
+    # (src 0) against block B (src 1)
+    cells = pa.RecordBatch.from_pydict({
+        "home": [0, 0],
         "same": [True, False],
-    })
-    frames, loaded = _run_unpickled(
-        similarity._gemm_pairs(0.4), iter([pdf]), tmp_path
+        "src": [[0] * len(same[0]), [0] * len(cross_a[0]) + [1] * len(cross_b[0])],
+        "ids": [same[0], cross_a[0] + cross_b[0]],
+        "vecs": [same[1], cross_a[1] + cross_b[1]],
+    }, schema=pa.schema([
+        ("home", pa.int64()), ("same", pa.bool_()), ("src", pa.list_(pa.int64())),
+        ("ids", pa.list_(pa.int64())), ("vecs", pa.list_(pa.list_(pa.float64()))),
+    ]))
+    batches, loaded = _run_unpickled(
+        similarity._gemm_pairs(0.4), iter([cells]), tmp_path
     )
     assert loaded == []
-    out = [r for df in frames for r in df.itertuples(index=False, name=None)]
+    out = [r for b in batches for r in zip(*b.to_pydict().values())]
 
     def cos(x, y):
         x, y = np.asarray(x, float), np.asarray(y, float)
@@ -1753,6 +1796,23 @@ def test_vector_operators_bad_vectors(spark, op):
     if no_dim:
         with pytest.raises(Exception, match=r"lengths \[2, 4\]"):
             BAD_VEC_OPS[op](df, queries).collect()
+
+
+@pytest.mark.parametrize("op", ["cosine_pairs_exact", "embedding_near_dup_pairs"])
+def test_all_pairs_null_id_never_pairs(spark, op):
+    """A NULL id never pairs and never moves another row's id in the
+    all-pairs operators: collect_list skips a NULL id but not its vector,
+    which shifted a cell's ids against its vectors (wrong pairs, or an
+    IndexError in the kernel)."""
+    valid = {2: [1.0, 0.1, 0.0, 0.0], 3: [1.0, 0.2, 0.0, 0.0], 4: [0.0, 1.0, 0.0, 0.0]}
+    df = spark.createDataFrame(
+        [(None, [1.0, 0.0, 0.0, 0.0]), *valid.items()], "vec_id long, embedding array<double>"
+    )
+    got = sorted(tuple(r) for r in BAD_VEC_OPS[op](df, None).collect())
+    want = sorted((a, b, _cos6(valid[a], valid[b]))
+                  for a, b in itertools.combinations(sorted(valid), 2))
+    assert [g[:2] for g in got] == [w[:2] for w in want]
+    assert [g[2] for g in got] == pytest.approx([w[2] for w in want], abs=1e-6)
 
 
 def test_nearest_centroids_matches_numpy():

@@ -45,8 +45,8 @@ def test_referential_is_broadcast_not_shuffle(parts):
     """A referential check is a broadcast existence join: no nested-loop
     join (the null-aware rewrite of ``IN (SELECT …)`` inside ``CASE``), no
     hash exchange on either side (the dim key is not deduplicated), and
-    each query builds the dim broadcast once; the copy of the ``NOT
-    EXISTS`` that the violations filter pushdown makes reuses it."""
+    each query builds the dim broadcast once and probes it once per
+    row."""
     _, _, res = parts
     for frame in (res.violations, res.check_counts):
         frame.collect()
@@ -61,7 +61,21 @@ def test_referential_is_broadcast_not_shuffle(parts):
             if "Exchange hashpartitioning" in ln:
                 assert "_bucket" in ln, ln  # only the summary's bucket key
     final = _plan(res.violations).split("== Initial Plan ==")[0]
-    assert final.count("ExistenceJoin") == 2 and "ReusedExchange" in final, final
+    assert final.count("ExistenceJoin") == 1 and "ReusedExchange" not in final, final
+
+
+def test_violation_rows_evaluate_bitmap_once(parts):
+    """Pass 1 evaluates each row's bitmap once: the violation rows come
+    from an outer explode, so Spark infers no ``size(_violations) > 0``
+    filter below the projection, which would copy every check and every
+    referential ``NOT EXISTS`` into it (one existence join per referential
+    check, not two)."""
+    _, _, res = parts
+    n_ref = len(compile_spec(transcripts_spec()).referential)
+    assert n_ref >= 1
+    plan = res.violations._jdf.queryExecution().optimizedPlan().toString()
+    assert plan.count("ExistenceJoin") == n_ref, plan
+    assert "size(" not in plan, plan
 
 
 def test_dupes_scan_is_column_pruned(parts):
@@ -239,9 +253,10 @@ def test_ivf_training_is_single_scan_no_count(spark):
 
 
 def test_cosine_pairs_exact_block_join_is_equi(spark):
-    """The block-pair expansion joins on the partner block id (equi-join of
-    two tiny packed frames) — the n^2 work happens inside bounded GEMM
-    tasks, and the input table is scanned once."""
+    """Each vector is routed straight to the cells of its block pairs and
+    one groupBy packs them: no join of any kind, no interpreted lambda in
+    the routing, and the n^2 work happens inside one bounded-GEMM
+    ``mapInArrow`` kernel."""
     import numpy as np
     import pandas as pd
 
@@ -253,16 +268,17 @@ def test_cosine_pairs_exact_block_join_is_equi(spark):
     corpus = spark.createDataFrame(pdf)
     out = similarity.cosine_pairs_exact(corpus, threshold=0.9, n_blocks=8)
     plan = _plan(out)
-    assert "CartesianProduct" not in plan
-    assert "MapInPandas" in plan
+    assert "Join" not in plan and "CartesianProduct" not in plan, plan
+    assert plan.count("MapInArrow") == 1, plan
+    assert "lambdafunction" not in plan, plan
 
 
 def test_near_dup_buckets_evaluate_once_and_share_exchange(spark, tmp_path):
     """The LSH bucket UDF of embedding_near_dup_pairs runs once per row:
-    the executed plan has one ArrowEvalPython, one input scan, and the
-    bucket-pair join reuses the packed buckets' exchange (an inferred
-    `size(_buckets) > 0` filter used to re-run the UDF, and an inferred
-    `isnotnull(bk)` on one side kept the two branches from sharing)."""
+    the executed plan has one ArrowEvalPython and one input scan (an
+    inferred `size(_buckets) > 0` filter used to re-run the UDF). Each
+    vector is routed to its cells by one shuffle: below the verify kernel
+    there is one exchange, no join, and no interpreted lambda."""
     import numpy as np
     import pandas as pd
 
@@ -280,7 +296,10 @@ def test_near_dup_buckets_evaluate_once_and_share_exchange(spark, tmp_path):
     final = _plan(out).split("== Initial Plan ==")[0]
     assert final.count("ArrowEvalPython") == 1, final
     assert final.count("FileScan") == 1, final
-    assert "ReusedExchange" in final, final
+    assert "lambdafunction" not in final, final
+    below = final.split("MapInArrow", 1)[1]
+    assert below.count("Exchange hashpartitioning") == 1, final
+    assert "Join" not in below and "ReusedExchange" not in below, final
 
 
 @pytest.mark.parametrize("drift, n_jobs", [(False, 8), (True, 11)])
