@@ -631,9 +631,8 @@ def q_streaming_drift_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     import uuid
 
     from pysemantic_spark.operators.drift import (
+        build_drift_baseline,
         drift_rows_report,
-        load_drift_baseline,
-        save_drift_baseline,
         windowed_drift_sketch,
     )
 
@@ -643,11 +642,7 @@ def q_streaming_drift_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     # schema and values are unaffected by the repartition
     ev = _read(spark, sf_dir, "events")
     base = ev.filter(F.col("event_id") % 2 == 0).select("value", "event_type")
-    bl_path = os.path.join(
-        tempfile.gettempdir(), f"stream_drift_bl_{uuid.uuid4().hex}.json"
-    )
-    save_drift_baseline(base, ["value", "event_type"], bl_path, n_bins=20)
-    baseline = load_drift_baseline(bl_path)
+    baseline = build_drift_baseline(base, ["value", "event_type"], n_bins=20)
 
     # the file stream source requires a DIRECTORY; the fixture is a single
     # parquet file — stage it into a temp dir (bytes unchanged)
@@ -697,7 +692,6 @@ def q_streaming_drift_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     # wire the scorer: the union of the windows gets a full metric report
     report = drift_rows_report(rows.collect(), baseline)
     assert len(report) >= 3, "drift_rows_report produced no metrics"
-    os.unlink(bl_path)
     shutil.rmtree(stage_dir, ignore_errors=True)
     return rows.select(
         "window_start",
@@ -733,8 +727,7 @@ def q_streaming_drift_append_events(spark: SparkSession, sf_dir: str) -> DataFra
     import uuid
 
     from pysemantic_spark.operators.drift import (
-        load_drift_baseline,
-        save_drift_baseline,
+        build_drift_baseline,
         windowed_drift_sketch,
     )
 
@@ -744,11 +737,7 @@ def q_streaming_drift_append_events(spark: SparkSession, sf_dir: str) -> DataFra
     # schema and values are unaffected by the repartition
     ev = _read(spark, sf_dir, "events")
     base = ev.filter(F.col("event_id") % 2 == 0).select("value", "event_type")
-    bl_path = os.path.join(
-        tempfile.gettempdir(), f"append_drift_bl_{uuid.uuid4().hex}.json"
-    )
-    save_drift_baseline(base, ["value", "event_type"], bl_path, n_bins=20)
-    baseline = load_drift_baseline(bl_path)
+    baseline = build_drift_baseline(base, ["value", "event_type"], n_bins=20)
 
     max_ts = ev.filter(F.col("event_id") % 2 == 1).agg(F.max("ts")).first()[0]
     stage_dir = os.path.join(
@@ -824,7 +813,6 @@ def q_streaming_drift_append_events(spark: SparkSession, sf_dir: str) -> DataFra
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", _old_sp)
     rows = spark.table(qname)
-    os.unlink(bl_path)
     shutil.rmtree(stage_dir, ignore_errors=True)
     return rows.select(
         "window_start",
@@ -1102,14 +1090,15 @@ _RAW_QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
     }
 
 
-def _simhash_wide_sql(n_words: int = 2, max_hamming: int = 16) -> str:
-    """Brute-force oracle for the MULTI-WORD simhash query: each word w is
-    the 60-bit integer from md5 hex digits [1+15w, 15+15w) — byte-identical
-    to word w of the Spark words kernel (`dedup._simhash_words_udf`) —
-    bit-voted independently; hamming = sum of per-word popcounts. Quadratic over all
-    doc pairs (no banding needed oracle-side); the pigeonhole-exact Spark
-    output (r + 1 bands: 10 bands of 12 bits at the query's r = 9) must
-    equal this set."""
+def _simhash_wide_sql(n_words: int, max_hamming: int) -> str:
+    """Brute-force oracle for both simhash queries: each word w is the
+    60-bit integer from md5 hex digits [1+15w, 15+15w) — byte-identical to
+    word w of the Spark text kernel's SimHash words (`dedup._text_kernel`)
+    — bit-voted independently; hamming = sum of per-word popcounts.
+    Quadratic over all doc pairs (no banding needed oracle-side); the
+    pigeonhole-exact Spark output must equal this set, for one word at
+    r = 8 (`simhash_neardups_documents`) and two at r = 9
+    (`simhash_wide_documents`)."""
     words = range(n_words)
     votes = ", ".join(
         f"sum(case when (h{w} >> {i}) & 1 = 1 then 1 else -1 end) as v{w}_{i}"
@@ -1143,41 +1132,6 @@ def _simhash_wide_sql(n_words: int = 2, max_hamming: int = 16) -> str:
     """
 
 
-def _simhash_sql() -> str:
-    """Brute-force oracle for the simhash query, built from the SAME
-    portable hash the Spark words kernel uses (md5 top-15-hex-digits → 60-bit
-    token hash, bit-vote fingerprint) so the two cannot drift apart.
-    The oracle needs no banding: it computes the exact hamming-≤8 pair
-    set quadratically, which the exhaustively-banded Spark output must
-    equal (pigeonhole over 9 > 8 disjoint bands)."""
-    votes = ", ".join(
-        f"sum(case when (hv >> {i}) & 1 = 1 then 1 else -1 end) as v{i}"
-        for i in range(60)
-    )
-    fp = " + ".join(
-        f"(case when v{i} > 0 then (1::BIGINT << {i}) else 0 end)" for i in range(60)
-    )
-    return f"""
-        WITH tok AS (
-            SELECT doc_id, unnest(string_split_regex(trim(text), '\\s+')) AS t
-            FROM documents WHERE trim(text) <> ''
-        ),
-        h AS (
-            SELECT doc_id, ('0x' || substr(md5(t), 1, 15))::BIGINT AS hv FROM tok
-        ),
-        v AS (SELECT doc_id, {votes} FROM h GROUP BY doc_id),
-        fp AS (SELECT doc_id, {fp} AS f FROM v)
-        SELECT a.doc_id AS id_a, b.doc_id AS id_b,
-               bit_count(xor(a.f, b.f))::BIGINT AS hamming
-        FROM fp a JOIN fp b ON a.doc_id < b.doc_id
-        WHERE bit_count(xor(a.f, b.f)) <= 8
-    """
-
-
-# exact brute-force oracle for BOTH embedding near-dup queries: the LSH
-# path's operating point makes its recall 1.0 at the oracle scale (and its
-# emitted cosines are exact), and the blocked-GEMM path is exact by
-# construction — both must equal this set
 _NGRAM_BRUTE_05_SQL = """
     WITH tok AS (
         SELECT doc_id, string_split_regex(trim(text), '\\s+') AS t
@@ -1208,6 +1162,10 @@ _NGRAM_BRUTE_05_SQL = """
 """
 
 
+# exact brute-force oracle for BOTH embedding near-dup queries: the LSH
+# path's operating point makes its recall 1.0 at the oracle scale (and its
+# emitted cosines are exact), and the blocked-GEMM path is exact by
+# construction — both must equal this set
 _NEARDUP_EXACT_SQL = """
     WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings)
     SELECT a.vec_id AS id_a, b.vec_id AS id_b,
@@ -1732,7 +1690,7 @@ def oracle_sql() -> dict[str, str]:
                    drift_col, bin, count(*)::BIGINT AS cnt
             FROM u GROUP BY 1, 2, 3, 4
         """,
-        "simhash_neardups_documents": _simhash_sql(),
+        "simhash_neardups_documents": _simhash_wide_sql(n_words=1, max_hamming=8),
         "simhash_wide_documents": _simhash_wide_sql(n_words=2, max_hamming=9),
         # two-stage salted agg must equal the plain GROUP BY for any salt
         "salted_user_counts_events": """

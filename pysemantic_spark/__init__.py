@@ -14,8 +14,8 @@ at 10^12-turn scale:
   table-level stats are its merge, so chunked and resumed runs report the
   same numbers as one run.
 - Uniqueness on (conv_id, turn_idx) via sort-merge dedup counts; referential
-  checks via broadcast anti-joins; KS/PSI drift via Arrow `applyInPandas`
-  sketches.
+  checks via broadcast existence joins; KS/PSI drift from bin-count sketches
+  (one JVM ``groupBy(bucket, column, bin)`` count).
 - Per-partition pass/fail rows + violation-row DataFrames written back to the
   table store; resumable from a checkpoint manifest with per-partition
   lineage, metrics and summary rows (``tableio.table_report`` merges them).

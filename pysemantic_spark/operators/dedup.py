@@ -15,6 +15,10 @@ Four families, all shuffle-conscious:
 
 Both Jaccard miners share one candidate verify (``_verify_jaccard``) and
 one threshold rule: filter on the unrounded jaccard, round only the output.
+Every text miner makes one Python pass per call: one Arrow text kernel
+(``_text_kernel``) tokenizes each doc, fingerprints its token stream for
+the identical-doc collapse, and emits the miner's array (shingles, or the
+SimHash words).
 
 Scale notes (100 TB / 10^9 docs):
 - The shingle self-join shuffles on the shingle; ultra-common shingles are
@@ -62,24 +66,52 @@ _LOG = logging.getLogger(__name__)
 #     so " \t " is ["", ""]; text that trims to "" is []
 #   - md5 of the UTF-8 bytes == Spark md5(cast(string as binary))
 #   - n-grams are distinct in first-occurrence order (array_distinct)
-#   - NULL text: tokens NULL, 1-grams NULL, n ≥ 2-grams [], and the
-#     fingerprint is md5("") (concat_ws skips a NULL array)
+#   - NULL text: tokens NULL, 1-grams NULL, n ≥ 2-grams [], SimHash words
+#     [], and the fingerprint is md5("") (concat_ws skips a NULL array)
 # (tests: test_arrow_shingle_tfp_matches_jvm + the miners' oracles).
 # ---------------------------------------------------------------------------
 
-_TEXT_KERNELS: dict[int, object] = {}
+_TEXT_KERNELS: dict[tuple[int, int], object] = {}
 
 
-def _text_kernel(n: int):
-    """pandas_udf: text → struct(arr: array<string>, tfp: string) in ONE
-    Arrow-batched pass. ``arr`` is the token array for ``n = 0`` and the
-    distinct word n-grams for ``n ≥ 1``; ``tfp`` is the token-stream md5.
+def _text_kernel(n: int, n_words: int = 0):
+    """pandas_udf: text → struct(arr, tfp: string) in ONE Arrow-batched
+    pass; ``tfp`` is the token-stream md5. ``arr`` is an array<string>:
+    the token array for ``n = 0``, the distinct word n-grams for ``n ≥ 1``.
+    With ``n_words`` 1 or 2 (SimHash calls it with ``n = 0``) it is
+    instead the doc's ``n_words`` SimHash words (array<long>, empty when
+    the doc has no token): word w's token hash is the int of md5 hex
+    digits [15w, 15w+15) (hashlib md5 of the UTF-8 bytes, identical to
+    Spark's and DuckDB's), and bit i is set iff strictly more tokens have
+    it set than clear, one (n_tokens × 60) numpy popcount per word. So the
+    token stream never leaves its scan task (no exploded-token shuffle
+    aggregation; measured ~4× on the sf1.0 miners), and a SimHash call
+    makes this one Python pass.
+
     The helpers stay nested: cloudpickle ships a closure by value but a
     module-level function by reference, which would make every cold
     Python worker import this package. (Created lazily — pandas_udf DDL
     return types need an active session.)"""
-    if n not in _TEXT_KERNELS:
+    if (n, n_words) not in _TEXT_KERNELS:
+        import numpy as np
+
         ws = re.compile(r"\s+", re.ASCII)
+        shifts = np.arange(_WORD_BITS, dtype=np.uint64)
+
+        def words(toks: list[str]) -> list[int]:
+            hexes = [hashlib.md5(t.encode("utf-8")).hexdigest() for t in toks]
+            out = []
+            for w in range(n_words if hexes else 0):
+                vals = np.array(
+                    [int(h[15 * w : 15 * w + 15], 16) for h in hexes], dtype=np.uint64
+                )
+                ones = ((vals[:, None] >> shifts) & np.uint64(1)).sum(
+                    axis=0, dtype=np.int64
+                )
+                # vote > 0  ⟺  ones*2 > n (votes are ones - (n - ones))
+                bits = (2 * ones > len(hexes)).astype(np.uint64)
+                out.append(int((bits << shifts).sum()))
+            return out
 
         def grams(toks: list[str], joined: str) -> list[str]:
             # n-grams as substrings of the space-joined stream (one slice
@@ -99,23 +131,24 @@ def _text_kernel(n: int):
                 )
             )
 
-        @F.pandas_udf("arr array<string>, tfp string")
+        @F.pandas_udf(f"arr array<{'long' if n_words else 'string'}>, tfp string")
         def _udf(texts: pd.Series) -> pd.DataFrame:
             arrs, fps = [], []
             for s in texts:
                 if s is None:
-                    arrs.append(None if n <= 1 else [])
+                    arrs.append(None if n <= 1 and not n_words else [])
                     fps.append(hashlib.md5(b"").hexdigest())
                     continue
                 st = s.strip(" ")
                 toks = ws.split(st) if st else []
                 joined = " ".join(toks)
-                arrs.append(grams(toks, joined))
+                arr = grams(toks, joined)
+                arrs.append(words(arr) if n_words else arr)
                 fps.append(hashlib.md5(joined.encode("utf-8")).hexdigest())
             return pd.DataFrame({"arr": arrs, "tfp": fps})
 
-        _TEXT_KERNELS[n] = _udf
-    return _TEXT_KERNELS[n]
+        _TEXT_KERNELS[n, n_words] = _udf
+    return _TEXT_KERNELS[n, n_words]
 
 
 def _shingles_arrow(text_col: str, n: int) -> "F.Column":
@@ -361,7 +394,7 @@ def ngram_jaccard_pairs(
     docs whose every common shingle exceeds ``max_shingle_freq`` still pair,
     at jaccard 1.0."""
     pairs, clones = _collapse_and_mine(
-        df, id_col, text_col, n, "_sh",
+        df, id_col, _text_kernel(n)(F.col(text_col)), "_sh",
         lambda sh: _ngram_pairs_on_shingles(
             sh, threshold, max_shingle_freq, prefix_filter
         ),
@@ -556,11 +589,12 @@ def _fused_collapse(
 ) -> tuple[DataFrame, DataFrame, bool, bool]:
     """Collapse-guard bookkeeping FUSED into the miner's own text scan:
     ``kernel`` is a :func:`_text_kernel` struct column over the text, so
-    one projection yields the miner's array (shingles or tokens, landed
-    in ``arr_col``) AND the token-stream fingerprint. Text is scanned
-    once, and the guard's sizing action doubles as the warm-up of the
-    array cache the mining plan reads anyway. The clone-eligibility
-    predicate (``size(arr) > 0``) later reads the cached ``_size``.
+    one projection yields the miner's array (shingles, or SimHash words,
+    landed in ``arr_col``) AND the token-stream fingerprint. Text is
+    scanned once, by the miner's only Python pass, and the guard's sizing
+    action doubles as the warm-up of the array cache the mining plan
+    reads anyway. The clone-eligibility predicate (``size(arr) > 0``)
+    later reads the cached ``_size``.
 
     Returns (frame, groups, clones?, broadcastable?): ``frame`` = cached
     (_id, arr_col, _tfp, _size) for every doc; ``groups`` = cached
@@ -593,7 +627,7 @@ def _fused_collapse(
 
 
 def _collapse_and_mine(
-    df: DataFrame, id_col: str, text_col: str, n: int, arr_col: str, mine
+    df: DataFrame, id_col: str, kernel: "F.Column", arr_col: str, mine
 ) -> tuple[DataFrame, tuple[DataFrame, DataFrame, bool] | None]:
     """The identical-doc guard behind every text miner: docs with the same
     token stream mine as ONE representative (the group's min id).
@@ -609,19 +643,18 @@ def _collapse_and_mine(
     afterwards (:func:`_expand_pairs_multi`, or the label join of
     :func:`duplicate_clusters`).
 
-    One :func:`_fused_collapse` over the ``n``-wide :func:`_text_kernel`
-    yields the array column ``arr_col`` and the fingerprint in the miner's
-    own text scan. ``mine`` maps an ``(_id, arr_col, _size)`` frame to its
-    output. Returns (output, clones): with no clones anywhere ``mine`` runs
-    over every doc and ``clones`` is None; otherwise ``mine`` runs over the
-    representative rows and ``clones`` = (members, mined_reps, small):
+    One :func:`_fused_collapse` over ``kernel``, the miner's
+    :func:`_text_kernel` column, yields the array column ``arr_col`` and
+    the fingerprint in the miner's own text scan. ``mine`` maps an
+    ``(_id, arr_col, _size)`` frame to its output. Returns (output,
+    clones): with no clones anywhere ``mine`` runs over every doc and
+    ``clones`` is None; otherwise ``mine`` runs over the representative
+    rows and ``clones`` = (members, mined_reps, small):
     ``members`` = (_id, _rep) for every member of a multi-member group,
     ``mined_reps`` = (_id) of those groups' reps whose docs mine (≥1
     shingle or token; shorter docs never pair), and ``small`` = the clone
     map is measured under the broadcast cap."""
-    full, groups, clones, small = _fused_collapse(
-        df, id_col, _text_kernel(n)(F.col(text_col)), arr_col
-    )
+    full, groups, clones, small = _fused_collapse(df, id_col, kernel, arr_col)
     if not clones:
         return mine(full.drop("_tfp")), None
     # materialized: the mining plan's several references (sizes, inverted
@@ -632,7 +665,7 @@ def _collapse_and_mine(
         ).drop("_tfp")
     )
     out = mine(reps)
-    # both read the cached frames only: no shingle or token recomputation
+    # both read the cached frames only: no text kernel recomputation
     multi = groups.filter(F.col("_gs") > 1)
     members = (
         full.select("_id", "_tfp")
@@ -724,7 +757,7 @@ def minhash_lsh_pairs(
     (:func:`_collapse_and_mine`), and one shingle scan feeds both the
     signatures and the verify arrays."""
     pairs, clones = _collapse_and_mine(
-        df, id_col, text_col, n, "_sh",
+        df, id_col, _text_kernel(n)(F.col(text_col)), "_sh",
         lambda sh: _minhash_pairs_on_shingles(sh, num_hashes, bands, threshold),
     )
     return _expand_pairs_multi(pairs, clones, "jaccard", 1.0)
@@ -832,9 +865,21 @@ def simhash_fingerprints(
     _check_simhash_args(portable_hash, n_words)
     bands = _simhash_chunks(n_bands, n_words)
     _warn_if_narrow(bands)
-    tokf = df.select(F.col(id_col).alias("_id"), tokens(text_col).alias("_tok"))
-    return _simhash_words(tokf, n_words).select(
-        "*", *[v.alias(f"band{b}") for b, v in enumerate(_chunk_values(bands))]
+    words = df.select(
+        F.col(id_col).alias("_id"),
+        _text_kernel(0, n_words)(F.col(text_col))["arr"].alias("_w"),
+    )
+    # docs with no token have no words; an outer explode and a filter above
+    # it drop them, where a filter on size(_w) would be pushed below the
+    # projection and run the kernel a second time
+    return (
+        words.select("_id", "_w", F.posexplode_outer("_w").alias("_pos", "_v"))
+        .filter(F.col("_pos") == 0)
+        .select(
+            "_id",
+            *[F.col("_w")[w].alias(_SIMHASH_WORDS[w]) for w in range(n_words)],
+            *[v.alias(f"band{b}") for b, v in enumerate(_chunk_values(bands))],
+        )
     )
 
 
@@ -853,9 +898,9 @@ def _simhash_chunks(m: int, n_words: int) -> list[tuple[int, int, int]]:
 
 
 def _chunk_values(chunks: list[tuple[int, int, int]]) -> list["F.Column"]:
-    """Each chunk's bits of its fingerprint word, as a column."""
+    """Each chunk's bits of its word in the ``_w`` words column."""
     return [
-        F.shiftrightunsigned(F.col(_SIMHASH_WORDS[w]), offset).bitwiseAND(
+        F.shiftrightunsigned(F.col("_w")[w], offset).bitwiseAND(
             F.lit((1 << width) - 1)
         )
         for w, offset, width in chunks
@@ -900,66 +945,6 @@ def _simhash_layout(
     return 0, bands
 
 
-_SIMHASH_WORD_UDFS: dict[int, object] = {}
-
-
-def _simhash_words_udf(n_words: int):
-    """pandas_udf: token array → array<long> of ``n_words`` simhash words.
-
-    Word w's token hash is the int of md5 hex digits [15w, 15w+15)
-    (hashlib md5 of the UTF-8 bytes, identical to Spark's and DuckDB's);
-    bit i is set iff strictly more tokens have bit i set than clear,
-    tallied per Arrow batch as one (n_tokens × 60) numpy popcount per
-    word. The token stream never leaves its scan task — no exploded-token
-    shuffle aggregation (guide §4.2; measured ~4× on the sf1.0 miners).
-    Callers pass non-empty arrays only (``size(tokens) > 0``), so NULL
-    and empty docs get no row. Everything the kernel uses is nested or a
-    library module, so cloudpickle ships it by value."""
-    if n_words not in _SIMHASH_WORD_UDFS:
-        import numpy as np
-
-        shifts = np.arange(_WORD_BITS, dtype=np.uint64)
-
-        @F.pandas_udf("array<long>")
-        def _udf(tok_lists: pd.Series) -> pd.Series:
-            out = []
-            for toks in tok_lists:
-                hexes = [
-                    hashlib.md5(t.encode("utf-8")).hexdigest() for t in toks
-                ]
-                n = len(hexes)
-                words = []
-                for w in range(n_words):
-                    lo = 15 * w
-                    vals = np.array(
-                        [int(h[lo : lo + 15], 16) for h in hexes],
-                        dtype=np.uint64,
-                    )
-                    ones = ((vals[:, None] >> shifts) & np.uint64(1)).sum(
-                        axis=0, dtype=np.int64
-                    )
-                    # vote > 0  ⟺  ones*2 > n (votes are ones - (n - ones))
-                    bits = (2 * ones > n).astype(np.uint64)
-                    words.append(int((bits << shifts).sum()))
-                out.append(words)
-            return pd.Series(out)
-
-        _SIMHASH_WORD_UDFS[n_words] = _udf
-    return _SIMHASH_WORD_UDFS[n_words]
-
-
-def _simhash_words(tokf: DataFrame, n_words: int) -> DataFrame:
-    """Fingerprint words ``(_id, simhash[, simhash1])`` from a
-    ``(_id, _tok)`` token-array frame; docs with no tokens (NULL or [])
-    get no row."""
-    words = tokf.filter(F.size("_tok") > 0).select(
-        "_id", _simhash_words_udf(n_words)(F.col("_tok")).alias("_w")
-    )
-    return words.select(
-        "_id", *[F.col("_w")[w].alias(_SIMHASH_WORDS[w]) for w in range(n_words)]
-    )
-
-
 def simhash_near_dup_pairs(
     df: DataFrame,
     id_col: str,
@@ -988,26 +973,28 @@ def simhash_near_dup_pairs(
     a warning fires when neither layout avoids sub-12-bit bands.
 
     Identical token streams mine as one representative
-    (:func:`_collapse_and_mine` over the ``n = 0`` token kernel): hamming
-    0 within a group, and a member inherits its rep's hamming to
-    everything else."""
+    (:func:`_collapse_and_mine`): hamming 0 within a group, and a member
+    inherits its rep's hamming to everything else. The collapse frame
+    holds each doc's SimHash words, from the same Arrow pass of
+    :func:`_text_kernel` that fingerprints its token stream, so a call
+    makes one Python pass over the text."""
     _check_simhash_args(portable_hash, n_words)
     pairs, clones = _collapse_and_mine(
-        df, id_col, text_col, 0, "_tok",
-        lambda tokf: _simhash_pairs_on_tokens(tokf, max_hamming, n_words),
+        df, id_col, _text_kernel(0, n_words)(F.col(text_col)), "_w",
+        lambda words: _simhash_pairs_on_tokens(words, max_hamming, n_words),
     )
     return _expand_pairs_multi(pairs, clones, "hamming", 0)
 
 
 def _simhash_pairs_on_tokens(
-    tokf: DataFrame, max_hamming: int, n_words: int
+    words: DataFrame, max_hamming: int, n_words: int
 ) -> DataFrame:
     """Candidate join + exact popcount filter of
     :func:`simhash_near_dup_pairs`, over a prepared (materialized)
-    ``(_id, _tok, ...)`` token-array frame, fingerprinted by the Arrow
-    words kernel (:func:`_simhash_words`).
+    ``(_id, _w, ...)`` frame of the docs' SimHash words
+    (:func:`_text_kernel` with ``n_words``).
 
-    Both sides are projections of one cached fingerprint frame. The
+    Both sides are projections of that one cached frame. The
     exact side explodes each doc's m chunk values to ``(ci, cv)`` rows.
     At k = 0 the probe side is that same projection, a self-join on
     equal bands. At k > 0 it carries every ≤k-bit flip of each chunk:
@@ -1016,15 +1003,16 @@ def _simhash_pairs_on_tokens(
     9.1×10⁸ pairs, nearly all discarded by the popcount; 3 chunks of 20
     bits with 211 flips each cut it 3.9× (→ 2.3×10⁸)."""
     k, chunks = _simhash_layout(max_hamming, n_words)
-    fps = _materialize(_simhash_words(tokf, n_words))
+    fps = words.filter(F.col("_size") > 0)
     # MEASURED broadcast decision (same discipline as _BROADCAST_MEMBERS).
-    # The count also fills the cache before the join's two sides read it;
-    # left to the join, both would compute it at once. The exact side is
-    # m rows/doc of ~32 bytes; under the cap it broadcasts and the probe
-    # side becomes a pure scan→explode→probe pipeline with NO exchange
-    # (the static planner can't see this through the Generate). Past the
-    # cap the join falls back to the planner's shuffle strategy on
-    # (chunk, value), which keeps the candidate reduction.
+    # The count also fills the cached words frame (with clones, the
+    # collapse's `reps`) before the join's two sides read it; left to the
+    # join, both would compute it at once. The exact side is m rows/doc of ~32 bytes; under
+    # the cap it broadcasts and the probe side becomes a pure
+    # scan→explode→probe pipeline with NO exchange (the static planner
+    # can't see this through the Generate). Past the cap the join falls
+    # back to the planner's shuffle strategy on (chunk, value), which keeps
+    # the candidate reduction.
     small = fps.count() * len(chunks) <= 2_000_000
     values = _chunk_values(chunks)
 
@@ -1032,7 +1020,7 @@ def _simhash_pairs_on_tokens(
         """``(id_s, sh{s}_0[, sh{s}_1], *cols)`` over the fingerprints."""
         return fps.select(
             F.col("_id").alias(f"id_{s}"),
-            *[F.col(_SIMHASH_WORDS[w]).alias(f"sh{s}_{w}") for w in range(n_words)],
+            *[F.col("_w")[w].alias(f"sh{s}_{w}") for w in range(n_words)],
             *cols,
         )
 
@@ -1132,7 +1120,7 @@ def duplicate_clusters(
     if unknown:
         raise TypeError(f"duplicate_clusters: unknown ngram kwargs {unknown}")
     rep_labels, clones = _collapse_and_mine(
-        df, id_col, text_col, n, "_sh",
+        df, id_col, _text_kernel(n)(F.col(text_col)), "_sh",
         lambda sh: connected_components(
             _ngram_pairs_on_shingles(
                 sh,

@@ -115,9 +115,10 @@ class ParquetManifestIO:
     ) -> Manifest:
         """Materialize the table partitioned by hashed bucket_key.
 
-        bucket = pmod(xxhash64(key), n_buckets) — the same deterministic
-        scheme the runner's partition report uses, and the drop-in analog of
-        Iceberg's bucket() transform.
+        bucket = pmod(xxhash64(key), n_buckets), from the runner's own
+        bucket rule (``runner._bucket_expr_default``) so the written
+        buckets are the runner's partition-report buckets; the drop-in
+        analog of Iceberg's bucket() transform.
 
         The write repartitions on (bucket, salt) — the explicit salted
         repartitioning the north_rule requires: a conversation holding 1%
@@ -125,6 +126,7 @@ class ParquetManifestIO:
         task; the salt spreads each bucket over salt_factor writer tasks
         (directory layout is unchanged — partitionBy(bucket) still routes
         rows to bucket=NNN/, just from several tasks in parallel)."""
+        from pysemantic_spark.operators.runner import _bucket_expr_default
         from pysemantic_spark.operators.skew import salt_expr
 
         # deterministic entropy (full-row hash by default) — a random or
@@ -133,8 +135,7 @@ class ParquetManifestIO:
         from pysemantic_spark.operators.skew import hashable_cols
         entropy = tuple(entropy_cols) if entropy_cols else hashable_cols(df)
         out = df.withColumn(
-            BUCKET_PART_COL,
-            F.pmod(F.xxhash64(F.col(bucket_key)), F.lit(n_buckets)).cast("int"),
+            BUCKET_PART_COL, _bucket_expr_default(bucket_key, n_buckets)
         )
         (
             out.withColumn("_salt", salt_expr(salt_factor, *entropy))

@@ -1261,19 +1261,28 @@ def test_single_word_simhash_layout_unchanged(spark):
 # identical-doc collapse guard: the miners equal their uncollapsed cores
 # ---------------------------------------------------------------------------
 
+def _words_frame(df, n_words):
+    """Materialized ``(_id, _w, _size)`` SimHash words of EVERY row of
+    ``df`` (the ``_text_kernel(0, n_words)`` arrays), with no collapse."""
+    return dedup._materialize(
+        df.select(
+            F.col("doc_id").alias("_id"),
+            dedup._text_kernel(0, n_words)(F.col("text"))["arr"].alias("_w"),
+        ).withColumn("_size", F.size("_w"))
+    )
+
+
 def _uncollapsed_pairs(miner, df, n=3, **kw):
     """``miner``'s mining core run over EVERY row of ``df`` with no
-    collapse: the ground-truth reference for the collapse guard. SimHash
-    tokenizes with the JVM ``tokens()``, independently of the Arrow kernel
-    the guard runs."""
-    ids = F.col("doc_id").alias("_id")
+    collapse: the ground-truth reference for the collapse guard."""
     if miner is dedup.simhash_near_dup_pairs:
-        r = kw["max_hamming"]
-        tokf = dedup._materialize(df.select(ids, tx.tokens("text").alias("_tok")))
-        return dedup._simhash_pairs_on_tokens(tokf, r, kw.get("n_words", 1))
+        nw = kw.get("n_words", 1)
+        words = _words_frame(df, nw)
+        return dedup._simhash_pairs_on_tokens(words, kw["max_hamming"], nw)
     sh = dedup._materialize(
-        df.select(ids, dedup._shingles_arrow("text", n).alias("_sh"))
-        .withColumn("_size", F.size("_sh"))
+        df.select(
+            F.col("doc_id").alias("_id"), dedup._shingles_arrow("text", n).alias("_sh")
+        ).withColumn("_size", F.size("_sh"))
     )
     if miner is dedup.minhash_lsh_pairs:
         return dedup._minhash_pairs_on_shingles(
@@ -1302,7 +1311,8 @@ def _collapsed_and_core(miner, score_col, df, **kw):
 
 def test_collapse_identical_docs_reps(spark, clone_docs):
     reps, clones = dedup._collapse_and_mine(
-        clone_docs, "doc_id", "text", 3, "_sh", lambda frame: frame
+        clone_docs, "doc_id", dedup._text_kernel(3)(F.col("text")), "_sh",
+        lambda frame: frame,
     )
     members, mined, _ = clones
     # 8 identical bodies → 1 rep; shorts → 1 rep; others 1 each
@@ -1351,7 +1361,8 @@ def test_collapse_candidate_volume_is_linear(spark):
         "doc_id long, text string",
     )
     reps, (members, _, _) = dedup._collapse_and_mine(
-        df, "doc_id", "text", 3, "_sh", lambda frame: frame
+        df, "doc_id", dedup._text_kernel(3)(F.col("text")), "_sh",
+        lambda frame: frame,
     )
     assert reps.count() == 2          # 1 rep for the m clones + 1 other
     assert members.count() == m       # every clone maps to its rep
@@ -1381,7 +1392,8 @@ def test_collapse_fast_path_no_clones(spark):
                 f"padding alpha beta gamma {i}") for i in range(40)]
     df = spark.createDataFrame(docs, "doc_id long, text string")
     full, clones = dedup._collapse_and_mine(
-        df, "doc_id", "text", 3, "_sh", lambda frame: frame
+        df, "doc_id", dedup._text_kernel(3)(F.col("text")), "_sh",
+        lambda frame: frame,
     )
     assert clones is None
     assert full.count() == 40
@@ -1486,10 +1498,11 @@ def test_collapse_for_mining_reports_broadcastable_clone_map(spark):
         (10, "another unrelated document body entirely different")
     ]
     df = spark.createDataFrame(docs, "doc_id long, text string")
-    # the shingle frame (n-gram miners) and the token frame (SimHash)
-    for n, arr_col in ((3, "_sh"), (0, "_tok")):
+    # the shingle frame (n-gram miners) and the words frame (SimHash)
+    kernels = ((dedup._text_kernel(3), "_sh"), (dedup._text_kernel(0, 1), "_w"))
+    for kernel, arr_col in kernels:
         _, clones = dedup._collapse_and_mine(
-            df, "doc_id", "text", n, arr_col, lambda frame: frame
+            df, "doc_id", kernel(F.col("text")), arr_col, lambda frame: frame
         )
         assert clones is not None
         mm, mined, small = clones
@@ -1550,9 +1563,8 @@ def test_simhash_portable_hash_matches_duckdb(spark, edge_df):
         fps = dedup.simhash_fingerprints(
             df, "doc_id", "text", portable_hash=True, n_words=n_words
         )
-        for frame in (fps, dedup._simhash_words(tokf, n_words)):
-            got = {r["_id"]: tuple(r[c] for c in names) for r in frame.collect()}
-            assert got == duck, n_words
+        got = {r["_id"]: tuple(r[c] for c in names) for r in fps.collect()}
+        assert got == duck, n_words
 
 
 def test_simhash_rejects_non_portable_hash(spark, docs_df):
@@ -1604,17 +1616,14 @@ def test_simhash_expansion_equals_banding(spark, monkeypatch):
     chunks of 20 bits). Forced onto the k=0 band join over the 9
     exhaustive bands, the one chunk join must return the same rows,
     hamming values included: both layouts are exact."""
-    df = _planted_near_dup_docs(spark)
-    tokf = dedup._materialize(
-        df.select(F.col("doc_id").alias("_id"), tx.tokens("text").alias("_tok"))
-    )
+    words = _words_frame(_planted_near_dup_docs(spark), 1)
     r = 8
     assert dedup._simhash_layout(r, 1) == (2, [(0, 0, 20), (0, 20, 20), (0, 40, 20)])
-    via_expansion = {tuple(x) for x in dedup._simhash_pairs_on_tokens(tokf, r, 1).collect()}
+    via_expansion = {tuple(x) for x in dedup._simhash_pairs_on_tokens(words, r, 1).collect()}
     bands = dedup._simhash_chunks(r + 1, 1)
     assert min(w for _, _, w in bands) < 12
     monkeypatch.setattr(dedup, "_simhash_layout", lambda *_: (0, bands))
-    via_banding = {tuple(x) for x in dedup._simhash_pairs_on_tokens(tokf, r, 1).collect()}
+    via_banding = {tuple(x) for x in dedup._simhash_pairs_on_tokens(words, r, 1).collect()}
     dedup.release_intermediates()
     assert via_expansion == via_banding
     assert via_banding, "fixture produced no near-dup pairs - vacuous test"
@@ -1715,23 +1724,16 @@ def test_arrow_tokens_match_jvm(edge_df):
 def test_text_kernels_pickle_by_value(spark, tmp_path, edge_texts, kernel):
     """Each Arrow text kernel unpickles and runs in a Python worker that
     cannot import this package, returning the in-process rows."""
-    udf, arg = {
-        "shingles1": (dedup._text_kernel(1), edge_texts),
-        "shingles3": (dedup._text_kernel(3), edge_texts),
-        "tokens": (dedup._text_kernel(0), edge_texts),
-        "simhash_words": (
-            dedup._simhash_words_udf(2),
-            [["a", "b"], ["", ""], ["ŵöřd", "x", "x"], ["tok"] * 7],
-        ),
+    udf = {
+        "shingles1": dedup._text_kernel(1),
+        "shingles3": dedup._text_kernel(3),
+        "tokens": dedup._text_kernel(0),
+        "simhash_words": dedup._text_kernel(0, 2),
     }[kernel]
-    series = pd.Series(arg, dtype=object)
+    series = pd.Series(edge_texts, dtype=object)
     out, loaded = _run_unpickled(udf.func, series, tmp_path)
     assert loaded == []
-    local = udf.func(series)
-    if isinstance(local, pd.DataFrame):
-        assert out.to_dict("list") == local.to_dict("list")
-    else:
-        assert out.tolist() == local.tolist()
+    assert out.to_dict("list") == udf.func(series).to_dict("list")
 
 
 # id 1 NULL, 4 repeats 2 (cos 1.0), 5 all-zero, 7 ragged, 8 opposite of 2

@@ -302,6 +302,37 @@ def test_near_dup_buckets_evaluate_once_and_share_exchange(spark, tmp_path):
     assert "Join" not in below and "ReusedExchange" not in below, final
 
 
+def test_simhash_python_udfs_read_only_text(spark):
+    """A SimHash call makes one Python pass: its SimHash words come out of
+    the text kernel that fingerprints each doc for the identical-doc
+    collapse. In the executed plan, cached relations included, every
+    ArrowEvalPython reads the text column alone; none reads a token
+    array. The corpus has clones, so the representatives' cache and the
+    pair expansion are in the plan too. ``simhash_fingerprints`` runs the
+    same kernel once per row: no filter on its words below the projection
+    runs it a second time."""
+    import pandas as pd
+
+    texts = [f"w{i} shared words of a document {i % 3} here" for i in range(30)]
+    docs = spark.createDataFrame(
+        pd.DataFrame({"doc_id": range(34), "text": texts + texts[:4]})
+    )
+    for r, n_words in ((3, 1), (8, 1), (9, 2)):
+        out = dedup.simhash_near_dup_pairs(
+            docs, "doc_id", "text", max_hamming=r, n_words=n_words
+        )
+        assert out.count() >= 4
+        plan = _plan(out)
+        inputs = re.findall(r"ArrowEvalPython \[(.*?)\], ", plan)
+        assert inputs, plan
+        for arg in inputs:
+            assert re.fullmatch(r"_udf\(text#\d+\)#\d+", arg), plan
+        dedup.release_intermediates()
+    plan = _plan(dedup.simhash_fingerprints(docs, "doc_id", "text", n_words=2))
+    assert plan.count("ArrowEvalPython") == 1, plan
+    assert re.search(r"ArrowEvalPython \[_udf\(text#\d+\)#\d+\], ", plan), plan
+
+
 @pytest.mark.parametrize("drift, n_jobs", [(False, 8), (True, 11)])
 def test_execute_job_budget(spark, parts, tmp_path, drift, n_jobs):
     """The Spark jobs of one warm execute() with a violations sink, counted
